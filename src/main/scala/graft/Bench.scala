@@ -1,5 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler._
 
 /** Benchmark main: one JSON line with per-query seconds at
   * SPARK_GRAFT_SF_DIR. Noise discipline (this VM shows 6x wall-clock
@@ -16,37 +21,24 @@ import org.apache.spark.sql.SparkSession
   * A `floor_ms` host-sanity metric (median of 5 trivial 1M-row range
   * sums) is emitted so a contention-garbage run is recognizable from the
   * JSON alone.
+  *
+  * It is also the per-query probe: `SPARK_GRAFT_ONLY=q_a,q_b` runs a
+  * subset, and the line's `jobs`, `stages` and `task_ms` maps give each
+  * query's Spark job count, submitted-stage count and executor run time
+  * (of the rep whose time is reported); `spill_bytes` the max spill of
+  * any rep, so a slow outlier reads as memory pressure (spill) or
+  * contention (none) without a re-run. Harness stages are LAZY (StageCache default): eager matHot
+  * counts measured slower than the rebuilds they prevent once every
+  * stage became cheap to build (r17 A/B, full 121-query bench: cold
+  * 54.1 vs 50.9 s, warm 43.2 vs 41.6 s, zero per-query regressions).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
-    // Harness runs LAZY stages (r17 lazy-demotion campaign): the eager
-    // matHot counts that fixed the r15 cross-job AQE double-build now cost
-    // more than the rebuilds they prevent — native one-pass expressions
-    // made every stage cheap to build, so the A/B (GRAFT_STAGE_EAGER=1 vs
-    // 0, full 121-query bench) read cold 54.1 vs 50.9 s and warm 43.2 vs
-    // 41.6 s with zero per-query regressions. Eager mode remains opt-in
-    // (GRAFT_STAGE_EAGER=1) for long-lived servers.
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE sizing over raw parallelism: the default parallelismFirst
-      // splinters small shuffles into one tiny task per core, which at
-      // bench scale is pure scheduler overhead and at cluster scale is
-      // the anti-pattern the Spark tuning guide tells you to turn off
-      // ("it's recommended to set this config to false and respect the
-      // configured target size")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      // (r17 A/B: shuffle/cache compression OFF measured no change at
-      // sf0.1 — 52.56 vs 52.68 s cold — so the cluster defaults stay)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    val meter = new QueryMeter
+    spark.sparkContext.addSparkListener(meter)
     // Warmup: touch every table once (OS page cache + codegen/JIT paths)
     // so the first measured query doesn't pay session cold-start.
     Seq("region", "nation", "customer", "supplier", "part", "orders",
@@ -66,28 +58,13 @@ object Bench {
     }
     val floorBefore = floorMs()
 
-    // Per-query shuffle-spill bytes (memory + disk), so a slow outlier in
-    // the round artifact is diagnosable as contention (no spill) vs
-    // memory pressure (spill) without re-running. Task-end events are
-    // delivered async, so attribution is approximate at the rep boundary
-    // (a tail task of query N can land in N+1's window) — fine for a
-    // diagnostic; the reported number is the MAX across reps because
-    // spill in any rep is the signal.
-    val spillAcc = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) spillAcc.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-      }
-    })
-
-    // optional subset (comma-separated names) for local stress runs
-    // (SCALE.md sf1 exponents); the driver's full run leaves it unset
+    // optional subset (comma-separated names) for probes and local stress
+    // runs (SCALE.md sf1 exponents); a full run leaves it unset
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val queries = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    val samples = collection.mutable.Map.empty[String, List[Double]].withDefaultValue(Nil)
-    val spills = collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
+    // (rep, seconds) of every successful rep
+    val samples = collection.mutable.Map.empty[String, List[(Int, Double)]].withDefaultValue(Nil)
     // Row-stability guard (r17, the lazy-stage campaign): every query is
     // deterministic, so its row count must be IDENTICAL across reps. A
     // drifting count means a concurrency bug (the cross-thread lazy-cache
@@ -95,11 +72,10 @@ object Bench {
     // rep's time is a lie, so the query is marked failed, not just flaky.
     val rowCounts = collection.mutable.Map.empty[String, Long]
     val unstable = collection.mutable.Set.empty[String]
-    (0 until reps).foreach { _ =>
+    (0 until reps).foreach { rep =>
       queries.foreach { case (name, fn) =>
+        spark.sparkContext.setLocalProperty(QueryMeter.Key, QueryMeter.tag(name, rep))
         val t0 = System.nanoTime()
-        val s0 = spillAcc.get()
-        var cleaned = false
         try {
           val rows = fn(spark, sfDir).count()
           rowCounts.get(name) match {
@@ -108,40 +84,24 @@ object Bench {
               System.err.println(s"[bench] $name ROW COUNT UNSTABLE: $prev then $rows")
             case _ => rowCounts(name) = rows
           }
-          // stage-cold discipline: with GRAFT_STAGE_CACHE=0 this drops
-          // every stage the query persisted, INSIDE the timed window, so
-          // the next query recomputes its stages and this query is
-          // charged for its own cleanup; no-op in the default config
-          StageCache.endQuery()
-          cleaned = true
-          samples(name) = ((System.nanoTime() - t0) / 1e9) :: samples(name)
-          spills(name) = math.max(spills(name), spillAcc.get() - s0)
+          samples(name) = (rep, (System.nanoTime() - t0) / 1e9) :: samples(name)
         } catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
-        } finally {
-          // a FAILED query must not leave its persisted stages behind to
-          // silently warm the next query's cold window (this path is
-          // untimed — the failure already voids the sample)
-          if (!cleaned) try StageCache.endQuery() catch { case _: Throwable => () }
-        }
+        } finally spark.sparkContext.setLocalProperty(QueryMeter.Key, null)
       }
     }
     var failed = List.empty[String]
     var flaky  = List.empty[String] // succeeded at least once but not every rep
-    var repOk  = Map.empty[String, Int]
-    // keep declaration order (the ordered `queries` Seq) in the JSON so
-    // run-to-run diffs of bench_last.json are stable, not hash-ordered
-    val results = queries.map { case (name, _) =>
+    val best: Map[String, Option[(Int, Double)]] = queries.map { case (name, _) =>
       val times = samples(name)
-      repOk += name -> times.length
-      if (times.isEmpty || unstable(name)) { failed ::= name; name -> -1.0 }
+      if (times.isEmpty || unstable(name)) { failed ::= name; name -> None }
       else {
         // an intermittent failure must surface, not dissolve into the min
         if (times.length < reps) flaky ::= name
-        name -> times.min
+        name -> Some(times.minBy(_._2))
       }
-    }
+    }.toMap
     // Floor re-check: a floor above ~150 ms means host contention was
     // active around the run. Retry once (the burst may have passed);
     // if it persists, stamp the artifact "noisy" so a contention-poisoned
@@ -154,20 +114,33 @@ object Bench {
       floorAfter = floorMs()
     }
     val noisy = math.min(floorBefore, floorAfter) > NoisyFloorMs
+    meter.drain(spark.sparkContext)
 
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val oks = queries.map { case (name, _) => s"\"" + name + "\":" + repOk(name) }
-      .mkString("{", ",", "}")
-    // only non-zero spills: the common all-zero case must not bloat the line
-    val spillsJson = queries.collect { case (name, _) if spills(name) > 0 =>
-      s"\"" + name + "\":" + spills(name)
-    }.mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val rowsJson = queries.map { case (name, _) =>
-      s"\"" + name + "\":" + rowCounts.getOrElse(name, -1L)
-    }.mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"rep_ok":$oks,"rows":$rowsJson,"spill_bytes":$spillsJson,"sf":"$sfDir","reps":$reps,"n_queries":${queries.length},"floor_ms":${math.min(floorBefore, floorAfter)},"floor_ms_before":$floorBefore,"floor_ms_after":$floorAfter,"noisy":$noisy,"n_failed":${failed.length},"n_flaky":${flaky.length},"full":"bench_last.json"}"""
+    def json(entries: Seq[(String, Any)]): String =
+      entries.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    // keep declaration order (the ordered `queries` Seq) in the JSON so
+    // run-to-run diffs of bench_last.json are stable, not hash-ordered
+    def perQuery(f: String => Any): String = json(queries.map { case (name, _) => name -> f(name) })
+    // counter `i` of the reported (fastest) rep; -1 for a failed query
+    def ofBest(i: Int)(name: String): Long =
+      best(name).fold(-1L) { case (rep, _) => meter(QueryMeter.tag(name, rep))(i) }
+    val total = queries.flatMap { case (name, _) => best(name) }.map(_._2).sum
+    // the max spill of any successful rep; only non-zero spills, so the
+    // common all-zero case does not bloat the line
+    val spills = queries.map { case (name, _) =>
+      name -> (samples(name).map { case (rep, _) => meter(QueryMeter.tag(name, rep))(QueryMeter.Spill) } :+ 0L).max
+    }.filter(_._2 > 0)
+    val line = s"""{"metric":"total","value":$total,"unit":"sec",""" +
+      s""""queries":${perQuery(n => best(n).fold(-1.0)(_._2))},""" +
+      s""""rep_ok":${perQuery(n => samples(n).length)},""" +
+      s""""rows":${perQuery(n => rowCounts.getOrElse(n, -1L))},""" +
+      s""""spill_bytes":${json(spills)},""" +
+      s""""jobs":${perQuery(ofBest(QueryMeter.Jobs))},""" +
+      s""""stages":${perQuery(ofBest(QueryMeter.Stages))},""" +
+      s""""task_ms":${perQuery(ofBest(QueryMeter.TaskMs))},""" +
+      s""""sf":"$sfDir","reps":$reps,"n_queries":${queries.length},""" +
+      s""""floor_ms":${math.min(floorBefore, floorAfter)},"floor_ms_before":$floorBefore,"floor_ms_after":$floorAfter,""" +
+      s""""noisy":$noisy,"n_failed":${failed.length},"n_flaky":${flaky.length},"full":"bench_last.json"}"""
     // The SAME full line goes to the file and to stdout (r22, VERDICT r21
     // #2): the driver's parser recorded `parsed: null` for EVERY round —
     // including r20/r21 where the compact ~65-query line was fully
@@ -177,7 +150,8 @@ object Bench {
     // breakers. The machine-readable contract is ONE stdout line whose
     // `queries` carries ALL queries, schema-identical to
     // bench_last.json's `queries` map. Every historical key is kept
-    // (floor_ms = min of before/after, as the compact line reported).
+    // (floor_ms = min of before/after, as the compact line reported);
+    // later keys are additions only.
     try java.nio.file.Files.write(java.nio.file.Paths.get("bench_last.json"),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case _: Throwable => }
@@ -190,4 +164,59 @@ object Bench {
       sys.exit(1)
     }
   }
+}
+
+/** Per-(query, rep) Spark counters, attributed EXACTLY through the local
+  * property [[QueryMeter.Key]] that Bench sets around each rep (it
+  * propagates to broadcast and subquery jobs), so neither async event
+  * delivery nor a tail task landing after the rep's wall time moves a
+  * count into the neighbouring query. Counts are: jobs started; stages
+  * SUBMITTED — a skipped or reused shuffle stage is never submitted, so it
+  * is absent rather than read as a zero-task stage; executor run time and
+  * shuffle spill (memory + disk) of every task of those stages.
+  */
+private final class QueryMeter extends SparkListener {
+  import QueryMeter._
+  private val counts = new ConcurrentHashMap[String, Array[AtomicLong]]()
+  private val stageTag = new ConcurrentHashMap[Int, String]()
+
+  private def add(tag: String, i: Int, v: Long): Unit =
+    counts.computeIfAbsent(tag, _ => Array.fill(4)(new AtomicLong)).apply(i).addAndGet(v)
+  private def tagOf(p: java.util.Properties): Option[String] =
+    Option(p).flatMap(p => Option(p.getProperty(Key)))
+
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    tagOf(e.properties).foreach(add(_, Jobs, 1))
+  override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+    tagOf(e.properties).foreach { t => stageTag.put(e.stageInfo.stageId, t); add(t, Stages, 1) }
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+    for (t <- Option(stageTag.get(e.stageId)); m <- Option(e.taskMetrics)) {
+      add(t, TaskMs, m.executorRunTime)
+      add(t, Spill, m.memoryBytesSpilled + m.diskBytesSpilled)
+    }
+
+  /** The counters of `tag` (all zero if it ran no job). */
+  def apply(tag: String): Array[Long] =
+    Option(counts.get(tag)).fold(Array.fill(4)(0L))(_.map(_.get))
+
+  /** Block until every event posted so far is delivered: the listener bus
+    * is FIFO, so once a sentinel job's start arrives, so has every task
+    * end before it.
+    */
+  def drain(sc: SparkContext): Unit = {
+    sc.setLocalProperty(Key, Sentinel)
+    try sc.parallelize(Seq(0), 1).count() finally sc.setLocalProperty(Key, null)
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (!counts.containsKey(Sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+  }
+}
+
+private object QueryMeter {
+  val Key = "graft.bench.query"
+  val Jobs = 0
+  val Stages = 1
+  val TaskMs = 2
+  val Spill = 3
+  private val Sentinel = "\u0000drain"
+  def tag(name: String, rep: Int): String = s"$name#$rep"
 }

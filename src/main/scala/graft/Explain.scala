@@ -1,33 +1,30 @@
 package graft
 
 import graft.store.{ChunkStore, StoreConfig, YearMonthAxis}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Plan-inspection harness: dumps `explain("formatted")` for the headline
-  * queries plus a chunk-store pruned read, so pushdown / partition
-  * pruning / broadcast decisions are reviewable (and regressions visible
-  * in diffs of PLANS.md). Run: `runMain graft.Explain <sfDir> <outFile>`.
+  * queries plus a chunk-store pruned read and a sync pull page, so
+  * pushdown / partition pruning / broadcast decisions are reviewable (and
+  * regressions visible in diffs of PLANS.md). Plans come from the bench
+  * session ([[GraftSession]]), so they are the plans Bench and Verify run.
+  * Run: `runMain graft.Explain <sfDir> <outFile> [q_a,q_b]` — the optional
+  * third argument dumps the named queries' plans instead of the headline
+  * list (before/after plan artifacts for one change).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir   = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only    = args.lift(2).map(_.split(",").toSeq)
+    val spark = GraftSession()
     // dump the plans the Bench/Verify harnesses actually run: LAZY stages
     // as of r17 (cached-stage partitioning is Unknown at plan time, so
     // consumers pay their own exchange — measured cheaper than the eager
     // counts; see Bench.scala)
 
-    val names = Seq(
+    val headline = Seq(
       "q_scan_filter",     // pushdown: PushedFilters on events scan
       "q_revenue_join",    // broadcast joins of dims
       "q_grid_reindex",    // broadcast spine + left join
@@ -92,7 +89,7 @@ object Explain {
     sb.append("`BroadcastHashJoin` on dimension/spine sides, `PartitionFilters`\n")
     sb.append("on the chunk store (partition pruning), and wide\n")
     sb.append("`WholeStageCodegen` spans.\n")
-    names.foreach { n =>
+    only.getOrElse(headline).foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)
       sb.append(s"\n## $n\n\n```\n")
       sb.append(df.queryExecution.explainString(ExplainMode.fromString("formatted")))

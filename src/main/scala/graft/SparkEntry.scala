@@ -1,6 +1,7 @@
 package graft
 
 import graft.pipeline.{Classifier, Clustering, Curation, Dedup, Multimodal, Packing, Sampling, Similarity, TextAnalysis}
+import graft.functions.ShuffleWidth
 import graft.ts.{Combine, Gaps, Grid, Intervals, Resample, Stats}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -53,20 +54,6 @@ object SparkEntry {
     tableCache.computeIfAbsent(key,
       _ => spark.read.parquet(s"$dir/$name.parquet"))
   }
-
-  /** Pinned exchange width = the session's configured shuffle
-    * parallelism (r22). AQE's partition coalescing sizes a reduce stage
-    * by its INPUT bytes; a merge-aggregation exchange of a few MB sits
-    * under the 64 MB advisory and coalesces to ONE task even when it
-    * carries 600k rows of real aggregation work (JobProbe: the TS merge
-    * family ran its whole reduce in one 330-480 ms task at sf0.1). A
-    * repartition with an EXPLICIT count is never coalesced, so the
-    * reduce always runs at configured width — scale-parameterised via
-    * spark.sql.shuffle.partitions (cpus locally, cluster-tuned in prod).
-    */
-  private def pinP(s: SparkSession): Int =
-    scala.util.Try(s.conf.get("spark.sql.shuffle.partitions").toInt)
-      .toOption.filter(_ >= 1).getOrElse(200)
 
   /** Naive literal timestamp (TIMESTAMP_NTZ). Built from LocalDateTime —
     * Catalyst maps it straight to a TIMESTAMP_NTZ literal with no
@@ -242,7 +229,7 @@ object SparkEntry {
       // near-unchanged rows between them. Same trick at any scale: the
       // second agg's keys are a prefix of the first's.
       val uniq = li
-        .repartition(pinP(s), col("l_orderkey"), col("l_shipdate"))
+        .repartition(ShuffleWidth.pinned(s), col("l_orderkey"), col("l_shipdate"))
         .groupBy(col("l_orderkey"), col("l_shipdate").as("ts"), col("l_linenumber"))
         .agg(max(col("val")).as("val"))
       uniq.groupBy(col("l_orderkey"), col("ts"))
@@ -262,7 +249,7 @@ object SparkEntry {
       // one exchange for both stacked aggs (q_combine_first trick): the
       // (orderkey, ts) partitioning satisfies the wider dedup grouping
       // AND the ordered-coalesce grouping
-      val uniq = li.repartition(pinP(s), col("l_orderkey"), col("ts"))
+      val uniq = li.repartition(ShuffleWidth.pinned(s), col("l_orderkey"), col("ts"))
         .groupBy("l_orderkey", "version", "ts").agg(max(col("value")).as("value"))
       Combine.combineVersions(uniq, Seq("l_orderkey"), "version", "ts", "value")
       // no trailing orderBy (600k rows; compare re-sorts)
@@ -278,7 +265,7 @@ object SparkEntry {
         col("l_shipdate").as("ts"),
         when(col("l_tax") > 0.06, lit(null)).otherwise(col("l_extendedprice")).as("value"))
       val uniq = li.filter(graft.store.Lookups.compileOne("version__gte", 2))
-        .repartition(pinP(s), col("l_orderkey"), col("ts")) // one exchange, both aggs
+        .repartition(ShuffleWidth.pinned(s), col("l_orderkey"), col("ts")) // one exchange, both aggs
         .groupBy("l_orderkey", "version", "ts").agg(max(col("value")).as("value"))
       Combine.combineOrdered(uniq, Seq("l_orderkey"), Seq("version" -> true), "ts", "value")
       // no trailing orderBy (500k rows; compare re-sorts)
@@ -298,7 +285,7 @@ object SparkEntry {
     // trailing orderBy: the correctness compare re-sorts before hashing.
     "q_update_merge" -> ((s, d) => {
       val agg = lineitem(s, d)
-        .repartition(pinP(s), col("l_orderkey"), col("l_linenumber"), col("l_shipdate"))
+        .repartition(ShuffleWidth.pinned(s), col("l_orderkey"), col("l_linenumber"), col("l_shipdate"))
         .groupBy(col("l_orderkey"), col("l_linenumber"), col("l_shipdate").as("ts"))
         .agg(
           max(when(col("l_shipdate") >= ts("1998-01-01 00:00:00"), col("l_quantity") * 2)).as("__new"),
@@ -720,7 +707,6 @@ object SparkEntry {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       events(s, d)
-        .repartition(pinP(s), col("user_id")) // pinned window exchange (r22)
         .withColumn("__prev", lag(col("ts"), 1).over(w))
         .withColumn("__new", when(col("__prev").isNull ||
           unix_micros(col("ts").cast("timestamp")) - unix_micros(col("__prev").cast("timestamp")) > 1800L * 1000000L, 1L).otherwise(0L))

@@ -39,21 +39,12 @@ import org.apache.spark.storage.StorageLevel
   * blocks spill rather than OOM, and eviction falls back to
   * recomputation from lineage (which `localCheckpoint` cannot do: its
   * blocks are irrecoverable once dropped, a silent single-point failure
-  * at cluster scale). `GRAFT_STAGE_CACHE=0` limits every stage's lifetime
-  * to its own query (harnesses call [[endQuery]] at query boundaries) so
-  * a benchmark can price every query's stages cold.
+  * at cluster scale). `GRAFT_STAGE_CACHE=0` makes every stage
+  * query-local (see [[mat]]) so a benchmark can price every query's
+  * stages cold.
   */
 object StageCache {
-  private def enabled: Boolean = sys.env.get("GRAFT_STAGE_CACHE").forall(_.trim != "0")
-
-  /** `GRAFT_STAGE_DISABLE=1` makes mat/matHot the identity — no persist,
-    * no registry — so a bench can price pure AQE exchange/stage reuse
-    * against the persist-based sharing (r17 A/B knob; AQE already dedups
-    * IDENTICAL shuffle subtrees within one query, which covers the
-    * classic self-join case the cache was introduced for).
-    */
-  private val disabled: Boolean =
-    sys.env.get("GRAFT_STAGE_DISABLE").exists(_.trim == "1")
+  private val enabled: Boolean = sys.env.get("GRAFT_STAGE_CACHE").forall(_.trim != "0")
 
   /** Max DISTINCT stages (by canonicalized plan) kept registered; the
     * least-recently-used stage past the cap is unpersisted. Eviction is
@@ -70,18 +61,9 @@ object StageCache {
     * → 2.13, q_winnow_pairs 1.07 → 0.87). Entries are
     * MEMORY_AND_DISK — blocks spill, and eviction past the cap only
     * costs recomputation — so the cap is a registry-size bound, not a
-    * memory-safety bound. `GRAFT_STAGE_CACHE_MAX` overrides.
+    * memory-safety bound.
     */
-  private val maxEntries: Int =
-    sys.env.get("GRAFT_STAGE_CACHE_MAX")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption.orElse {
-        // a malformed value must degrade to the default, not surface as an
-        // ExceptionInInitializerError at the first mat() call
-        System.err.println(s"[StageCache] ignoring malformed GRAFT_STAGE_CACHE_MAX='$v'")
-        None
-      })
-      .filter(_ >= 1) // 0/negative would silently evict every stage on registration
-      .getOrElse(1024)
+  private val maxEntries = 1024
 
   // access-ordered LRU keyed by the CANONICALIZED plan: re-registering an
   // equal stage rebuilt by another query refreshes recency instead of
@@ -110,24 +92,6 @@ object StageCache {
   private[graft] def registeredCount: Int =
     registered.synchronized(registered.size())
 
-  /** Materialize `df` as a shared stage: persisted (plan-matched,
-    * spillable, recomputable). `GRAFT_STAGE_CACHE=0` (the bench gate's
-    * stage-cold mode) makes mat/matHot the IDENTITY (r20; previously it
-    * persisted within the query and [[endQuery]] dropped stages at query
-    * boundaries): the registry exists for CROSS-query reuse, which cold
-    * mode is defined to forbid, while WITHIN one query Spark's own
-    * exchange/stage reuse already dedups identical shuffle subtrees —
-    * and a persisted stage costs extra AQE jobs (the InMemoryRelation
-    * executes its own adaptive plan) plus a cached-scan read that the
-    * r20 profile measured SLOWER than recomputing a native-expression
-    * stage at bench scale (cached groupBy over a 260k-row stage: 10-16
-    * task-CPU-s vs 0.2 for the same rows straight off the parquet scan).
-    * Full-suite same-day A/B at sf0.1, 139 queries, cold: 68.2 s with
-    * per-query persist vs 64.8 s identity. Each query still pays every
-    * one of its own stages — identity mode recomputes strictly MORE, so
-    * the cold leg stays honest. Warm mode (default) is unchanged:
-    * registered, persisted, plan-matched across queries.
-    */
   /** Eager-materialization mode for [[matHot]] stages. OFF by default:
     * a library caller constructing an operator must get a lazy plan (no
     * Spark jobs at DataFrame-build time — the standard Spark contract).
@@ -137,18 +101,15 @@ object StageCache {
     * operator's scaladoc says so, and the fitted artifact is bounded
     * metadata — that is a different contract, not a violation of this
     * one.
-    * The harnesses (Bench, Verify, the test suites) and long-lived
-    * servers turn it ON, because a lazily persisted stage consumed by
-    * several CONCURRENT AQE shuffle-stage jobs is rebuilt once per job
+    * Verify (concurrent dumps) and long-lived servers turn it ON,
+    * because a lazily persisted stage consumed by several CONCURRENT AQE
+    * shuffle-stage jobs is rebuilt once per job
     * (the round-15 cold profile showed four simultaneous rebuilds of one
     * signature stage inside a single LSH query); one count() at
     * registration materializes it exactly once at full parallelism.
-    * `GRAFT_STAGE_EAGER=1` forces it on process-wide.
     */
-  @volatile private var eagerOverride: Option[Boolean] = None
-  def setEager(on: Boolean): Unit = eagerOverride = Some(on)
-  private def eagerHot: Boolean =
-    eagerOverride.getOrElse(sys.env.get("GRAFT_STAGE_EAGER").exists(_.trim == "1"))
+  @volatile private var eagerHot = false
+  def setEager(on: Boolean): Unit = eagerHot = on
 
   /** A shared stage whose consumers run CONCURRENTLY within one query
     * (both sides of a self-join, a multi-branch union under AQE): same
@@ -165,11 +126,11 @@ object StageCache {
     * synchronously (under a per-stage monitor) before the hit returns,
     * so a second consumer's action never starts against unfinished
     * blocks. Same-thread reuse stays fully lazy. Long-lived servers with
-    * many concurrent sessions should still set `GRAFT_STAGE_EAGER=1`,
+    * many concurrent sessions should still call `setEager(true)`,
     * which removes the window entirely (blocks finish at registration).
     */
   def matHot(df: DataFrame): DataFrame = {
-    if (disabled || !enabled) return df
+    if (!enabled) return df
     val (out, fresh) = register(df)
     if (fresh && eagerHot) {
       out.count()
@@ -179,8 +140,25 @@ object StageCache {
     out
   }
 
+  /** Materialize `df` as a shared stage: persisted (plan-matched,
+    * spillable, recomputable). `GRAFT_STAGE_CACHE=0` (the bench gate's
+    * stage-cold mode) makes mat/matHot the IDENTITY (r20): the registry
+    * exists for CROSS-query reuse, which cold mode is defined to forbid,
+    * while WITHIN one query Spark's own
+    * exchange/stage reuse already dedups identical shuffle subtrees —
+    * and a persisted stage costs extra AQE jobs (the InMemoryRelation
+    * executes its own adaptive plan) plus a cached-scan read that the
+    * r20 profile measured SLOWER than recomputing a native-expression
+    * stage at bench scale (cached groupBy over a 260k-row stage: 10-16
+    * task-CPU-s vs 0.2 for the same rows straight off the parquet scan).
+    * Full-suite same-day A/B at sf0.1, 139 queries, cold: 68.2 s with
+    * per-query persist vs 64.8 s identity. Each query still pays every
+    * one of its own stages — identity mode recomputes strictly MORE, so
+    * the cold leg stays honest. Warm mode (default): registered,
+    * persisted, plan-matched across queries.
+    */
   def mat(df: DataFrame): DataFrame =
-    if (disabled || !enabled) df else register(df)._1
+    if (enabled) register(df)._1 else df
 
   /** Register + persist; returns (df, freshlyRegistered). */
   private def register(df: DataFrame): (DataFrame, Boolean) = {
@@ -236,13 +214,6 @@ object StageCache {
     }
     (df, true)
   }
-
-  /** Query-boundary hook for harnesses (Bench, Verify): with the cache
-    * DISABLED, drop every registered stage so the next query recomputes
-    * all of its stages from scratch; with it enabled (the default), a
-    * no-op — cross-query reuse is the architecture.
-    */
-  def endQuery(): Unit = if (!enabled) clear()
 
   /** Drop every stage this registry persisted (tests; or after
     * overwriting the underlying inputs in place).

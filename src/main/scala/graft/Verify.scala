@@ -1,14 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // Literals are JVM-tz-proof (LocalDateTime-based), but pin UTC anyway
-    // so any stray instant math in a dependency can't shift on a non-UTC
-    // host.
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
     // Verify KEEPS eager matHot (unlike Bench, lazy as of r17): this
     // harness runs queries on 4 CONCURRENT THREADS, and two threads
     // racing the FIRST materialization of one shared lazily-persisted
@@ -25,34 +20,14 @@ object Verify {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE sizing over raw parallelism: the default parallelismFirst
-      // splinters small shuffles into one tiny task per core, which at
-      // bench scale is pure scheduler overhead and at cluster scale is
-      // the anti-pattern the Spark tuning guide tells you to turn off
-      // ("it's recommended to set this config to false and respect the
-      // configured target size")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // Concurrent dumps: each query writes its own directory, Spark's
     // scheduler handles concurrent actions on one session, and the only
     // conf-mutating reader (SparkEntry.events) is synchronized. 4 threads
     // roughly quarters the t2 gate's Spark wall next to the small jobs'
-    // scheduling latency; SPARK_GRAFT_VERIFY_THREADS=1 restores the
-    // sequential behavior if ever needed for debugging.
-    val threads = sys.env.get("SPARK_GRAFT_VERIFY_THREADS")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption) // typo'd env → default, not a zero-dump crash
-      .getOrElse(4).max(1)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    // scheduling latency.
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     try {
       val tasks = SparkEntry.queries
         .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -64,12 +39,6 @@ object Verify {
                   .parquet(s"$outDir/$name")
               } catch { case e: Throwable =>
                 System.err.println(s"[verify] $name failed: ${e.getMessage}")
-              } finally {
-                // memory hygiene under GRAFT_STAGE_CACHE=0 (no-op by
-                // default); in a finally so a FAILED query's stages don't
-                // leak either. Persisted stages are recomputable, so racing
-                // a concurrent query's stage away is safe — it rebuilds
-                try StageCache.endQuery() catch { case _: Throwable => () }
               }
           })
         }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.SparkSession
 
 /** Pinned exchange width for stages whose work would otherwise be
   * serialized by AQE's input-size partition coalescing (r22).
@@ -34,7 +34,7 @@ import org.apache.spark.sql.DataFrame
   * re-layouts (reverted; numbers in OPTIMIZATION_r22.md).
   */
 object ShuffleWidth {
-  def pinned(df: DataFrame): Int =
-    scala.util.Try(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+  def pinned(spark: SparkSession): Int =
+    scala.util.Try(spark.conf.get("spark.sql.shuffle.partitions").toInt)
       .toOption.filter(_ >= 1).getOrElse(200)
 }

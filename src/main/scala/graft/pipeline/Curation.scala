@@ -513,8 +513,7 @@ object Curation {
     // λ IS a fitted model artifact — a ≤ numBuckets-long importance table
     // estimated from (corpus, target), the same class as logreg weights or
     // a k-means codebook — so it lives in ModelCache (dense driver array,
-    // keyed by the λ plan's semantic identity, refit under
-    // GRAFT_MODEL_CACHE=0). Baking it into the score projection makes
+    // keyed by the λ plan's semantic identity). Baking it into the score projection makes
     // scoring ONE codegen pass over the corpus text: no per-(doc, bucket)
     // explode, no λ broadcast join, no groupBy(id) shuffle — the r13
     // stage-cold profile showed the rebuilt (id, bucket) aggregation

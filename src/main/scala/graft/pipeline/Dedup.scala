@@ -439,9 +439,7 @@ object Dedup {
     // local mode) is the scale-parameterised fix: AQE never coalesces a
     // user-specified partition count, so the exploding map side always
     // runs at configured width.
-    val P = scala.util.Try(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-      .toOption.filter(_ >= 1).getOrElse(200)
+    val P = graft.functions.ShuffleWidth.pinned(df.sparkSession)
     val exploded =
       df.select(col(idCol).as("id"),
           graft.functions.ShingleOps.shingleHashModSet(

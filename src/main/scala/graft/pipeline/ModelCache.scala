@@ -28,22 +28,17 @@ package graft.pipeline
   * race is harmless (last write wins with identical content) — no
   * locking around the (possibly Spark-job-running) fit closure, which
   * also keeps re-entrant fits (an artifact whose fit consumes another
-  * cached artifact) deadlock-free.
-  *
-  * `GRAFT_MODEL_CACHE=0` disables reuse (every call refits) — the knob
-  * that lets a benchmark measure cold-fit cost explicitly.
+  * cached artifact) deadlock-free. A benchmark prices cold fits by
+  * calling [[clear]] first.
   */
 object ModelCache {
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-
-  private def enabled: Boolean = sys.env.get("GRAFT_MODEL_CACHE").forall(_.trim != "0")
 
   /** The cached artifact for `key`, fitting (and registering) it on
     * first use. `key` must identify the input data and every
     * hyper-parameter the fit depends on.
     */
   def getOrFit[T <: AnyRef](key: String)(fit: => T): T = {
-    if (!enabled) return fit
     val cur = cache.get(key)
     if (cur != null) return cur.asInstanceOf[T]
     val v = fit

@@ -260,12 +260,6 @@ object TextAnalysis {
     "es" -> Seq("el", "los", "que", "las", "una"),
     "zh" -> Seq("de", "shi", "bu", "le", "zai"))
 
-  /** Count of words among `textWords` equal to any of `words` (multiset
-    * count, not distinct — `array_intersect` would dedupe).
-    */
-  def stopwordHits(textWords: Column, words: Seq[String]): Column =
-    words.map(s => size(filter(textWords, w => w === lit(s)))).reduce(_ + _)
-
   /** Per-language stopword-hit scores — the argmax is the language guess.
     * Emitted as one column per language so downstream (and the SQL oracle)
     * stays deterministic without tie-break subtleties. Words come from

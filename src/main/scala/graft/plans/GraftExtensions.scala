@@ -54,8 +54,9 @@ object NativeHashRewrite extends Rule[LogicalPlan] {
     }
 }
 
-/** Session wiring: `SparkSession.builder().withExtensions(new
-  * GraftExtensions)` (or `spark.sql.extensions=graft.plans.GraftExtensions`)
+/** Session wiring: [[graft.GraftSession]], or `withExtensions(new
+  * GraftExtensions)` on any session builder (or
+  * `spark.sql.extensions=graft.plans.GraftExtensions`)
   * registers the native functions for SQL (`hash60`, `dot_product`) and
   * installs [[NativeHashRewrite]] in the optimizer.
   */

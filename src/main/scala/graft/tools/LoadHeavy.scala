@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.store.{ChunkStore, StoreConfig, YearMonthAxis}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,18 +13,10 @@ import org.apache.spark.sql.types._
   */
 object LoadHeavy {
   def main(args: Array[String]): Unit = {
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
     val dir = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("loadheavy").toString + "/store")
     val nSeries = args.lift(1).map(_.toInt).getOrElse(1000)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     val st = new ChunkStore(spark, dir,
       StructType(Seq(StructField("kind", StringType))),

@@ -75,9 +75,13 @@ object Intervals {
     // one 288 ms task at sf0.1 when AQE coalesced the few-MB exchange.
     // Measured a win in BOTH host regimes (quiet 0.533->0.373, contended
     // 0.686->0.629 same-day back-to-back) — unlike the window pins that
-    // were reverted as quiet-only wins (OPTIMIZATION_r22.md).
-    val flagged = df
-      .repartition(graft.functions.ShuffleWidth.pinned(df), keys.map(col): _*)
+    // were reverted as quiet-only wins (OPTIMIZATION_r22.md). With no keys
+    // the window needs ONE partition, which a round-robin pin cannot give,
+    // so the pin would only add a second exchange.
+    val pinned =
+      if (keys.isEmpty) df
+      else df.repartition(graft.functions.ShuffleWidth.pinned(df.sparkSession), keys.map(col): _*)
+    val flagged = pinned
       .withColumn("__new", when(prevMax.isNull || col(startCol) > prevMax, 1L).otherwise(0L))
       .withColumn("__island", sum(col("__new")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     flagged

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Slicing / trimming / normalization / resampling over long-form series —
-  * the reference's pandas-level series ops: `slice_ts`
-  * (utils/timeseries.py:269-272), bounds-NaN trim
+/** Splitting / trimming / normalization / resampling over long-form series —
+  * the reference's pandas-level series ops: `split_ts`
+  * (utils/timeseries.py:105-133), bounds-NaN trim
   * (chunk_timeserie_store.py:884-885), `slice_with_delay`
   * (utils/utils.py:11-15), `ts_normalize` (utils/timeseries.py:263-266),
   * `pd_min_freq` (:249-260), `upsample_using_reference_serie` (:166-225).
@@ -16,14 +16,6 @@ import org.apache.spark.sql.functions._
   * distributes across series.
   */
 object Resample {
-
-  /** `serie.loc[start:end]` — inclusive both ends (reference
-    * `_finish_serie`); `halfOpen=true` gives `slice_ts`'s [start, end).
-    */
-  def sliceTs(df: DataFrame, tsCol: String, start: Column, end: Column, halfOpen: Boolean = false): DataFrame = {
-    val upper = if (halfOpen) col(tsCol) < end else col(tsCol) <= end
-    df.filter(col(tsCol) >= start && upper)
-  }
 
   /** Split a series at `at`: rows strictly before, and rows at/after,
     * optionally clamped to [lo, hi] bounds first (reference `split_ts`,

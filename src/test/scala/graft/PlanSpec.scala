@@ -424,6 +424,22 @@ class PlanSpec extends SparkSpec {
       s"fresh-store guard shape folded away:\n$shapedPlan")
   }
 
+  // With no keys the sweep window needs ONE partition; a round-robin
+  // width pin in front of it cannot provide that, so Spark would add a
+  // second (SinglePartition) exchange after the pin's own.
+  test("unionIntervals with no keys: one exchange, no pinned round-robin") {
+    val dir = java.nio.file.Files.createTempDirectory("planspec-iv").toString
+    import spark.implicits._
+    Seq((1L, 3L), (2L, 5L), (7L, 8L)).toDF("start", "end").write.mode("overwrite").parquet(dir)
+    val df = graft.ts.Intervals.unionIntervals(spark.read.parquet(dir), Nil)
+    val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    val tree = p.linesIterator.takeWhile(l => !l.startsWith("(")).toSeq
+    val exchanges = tree.count(l => "\\bExchange\\b".r.findFirstIn(l).nonEmpty)
+    assert(exchanges == 1, s"expected exactly 1 Exchange, got $exchanges\n" + p.take(1200))
+    assert(!p.contains("RoundRobinPartitioning"), p.take(1200))
+    assert(df.orderBy("merged_start").as[(Long, Long, Long)].collect().toSeq == Seq((1L, 5L, 2L), (7L, 8L, 1L)))
+  }
+
   test("q_cusum plan: local prefix windows shuffle on (key, bucket), never key alone") {
     val p = plan("q_cusum")
     // the data-wide cumulative windows must carry the bucket column —

@@ -5,21 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (getOrCreate → one JVM-wide session). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    // harness mode: plan pins (PlanSpec) assert the LAZY-stage shapes the
-    // Bench/Verify harnesses run with (r17 demotion — see Bench.scala);
-    // suites exercising eager mode set it themselves and restore it
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // the harness session (GraftSession) at a fixed 4 cores: plan pins
+  // (PlanSpec) assert the LAZY-stage shapes the Bench/Verify harnesses run
+  // with (r17 demotion — see Bench.scala); suites exercising eager mode
+  // set it themselves and restore it
+  lazy val spark: SparkSession = GraftSession(4)
 
   def ldt(s: String): java.time.LocalDateTime =
     java.time.LocalDateTime.parse(if (s.contains("T")) s else s.replace(" ", "T"))
