@@ -31,11 +31,16 @@ import org.apache.spark.sql.types._
   * (reference ChunkQuerySet.delete :30-52, EMPTY_DATA :27) so incremental
   * sync can propagate deletions.
   *
+  * Writes: every rewrite of existing chunks (update, replace, delete,
+  * compaction, sync import) commits through [[PartitionCommit]] —
+  * checkpoint the new content of the affected chunk partitions, dynamic
+  * overwrite them, drop the ones left empty. Plain inserts append.
+  *
   * Concurrency: one writer at a time per store, enforced by an advisory
   * [[WriterLock]] around every mutator (the reference's row-lock upsert,
   * `select_for_update` at chunk_timeserie_store.py:789, re-expressed at
-  * store granularity over the staged-overwrite protocol). Readers never
-  * block — they only ever see fully-committed parquet. Disable via
+  * store granularity over the partition commit). Readers never block —
+  * they only ever see fully-committed parquet. Disable via
   * `StoreConfig(lockWrites = false)` for single-writer deployments.
   */
 class ChunkStore(
@@ -48,11 +53,16 @@ class ChunkStore(
 
   val keys: Seq[String] = keySchema.fields.map(_.name).toSeq
 
+  /** Chunk partitions, rows sorted by (keys..., ts) within each — key
+    * lookups skip row groups on the min/max statistics.
+    */
+  private[graft] val layout = PartitionCommit.Layout(path, Seq("chunk_index"), keys :+ "ts")
+
   /** Serialize store mutations — the reference's transactional row lock
     * (`select_for_update`, chunk_timeserie_store.py:786-813) re-expressed
-    * at store granularity over the staged-overwrite protocol (see
-    * [[WriterLock]]). Reentrant, so composed mutators (`setTs(replace)` →
-    * tombstone path, `compactIfNeeded` → `compact`) lock once. No-op when
+    * at store granularity over the partition commit (see [[WriterLock]]).
+    * Reentrant, so composed mutators (`setTs(replace)` → tombstone path,
+    * `compactIfNeeded` → `compact`) lock once. No-op when
     * `config.lockWrites` is off (single-writer deployments).
     */
   private[graft] def locked[T](f: => T): T =
@@ -92,11 +102,7 @@ class ChunkStore(
   /** Current store content; empty frame with the right schema when the
     * store has never been written.
     */
-  def load(): DataFrame =
-    if (new java.io.File(path).exists())
-      spark.read.schema(schema).parquet(path)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  def load(): DataFrame = PartitionCommit.load(spark, path, schema)
 
   private def attrFilter(attrs: Map[String, Any]): Column =
     attrs.map { case (k, v) => col(k) === lit(v) }.reduceOption(_ && _).getOrElse(lit(true))
@@ -180,7 +186,9 @@ class ChunkStore(
     else {
       if (!update && !replace && mineChunks.nonEmpty)
         throw new IllegalStateException(s"series already exists for $attrs (IntegrityError parity)")
-      if (update) upsertChunks(attrs, newRows, newChunks, srcDtype, now)
+      if (update)
+        mergeChunks(newRows, newChunks, srcDtype, now)(cur =>
+          (cur.filter(attrFilter(attrs)), cur.filter(!attrFilter(attrs))))
       else if (replace) replaceChunks(attrs, newRows, newChunks, mineChunks, now)
       else appendRows(newRows)
       true
@@ -215,7 +223,9 @@ class ChunkStore(
     * `rows` carries (businessKeys..., ts, value); per (keys, ts) new
     * points win over existing (`combine_first`), series not present in
     * `rows` are rewritten verbatim, and only the affected chunk
-    * partitions are touched (staged dynamic overwrite).
+    * partitions are touched. The affected-chunk collect is the only
+    * pre-write job: an empty (or all-null) batch yields no chunk and
+    * writes nothing.
     */
   def upsertManyTs(
       rows: DataFrame,
@@ -226,24 +236,13 @@ class ChunkStore(
       .withColumn("ts", col("ts").cast(TimestampNTZType))
       .withColumn("value", col("value").cast(DoubleType))
       .filter(col("value").isNotNull && !isnan(col("value")) && col("ts").isNotNull)
-    if (s.isEmpty) ()
-    else upsertManyTsNonEmpty(s, srcDtype, now)
-  }
-
-  private def upsertManyTsNonEmpty(s: DataFrame, srcDtype: String, now: java.time.LocalDateTime): Unit = {
     val newRows  = finishRows(s, now)
     val affected = newRows.select("chunk_index").distinct().collect().map(_.getInt(0)).toSeq
-    val cur      = load().filter(col("chunk_index").isin(affected: _*))
-    val newKeys  = s.select(keys.map(col): _*).distinct()
-    val mine     = cur.join(newKeys, keys, "left_semi")
-      .filter(!col("is_deleted") && col("ts").isNotNull)
-    val others   = cur.join(newKeys, keys, "left_anti")
-    val merged = Combine.combineFirst(
-      Seq(newRows.select((keys.map(col) :+ col("ts") :+ col("value")): _*),
-          mine.select((keys.map(col) :+ col("ts") :+ col("value")): _*)),
-      keys)
-    overwritePartitions(
-      others.unionByName(finishRows(merged.withColumn("dtype", lit(srcDtype)), now)), affected)
+    if (affected.nonEmpty) {
+      val newKeys = s.select(keys.map(col): _*).distinct()
+      mergeChunks(newRows, affected, srcDtype, now)(cur =>
+        (cur.join(newKeys, keys, "left_semi"), cur.join(newKeys, keys, "left_anti")))
+    }
   }
 
   /** Read one series (reference `get_ts`,
@@ -414,20 +413,17 @@ class ChunkStore(
       .orderBy((keys.map(col) :+ col("ts")): _*)
   }
 
-  /** Small-file compaction: rewrite the given (default: all) chunk
-    * partitions through the staged-overwrite protocol — each partition
-    * comes out as a single sorted file instead of one file per historical
-    * append/update. Returns the number of partitions compacted. Run it as
-    * maintenance after many incremental writes; readers see the same rows.
+  /** Small-file compaction: rewrite the given (default: all, from the
+    * directory listing) chunk partitions through the partition commit —
+    * each partition comes out as a single sorted file instead of one file
+    * per historical append/update. Returns the number of partitions
+    * compacted. Run it as maintenance after many incremental writes;
+    * readers see the same rows.
     */
   def compact(partitions: Option[Seq[Int]] = None): Int = locked {
-    val parts = partitions.getOrElse(
-      load().select("chunk_index").distinct().collect().map(_.getInt(0)).toSeq)
-    if (parts.isEmpty) 0
-    else {
-      overwritePartitions(load().filter(col("chunk_index").isin(parts: _*)), parts)
-      parts.length
-    }
+    val parts = partitions.getOrElse(PartitionCommit.partitions(path, "chunk_index"))
+    PartitionCommit.commit(layout, load().filter(col("chunk_index").isin(parts: _*)), parts)
+    parts.length
   }
 
   /** Policy form of [[compact]]: rewrite only the chunk partitions whose
@@ -440,24 +436,10 @@ class ChunkStore(
     */
   def compactIfNeeded(maxFilesPerPartition: Int = 8): Seq[Int] = locked {
     require(maxFilesPerPartition >= 1, "maxFilesPerPartition must be >= 1")
-    val parts = Option(new java.io.File(path).listFiles()).toSeq.flatten
-      .filter(d => d.isDirectory && d.getName.startsWith("chunk_index="))
-      .filter(d => Option(d.listFiles()).toSeq.flatten
-        .count(_.getName.endsWith(".parquet")) > maxFilesPerPartition)
-      .map(_.getName.stripPrefix("chunk_index=").toInt)
-    if (parts.nonEmpty) compact(Some(parts))
+    val parts = PartitionCommit.crowdedPartitions(path, "chunk_index", maxFilesPerPartition)
+    compact(Some(parts))
     parts
   }
-
-  /** All chunk partitions present on disk, from a directory listing —
-    * free relative to any scan (the same listing the parquet reader does
-    * for partition discovery; on a real lakehouse it is one namenode/
-    * object-store LIST).
-    */
-  private def listChunkPartitions(): Seq[Int] =
-    Option(new java.io.File(path).listFiles()).toSeq.flatten
-      .filter(d => d.isDirectory && d.getName.startsWith("chunk_index="))
-      .map(_.getName.stripPrefix("chunk_index=").toInt)
 
   /** Latest non-null timestamp across matching series, None when empty
     * (reference `get_max_horodate`, chunk_timeserie_store.py:519-539).
@@ -473,7 +455,7 @@ class ChunkStore(
   def maxHorodate(filters: Map[String, Any] = Map.empty): Option[java.time.LocalDateTime] = {
     val live = load().filter(attrFilter(filters) && !col("is_deleted") && col("value").isNotNull)
     val probeLimit = 3
-    val candidates = listChunkPartitions().sorted(Ordering[Int].reverse)
+    val candidates = PartitionCommit.partitions(path, "chunk_index").sorted(Ordering[Int].reverse)
     for (p <- candidates.take(probeLimit)) {
       // literal chunk_index predicate → PartitionFilters: one-partition scan
       val r = live.filter(col("chunk_index") === lit(p)).agg(max("ts")).head()
@@ -526,19 +508,8 @@ class ChunkStore(
     val affected = cur.filter(hit).select("chunk_index").distinct().collect().map(_.getInt(0))
     if (affected.nonEmpty) {
       val kept = cur.filter(col("chunk_index").isin(affected.toSeq: _*)).filter(!hit)
-      val content =
-        if (!keepTracking) kept
-        else {
-          val tombs = cur.filter(hit)
-            .select((keys.map(col) :+ col("chunk_index")): _*).distinct()
-            .withColumn("ts", lit(null).cast(TimestampNTZType))
-            .withColumn("value", lit(null).cast(DoubleType))
-            .withColumn("dtype", lit(null).cast(StringType))
-            .withColumn("is_deleted", lit(true))
-            .withColumn("updated_at", lit(now))
-          kept.unionByName(tombs.select(schema.fieldNames.map(col): _*))
-        }
-      overwritePartitions(content, affected.toSeq)
+      val content = if (keepTracking) kept.unionByName(tombstones(cur.filter(hit), now)) else kept
+      PartitionCommit.commit(layout, content, affected.toSeq)
     }
   }
 
@@ -560,29 +531,41 @@ class ChunkStore(
   }
 
   private def appendRows(rows: DataFrame): Unit =
-    rows
-      .repartition(col("chunk_index"))
-      .sortWithinPartitions((keys.map(col) :+ col("ts")): _*) // row-group skipping on keys
+    PartitionCommit.prepare(layout, rows)
       .write.mode(SaveMode.Append).partitionBy("chunk_index").parquet(path)
 
-  /** `update`: per overlapped chunk, new.combine_first(existing) for this
-    * series; other series in the partition are rewritten verbatim
-    * (reference `_update_chunk_with_existing`,
-    * chunk_timeserie_store.py:782-813 — txn → staged overwrite).
+  /** One tombstone row per (series, chunk) of `rows`: null payload,
+    * `is_deleted`, fresh `updated_at` (reference EMPTY_DATA,
+    * chunk_timeserie_store.py:27).
     */
-  private def upsertChunks(attrs: Map[String, Any], newRows: DataFrame, affected: Seq[Int],
-      dtype: String, now: java.time.LocalDateTime): Unit = {
-    val cur      = load().filter(col("chunk_index").isin(affected: _*))
-    val mine     = cur.filter(attrFilter(attrs) && !col("is_deleted") && col("ts").isNotNull)
+  private def tombstones(rows: DataFrame, now: java.time.LocalDateTime): DataFrame =
+    rows.select((keys.map(col) :+ col("chunk_index")): _*).distinct()
+      .withColumn("ts", lit(null).cast(TimestampNTZType))
+      .withColumn("value", lit(null).cast(DoubleType))
+      .withColumn("dtype", lit(null).cast(StringType))
+      .withColumn("is_deleted", lit(true))
+      .withColumn("updated_at", lit(now))
+      .select(schema.fieldNames.map(col): _*)
+
+  /** `update` (one series or many): per affected chunk,
+    * new.combine_first(existing) for the batch's series; other series in
+    * the partition are rewritten verbatim (reference
+    * `_update_chunk_with_existing`, chunk_timeserie_store.py:782-813 —
+    * txn → partition commit). `split` divides the affected chunks' rows
+    * into (the batch's series, the rest).
+    */
+  private def mergeChunks(newRows: DataFrame, affected: Seq[Int], dtype: String,
+      now: java.time.LocalDateTime)(split: DataFrame => (DataFrame, DataFrame)): Unit = {
+    val (mine, others) = split(load().filter(col("chunk_index").isin(affected: _*)))
+    val kv = keys.map(col) :+ col("ts") :+ col("value")
     val merged = Combine.combineFirst(
-        Seq(newRows.select((keys.map(col) :+ col("ts") :+ col("value")): _*),
-            mine.select((keys.map(col) :+ col("ts") :+ col("value")): _*)),
-        keys)
+      Seq(newRows.select(kv: _*),
+          mine.filter(!col("is_deleted") && col("ts").isNotNull).select(kv: _*)),
+      keys)
     // the new write's dtype wins for the merged chunks (reference updates
     // the chunk row's dtype on upsert)
     val mergedRows = finishRows(merged.withColumn("dtype", lit(dtype)), now)
-    val others     = cur.filter(!attrFilter(attrs))
-    overwritePartitions(others.unionByName(mergedRows), affected)
+    PartitionCommit.commit(layout, others.unionByName(mergedRows), affected)
   }
 
   /** `replace`: overlapped chunks get exactly the new data; the series'
@@ -596,54 +579,8 @@ class ChunkStore(
     val affected   = (overlapped ++ myOther).distinct
     val scope      = cur.filter(col("chunk_index").isin(affected: _*))
     val others     = scope.filter(!attrFilter(attrs))
-    val tombs = scope.filter(attrFilter(attrs) && col("chunk_index").isin(myOther: _*))
-      .select((keys.map(col) :+ col("chunk_index")): _*).distinct()
-      .withColumn("ts", lit(null).cast(TimestampNTZType))
-      .withColumn("value", lit(null).cast(DoubleType))
-      .withColumn("dtype", lit(null).cast(StringType))
-      .withColumn("is_deleted", lit(true))
-      .withColumn("updated_at", lit(now))
-      .select(schema.fieldNames.map(col): _*)
-    overwritePartitions(others.unionByName(newRows).unionByName(tombs), affected)
-  }
-
-  /** Staged rewrite of a set of chunk partitions: write the new content to
-    * a hidden staging dir (invisible to parquet readers), read it back,
-    * dynamic-partition-overwrite the store, drop staging. This is the
-    * Parquet stand-in for the reference's DB transaction (SURVEY.md §7.4
-    * (4)); without staging Spark refuses to overwrite a path it is reading.
-    */
-  private[graft] def overwriteChunkPartitions(content: DataFrame, partitions: Seq[Int]): Unit =
-    overwritePartitions(content, partitions)
-
-  private def overwritePartitions(content: DataFrame, partitions: Seq[Int]): Unit = {
-    if (partitions.isEmpty) return
-    // Sibling staging dir (outside the store root): dynamic overwrite only
-    // touches matching chunk_index partitions, but keeping staging out of
-    // the tree avoids reader/lister interference entirely.
-    val staging = s"${path}__staging_${java.util.UUID.randomUUID().toString.take(8)}"
-    try {
-      content
-        .repartition(col("chunk_index"))
-        .sortWithinPartitions((keys.map(col) :+ col("ts")): _*)
-        .write.mode(SaveMode.Overwrite).partitionBy("chunk_index").parquet(staging)
-      // Dynamic overwrite only rewrites partitions PRESENT in the new
-      // content. An affected partition whose rows all vanished (hard delete
-      // of everything in the chunk) writes zero rows — remove its directory
-      // explicitly, or the stale files stay visible forever.
-      val present: Set[Int] = Option(new java.io.File(staging).listFiles()).toSeq.flatten
-        .collect { case f if f.getName.startsWith("chunk_index=") =>
-          f.getName.stripPrefix("chunk_index=").toInt }.toSet
-      partitions.filterNot(present).foreach { p =>
-        deleteRecursively(new java.io.File(path, s"chunk_index=$p"))
-      }
-      if (present.nonEmpty)
-        spark.read.schema(schema).parquet(staging)
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("chunk_index")
-          .parquet(path)
-    } finally deleteRecursively(new java.io.File(staging))
+    val tombs = tombstones(scope.filter(attrFilter(attrs) && col("chunk_index").isin(myOther: _*)), now)
+    PartitionCommit.commit(layout, others.unionByName(newRows).unionByName(tombs), affected)
   }
 }
 
@@ -654,9 +591,4 @@ object ChunkStore {
     */
   private[store] def toNtz(z: java.time.ZonedDateTime): java.time.LocalDateTime =
     z.withZoneSameInstant(java.time.ZoneOffset.UTC).toLocalDateTime
-
-  private[store] def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
-  }
 }

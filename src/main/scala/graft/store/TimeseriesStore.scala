@@ -1,7 +1,7 @@
 package graft.store
 
 import graft.ts.Combine
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -18,6 +18,12 @@ import org.apache.spark.sql.types._
   * dynamic partition overwrite (the reference re-encodes the whole blob
   * per set — same granularity), and `clear` is a directory drop. Partial
   * key filters (incl. Django `__`-lookups) prune on the partition columns.
+  *
+  * Writes go through [[PartitionCommit]], the commit path of every store,
+  * with the fewest jobs each mode allows: replace and insert write their
+  * prepared content directly (their content never reads the store);
+  * update and an existing-store `setManyTs` checkpoint once, and their
+  * observations ride that job.
   *
   * Error contract mirrors the reference's ValueError surface
   * (timeserie_store.py:118-141, tests_timeseries_store.py:86-133):
@@ -51,23 +57,14 @@ class TimeseriesStore(
       StructField("ts", TimestampNTZType),
       StructField("value", DoubleType)))
 
-  def load(): DataFrame =
-    if (new java.io.File(path).exists())
-      spark.read.schema(schema).parquet(path)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  /** One partition directory per series, rows in ts order. */
+  private val layout = PartitionCommit.Layout(path, keys, Seq("ts"))
 
-  /** Cheap driver-side emptiness check: a store whose directory holds no
-    * series partitions (fresh temp dir, first write of a backfill) can
-    * skip the existence / duplicate probe JOBS entirely — the answer is
-    * known from one directory listing. Partition dirs are `key=...`;
-    * `_`/`.` entries are Spark metadata.
-    */
-  private def storeHasFiles: Boolean = {
-    val f = new java.io.File(path)
-    f.exists() && Option(f.listFiles()).exists(_.exists(c =>
-      !c.getName.startsWith("_") && !c.getName.startsWith(".")))
-  }
+  def load(): DataFrame = PartitionCommit.load(spark, path, schema)
+
+  /** Write content that does not read the store: no checkpoint needed. */
+  private def write(content: DataFrame): Unit =
+    PartitionCommit.overwrite(layout, PartitionCommit.prepare(layout, content))
 
   private def attrFilter(attrs: Map[String, Any]): Column =
     attrs.map { case (k, v) => col(k) === lit(v) }.reduceOption(_ && _).getOrElse(lit(true))
@@ -111,8 +108,7 @@ class TimeseriesStore(
       // rows writes no partition dirs and commits nothing, which is
       // exactly the reference's empty-series skip. One job total.
       val obs = org.apache.spark.sql.Observation()
-      overwriteSeriesPartition(
-        attach(attrs, s.observe(obs, count(lit(1)).as("n"))), readsStore = false)
+      write(attach(attrs, s.observe(obs, count(lit(1)).as("n"))))
       Option(obs.get("n")).exists(_.asInstanceOf[Long] > 0L)
     } else {
       // Plain insert: ONE probe job answers both pre-write questions —
@@ -127,7 +123,7 @@ class TimeseriesStore(
       // series), so unlike replace this probe cannot ride the write job.
       // A store with no series partitions skips the exists side.
       val sProbe = s.limit(1).select(lit("s").as("side"))
-      val probe = (if (storeHasFiles)
+      val probe = (if (PartitionCommit.hasPartitions(path))
           sProbe.unionAll(load().filter(attrFilter(attrs)).limit(1).select(lit("e").as("side")))
         else sProbe)
         .collect().map(_.getString(0)).toSet
@@ -136,7 +132,7 @@ class TimeseriesStore(
         throw new IllegalArgumentException(
           s"Trying save over existing ts without update or replace option: $attrs")
       else {
-        overwriteSeriesPartition(attach(attrs, s), readsStore = false)
+        write(attach(attrs, s))
         true
       }
     }
@@ -145,10 +141,11 @@ class TimeseriesStore(
   /** `update` needs NO pre-write probe at all: `new.combine_first(existing)`
     * with an absent series is the identity, so `existed` never changes the
     * plan, and the input-side emptiness check rides the merge's
-    * materialization job as an Observation (the merge must materialize
-    * anyway — see [[overwriteSeriesPartition]] on why). One job decides
-    * skip-vs-write AND computes the merge; nothing is written when every
-    * input row was null/NaN (reference skip semantics).
+    * checkpoint job as an Observation (the merge reads the partition it
+    * overwrites, so it must be checkpointed — see [[PartitionCommit]]).
+    * One job decides skip-vs-write AND computes the merge; nothing is
+    * written when every input row was null/NaN (reference skip
+    * semantics).
     */
   private def setTsUpdate(attrs: Map[String, Any], s: DataFrame): Boolean = {
     val obs = org.apache.spark.sql.Observation()
@@ -159,11 +156,10 @@ class TimeseriesStore(
       Seq(s.observe(obs, count(lit(1)).as("n")).withColumn("__k", lit(1)),
           existing.withColumn("__k", lit(1))), Seq("__k"))
       .drop("__k")
-    val prepared = prepare(attach(attrs, content)).localCheckpoint()
-    if (Option(obs.get("n")).forall(_.asInstanceOf[Long] == 0L)) false
-    else {
-      writePrepared(prepared)
-      true
+    PartitionCommit.checkpointed(PartitionCommit.prepare(layout, attach(attrs, content))) { staged =>
+      val wrote = Option(obs.get("n")).exists(_.asInstanceOf[Long] > 0L)
+      if (wrote) PartitionCommit.overwrite(layout, staged)
+      wrote
     }
   }
 
@@ -172,7 +168,7 @@ class TimeseriesStore(
       d.withColumn(k, lit(attrs(k)).cast(keySchema(k).dataType)))
       .select(schema.fieldNames.map(col): _*)
 
-  /** Bulk insert of many series in ONE staged write — the batch analogue
+  /** Bulk insert of many series in ONE write — the batch analogue
     * of [[setTs]], mirroring the chunked store's `set_many_ts` contract
     * (chunk_timeserie_store.py:419-449, adapted to the non-chunked
     * layout): insert-only (any series whose key tuple already exists is
@@ -182,7 +178,7 @@ class TimeseriesStore(
     * skips it).
     *
     * `many` is long form `(keys..., ts, value)`. Where N sequential
-    * [[setTs]] calls stage N parquet writes (and N existence probes),
+    * [[setTs]] calls run N parquet writes (and N existence probes),
     * this plans ONE write whose dynamic-partition overwrite lands every
     * new series directory in a single job — the shape that matters when
     * backfilling millions of series.
@@ -193,7 +189,7 @@ class TimeseriesStore(
     // null/NaN (setTs parity: requireAllKeys runs before the series
     // filter)
     val nullKeyed = keys.map(col(_).isNull).reduce(_ || _)
-    if (storeHasFiles) {
+    if (PartitionCommit.hasPartitions(path)) {
       // EXISTING-STORE path: the duplicate probe must run BEFORE the
       // write (an overwrite would clobber the clashing series), and it
       // needs the normalized batch twice (probe + write) — so the batch
@@ -203,37 +199,38 @@ class TimeseriesStore(
       // a null-keyed row with a null/NaN value still refuses the batch
       // (setTs parity). Key columns are coerced to the store schema
       // (setTs parity, which casts via lit(attrs(k)).cast): mismatched
-      // key dtypes would stage parquet with wrong physical types and die
-      // mid-write on the schema'd read-back. The surviving-row count
+      // key dtypes would write parquet with wrong physical types that the
+      // schema'd reads cannot decode. The surviving-row count
       // rides the same job, so the emptiness probe costs no extra action.
       val nullKeyObs = org.apache.spark.sql.Observation()
       val rowObs = org.apache.spark.sql.Observation()
       // prepare() BEFORE the checkpoint: the partition-shaping shuffle
       // rides the (mandatory) validation materialization, so the final
       // write job reads checkpoint blocks with no exchange of its own
-      val s = prepare(many
+      val prepared = PartitionCommit.prepare(layout, many
         .observe(nullKeyObs, sum(when(nullKeyed, 1L).otherwise(0L)).as("nk"))
         .select((keys.map(k => col(k).cast(keySchema(k).dataType).as(k)) :+
           col("ts").cast(TimestampNTZType).as("ts") :+
           col("value").cast(DoubleType).as("value")): _*)
         .filter(col("value").isNotNull && !isnan(col("value")) && col("ts").isNotNull)
         .observe(rowObs, count(lit(1)).as("n")))
-        .localCheckpoint()
-      require(Option(nullKeyObs.get("nk")).forall(_.asInstanceOf[Long] == 0L),
-        "null key values are not allowed")
-      val dup = s.select(keys.map(col): _*).distinct()
-        .join(load().select(keys.map(col): _*).distinct(), keys, "left_semi")
-      if (!dup.isEmpty)
-        throw new IllegalStateException(
-          "set_many_ts: some series already exist (IntegrityError parity)")
-      if (Option(rowObs.get("n")).exists(_.asInstanceOf[Long] > 0L))
-        writePrepared(s.select(schema.fieldNames.map(col): _*))
+      PartitionCommit.checkpointed(prepared) { s =>
+        require(Option(nullKeyObs.get("nk")).forall(_.asInstanceOf[Long] == 0L),
+          "null key values are not allowed")
+        val dup = s.select(keys.map(col): _*).distinct()
+          .join(load().select(keys.map(col): _*).distinct(), keys, "left_semi")
+        if (!dup.isEmpty)
+          throw new IllegalStateException(
+            "set_many_ts: some series already exist (IntegrityError parity)")
+        if (Option(rowObs.get("n")).exists(_.asInstanceOf[Long] > 0L))
+          PartitionCommit.overwrite(layout, s.select(schema.fieldNames.map(col): _*))
+      }
     } else {
       // FRESH-STORE path (first backfill — and the only path a batch
       // pipeline's initial load takes): no duplicate probe is possible,
       // so nothing needs the batch before the write — the null-key
       // refusal rides the write job itself as an in-plan guard
-      // (r21, VERDICT r20 #2: one staged write job instead of
+      // (r21, VERDICT r20 #2: one write job instead of
       // checkpoint-materialize + write). `assert_true` evaluates to null
       // when the row is clean and fails the task otherwise; the dynamic
       // overwrite only commits at job end, so a poisoned batch aborts
@@ -251,7 +248,7 @@ class TimeseriesStore(
           when(guard.isNull, col("ts").cast(TimestampNTZType)).as("ts") :+
           when(guard.isNull, col("value").cast(DoubleType)).as("value")): _*)
         .filter(col("value").isNotNull && !isnan(col("value")) && col("ts").isNotNull)
-      rethrowNullKey(writePrepared(prepare(s).select(schema.fieldNames.map(col): _*)))
+      rethrowNullKey(write(s.select(schema.fieldNames.map(col): _*)))
     }
   }
 
@@ -323,7 +320,7 @@ class TimeseriesStore(
     val cond = Lookups.compile(filters).getOrElse(lit(true))
     val victims = load().filter(cond).select(keys.map(col): _*).distinct().collect()
     victims.foreach { r =>
-      ChunkStore.deleteRecursively(new java.io.File(path, partitionDir(r)))
+      PartitionCommit.deleteRecursively(new java.io.File(path, partitionDir(r)))
     }
   }
 
@@ -334,51 +331,4 @@ class TimeseriesStore(
     keys.zipWithIndex.map { case (k, i) =>
       s"${ExternalCatalogUtils.escapePathName(k)}=${ExternalCatalogUtils.escapePathName(String.valueOf(r.get(i)))}"
     }.mkString("/")
-
-  /** Land `content` into the store's per-series partitions (dynamic
-    * overwrite: only the partitions present in `content` are touched).
-    *
-    * `readsStore = true` (the combine-on-write update path): the content
-    * plan READS the very files the overwrite replaces, which Spark
-    * (rightly) refuses. A `localCheckpoint` breaks the cycle — the merge
-    * materializes to block storage and the write plan no longer
-    * references the store files. Crash safety is unchanged from the
-    * previous on-disk staging hop: the dynamic overwrite only swaps
-    * partition contents at JOB COMMIT (tasks write under a hidden
-    * `.spark-staging` dir), so losing the checkpoint blocks mid-write —
-    * like any write failure — aborts before commit and leaves the store
-    * intact for a retry from source data. What the on-disk hop really
-    * bought was a THIRD full parquet write + listing + read-back per
-    * update; the checkpoint is one in-memory materialization instead
-    * (half the store-update wall in the r13 bench).
-    */
-  private def overwriteSeriesPartition(content: DataFrame, readsStore: Boolean): Unit = {
-    val prepared = prepare(content)
-    writePrepared(if (readsStore) prepared.localCheckpoint() else prepared)
-  }
-
-  /** Partition-shaped and row-ordered for the store layout. Applied
-    * BEFORE any checkpoint so the repartition shuffle rides the
-    * materialization job instead of adding an AQE stage-job to the write.
-    */
-  private def prepare(content: DataFrame): DataFrame =
-    content
-      .repartition(keys.map(col): _*)
-      .sortWithinPartitions((keys.map(col) :+ col("ts")): _*)
-
-  /** All writes stay DYNAMIC OVERWRITE (r22 A/B): routing insert-shaped
-    * writes (fresh batch / probed-absent keys) through SaveMode.Append
-    * was measured ~60-140 ms SLOWER per store query on the same host
-    * (append re-resolves the existing path as a datasource — listing +
-    * footer reads — which costs more than the dynamic staging it saves).
-    * The _SUCCESS marker is suppressed: one fewer file create per
-    * commit, and nothing reads it (the store's own reads are schema'd
-    * parquet scans).
-    */
-  private def writePrepared(prepared: DataFrame): Unit =
-    prepared.write.mode(SaveMode.Overwrite)
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(keys: _*)
-      .parquet(path)
 }

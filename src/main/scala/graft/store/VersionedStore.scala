@@ -15,9 +15,10 @@ import org.apache.spark.sql.types._
   * Layout: long-form parquet `(prm, client_id, version, ts, value,
   * created_at)` hash-partitioned on `bucket = murmur3(prm) mod numBuckets`.
   * The bucket column is what keeps single-series writes O(bucket), not
-  * O(store): upsert/clear stage and dynamic-overwrite only the affected
-  * bucket directories (the same staged-overwrite protocol as ChunkStore),
-  * and single-prm reads prune to one bucket at the file listing. The
+  * O(store): upsert/clear/compact rewrite only the affected bucket
+  * directories through [[PartitionCommit]] (the commit path ChunkStore
+  * uses too), and single-prm reads prune to one bucket at the file
+  * listing. Versioned and first writes append. The
   * bucket is computed driver-side (every write path receives the prm as a
   * Scala value), so no hash-expression parity with Catalyst is needed.
   */
@@ -56,9 +57,10 @@ class VersionedStore(
   private[graft] def bucketOf(prm: String): Int =
     Math.floorMod(scala.util.hashing.MurmurHash3.stringHash(prm), numBuckets)
 
-  def load(): DataFrame =
-    if (new java.io.File(path).exists()) spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  /** Bucket partitions; no row order within a bucket. */
+  private[graft] val layout = PartitionCommit.Layout(path, Seq("bucket"), Nil)
+
+  def load(): DataFrame = PartitionCommit.load(spark, path, schema)
 
   /** Single-prm scan pruned to the prm's bucket partition. */
   private def loadPrm(prm: String): DataFrame =
@@ -145,7 +147,7 @@ class VersionedStore(
         .filter(col("bucket") === b)
         .filter(!matchCond)
         .unionByName(rows)
-      overwriteBuckets(content, Seq(b))
+      PartitionCommit.commit(layout, content, Seq(b))
     } else rows.write.mode(SaveMode.Append).partitionBy("bucket").parquet(path)
     true
   }
@@ -159,16 +161,13 @@ class VersionedStore(
   /** Small-file compaction (ChunkStore.compact's sibling): every
     * append-mode `setLc` adds a file to the prm's bucket directory, so a
     * hot bucket accumulates one file per historical write. Rewrite the
-    * given (default: all) bucket partitions through the staged-overwrite
-    * protocol — each comes out as one file. Readers see the same rows.
+    * given (default: all) bucket partitions through the partition commit
+    * — each comes out as one file. Readers see the same rows.
     */
   def compact(buckets: Option[Seq[Int]] = None): Int = locked {
-    val bs = buckets.getOrElse(listBucketPartitions())
-    if (bs.isEmpty) 0
-    else {
-      overwriteBuckets(load().filter(col("bucket").isin(bs: _*)), bs)
-      bs.length
-    }
+    val bs = buckets.getOrElse(PartitionCommit.partitions(path, "bucket"))
+    PartitionCommit.commit(layout, load().filter(col("bucket").isin(bs: _*)), bs)
+    bs.length
   }
 
   /** Policy form: rewrite only buckets whose parquet-file count exceeds
@@ -177,19 +176,10 @@ class VersionedStore(
     */
   def compactIfNeeded(maxFilesPerBucket: Int = 8): Seq[Int] = locked {
     require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
-    val bs = Option(new java.io.File(path).listFiles()).toSeq.flatten
-      .filter(d => d.isDirectory && d.getName.startsWith("bucket="))
-      .filter(d => Option(d.listFiles()).toSeq.flatten
-        .count(_.getName.endsWith(".parquet")) > maxFilesPerBucket)
-      .map(_.getName.stripPrefix("bucket=").toInt)
-    if (bs.nonEmpty) compact(Some(bs))
+    val bs = PartitionCommit.crowdedPartitions(path, "bucket", maxFilesPerBucket)
+    compact(Some(bs))
     bs
   }
-
-  private def listBucketPartitions(): Seq[Int] =
-    Option(new java.io.File(path).listFiles()).toSeq.flatten
-      .filter(d => d.isDirectory && d.getName.startsWith("bucket="))
-      .map(_.getName.stripPrefix("bucket=").toInt)
 
   /** Version-combined read (reference `get_lc`, hostore.py:218-268) with
     * the full option surface:
@@ -413,47 +403,14 @@ class VersionedStore(
 
   /** Delete by prms / version / client (reference `clear`/`clear_all`,
     * hostore.py:396-432). With a prm list only the prms' bucket partitions
-    * are rewritten; a store-wide clear (no prms) rewrites every bucket.
+    * are rewritten; a store-wide clear (no prms) rewrites every bucket. A
+    * bucket left empty has its directory dropped.
     */
   def clear(clientId: Int, prms: Option[Seq[String]] = None, version: Option[Int] = None): Unit = locked {
     var hit: Column = col("client_id") === clientId
     prms.foreach(ps => hit = hit && col("prm").isin(ps: _*))
     version.foreach(v => hit = hit && col("version") === v)
-    val affected: Seq[Int] = prms match {
-      case Some(ps) => ps.map(bucketOf).distinct
-      case None =>
-        load().select("bucket").distinct().collect().map(_.getInt(0)).toSeq
-    }
-    if (affected.nonEmpty) {
-      val content = load().filter(col("bucket").isin(affected: _*)).filter(!hit)
-      overwriteBuckets(content, affected)
-    }
-  }
-
-  /** Staged rewrite of a set of bucket partitions (same protocol as
-    * ChunkStore.overwritePartitions): write content to a sibling staging
-    * dir, dynamic-partition-overwrite the store from it, explicitly drain
-    * buckets whose rows all vanished, drop staging.
-    */
-  private def overwriteBuckets(content: DataFrame, buckets: Seq[Int]): Unit = {
-    if (buckets.isEmpty) return
-    val staging = s"${path}__staging_${java.util.UUID.randomUUID().toString.take(8)}"
-    try {
-      content
-        .repartition(col("bucket"))
-        .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(staging)
-      val present: Set[Int] = Option(new java.io.File(staging).listFiles()).toSeq.flatten
-        .collect { case f if f.getName.startsWith("bucket=") =>
-          f.getName.stripPrefix("bucket=").toInt }.toSet
-      buckets.filterNot(present).foreach { b =>
-        ChunkStore.deleteRecursively(new java.io.File(path, s"bucket=$b"))
-      }
-      if (present.nonEmpty)
-        spark.read.schema(schema).parquet(staging)
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("bucket")
-          .parquet(path)
-    } finally ChunkStore.deleteRecursively(new java.io.File(staging))
+    val affected = prms.fold(PartitionCommit.partitions(path, "bucket"))(_.map(bucketOf).distinct)
+    PartitionCommit.commit(layout, load().filter(col("bucket").isin(affected: _*)).filter(!hit), affected)
   }
 }

@@ -10,11 +10,13 @@ import java.util.concurrent.{ConcurrentHashMap, Executors, ScheduledExecutorServ
   * (`select_for_update` inside `transaction.atomic`,
   * chunk_timeserie_store.py:786-813). The reference locks per chunk row
   * because Postgres serializes the combine-first merge for it; here the
-  * mutators stage whole partition directories (staged write + dynamic
-  * partition overwrite), so the unit of exclusion is the store: one writer
-  * at a time per store path, readers never blocked (reads only ever see
-  * fully-committed parquet — the staging protocol publishes partitions
-  * atomically by directory move).
+  * mutators rewrite whole partition directories ([[PartitionCommit]]:
+  * checkpoint + dynamic partition overwrite), so the unit of exclusion is
+  * the store: one writer at a time per store path, readers never blocked.
+  * A dynamic overwrite commits per partition directory — each partition's
+  * files are swapped in whole at job commit — but it is NOT atomic across
+  * partitions: a reader racing a multi-partition commit can see some
+  * partitions new and others old.
   *
   * Two layers, both reentrant per thread:
   *  - in-process: a per-path monitor serializes writer threads sharing the
@@ -23,10 +25,10 @@ import java.util.concurrent.{ConcurrentHashMap, Executors, ScheduledExecutorServ
   *    transitions, never across file I/O, so every waiter's own `waitMs`
   *    deadline is honored.
   *  - inter-process: an exclusive lock FILE at `<store>__lock` (sibling of
-  *    the store root, like the staging dirs, so partition overwrites never
-  *    touch it). `Files.createFile` is atomic create-no-overwrite on POSIX
-  *    and HDFS. The file carries a per-acquisition random TOKEN; heartbeat
-  *    and release verify the token before touching/deleting, so a holder
+  *    the store root, so partition overwrites never touch it).
+  *    `Files.createFile` is atomic create-no-overwrite on POSIX and HDFS.
+  *    The file carries a per-acquisition random TOKEN; heartbeat and
+  *    release verify the token before touching/deleting, so a holder
   *    whose lease was broken (long GC pause) can never destroy the next
   *    holder's lock.
   *

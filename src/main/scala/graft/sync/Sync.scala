@@ -1,6 +1,6 @@
 package graft.sync
 
-import graft.store.ChunkStore
+import graft.store.{ChunkStore, PartitionCommit}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, DoubleType}
@@ -275,28 +275,27 @@ object Sync {
     * the server's clock — ts_sync semantics), unmatched inserted. A batch
     * with a null/missing chunk_index is rejected BEFORE any write — the
     * whole batch rolls back, like the reference's transaction
-    * (tests/test_import_chunks.py:31-51).
+    * (tests/test_import_chunks.py:31-51). One metadata job (the batch's
+    * distinct chunk indexes) answers every pre-write question: empty →
+    * nothing to do, any null → reject, else the partitions to commit.
     */
-  def importChunks(store: ChunkStore, batch: DataFrame): Unit = {
-    val keys = store.keys
-    if (batch.isEmpty) return
-    val badRows = batch.filter(col("chunk_index").isNull)
-    if (!badRows.isEmpty)
-      throw new IllegalArgumentException("import_chunks: chunk_index missing — whole batch rejected")
+  def importChunks(store: ChunkStore, batch: DataFrame): Unit =
     // Mutates outside the store's public mutators (direct partition
-    // overwrite), so it takes the store's writer lock itself — the
+    // commit), so it takes the store's writer lock itself — the
     // atomic-batch guarantee (reference transaction.atomic,
     // chunk_timeserie_store.py:633-695) must hold against concurrent
     // local writers too.
     store.locked {
-      val affected = batch.select("chunk_index").distinct().collect().map(_.getInt(0)).toSeq
-      val cur      = store.load().filter(col("chunk_index").isin(affected: _*))
-      val joinCols = keys :+ "chunk_index"
-      val untouched = cur.join(broadcast(batch.select(joinCols.map(col): _*).distinct()), joinCols, "left_anti")
-      store.overwriteChunkPartitions(
+      val chunks = batch.select("chunk_index").distinct().collect()
+      if (chunks.exists(_.isNullAt(0)))
+        throw new IllegalArgumentException("import_chunks: chunk_index missing — whole batch rejected")
+      val affected = chunks.map(_.getInt(0)).toSeq
+      val joinCols = store.keys :+ "chunk_index"
+      val untouched = store.load().filter(col("chunk_index").isin(affected: _*))
+        .join(broadcast(batch.select(joinCols.map(col): _*).distinct()), joinCols, "left_anti")
+      PartitionCommit.commit(store.layout,
         untouched.unionByName(batch.select(store.schema.fieldNames.map(col): _*)), affected)
     }
-  }
 
   /** Full pull (reference `TimeseriesChunkStoreSyncClient.pull`,
     * ts_sync.py:204-261): since = client's local high-water mark;
@@ -330,8 +329,9 @@ object Sync {
     // listing size. The page rows collected for the keyset ARE the spec
     // list `exportChunks` broadcasts, so the collect is work the page
     // import needed anyway (pageSize metadata rows, never payload).
-    val staged = listing(server, since, filters).localCheckpoint()
-    try {
+    // Released after the last page (Dataset.unpersist does not free a
+    // localCheckpoint's blocks; the commit helper's release does).
+    PartitionCommit.checkpointed(listing(server, since, filters)) { staged =>
       var applied  = 0L
       var lastSeen: Option[org.apache.spark.sql.Row] = None
       var more     = true
@@ -353,7 +353,7 @@ object Sync {
         }
       }
       applied
-    } finally staged.unpersist(blocking = false)
+    }
   }
 
   /** One keyset page of the staged listing: rows strictly after

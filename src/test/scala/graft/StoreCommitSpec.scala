@@ -1,0 +1,166 @@
+package graft
+
+import graft.store._
+import graft.sync.Sync
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+/** The partition commit every store writes through ([[PartitionCommit]]):
+  * a write releases the checkpoint it took, a commit that fails mid-job
+  * leaves the store exactly as it was, and a partition a rewrite empties
+  * loses its directory.
+  */
+class StoreCommitSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val keySchema = StructType(Seq(
+    StructField("version", IntegerType), StructField("kind", StringType)))
+  private val a = Map[String, Any]("version" -> 0, "kind" -> "a")
+  private val now0 = ldt("2024-06-01T00:00")
+
+  private def hourly(start: String, hours: Int, v: Double): DataFrame = {
+    val t0 = java.time.LocalDateTime.parse(start)
+    (0 until hours).map(i => (t0.plusHours(i), v)).toDF("ts", "value")
+  }
+
+  private def chunkStore(sync: Boolean = false): ChunkStore =
+    new ChunkStore(spark, tmpDir("commit"), keySchema,
+      StoreConfig(freq = "1h", tz = "UTC", chunkAxis = YearMonthAxis, syncEnabled = sync))
+
+  /** Persisted RDDs `write` left registered: new ids in the context's
+    * persistent-RDD map (ids, not the count, so a GC-driven cleanup of
+    * an older RDD during the write cannot mask a leak).
+    */
+  private def leftPersisted(write: => Any): Set[Int] = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    write
+    spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+  }
+
+  /** Every file under `root` with its size and mtime. */
+  private def snapshot(root: String): Set[(String, Long, Long)] = {
+    val base = java.nio.file.Paths.get(root)
+    val walk = java.nio.file.Files.walk(base)
+    try {
+      val files = walk.filter(java.nio.file.Files.isRegularFile(_)).toArray.toSeq
+        .map(_.asInstanceOf[java.nio.file.Path])
+      files.map(p => (base.relativize(p).toString, p.toFile.length(), p.toFile.lastModified())).toSet
+    } finally walk.close()
+  }
+
+  /** Names beside the store root other than the store and its lock file. */
+  private def strangers(root: String): Seq[String] = {
+    val store = new java.io.File(root)
+    store.getParentFile.listFiles().map(_.getName).toSeq
+      .filterNot(Set(store.getName, store.getName + "__lock"))
+  }
+
+  test("TimeseriesStore.setTs(update) releases its checkpoint") {
+    val st = new TimeseriesStore(spark, tmpDir("commit"), keySchema)
+    assert(st.setTs(a, hourly("2024-01-01T00:00", 6, 1.0)))
+    assert(leftPersisted(st.setTs(a, hourly("2024-01-01T03:00", 6, 2.0), update = true)).isEmpty)
+    assert(st.getTsFlat(a).count() === 9)
+  }
+
+  test("TimeseriesStore.setManyTs on an existing store releases its checkpoint") {
+    val st = new TimeseriesStore(spark, tmpDir("commit"), keySchema)
+    assert(st.setTs(a, hourly("2024-01-01T00:00", 6, 1.0)))
+    val many = hourly("2024-01-01T00:00", 4, 3.0).withColumn("version", lit(0))
+      .withColumn("kind", lit("b"))
+    assert(leftPersisted(st.setManyTs(many)).isEmpty)
+    assert(st.getTs(Map("kind" -> "b")).count() === 4)
+  }
+
+  test("ChunkStore.upsertManyTs releases its checkpoint") {
+    val st = chunkStore()
+    st.setTs(a, hourly("2024-01-30T00:00", 48, 1.0), now = now0)
+    val rows = hourly("2024-01-31T00:00", 4, 5.0).withColumn("version", lit(0))
+      .withColumn("kind", lit("a"))
+    assert(leftPersisted(st.upsertManyTs(rows, now = now0.plusHours(1))).isEmpty)
+    assert(st.getTs(a).filter(col("value") === 5.0).count() === 4)
+  }
+
+  test("ChunkStore.delete(keepTracking = false) releases its checkpoint") {
+    val st = chunkStore()
+    st.setTs(a, hourly("2024-01-30T00:00", 48, 1.0), now = now0)
+    assert(leftPersisted(st.delete(Map("kind" -> "a"), keepTracking = false, now = now0)).isEmpty)
+    assert(st.load().count() === 0)
+  }
+
+  test("VersionedStore.setLc non-versioned upsert releases its checkpoint") {
+    val st = new VersionedStore(spark, tmpDir("commit"))
+    assert(st.setLc("p", 1, hourly("2024-01-01T00:00", 3, 1.0)))
+    assert(leftPersisted(st.setLc("p", 1, hourly("2024-01-01T00:00", 3, 9.0))).isEmpty)
+    assert(st.getLc("p", 1).collect().map(_.getAs[Double]("value")).toSeq === Seq(9.0, 9.0, 9.0))
+  }
+
+  test("Sync.pull releases its staged listing") {
+    val server = chunkStore(sync = true); val client = chunkStore(sync = true)
+    server.setTs(a, hourly("2024-01-15T00:00", 24 * 20, 1.0), update = true, now = now0)
+    assert(leftPersisted(Sync.pull(client, server, pageSize = 1)).isEmpty)
+    assert(client.yieldManyTs().count() === server.yieldManyTs().count())
+  }
+
+  test("import_chunks failing mid-commit leaves the client store untouched") {
+    val client = chunkStore(sync = true)
+    client.setTs(a, hourly("2024-01-15T00:00", 24 * 20, 1.0), update = true, now = now0) // Jan+Feb
+    val files = snapshot(client.path)
+    val rows = client.load().collect().toSet
+    // 48 rows over the Jan/Feb chunks, series a (stored) and b (new); the
+    // 40th value raises. A range source keeps the failure at run time (a
+    // local relation would be folded by the optimizer) and only the
+    // commit's checkpoint job reads `value`.
+    val ts = (lit(ldt("2024-01-31T00:00")) +
+      make_dt_interval(lit(0), col("id").cast("int"), lit(0), lit(0))).cast(TimestampNTZType)
+    val batch = spark.range(48).select(
+      lit(0).as("version"),
+      when(col("id") % 2 === 0, "a").otherwise("b").as("kind"),
+      (year(ts) * 12 + month(ts) - 1).as("chunk_index"),
+      ts.as("ts"),
+      when(col("id") === 40, raise_error(lit("injected failure")))
+        .otherwise(col("id").cast(DoubleType)).as("value"),
+      lit("double").as("dtype"),
+      lit(false).as("is_deleted"),
+      lit(now0.plusHours(1)).as("updated_at"))
+    val e = intercept[Exception](Sync.importChunks(client, batch))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("injected failure")))
+    assert(snapshot(client.path) === files)
+    assert(client.load().collect().toSet === rows)
+    assert(strangers(client.path).isEmpty)
+  }
+
+  test("a failed commit on a bucket-partitioned VersionedStore changes nothing") {
+    val dir = tmpDir("commit")
+    val st = new VersionedStore(spark, dir, numBuckets = 8)
+    val pa = "p1"
+    val pb = (2 to 100).map("p" + _).find(p => st.bucketOf(p) != st.bucketOf(pa)).get
+    st.setLc(pa, 1, hourly("2024-01-01T00:00", 6, 1.0))
+    st.setLc(pb, 1, hourly("2024-01-01T00:00", 6, 2.0))
+    val files = snapshot(dir)
+    val rows = st.load().collect().toSet
+    val b = st.bucketOf(pa)
+    val content = st.load().filter(col("bucket") === b)
+      .withColumn("value", when(col("ts") === lit(ldt("2024-01-01T03:00")),
+        raise_error(lit("injected failure"))).otherwise(col("value")))
+    intercept[Exception](PartitionCommit.commit(st.layout, content, Seq(b)))
+    assert(snapshot(dir) === files)
+    assert(st.load().collect().toSet === rows)
+    assert(strangers(dir).isEmpty)
+  }
+
+  test("VersionedStore.clear emptying a bucket removes its directory") {
+    val dir = tmpDir("commit")
+    val st = new VersionedStore(spark, dir, numBuckets = 8)
+    val pa = "p1"
+    val pb = (2 to 100).map("p" + _).find(p => st.bucketOf(p) != st.bucketOf(pa)).get
+    st.setLc(pa, 1, hourly("2024-01-01T00:00", 3, 1.0), versioning = true)
+    st.setLc(pa, 1, hourly("2024-01-01T00:00", 3, 2.0), versioning = true)
+    st.setLc(pb, 1, hourly("2024-01-01T00:00", 3, 3.0))
+    st.clear(1, prms = Some(Seq(pa)))
+    assert(!new java.io.File(dir, s"bucket=${st.bucketOf(pa)}").exists())
+    assert(new java.io.File(dir, s"bucket=${st.bucketOf(pb)}").isDirectory)
+    assert(st.count(1) === 1)
+  }
+}
