@@ -1,9 +1,9 @@
 package graft.sync
 
 import graft.store.{ChunkStore, PartitionCommit}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{TimestampNTZType, DoubleType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, TimestampNTZType}
 
 /** Incremental store↔store replication — the batch re-expression of the
   * reference's pull-based sync (hostore/utils/ts_sync.py:60-296 +
@@ -19,13 +19,13 @@ object Sync {
     * "int64", ...); the store records Spark simpleStrings ("double",
     * "bigint", ...). Unknown names pass through unchanged.
     */
-  private def sparkToNumpy(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private def sparkToNumpy(c: Column): Column =
     when(c === "double", "float64").when(c === "float", "float32")
       .when(c === "bigint", "int64").when(c === "int", "int32")
       .when(c === "smallint", "int16").when(c === "tinyint", "int8")
       .otherwise(c)
 
-  private def numpyToSpark(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private def numpyToSpark(c: Column): Column =
     when(c === "float64", "double").when(c === "float32", "float")
       .when(c === "int64", "bigint").when(c === "int32", "int")
       .when(c === "int16", "smallint").when(c === "int8", "tinyint")
@@ -88,15 +88,30 @@ object Sync {
       .orderBy((col("updated_at") +: keys.map(col) :+ col("chunk_index")): _*)
   }
 
-  /** Payload fetch for a spec set (reference `export_chunks`,
-    * chunk_timeserie_store.py:609-631): semi-join the spec list
-    * (businessKeys..., chunk_index) against the store, return full rows.
-    * The spec side is small (one sync page) → broadcast semi-join, no
-    * shuffle of the store.
+  /** The spec set as one literal predicate: `chunk_index IN (…)` (a
+    * partition filter, so a scan lists only the named chunk partitions)
+    * and the `(businessKeys..., chunk_index)` membership of each row. Each
+    * spec row starts with `(keys..., chunk_index)` in store key order;
+    * trailing fields are ignored, so a collected updates listing row is a
+    * spec as it is. Literals are cast to the store's key types.
     */
-  def exportChunks(store: ChunkStore, specs: DataFrame): DataFrame = {
-    val joinCols = store.keys :+ "chunk_index"
-    store.load().join(broadcast(specs.select(joinCols.map(col): _*).distinct()), joinCols, "left_semi")
+  private def specPredicates(store: ChunkStore, specs: Seq[Row]): (Column, Column) = {
+    val fields = store.keySchema.fields.toSeq :+ StructField("chunk_index", IntegerType)
+    val tuples = specs.map(r => struct(fields.indices.map(i =>
+      lit(r.get(i)).cast(fields(i).dataType).as(fields(i).name)): _*)).distinct
+    (col("chunk_index").isin(specs.map(_.get(fields.length - 1)).distinct: _*),
+      struct(fields.map(f => col(f.name)): _*).isin(tuples: _*))
+  }
+
+  /** Payload fetch for a spec set (reference `export_chunks`,
+    * chunk_timeserie_store.py:609-631): the full store rows of the named
+    * (businessKeys..., chunk_index) series-chunks. The specs are already
+    * on the driver (one sync page), so they enter the plan as literals —
+    * no spec-side job, and the scan reads only the named chunk partitions.
+    */
+  def exportChunks(store: ChunkStore, specs: Seq[Row]): DataFrame = {
+    val (inPartitions, isSpec) = specPredicates(store, specs)
+    store.load().filter(inPartitions && isSpec)
   }
 
   /** The `/pack/` wire envelope (reference sync ViewSet,
@@ -108,52 +123,33 @@ object Sync {
     * DENSE value array: the reference normalizes every series to the
     * store frequency grid on write and rebuilds the index reader-side
     * from (start_ts, freq), so holes must travel as NaN positions, not
-    * absent rows. Densification is in-plan: epoch-micros grid positions
-    * per row, a position→value map per chunk, and a `transform(sequence)`
-    * fill — no window, no driver loop; one shuffle (the per-chunk
-    * groupBy), blobs built map-side after it.
+    * absent rows. Densification is one pass per chunk: the per-chunk
+    * groupBy collects the `(epoch-micros, value)` points and
+    * [[graft.functions.ScatterGrid]] scatters them onto the NaN-filled
+    * grid from the chunk's first point, failing the job on an off-grid or
+    * duplicate point. One shuffle (the groupBy), blobs built after it.
     *
     * Returns (keys..., chunk_index, envelope_json) — one wire row per
     * chunk, keys kept alongside for addressing; `envelope_json` alone is
     * the reference-parity payload. Timestamps are ISO-8601 naive UTC with
     * microseconds.
     */
-  def packEnvelope(store: ChunkStore, specs: DataFrame): DataFrame = {
+  def packEnvelope(store: ChunkStore, specs: Seq[Row]): DataFrame = {
     val keys = store.keys
     val freqUs = store.config.freqSecs * 1000000L
-    val rows = exportChunks(store, specs)
     val us = unix_micros(col("ts").cast("timestamp")) // NTZ→TS identity under UTC session tz
-    val grouped = rows
-      .withColumn("__us", when(col("ts").isNotNull, us))
+    val grouped = exportChunks(store, specs)
       .groupBy((keys.map(col) :+ col("chunk_index")): _*)
       .agg(
-        min(col("__us")).as("__start_us"),
-        max(col("__us")).as("__end_us"),
-        map_from_entries(collect_list(when(col("ts").isNotNull,
-          struct(col("__us"), col("value"))))).as("__byUs"),
+        min(col("ts")).as("__start"),
+        // tombstone rows (null ts) stay out: a tombstone chunk packs the
+        // reference's empty payload with a null start_ts
+        collect_list(when(col("ts").isNotNull, struct(us.as("us"), col("value")))).as("__points"),
         max(col("updated_at")).as("updated_at"),
         max(when(col("is_deleted"), 1).otherwise(0)).cast("boolean").as("is_deleted"),
         first(col("dtype"), ignoreNulls = true).as("__dtype"))
-    // dense grid fill: absent grid positions are NaN holes on the wire,
-    // like the reference's freq-reindexed series; tombstone chunks
-    // (no live ts) pack the reference's empty payload with a null start_ts
-    val rawValues = when(col("__start_us").isNull, array().cast("array<double>"))
-      .otherwise(transform(
-        sequence(lit(0L), ((col("__end_us") - col("__start_us")) / freqUs).cast("long")),
-        i => coalesce( // try_: a missing grid position is a hole, not an ANSI error
-          try_element_at(col("__byUs"), col("__start_us") + i * freqUs),
-          lit(Double.NaN))))
-    // Off-grid guard: a stored point not on start + k*freq would miss
-    // every grid lookup and vanish from the wire SILENTLY. The store
-    // never writes NaN rows, so grid hits = non-NaN slots; any shortfall
-    // vs the chunk's point count means off-grid data → fail the job
-    // instead of losing points (the blob format cannot represent them).
-    val values = when(
-      size(filter(rawValues, v => !isnan(v))) === size(col("__byUs")), rawValues)
-      .otherwise(raise_error(concat(
-        lit("packEnvelope: chunk has points off the "), lit(freqUs / 1000000L),
-        lit("s grid — the reference blob format cannot represent them"))))
-    val isoTs = (c: org.apache.spark.sql.Column) =>
+    val values = graft.functions.Lz4Blob.scatter_grid(col("__points"), freqUs)
+    val isoTs = (c: Column) =>
       date_format(c.cast("timestamp"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
     grouped.select(
       (keys.map(col) :+ col("chunk_index") :+
@@ -164,7 +160,7 @@ object Sync {
             // wire dtype uses the reference's numpy names; the blob itself
             // is always float64-LE (the reference's storage form too)
             coalesce(sparkToNumpy(col("__dtype")), lit("float64")).as("dtype"),
-            isoTs(timestamp_micros(col("__start_us")).cast("timestamp_ntz")).as("start_ts"),
+            isoTs(col("__start")).as("start_ts"),
             col("is_deleted").as("is_deleted"),
             isoTs(col("updated_at")).as("updated_at")).as("meta"))).as("envelope_json")): _*)
   }
@@ -185,7 +181,7 @@ object Sync {
     * ZoneOffset's domain (magnitude beyond ±18:00, or minute/second
     * fields over 59), which parseTs rejects by throwing.
     */
-  private[sync] def wireTs(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+  private[sync] def wireTs(c: Column): Column = {
     // FULL-string shape check first: without it, an unrecognized tail
     // (e.g. a seconds-bearing offset the extractor missed) would be
     // silently DROPPED and the value stored shifted — the exact failure
@@ -275,26 +271,41 @@ object Sync {
     * the server's clock — ts_sync semantics), unmatched inserted. A batch
     * with a null/missing chunk_index is rejected BEFORE any write — the
     * whole batch rolls back, like the reference's transaction
-    * (tests/test_import_chunks.py:31-51). One metadata job (the batch's
-    * distinct chunk indexes) answers every pre-write question: empty →
-    * nothing to do, any null → reject, else the partitions to commit.
+    * (tests/test_import_chunks.py:31-51). One metadata job collects the
+    * batch's distinct (businessKeys..., chunk_index) specs, then the
+    * spec-driven import below commits.
     */
   def importChunks(store: ChunkStore, batch: DataFrame): Unit =
+    store.locked {
+      importChunks(store, batch,
+        batch.select((store.keys :+ "chunk_index").map(col): _*).distinct().collect().toSeq)
+    }
+
+  /** [[importChunks]] for a batch whose (businessKeys..., chunk_index)
+    * specs the caller already holds on the driver (a sync page, the
+    * envelopes a client received) — the one commit body. `specs` must
+    * name every series-chunk in `batch`: each named chunk's stored rows
+    * are replaced by the batch's, through the literal spec predicate (no
+    * job before the commit's own). Empty specs are a no-op; a null
+    * chunk_index rejects the whole batch before any write.
+    */
+  private[sync] def importChunks(store: ChunkStore, batch: DataFrame, specs: Seq[Row]): Unit =
     // Mutates outside the store's public mutators (direct partition
     // commit), so it takes the store's writer lock itself — the
     // atomic-batch guarantee (reference transaction.atomic,
     // chunk_timeserie_store.py:633-695) must hold against concurrent
     // local writers too.
     store.locked {
-      val chunks = batch.select("chunk_index").distinct().collect()
-      if (chunks.exists(_.isNullAt(0)))
+      val ci = store.keys.length
+      if (specs.exists(_.isNullAt(ci)))
         throw new IllegalArgumentException("import_chunks: chunk_index missing — whole batch rejected")
-      val affected = chunks.map(_.getInt(0)).toSeq
-      val joinCols = store.keys :+ "chunk_index"
-      val untouched = store.load().filter(col("chunk_index").isin(affected: _*))
-        .join(broadcast(batch.select(joinCols.map(col): _*).distinct()), joinCols, "left_anti")
-      PartitionCommit.commit(store.layout,
-        untouched.unionByName(batch.select(store.schema.fieldNames.map(col): _*)), affected)
+      if (specs.nonEmpty) {
+        val (inPartitions, isSpec) = specPredicates(store, specs)
+        val untouched = store.load().filter(inPartitions && !isSpec)
+        PartitionCommit.commit(store.layout,
+          untouched.unionByName(batch.select(store.schema.fieldNames.map(col): _*)),
+          specs.map(_.getInt(ci)).distinct)
+      }
     }
 
   /** Full pull (reference `TimeseriesChunkStoreSyncClient.pull`,
@@ -327,13 +338,13 @@ object Sync {
     // top-K (TakeOrderedAndProject: per-partition heads merged on the
     // driver) — no global sort, no single-partition window, at any
     // listing size. The page rows collected for the keyset ARE the spec
-    // list `exportChunks` broadcasts, so the collect is work the page
-    // import needed anyway (pageSize metadata rows, never payload).
+    // list export and import take as literals, so the collect is work the
+    // page import needed anyway (pageSize metadata rows, never payload).
     // Released after the last page (Dataset.unpersist does not free a
     // localCheckpoint's blocks; the commit helper's release does).
     PartitionCommit.checkpointed(listing(server, since, filters)) { staged =>
       var applied  = 0L
-      var lastSeen: Option[org.apache.spark.sql.Row] = None
+      var lastSeen: Option[Row] = None
       var more     = true
       while (more) {
         // Both live chunks and tombstones transfer as full row sets: a
@@ -341,12 +352,10 @@ object Sync {
         // covers both (reference splits them only because of the two-step
         // HTTP protocol). Page-at-a-time import keeps crash-resume: pages
         // already imported persist; `>= since` re-fetches the boundary row.
-        val pageRows = pageFrame(staged, keys, lastSeen, pageSize).collect()
+        val pageRows = pageFrame(staged, keys, lastSeen, pageSize).collect().toSeq
         if (pageRows.isEmpty) more = false
         else {
-          val page = server.spark.createDataFrame(
-            java.util.Arrays.asList(pageRows: _*), staged.schema)
-          importChunks(client, exportChunks(server, page))
+          importChunks(client, exportChunks(server, pageRows), pageRows)
           applied += pageRows.length
           lastSeen = Some(pageRows.last)
           more = pageRows.length == pageSize
@@ -366,7 +375,7 @@ object Sync {
   private[graft] def pageFrame(
       staged: DataFrame,
       keys: Seq[String],
-      lastSeen: Option[org.apache.spark.sql.Row],
+      lastSeen: Option[Row],
       pageSize: Int): DataFrame = {
     val ordNames = "updated_at" +: keys :+ "chunk_index"
     val after = lastSeen match {

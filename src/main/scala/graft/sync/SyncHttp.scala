@@ -30,6 +30,12 @@ import org.apache.spark.sql.types._
   * chunk page, never payload rows — blobs ride inside envelope strings
   * built and parsed IN PLAN by Spark jobs), so serialization here is
   * Jackson on the driver over at most `pageSize` nodes per round-trip.
+  * The same driver-side parse yields each request's chunk specs — a
+  * `/pack/` body, the envelopes and tombstone items a client page
+  * received — as `(keys..., chunk_index)` rows that enter the plan as
+  * literal predicates ([[Sync.exportChunks]], [[Sync.importChunks]]), so
+  * no job runs to learn which chunks a request touches; `/updates/`
+  * takes its `count` from a short page instead of a second aggregation.
   */
 object SyncHttp {
   private val mapper = new ObjectMapper()
@@ -80,7 +86,7 @@ object SyncHttp {
     case _           => v
   }
 
-  private[sync] def typedNode(dt: DataType, n: JsonNode): Any = dt match {
+  private def typedNode(dt: DataType, n: JsonNode): Any = dt match {
     case IntegerType => n.asInt
     case LongType    => n.asLong
     case ShortType   => n.asInt.toShort
@@ -88,6 +94,19 @@ object SyncHttp {
     case FloatType   => n.asDouble.toFloat
     case BooleanType => n.asBoolean
     case _           => n.asText
+  }
+
+  /** One `(businessKeys..., chunk_index)` spec row from wire JSON: the
+    * keys from `attrs`, the chunk index from `chunkIndex` (beside `attrs`
+    * on an update item, inside it on an envelope). A null or missing
+    * chunk_index rejects the whole batch, as import_chunks does
+    * (reference tests/test_import_chunks.py:31-51).
+    */
+  private[sync] def specRow(keySchema: StructType, attrs: JsonNode, chunkIndex: JsonNode): Row = {
+    if (chunkIndex == null || chunkIndex.isNull)
+      throw new IllegalArgumentException("import_chunks: chunk_index missing — whole batch rejected")
+    Row.fromSeq(keySchema.fields.toSeq.map(f => typedNode(f.dataType, attrs.get(f.name))) :+
+      chunkIndex.asInt)
   }
 
   private def putAny(node: ObjectNode, k: String, v: Any): Unit = v match {
@@ -148,6 +167,10 @@ object SyncHttp {
     * reference's `updates` action (ts_sync.py:81-115): `since` + filters
     * run [[Sync.wireUpdates]]; limit/offset slice the deterministic
     * ordering; `next`/`previous` are relative URLs the client follows.
+    * The page is collected first; a short page that is non-empty or
+    * starts at offset 0 ends the listing, so `count` is `offset + page
+    * size` without a second aggregation — only a full page or an offset
+    * past the end runs `count()`.
     * Exposed (not just mounted) so tests can wrap it in fault-injecting
     * decorators — 429s, 500s, crash-after-N — without touching the
     * protocol code.
@@ -169,8 +192,10 @@ object SyncHttp {
         .filterKeys(k => !Set("since", "limit", "offset").contains(k))
         .map { case (k, v) => k -> typed(store.keySchema(k).dataType, v) }.toMap
       val listing = Sync.wireUpdates(store, since, filters)
-      val count = listing.count()
       val page = listing.offset(offset).limit(limit).collect()
+      val count =
+        if (page.length < limit && (offset == 0 || page.nonEmpty)) offset.toLong + page.length
+        else listing.count()
 
       val root = mapper.createObjectNode()
       root.put("count", count)
@@ -215,17 +240,10 @@ object SyncHttp {
       val body = new String(ex.getRequestBody.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
       val spec = mapper.readTree(if (body.isEmpty) "[]" else body)
       require(spec.isArray, "pack spec must be a JSON array")
-      val fields = store.keySchema.fields.toSeq :+ StructField("chunk_index", IntegerType)
-      val rows = new java.util.ArrayList[Row]()
-      spec.forEach { item =>
-        val attrs = item.get("attrs")
-        val vals = store.keySchema.fields.toSeq.map(f => typedNode(f.dataType, attrs.get(f.name))) :+
-          item.get("chunk_index").asInt
-        rows.add(Row.fromSeq(vals))
-      }
-      val specs = store.spark.createDataFrame(rows, StructType(fields))
+      val specs = (0 until spec.size).map(spec.get).map(item =>
+        specRow(store.keySchema, item.get("attrs"), item.get("chunk_index")))
       val envelopes =
-        if (rows.isEmpty) Array.empty[String]
+        if (specs.isEmpty) Array.empty[String]
         else Sync.packEnvelope(store, specs).select("envelope_json").collect().map(_.getString(0))
       respond(ex, 200, envelopes.mkString("[", ",", "]"))
     } catch {
@@ -243,7 +261,10 @@ object SyncHttp {
   * ts_sync.py:168-296): page through `/updates/`, fetch the page's live
   * chunks from `/pack/` in `batch`-sized specs, then import the page's
   * tombstones AND live rows in ONE atomic [[Sync.importChunks]] (both
-  * carry the SERVER's `updated_at`, so a re-pull does not re-fetch them).
+  * carry the SERVER's `updated_at`, so a re-pull does not re-fetch them)
+  * whose specs are the tombstone items and the envelopes that arrived.
+  * A null or missing chunk_index on either rejects the page before any
+  * write.
   * Page-atomic import is what makes crash-resume exact, same as
   * [[Sync.pull]]: the local high-water mark (max `updated_at`) can never
   * advance past an un-imported item — a crash mid-page imports nothing of
@@ -305,17 +326,23 @@ final class SyncHttpClient(
         // the page's max updated_at advance `lastUpdatedAt` past live items
         // whose /pack/ fetch never ran — a crash there would skip them
         // forever on the next pull.
-        val liveBatches = toFetch.grouped(batch).toSeq.map { group =>
+        val tombSpecs = toDelete.map(item =>
+          SyncHttp.specRow(store.keySchema, item.get("attrs"), item.get("chunk_index")))
+        val envelopes = toFetch.grouped(batch).toSeq.flatMap { group =>
           val spec = mapper.createArrayNode()
           group.foreach(spec.add)
           val pack = mapper.readTree(get(s"$base/pack/", body = Some(mapper.writeValueAsString(spec))))
-          val envs = (0 until pack.size).map(i => mapper.writeValueAsString(pack.get(i)))
-          val df = store.spark.createDataset(envs)(org.apache.spark.sql.Encoders.STRING)
-            .toDF("envelope_json")
-          Sync.unpackEnvelope(store, df)
+          (0 until pack.size).map(pack.get)
         }
-        val pageRows = (if (toDelete.nonEmpty) Seq(tombstoneRows(toDelete)) else Nil) ++ liveBatches
-        pageRows.reduceOption(_ unionByName _).foreach(Sync.importChunks(store, _))
+        // the import's specs are the chunks that actually arrived — a
+        // listed chunk the server did not pack keeps its local rows
+        val liveSpecs = envelopes.map(e =>
+          SyncHttp.specRow(store.keySchema, e.get("attrs"), e.get("attrs").get("chunk_index")))
+        val live = Sync.unpackEnvelope(store,
+          store.spark.createDataset(envelopes.map(mapper.writeValueAsString))(
+            org.apache.spark.sql.Encoders.STRING).toDF("envelope_json"))
+        Sync.importChunks(store, tombstoneRows(toDelete, tombSpecs).unionByName(live),
+          tombSpecs ++ liveSpecs)
         totalFetch += toFetch.size
         totalDelete += toDelete.size
         url = Option(page.get("next")).filter(!_.isNull).map(n =>
@@ -325,24 +352,19 @@ final class SyncHttpClient(
     (totalFetch, totalDelete)
   }
 
-  /** Server tombstone items → full local tombstone rows (null ts/value,
-    * server `updated_at`) for [[Sync.importChunks]] — one import path for
-    * deletes and data, like [[Sync.pull]].
+  /** Server tombstone items and their spec rows → full local tombstone
+    * rows (null ts/value, server `updated_at`) for [[Sync.importChunks]] —
+    * one import path for deletes and data, like [[Sync.pull]].
     */
-  private def tombstoneRows(items: Seq[JsonNode]): DataFrame = {
-    val rows = new java.util.ArrayList[Row]()
-    items.foreach { item =>
-      val attrs = item.get("attrs")
-      val keyVals = store.keySchema.fields.toSeq.map(f =>
-        SyncHttp.typedNode(f.dataType, attrs.get(f.name)))
-      rows.add(Row.fromSeq(keyVals ++ Seq(
-        item.get("chunk_index").asInt,
+  private def tombstoneRows(items: Seq[JsonNode], specs: Seq[Row]): DataFrame = {
+    val rows = items.zip(specs).map { case (item, spec) =>
+      Row.fromSeq(spec.toSeq ++ Seq(
         null, null, null, true,
         // parseTs, not bare parse: a reference (DRF) server serializes
         // aware datetimes with a trailing Z / +00:00 suffix
-        SyncHttp.parseTs(item.get("updated_at").asText))))
+        SyncHttp.parseTs(item.get("updated_at").asText)))
     }
-    store.spark.createDataFrame(rows, store.schema)
+    store.spark.createDataFrame(java.util.Arrays.asList(rows: _*), store.schema)
   }
 
   /** One HTTP round-trip with the reference's retry discipline. */

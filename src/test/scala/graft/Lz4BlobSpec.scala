@@ -61,4 +61,37 @@ class Lz4BlobSpec extends SparkSpec {
     assert(got(1L).length === 3 && got(1L)(0) === 3.0 && got(1L)(1).isNaN && got(1L)(2) === 4.0)
     assert(got(2L).isEmpty)
   }
+
+  // scatter_grid: (us, value) points -> the dense NaN-padded grid the
+  // chunk blob carries
+  private val step = 900L * 1000000L // 15 min in micros
+
+  private def scatter(points: Seq[(Long, Double)]): Seq[Double] =
+    Seq(Tuple1(points)).toDF("p")
+      .select(scatter_grid(col("p").cast("array<struct<us: bigint, value: double>>"), step))
+      .collect()(0).getSeq[Double](0)
+
+  private def failure(points: Seq[(Long, Double)]): String = {
+    val e = intercept[Exception](scatter(points))
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+  }
+
+  test("scatter_grid places points from the first one and pads holes with NaN, in any input order") {
+    val t0 = 1704067200000000L // 2024-01-01T00:00Z
+    val got = scatter(Seq((t0 + 4 * step, 4.0), (t0, 0.5), (t0 + step, -1.0)))
+    assert(got.length === 5)
+    assert(got(0) === 0.5 && got(1) === -1.0 && got(4) === 4.0)
+    assert(got(2).isNaN && got(3).isNaN)
+  }
+
+  test("scatter_grid of no points is the empty (tombstone) payload") {
+    assert(scatter(Seq.empty).isEmpty)
+  }
+
+  test("scatter_grid rejects an off-grid point and a duplicate timestamp") {
+    val t0 = 1704067200000000L
+    assert(failure(Seq((t0, 1.0), (t0 + step / 2, 2.0))).contains("off the 900s grid"))
+    assert(failure(Seq((t0, 1.0), (t0 + step, 2.0), (t0 + step, 3.0))).contains("duplicate point"))
+  }
 }

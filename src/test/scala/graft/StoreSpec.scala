@@ -216,7 +216,7 @@ class ChunkStoreSpec extends SparkSpec {
     val t0 = java.time.LocalDateTime.parse("2024-03-01T00:00")
     val ints = (0 until 48).map(i => (t0.plusHours(i.toLong), i.toLong)).toDF("ts", "value")
     assert(st.setTs(attrs, ints, update = true, now = now0))
-    val specs = st.load().select("version", "kind", "chunk_index").distinct()
+    val specs = st.load().select("version", "kind", "chunk_index").distinct().collect().toSeq
     val wire = graft.sync.Sync.packEnvelope(st, specs)
     assert(wire.select(get_json_object(col("envelope_json"), "$.meta.dtype")).head().getString(0)
       === "int64")
@@ -890,7 +890,7 @@ class SyncSpec extends SparkSpec {
     server.setTs(Map("version" -> 0, "kind" -> "c"),
       hourly("2024-03-01T00:00", 24, 3.0), update = true, now = t0.plusHours(2))
     // simulate a crash after one page: import only the first listed chunk
-    val firstPage = Sync.updates(server, client.lastUpdatedAt()).limit(1)
+    val firstPage = Sync.updates(server, client.lastUpdatedAt()).limit(1).collect().toSeq
     Sync.importChunks(client, Sync.exportChunks(server, firstPage))
     assert(client.load().select("kind", "chunk_index").distinct().count() === 1)
     // resume: fresh pull completes the mirror; the already-imported chunk

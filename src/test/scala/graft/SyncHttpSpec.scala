@@ -1,6 +1,7 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.store.{ChunkStore, StoreConfig}
 import graft.sync.{Sync, SyncHttp, SyncHttpClient}
@@ -386,5 +387,114 @@ class SyncHttpSpec extends SparkSpec {
       val ex1 = intercept[java.io.IOException] { cli.pull() }
       assert(ex1.getMessage.contains("HTTP 503") && sleeps.isEmpty)
     } finally http.stop(0)
+  }
+
+  // ------------------------------------------------------------------
+  // spec validation, job budget, derived count
+  // ------------------------------------------------------------------
+
+  test("a tombstone item with a null or missing chunk_index rejects the page before any write") {
+    val server = newStore()
+    val client = newStore()
+    server.setTs(Map("version" -> 0, "kind" -> "a"),
+      hourly("2024-01-01T00:00", 24, _ => Some(1.0)), update = true, now = now0)
+    server.setTs(Map("version" -> 1, "kind" -> "b"),
+      hourly("2024-01-01T00:00", 24, _ => Some(2.0)), update = true, now = now0)
+    val (h0, b0) = serveWrapped(server)()
+    try new SyncHttpClient(b0, client).pull() finally h0.stop(0)
+    // next page: one tombstone (Jan of "a" vacated) and one live chunk
+    server.setTs(Map("version" -> 0, "kind" -> "a"),
+      hourly("2024-02-01T00:00", 24, _ => Some(3.0)), replace = true, now = now0.plusHours(1))
+    val before = stateOf(client)
+    val (healthy, healthyBase) = serveWrapped(server)()
+    try {
+      for (corrupt <- Seq[ObjectNode => Unit](_.putNull("chunk_index"), _.remove("chunk_index"))) {
+        val (http, base) = serveWrapped(server)(wrapUpdates = _ => (ex: HttpExchange) => {
+          val page = mapper.readTree(
+            rawGet(s"$healthyBase/updates/?${ex.getRequestURI.getRawQuery}")._2)
+          page.get("results").forEach(item =>
+            if (item.get("is_deleted").asBoolean) corrupt(item.asInstanceOf[ObjectNode]))
+          respondRaw(ex, 200, mapper.writeValueAsString(page))
+        })
+        try {
+          val e = intercept[IllegalArgumentException](new SyncHttpClient(base, client).pull())
+          assert(e.getMessage.contains("chunk_index missing"))
+          assert(stateOf(client) === before)
+        } finally http.stop(0)
+      }
+      new SyncHttpClient(healthyBase, client).pull()
+      assert(stateOf(client) === stateOf(server))
+    } finally healthy.stop(0)
+  }
+
+  /** Spark jobs started while `f` runs, counted by a listener once the
+    * (asynchronous) listener bus has gone quiet.
+    */
+  private def jobsDuring(f: => Any): Int = {
+    val jobs = new AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      var last = -1; var stable = 0
+      while (stable < 6) {
+        Thread.sleep(50)
+        if (jobs.get == last) stable += 1 else { last = jobs.get; stable = 0 }
+      }
+      jobs.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a one-page pull costs at most 9 Spark jobs, client and server handlers together") {
+    val server = newStore()
+    val client = newStore()
+    (0 until 4).foreach { i =>
+      server.setTs(Map("version" -> i, "kind" -> "k"),
+        hourly("2024-01-30T00:00", 24 * 3, h => if (h % 5 == 2) None else Some(i + h * 0.5)),
+        update = true, now = now0)
+    }
+    val srv = SyncHttp.serve(server)
+    try {
+      val cli = new SyncHttpClient(srv.endpoint, client)
+      val boot = jobsDuring(assert(cli.pull() === ((8L, 0L))))
+      assert(boot <= 9, s"bootstrap pull ran $boot jobs")
+      // a day: one chunk corrected, one series replaced (a tombstone)
+      server.setTs(Map("version" -> 0, "kind" -> "k"),
+        hourly("2024-02-01T00:00", 2, _ => Some(7.0)), update = true, now = now0.plusHours(1))
+      server.setTs(Map("version" -> 1, "kind" -> "k"),
+        hourly("2024-02-01T00:00", 2, _ => Some(8.0)), replace = true, now = now0.plusHours(1))
+      val day = jobsDuring(cli.pull())
+      assert(day <= 9, s"daily pull ran $day jobs")
+      info(s"jobs: bootstrap $boot, day $day")
+      assert(stateOf(client) === stateOf(server))
+    } finally srv.stop()
+  }
+
+  test("/updates/ count, next and previous match the count()-based page on every edge") {
+    val server = newStore()
+    WireFixture.write(server, now0)
+    val total = Sync.updates(server, ldt("2000-01-01T00:00")).count()
+    val srv = SyncHttp.serve(server)
+    try {
+      val since = java.net.URLEncoder.encode("2000-01-01T00:00:00.000000", "UTF-8")
+      // short single page, short last page, full pages (exact multiple of
+      // limit), offset at and past the end
+      for (((limit, offset), golden) <- WireFixture.updates) {
+        val (code, body) = rawGet(s"${srv.endpoint}/updates/?since=$since&limit=$limit&offset=$offset")
+        assert(code === 200)
+        assert(body === golden, s"limit=$limit offset=$offset")
+        val page = mapper.readTree(body)
+        assert(page.get("count").asLong === total)
+        val next = Option(page.get("next")).filterNot(_.isNull).map(_.asText)
+        val prev = Option(page.get("previous")).filterNot(_.isNull).map(_.asText)
+        assert(next.isDefined === (offset + limit < total), s"next at $limit/$offset")
+        next.foreach(n => assert(n.endsWith(s"limit=$limit&offset=${offset + limit}")))
+        assert(prev.isDefined === (offset > 0), s"previous at $limit/$offset")
+        prev.foreach(p => assert(p.endsWith(s"limit=$limit&offset=${math.max(0, offset - limit)}")))
+      }
+    } finally srv.stop()
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import graft.store.{ChunkStore, StoreConfig}
 import graft.sync.Sync
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -29,8 +29,8 @@ class SyncPackSpec extends SparkSpec {
 
   private val now0 = ldt("2024-06-01T00:00")
 
-  private def allSpecs(st: ChunkStore): DataFrame =
-    st.load().select((st.keys.map(col) :+ col("chunk_index")): _*).distinct()
+  private def allSpecs(st: ChunkStore): Seq[Row] =
+    st.load().select((st.keys.map(col) :+ col("chunk_index")): _*).distinct().collect().toSeq
 
   test("pack -> unpack is the identity on live rows (holes travel as NaN grid positions)") {
     val st = newStore()
@@ -159,4 +159,86 @@ class SyncPackSpec extends SparkSpec {
     val c = live(client)
     assert(c.length === s.length && c.sameElements(s))
   }
+
+  test("envelope_json is byte-identical to the pinned wire bytes (mixed live/tombstone)") {
+    val st = newStore()
+    WireFixture.write(st, now0)
+    val got = Sync.packEnvelope(st, allSpecs(st)).orderBy("version", "kind", "chunk_index")
+      .select("envelope_json").collect().map(_.getString(0)).toSeq
+    assert(got === WireFixture.envelopes)
+  }
+
+  test("a 2,976-point month with gaps round-trips through pack -> unpack") {
+    val st = new ChunkStore(spark, tmpDir("pack"), keySchema,
+      StoreConfig(freq = "15min", tz = "UTC", syncEnabled = true))
+    val t0 = java.time.LocalDateTime.parse("2024-01-01T00:00")
+    val month = (0 until 2976).map(i => (t0.plusMinutes(15L * i),
+      if (i != 0 && i != 2975 && (i % 97 < 13 || i % 41 == 7)) None else Some(i * 0.125)))
+      .toDF("ts", "value")
+    st.setTs(Map("version" -> 0, "kind" -> "m"), month, update = true, now = now0)
+    val wire = Sync.packEnvelope(st, allSpecs(st)).select("envelope_json")
+    val blob = wire.select(unbase64(get_json_object(col("envelope_json"), "$.blob")).as("b"))
+      .select(graft.functions.Lz4Blob.chunk_values(col("b"))).collect()(0).getSeq[Double](0)
+    assert(blob.length === 2976)
+    val stored = st.load().count()
+    assert(blob.count(!_.isNaN) === stored && stored < 2976)
+    val cols = Seq("version", "kind", "chunk_index", "ts", "value", "is_deleted", "updated_at")
+    def rows(d: DataFrame) = d.select(cols.map(col): _*).orderBy("ts").collect().toSeq
+    assert(rows(Sync.unpackEnvelope(st, wire)) === rows(st.load()))
+  }
+
+  test("the /pack/ scan prunes to the named chunk partitions") {
+    val st = newStore()
+    WireFixture.write(st, now0)
+    val feb = allSpecs(st).filter(_.getInt(2) == 2024 * 12 + 1)
+    val packed = Sync.packEnvelope(st, feb)
+    val scans = packed.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.nonEmpty)
+    scans.foreach(s => assert(s.partitionFilters.exists(_.references.exists(_.name == "chunk_index")),
+      s"no chunk_index partition filter: ${s.partitionFilters}"))
+    assert(packed.count() === 2)
+  }
+}
+
+/** A small store mixing a tombstone chunk, a live chunk with a hole and a
+  * series spanning two chunks, with the `/pack/` envelopes and `/updates/`
+  * pages the wire carries for it — pinned byte for byte, as the
+  * map-and-lookup grid fill produced them before the one-pass scatter.
+  */
+object WireFixture {
+  def write(st: ChunkStore, now0: java.time.LocalDateTime): Unit = {
+    val spark = st.spark
+    import spark.implicits._
+    def hourly(start: String, hours: Int, f: Int => Option[Double]): DataFrame = {
+      val t0 = java.time.LocalDateTime.parse(start)
+      (0 until hours).map(i => (t0.plusHours(i), f(i))).toDF("ts", "value")
+    }
+    st.setTs(Map("version" -> 0, "kind" -> "a"),
+      hourly("2024-01-10T00:00", 6, i => Some(i + 0.5)), update = true, now = now0)
+    st.setTs(Map("version" -> 0, "kind" -> "a"),
+      hourly("2024-02-03T00:00", 5, i => if (i == 2) None else Some(i * 2.0)), replace = true,
+      now = now0.plusHours(1))
+    st.setTs(Map("version" -> 1, "kind" -> "b"),
+      hourly("2024-01-31T20:00", 8, i => if (i % 3 == 1) None else Some(-i * 0.25)), update = true,
+      now = now0.plusHours(2))
+  }
+
+  /** `envelope_json` per chunk, in (version, kind, chunk_index) order. */
+  val envelopes: Seq[String] = Seq(
+    """{"blob":"BCJNGGBwcwAAAAA=","attrs":{"version":0,"kind":"a","chunk_index":24288},"meta":{"dtype":"float64","is_deleted":true,"updated_at":"2024-06-01T01:00:00.000000"}}""",
+    """{"blob":"BCJNGGBwcxgAAAAaAAEAEkAPACL4fwgAoBhAAAAAAAAAIEAAAAAA","attrs":{"version":0,"kind":"a","chunk_index":24289},"meta":{"dtype":"float64","start_ts":"2024-02-03T00:00:00.000000","is_deleted":false,"updated_at":"2024-06-01T01:00:00.000000"}}""",
+    """{"blob":"BCJNGGBwcxQAAAAZAAEAIvh/DwCg4L8AAAAAAADovwAAAAA=","attrs":{"version":1,"kind":"b","chunk_index":24288},"meta":{"dtype":"float64","start_ts":"2024-01-31T20:00:00.000000","is_deleted":false,"updated_at":"2024-06-01T02:00:00.000000"}}""",
+    """{"blob":"BCJNGGBwcw8AAAARAAEAoPS/AAAAAAAA+L8AAAAA","attrs":{"version":1,"kind":"b","chunk_index":24289},"meta":{"dtype":"float64","start_ts":"2024-02-01T01:00:00.000000","is_deleted":false,"updated_at":"2024-06-01T02:00:00.000000"}}""")
+
+  /** `/updates/` bodies (since 2000-01-01) by `(limit, offset)`. */
+  val updates: Map[(Int, Int), String] = Map(
+    (2, 0) -> """{"count":4,"next":"/ts/updates/?since=2000-01-01T00%3A00%3A00.000000&limit=2&offset=2","previous":null,"results":[{"attrs":{"version":0,"kind":"a"},"chunk_index":24288,"dtype":null,"start_ts":null,"updated_at":"2024-06-01T01:00:00.000000","is_deleted":true},{"attrs":{"version":0,"kind":"a"},"chunk_index":24289,"dtype":"float64","start_ts":"2024-02-03T00:00:00.000000","updated_at":"2024-06-01T01:00:00.000000","is_deleted":false}]}""",
+    (2, 2) -> """{"count":4,"next":null,"previous":"/ts/updates/?since=2000-01-01T00%3A00%3A00.000000&limit=2&offset=0","results":[{"attrs":{"version":1,"kind":"b"},"chunk_index":24288,"dtype":"float64","start_ts":"2024-01-31T20:00:00.000000","updated_at":"2024-06-01T02:00:00.000000","is_deleted":false},{"attrs":{"version":1,"kind":"b"},"chunk_index":24289,"dtype":"float64","start_ts":"2024-02-01T01:00:00.000000","updated_at":"2024-06-01T02:00:00.000000","is_deleted":false}]}""",
+    (3, 0) -> """{"count":4,"next":"/ts/updates/?since=2000-01-01T00%3A00%3A00.000000&limit=3&offset=3","previous":null,"results":[{"attrs":{"version":0,"kind":"a"},"chunk_index":24288,"dtype":null,"start_ts":null,"updated_at":"2024-06-01T01:00:00.000000","is_deleted":true},{"attrs":{"version":0,"kind":"a"},"chunk_index":24289,"dtype":"float64","start_ts":"2024-02-03T00:00:00.000000","updated_at":"2024-06-01T01:00:00.000000","is_deleted":false},{"attrs":{"version":1,"kind":"b"},"chunk_index":24288,"dtype":"float64","start_ts":"2024-01-31T20:00:00.000000","updated_at":"2024-06-01T02:00:00.000000","is_deleted":false}]}""",
+    (3, 3) -> """{"count":4,"next":null,"previous":"/ts/updates/?since=2000-01-01T00%3A00%3A00.000000&limit=3&offset=0","results":[{"attrs":{"version":1,"kind":"b"},"chunk_index":24289,"dtype":"float64","start_ts":"2024-02-01T01:00:00.000000","updated_at":"2024-06-01T02:00:00.000000","is_deleted":false}]}""",
+    (2, 4) -> """{"count":4,"next":null,"previous":"/ts/updates/?since=2000-01-01T00%3A00%3A00.000000&limit=2&offset=2","results":[]}""",
+    (2, 9) -> """{"count":4,"next":null,"previous":"/ts/updates/?since=2000-01-01T00%3A00%3A00.000000&limit=2&offset=7","results":[]}""",
+    (9, 0) -> """{"count":4,"next":null,"previous":null,"results":[{"attrs":{"version":0,"kind":"a"},"chunk_index":24288,"dtype":null,"start_ts":null,"updated_at":"2024-06-01T01:00:00.000000","is_deleted":true},{"attrs":{"version":0,"kind":"a"},"chunk_index":24289,"dtype":"float64","start_ts":"2024-02-03T00:00:00.000000","updated_at":"2024-06-01T01:00:00.000000","is_deleted":false},{"attrs":{"version":1,"kind":"b"},"chunk_index":24288,"dtype":"float64","start_ts":"2024-01-31T20:00:00.000000","updated_at":"2024-06-01T02:00:00.000000","is_deleted":false},{"attrs":{"version":1,"kind":"b"},"chunk_index":24289,"dtype":"float64","start_ts":"2024-02-01T01:00:00.000000","updated_at":"2024-06-01T02:00:00.000000","is_deleted":false}]}""")
 }
