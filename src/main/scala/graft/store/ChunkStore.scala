@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.jdk.CollectionConverters._
+
 /** Parquet-backed chunked time-series store — the Spark re-expression of
   * the reference's `TimeseriesChunkStore`
   * (hostore/models/chunk_timeserie_store.py:180-899).
@@ -39,9 +41,14 @@ import org.apache.spark.sql.types._
   * Concurrency: one writer at a time per store, enforced by an advisory
   * [[WriterLock]] around every mutator (the reference's row-lock upsert,
   * `select_for_update` at chunk_timeserie_store.py:789, re-expressed at
-  * store granularity over the partition commit). Readers never block —
-  * they only ever see fully-committed parquet. Disable via
+  * store granularity over the partition commit). Disable via
   * `StoreConfig(lockWrites = false)` for single-writer deployments.
+  * Readers take no lock and never block, but a commit is atomic per
+  * partition directory only: it deletes and renames the affected chunk
+  * directories one after another. A read that overlaps a commit can fail
+  * (`FILE_NOT_EXIST` for a file its scan listed before the swap) or miss
+  * a chunk listed between its delete and rename; retry such a read once
+  * the commit is done.
   */
 class ChunkStore(
     val spark: SparkSession,
@@ -251,18 +258,23 @@ class ChunkStore(
     * time slice, leading/trailing-null trim. Returns the long-form
     * (ts, value) frame ordered by ts.
     *
+    * The returned frame stays lazy, and a sparse one collects in one Spark
+    * job: the slice is one series, so it is sorted in a single partition
+    * (`coalesce(1)` + `sortWithinPartitions`, no range exchange and no
+    * sampling pass over the slice).
+    *
     * The stored `dtype` is restored on egress (reference
     * chunk_timeserie_store.py:776: blob values are cast back to the chunk
-    * row's recorded dtype) — an int series round-trips as ints. The dtype
-    * probe is ONE Spark job at call time (the returned frame itself stays
-    * lazy): a per-partition set fold over only the `dtype` column of the
-    * pruned chunks (capped at two values — the cast decision needs no
-    * more), no shuffle, and parquet reads just the dtype pages under the
-    * same pushed filters. Chunks written with different dtypes
-    * fall back to double (one frame, one value type), and a pre-dtype
-    * chunk (null dtype — historically double data) counts AS double, so a
-    * series mixing legacy and typed chunks can never be silently
-    * truncated by a non-double cast.
+    * row's recorded dtype) — an int series round-trips as ints. Chunks
+    * written with different dtypes fall back to double (one frame, one
+    * value type), and a pre-dtype chunk (null dtype — historically double
+    * data) counts AS double, so a series mixing legacy and typed chunks
+    * can never be silently truncated by a non-double cast. The dtype comes
+    * from the Parquet footers of the pruned chunk partitions when they
+    * prove every stored row there double (or there are none): no job, no
+    * cast. Otherwise one probe job runs at call time: a per-partition set
+    * fold over only the `dtype` column of the filtered rows (capped at two
+    * values — the cast decision needs no more), no shuffle.
     *
     * `dropBoundsNa=false` (reference get_ts's flag,
     * chunk_timeserie_store.py:376,884-885): the reference PERSISTS each
@@ -292,21 +304,26 @@ class ChunkStore(
       end: Option[java.time.ZonedDateTime] = None,
       dropBoundsNa: Boolean = true): DataFrame = {
     requireAllKeys(attrs)
+    val (lo, hi) = (start.map(chunkOf), end.map(chunkOf))
     var df = load().filter(attrFilter(attrs) && !col("is_deleted") && col("ts").isNotNull)
-    start.foreach(z => df = df.filter(col("chunk_index") >= chunkOf(z) && col("ts") >= lit(toNtz(z))))
-    end.foreach(z => df = df.filter(col("chunk_index") <= chunkOf(z) && col("ts") <= lit(toNtz(z))))
+    start.foreach(z => df = df.filter(col("chunk_index") >= lo.get && col("ts") >= lit(toNtz(z))))
+    end.foreach(z => df = df.filter(col("chunk_index") <= hi.get && col("ts") <= lit(toNtz(z))))
     val sparse = df.select(col("ts"), col("value"))
-    // ONE metadata-sized job either way (per-partition fold, no shuffle —
-    // a distinct+limit plan costs extra AQE jobs): the sparse path probes
+    // a probe is ONE metadata-sized job (per-partition fold, no shuffle —
+    // a distinct+limit plan costs extra AQE jobs): the sparse path folds
     // only the dtype column (set capped at 2 — the cast decision needs no
-    // more); the dense path also folds the distinct chunk indexes,
+    // more), and only when the footers leave the dtype open; the dense
+    // path always runs it, as it also folds the distinct chunk indexes,
     // bounded by the series' chunk count
     val dt = coalesce(col("dtype"), lit("double")).as("dt")
     val (dts, chunks) =
       if (dropBoundsNa)
-        (df.select(dt).rdd.aggregate(Set.empty[String])(
-          (s, r) => if (s.size >= 2) s else s + r.getString(0), _ ++ _),
-          Set.empty[Int])
+        if (footersProveDouble(c => lo.forall(c >= _) && hi.forall(c <= _)))
+          (Set.empty[String], Set.empty[Int])
+        else
+          (df.select(dt).rdd.aggregate(Set.empty[String])(
+            (s, r) => if (s.size >= 2) s else s + r.getString(0), _ ++ _),
+            Set.empty[Int])
       else
         df.select(dt, col("chunk_index"))
           .rdd.aggregate((Set.empty[String], Set.empty[Int]))(
@@ -314,7 +331,7 @@ class ChunkStore(
               (if (s.size >= 2) s else s + r.getString(0), c + r.getInt(1)) },
             { case ((s1, c1), (s2, c2)) => (s1 ++ s2, c1 ++ c2) })
     val out =
-      if (dropBoundsNa || chunks.isEmpty) sparse.orderBy("ts")
+      if (dropBoundsNa || chunks.isEmpty) sparse
       else {
         import spark.implicits._
         var dense = chunks.toSeq.sorted.toDF("__ci")
@@ -322,11 +339,36 @@ class ChunkStore(
           .join(sparse, Seq("ts"), "left")
         start.foreach(z => dense = dense.filter(col("ts") >= lit(toNtz(z))))
         end.foreach(z => dense = dense.filter(col("ts") <= lit(toNtz(z))))
-        dense.orderBy("ts")
+        dense
       }
+    // one series slice: `ts` is unique, so a one-partition sort gives the
+    // same total order as a range-partitioned one, without its exchange
+    val ordered = out.coalesce(1).sortWithinPartitions("ts")
     if (dts.size == 1 && dts.head != "double")
-      out.withColumn("value", col("value").cast(dts.head))
-    else out
+      ordered.withColumn("value", col("value").cast(dts.head))
+    else ordered
+  }
+
+  /** Whether the Parquet footers prove every stored row of the chunk
+    * partitions `inRange` selects double-valued: in each row group of each
+    * data file there, the `dtype` column statistics hold only "double"
+    * (min = max) or nulls (tombstones and pre-dtype rows, which read as
+    * double). True when there is no file. The footers cover every row the
+    * read's filters can keep, so the read needs no probe and no cast. A
+    * file without a `dtype` column or its statistics, or one gone since
+    * the listing, proves nothing.
+    */
+  private def footersProveDouble(inRange: Int => Boolean): Boolean = {
+    val double = org.apache.parquet.io.api.Binary.fromString("double")
+    try PartitionCommit.dataFiles(path, "chunk_index", inRange).forall { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        new org.apache.parquet.io.LocalInputFile(f.toPath))
+      try reader.getFooter.getBlocks.asScala.forall(_.getColumns.asScala
+        .find(_.getPath.toDotString == "dtype").map(_.getStatistics)
+        .exists(st => st != null && st.isNumNullsSet &&
+          (!st.hasNonNullValue || st.genericGetMin == double && st.genericGetMax == double)))
+      finally reader.close()
+    } catch { case scala.util.control.NonFatal(_) => false }
   }
 
   /** One chunk's store-freq calendar as an in-plan timestamp sequence —
@@ -390,23 +432,21 @@ class ChunkStore(
     dense.orderBy((keys.map(col) :+ col("ts")): _*)
   }
 
-  /** Keyed multi-series read in ONE job: `getTs` semantics for a list of
-    * full-key specs, via a broadcast semi-join of the spec list against
-    * the store — never a per-series loop of jobs (the reference loops
-    * `get_ts` client-side; at scale one scan must serve all series).
-    * Output: (keys..., ts, value) ordered by (keys..., ts).
+  /** Keyed multi-series read in ONE scan: `getTs` semantics for a list of
+    * full-key specs, which enter the plan as one literal
+    * `struct(keys...) IN (...)` predicate (no spec-side job) — never a
+    * per-series loop of jobs (the reference loops `get_ts` client-side; at
+    * scale one scan must serve all series). Output: (keys..., ts, value)
+    * ordered by (keys..., ts), range-partitioned, as a spec list can be
+    * large. An empty spec list reads nothing and starts no job.
     */
   def getManyTs(
       attrsList: Seq[Map[String, Any]],
       start: Option[java.time.ZonedDateTime] = None,
       end: Option[java.time.ZonedDateTime] = None): DataFrame = {
     attrsList.foreach(requireAllKeys)
-    val specSchema = StructType(keys.map(k => keySchema(keySchema.fieldIndex(k))))
-    val specRows = attrsList.map(a => org.apache.spark.sql.Row.fromSeq(keys.map(a(_))))
-    val specDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(specRows, 1), specSchema)
-    var df = load().filter(!col("is_deleted") && col("ts").isNotNull)
-      .join(broadcast(specDf), keys, "left_semi")
+    var df = load().filter(!col("is_deleted") && col("ts").isNotNull &&
+      tupleIn(keySchema.fields.toSeq, attrsList.map(a => keys.map(a))))
     start.foreach(z => df = df.filter(col("chunk_index") >= chunkOf(z) && col("ts") >= lit(ChunkStore.toNtz(z))))
     end.foreach(z => df = df.filter(col("chunk_index") <= chunkOf(z) && col("ts") <= lit(ChunkStore.toNtz(z))))
     df.select((keys.map(col) :+ col("ts") :+ col("value")): _*)
@@ -591,4 +631,13 @@ object ChunkStore {
     */
   private[store] def toNtz(z: java.time.ZonedDateTime): java.time.LocalDateTime =
     z.withZoneSameInstant(java.time.ZoneOffset.UTC).toLocalDateTime
+
+  /** `struct(fields...) IN (tuples...)` with the tuples as literals, each
+    * value cast to its field's type — a driver-side spec list as one plan
+    * predicate, with no spec-side job. No tuple matches no row.
+    */
+  private[graft] def tupleIn(fields: Seq[StructField], tuples: Seq[Seq[Any]]): Column =
+    struct(fields.map(f => col(f.name)): _*).isin(tuples.distinct.map(t => struct(fields.zip(t).map {
+      case (f, v) => lit(v).cast(f.dataType).as(f.name)
+    }: _*)): _*)
 }

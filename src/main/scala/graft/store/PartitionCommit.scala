@@ -57,14 +57,23 @@ private[graft] object PartitionCommit {
       case d if d.getName.startsWith(s"$column=") => d.getName.stripPrefix(s"$column=").toInt
     }
 
+  private def filesOf(path: String, column: String, p: Int): Seq[java.io.File] =
+    Option(new java.io.File(path, s"$column=$p").listFiles()).toSeq.flatten
+
   /** The partitions holding more than `maxFiles` parquet files — the
     * compaction policy's input, from the same listing (no data scan).
     */
   def crowdedPartitions(path: String, column: String, maxFiles: Int): Seq[Int] =
-    partitions(path, column).filter { p =>
-      Option(new java.io.File(path, s"$column=$p").listFiles()).toSeq.flatten
-        .count(_.getName.endsWith(".parquet")) > maxFiles
-    }
+    partitions(path, column).filter(p =>
+      filesOf(path, column, p).count(_.getName.endsWith(".parquet")) > maxFiles)
+
+  /** The files a scan of the partitions `keep` selects reads, from the
+    * same listing: every entry but Spark's hidden `_`/`.` names (metadata,
+    * checksums, in-flight writes).
+    */
+  def dataFiles(path: String, column: String, keep: Int => Boolean): Seq[java.io.File] =
+    partitions(path, column).filter(keep).flatMap(filesOf(path, column, _))
+      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
 
   def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))

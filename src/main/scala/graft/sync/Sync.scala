@@ -97,10 +97,8 @@ object Sync {
     */
   private def specPredicates(store: ChunkStore, specs: Seq[Row]): (Column, Column) = {
     val fields = store.keySchema.fields.toSeq :+ StructField("chunk_index", IntegerType)
-    val tuples = specs.map(r => struct(fields.indices.map(i =>
-      lit(r.get(i)).cast(fields(i).dataType).as(fields(i).name)): _*)).distinct
     (col("chunk_index").isin(specs.map(_.get(fields.length - 1)).distinct: _*),
-      struct(fields.map(f => col(f.name)): _*).isin(tuples: _*))
+      ChunkStore.tupleIn(fields, specs.map(r => fields.indices.map(r.get))))
   }
 
   /** Payload fetch for a spec set (reference `export_chunks`,

@@ -152,6 +152,22 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("GreaterThanOrEqual(ts") || p.contains("ts#"), p.take(800))
   }
 
+  test("ChunkStore.getTs orders one series without a range exchange, sparse and dense") {
+    import spark.implicits._
+    val st = new ChunkStore(spark, tmpDir("planstore"),
+      StructType(Seq(StructField("kind", StringType))),
+      StoreConfig(freq = "1h", tz = "UTC", chunkAxis = YearMonthAxis))
+    val t0 = java.time.LocalDateTime.parse("2024-01-01T00:00")
+    st.setTs(Map("kind" -> "k"),
+      (0 until 24 * 40).map(i => (t0.plusHours(i.toLong), 1.0)).toDF("ts", "value"), now = t0)
+    def planOf(dropBoundsNa: Boolean): String = st.getTs(Map("kind" -> "k"), dropBoundsNa = dropBoundsNa)
+      .queryExecution.explainString(ExplainMode.fromString("formatted"))
+    val sparse = planOf(dropBoundsNa = true)
+    assert(!sparse.contains("Exchange") && sparse.contains("Coalesce"), sparse.take(1500))
+    val dense = planOf(dropBoundsNa = false)
+    assert(!dense.contains("rangepartitioning"), dense.take(3000))
+  }
+
   // trim/normalize/delay must not put a whole series in one window task:
   // per-key bounds come from a partial-aggregating groupBy joined back
   // (AQE broadcasts the tiny bounds side at runtime).

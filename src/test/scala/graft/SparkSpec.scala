@@ -14,6 +14,27 @@ trait SparkSpec extends AnyFunSuite {
   def ldt(s: String): java.time.LocalDateTime =
     java.time.LocalDateTime.parse(if (s.contains("T")) s else s.replace(" ", "T"))
 
+  /** Spark jobs started while `f` runs (by any thread), counted by a
+    * listener once the (asynchronous) listener bus has gone quiet.
+    */
+  def jobsDuring(f: => Any): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      var last = -1; var stable = 0
+      while (stable < 6) { // 6 × 50 ms with no new events
+        Thread.sleep(50)
+        if (jobs.get == last) stable += 1 else { last = jobs.get; stable = 0 }
+      }
+      jobs.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   /** Temp dir for store tests. */
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/store"

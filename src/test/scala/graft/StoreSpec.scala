@@ -211,6 +211,93 @@ class ChunkStoreSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("double getTs: no job at call time, exactly one at collect") {
+    val st = newStore(tz = "UTC")
+    assert(st.setTs(attrs, hourly("2024-01-30T00:00", 24 * 5, i => Some(i + 0.5)), now = now0))
+    var read: DataFrame = null
+    assert(jobsDuring { read = st.getTs(attrs) } === 0, "the footers prove double: no probe job")
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    assert(jobsDuring { rows = read.collect() } === 1, "one-partition sort: the collect is the only job")
+    assert(read.schema("value").dataType === DoubleType)
+    assert(rows.map(_.getDouble(1)).toSeq === (0 until 24 * 5).map(_ + 0.5))
+  }
+
+  // The footer fast path skips the probe only when every row group of the
+  // pruned partitions holds "double" or null dtypes; anything else must
+  // read exactly what the probe decides.
+  test("footer dtype: a double and a bigint series in one chunk file each read their own dtype") {
+    val st = newStore(tz = "UTC")
+    val attrs2 = Map[String, Any]("version" -> 0, "kind" -> "k2")
+    val t0 = java.time.LocalDateTime.parse("2024-01-10T00:00")
+    assert(st.setTs(attrs, hourly("2024-01-10T00:00", 24, i => Some(i + 0.5)), now = now0))
+    val ints = (0 until 24).map(i => (t0.plusHours(i.toLong), i.toLong * 3)).toDF("ts", "value")
+    assert(st.setTs(attrs2, ints, update = true, now = now0)) // rewrites the chunk: one file
+    assert(PartitionCommit.dataFiles(st.path, "chunk_index", _ => true).length === 1)
+    var big: DataFrame = null
+    assert(jobsDuring { big = st.getTs(attrs2) } === 1, "a bigint footer must take the probe")
+    assert(big.schema("value").dataType === LongType)
+    assert(big.collect().map(_.getLong(1)).toSeq === (0 until 24).map(_.toLong * 3))
+    val dbl = st.getTs(attrs)
+    assert(dbl.schema("value").dataType === DoubleType)
+    assert(dbl.collect().map(_.getDouble(1)).toSeq === (0 until 24).map(_ + 0.5))
+  }
+
+  test("footer dtype: a bigint store holding tombstones reads back bigint") {
+    val st = newStore(tz = "UTC")
+    val gone = Map[String, Any]("version" -> 0, "kind" -> "gone")
+    val t0 = java.time.LocalDateTime.parse("2024-01-30T00:00")
+    val ints = (0 until 24 * 3).map(i => (t0.plusHours(i.toLong), i.toLong)).toDF("ts", "value")
+    assert(st.setTs(attrs, ints, now = now0))
+    assert(st.setTs(gone, ints, now = now0))
+    st.delete(Map("kind" -> "gone"), now = now0.plusHours(1)) // null-dtype tombstones in both chunks
+    assert(st.load().filter(col("is_deleted")).count() === 2)
+    val back = st.getTs(attrs)
+    assert(back.schema("value").dataType === LongType)
+    assert(back.collect().map(_.getLong(1)).toSeq === (0 until 24 * 3).map(_.toLong))
+    assert(st.getTs(gone).collect().isEmpty)
+  }
+
+  test("footer dtype: a never-written store and a slice past the last chunk read empty double") {
+    val fresh = newStore(tz = "UTC")
+    var empty: DataFrame = null
+    assert(jobsDuring { empty = fresh.getTs(attrs) } === 0)
+    assert(empty.schema("value").dataType === DoubleType && empty.collect().isEmpty)
+    val st = newStore(tz = "UTC")
+    val t0 = java.time.LocalDateTime.parse("2024-01-10T00:00")
+    assert(st.setTs(attrs, (0 until 24).map(i => (t0.plusHours(i.toLong), i.toLong)).toDF("ts", "value"),
+      now = now0))
+    val z = java.time.ZoneOffset.UTC
+    var past: DataFrame = null
+    assert(jobsDuring {
+      past = st.getTs(attrs, start = Some(java.time.ZonedDateTime.of(2024, 3, 1, 0, 0, 0, 0, z)),
+        end = Some(java.time.ZonedDateTime.of(2024, 3, 31, 0, 0, 0, 0, z)))
+    } === 0, "no file in the slice's chunk range: no probe")
+    assert(past.schema("value").dataType === DoubleType && past.collect().isEmpty)
+  }
+
+  test("footer dtype: a parquet file written without a dtype column reads back as double") {
+    val st = newStore(tz = "UTC")
+    val t0 = java.time.LocalDateTime.parse("2024-01-10T00:00")
+    val ints = (0 until 24).map(i => (t0.plusHours(i.toLong), i.toLong)).toDF("ts", "value")
+    assert(st.setTs(attrs, ints, now = now0)) // chunk 2024-01, dtype=bigint
+    // February: a file from a writer that knew no dtype column at all
+    val t1 = java.time.LocalDateTime.parse("2024-02-10T00:00")
+    (0 until 24).map(i => (t1.plusHours(i.toLong), i + 0.5)).toDF("ts", "value")
+      .withColumn("version", lit(0)).withColumn("kind", lit("k1"))
+      .withColumn("chunk_index", lit(2024 * 12 + 1))
+      .withColumn("ts", col("ts").cast(TimestampNTZType))
+      .withColumn("is_deleted", lit(false))
+      .withColumn("updated_at", lit(now0).cast(TimestampNTZType))
+      .write.mode("append").partitionBy("chunk_index").parquet(st.path)
+    val z = java.time.ZoneOffset.UTC
+    val feb = st.getTs(attrs, start = Some(java.time.ZonedDateTime.of(2024, 2, 1, 0, 0, 0, 0, z)))
+    assert(feb.schema("value").dataType === DoubleType)
+    assert(feb.collect().map(_.getDouble(1)).toSeq === (0 until 24).map(_ + 0.5))
+    val all = st.getTs(attrs)
+    assert(all.schema("value").dataType === DoubleType)
+    assert(all.collect().map(_.getDouble(1)).toSeq === (0 until 24).map(_.toDouble) ++ (0 until 24).map(_ + 0.5))
+  }
+
   test("dtype survives the sync wire: packEnvelope -> unpackEnvelope -> import") {
     val st = newStore(sync = true)
     val t0 = java.time.LocalDateTime.parse("2024-03-01T00:00")
@@ -429,7 +516,7 @@ class ChunkStoreSpec extends SparkSpec {
     assert(all.map(_.getString(1)).toSeq === Seq("a", "a", "a", "b", "b", "b"))
   }
 
-  test("getManyTs: one broadcast-semi-join job serves a spec list, sliced") {
+  test("getManyTs: one literal-predicate scan serves a spec list, sliced") {
     val st = newStore(tz = "UTC")
     for (k <- Seq("a", "b", "c"))
       st.setTs(Map("version" -> 0, "kind" -> k), hourly("2024-01-01T00:00", 24, i => Some(i.toDouble)), now = now0)
@@ -442,6 +529,16 @@ class ChunkStoreSpec extends SparkSpec {
     assert(out.length === 2 * 18) // hours 06..23 for each of the 2 series
     // partial attrs in a spec raise, like getTs
     assertThrows[IllegalArgumentException](st.getManyTs(Seq(Map[String, Any]("version" -> 0))))
+  }
+
+  test("getManyTs of no spec: an empty frame with the read's schema, and no job") {
+    val st = newStore(tz = "UTC")
+    st.setTs(attrs, hourly("2024-01-01T00:00", 24, i => Some(i.toDouble)), now = now0)
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    assert(jobsDuring { rows = st.getManyTs(Seq.empty).collect() } === 0)
+    assert(rows.isEmpty)
+    assert(st.getManyTs(Seq.empty).schema === st.getManyTs(Seq(attrs)).schema)
+    assert(newStore(tz = "UTC").getManyTs(Seq.empty).collect().isEmpty)
   }
 
   test("compact: many incremental writes collapse to one file per chunk partition") {

@@ -427,27 +427,6 @@ class SyncHttpSpec extends SparkSpec {
     } finally healthy.stop(0)
   }
 
-  /** Spark jobs started while `f` runs, counted by a listener once the
-    * (asynchronous) listener bus has gone quiet.
-    */
-  private def jobsDuring(f: => Any): Int = {
-    val jobs = new AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      f
-      var last = -1; var stable = 0
-      while (stable < 6) {
-        Thread.sleep(50)
-        if (jobs.get == last) stable += 1 else { last = jobs.get; stable = 0 }
-      }
-      jobs.get
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("a one-page pull costs at most 9 Spark jobs, client and server handlers together") {
     val server = newStore()
     val client = newStore()
