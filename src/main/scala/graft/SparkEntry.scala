@@ -35,24 +35,32 @@ object SparkEntry {
     * read-only by contract (TESTDATA.md), so the memo can never serve a
     * stale schema.
     */
-  private val tableCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+  private val tableCache = new SessionMemo[(String, String)]
 
-  private def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val key = (spark, dir, name)
-    // drop entries of STOPPED sessions, but only on a MISS: a DataFrame
-    // holds a hard reference to its session, so without the purge a
-    // restarted-session JVM (test suites, notebooks) retains every dead
-    // session's state forever (ADVICE r12) — yet scanning the whole
-    // registry on every hit would be O(cache) work on the hottest entry
-    // point (ADVICE r13). A stale entry can only be created by a miss,
-    // so purging before each insert bounds staleness the same way.
-    // (Not inside computeIfAbsent's mapper — mutating a ConcurrentHashMap
-    // from its own compute function is forbidden.)
-    if (!tableCache.containsKey(key))
-      tableCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    tableCache.computeIfAbsent(key,
-      _ => spark.read.parquet(s"$dir/$name.parquet"))
+  private def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    tableCache(spark, (dir, name))(spark.read.parquet(s"$dir/$name.parquet"))
+
+  /** One fixture-reader memo: a DataFrame per (session, key), built once.
+    * Entries of STOPPED sessions are dropped, but only on a MISS: a
+    * DataFrame holds a hard reference to its session, so without the
+    * purge a restarted-session JVM (test suites, notebooks) retains every
+    * dead session's state forever — yet scanning the whole registry on
+    * every hit would be O(cache) work on the hottest entry point. A stale
+    * entry can only be created by a miss, so purging before each insert
+    * bounds staleness the same way. The purge runs outside
+    * `computeIfAbsent`'s mapper (mutating a ConcurrentHashMap from its own
+    * compute function is forbidden), and a builder must not read its own
+    * memo for the same reason: `events` builds from `table`, so each has
+    * its own map.
+    */
+  private final class SessionMemo[K] {
+    private val cache = new java.util.concurrent.ConcurrentHashMap[(SparkSession, K), DataFrame]()
+
+    def apply(spark: SparkSession, key: K)(build: => DataFrame): DataFrame = {
+      if (!cache.containsKey((spark, key)))
+        cache.keySet.removeIf(_._1.sparkContext.isStopped)
+      cache.computeIfAbsent((spark, key), _ => build)
+    }
   }
 
   /** Naive literal timestamp (TIMESTAMP_NTZ). Built from LocalDateTime —
@@ -75,18 +83,10 @@ object SparkEntry {
     * (the conf only changes how NANOS columns surface — a µs file reads as
     * TimestampType either way).
     */
-  private val eventsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val eventsCache = new SessionMemo[String]
 
-  private[graft] def events(spark: SparkSession, dir: String): DataFrame = {
-    // memoized like [[table]] (the conf dance + schema branch run once
-    // per (session, dir), not once per query; dead sessions purged the
-    // same miss-only way)
-    val key = (spark, dir)
-    if (!eventsCache.containsKey(key))
-      eventsCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    eventsCache.computeIfAbsent(key, _ => eventsUncached(spark, dir))
-  }
+  private[graft] def events(spark: SparkSession, dir: String): DataFrame =
+    eventsCache(spark, dir)(eventsUncached(spark, dir))
 
   private def eventsUncached(spark: SparkSession, dir: String): DataFrame = synchronized {
     // synchronized: the set→schema-load→restore below is the ONLY

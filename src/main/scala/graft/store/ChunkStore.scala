@@ -129,19 +129,22 @@ class ChunkStore(
     require(unknown.isEmpty, s"unknown attrs: ${unknown.mkString(",")}")
   }
 
-  /** Normalize an input series frame: (ts, value) → cast, drop null
-    * points (reference `_normalize_serie`/`_normalize_index`,
-    * chunk_timeserie_store.py:699-743). LAZY — the empty/all-null skip
-    * (":720-722") is decided by [[setTs]]'s fused probe job, not a
-    * dedicated isEmpty action. `srcDtype` is the value type BEFORE the
-    * double coercion, so reads can cast back (reference dtype
-    * round-trip).
+  /** Normalize written rows (reference `_normalize_serie`/
+    * `_normalize_index`, chunk_timeserie_store.py:699-743): cast `ts` and
+    * `value`, drop null and NaN points, and record as `dtype` the value
+    * type BEFORE the double coercion, so reads can cast back (reference
+    * dtype round-trip). LAZY — the empty/all-null skip (":720-722") is
+    * decided by each writer's own pre-write probe job, not a dedicated
+    * isEmpty action.
     */
-  private def normalized(series: DataFrame, srcDtype: String): DataFrame =
-    series
-      .select(col("ts").cast(TimestampNTZType).as("ts"), col("value").cast(DoubleType).as("value"))
+  private def normalized(rows: DataFrame): DataFrame =
+    rows
+      .withColumn("dtype", lit(dtypeOf(rows)))
+      .withColumn("ts", col("ts").cast(TimestampNTZType))
+      .withColumn("value", col("value").cast(DoubleType))
       .filter(col("value").isNotNull && !isnan(col("value")) && col("ts").isNotNull)
-      .withColumn("dtype", lit(srcDtype))
+
+  private def dtypeOf(rows: DataFrame): String = rows.schema("value").dataType.simpleString
 
   def exists(attrs: Map[String, Any]): Boolean =
     !load().filter(attrFilter(attrs) && !col("is_deleted")).isEmpty
@@ -163,9 +166,7 @@ class ChunkStore(
     requireAllKeys(attrs)
     if (config.syncEnabled && !update && !replace)
       throw new IllegalStateException("plain insert is forbidden on a sync-enabled store; use update or replace")
-    val srcDtype = series.schema("value").dataType.simpleString
-    val s = normalized(series, srcDtype)
-    val newRows = finishRows(attachAttrs(s, attrs), now)
+    val newRows = finishRows(attachAttrs(normalized(series.select("ts", "value")), attrs), now)
     // ONE probe job answers every pre-write question (r12 follow-up #2 —
     // previously an isEmpty + exists/affected/overlapped chain of 2-3
     // scheduler round-trips): the new write's distinct chunk indexes
@@ -194,7 +195,7 @@ class ChunkStore(
       if (!update && !replace && mineChunks.nonEmpty)
         throw new IllegalStateException(s"series already exists for $attrs (IntegrityError parity)")
       if (update)
-        mergeChunks(newRows, newChunks, srcDtype, now)(cur =>
+        mergeChunks(newRows, newChunks, dtypeOf(series), now)(cur =>
           (cur.filter(attrFilter(attrs)), cur.filter(!attrFilter(attrs))))
       else if (replace) replaceChunks(attrs, newRows, newChunks, mineChunks, now)
       else appendRows(newRows)
@@ -212,11 +213,7 @@ class ChunkStore(
       now: java.time.LocalDateTime = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)): Unit = locked {
     if (config.syncEnabled)
       throw new IllegalStateException("set_many_ts is forbidden on a sync-enabled store")
-    val s = many
-      .withColumn("dtype", lit(many.schema("value").dataType.simpleString))
-      .withColumn("ts", col("ts").cast(TimestampNTZType))
-      .withColumn("value", col("value").cast(DoubleType))
-      .filter(col("value").isNotNull && !isnan(col("value")) && col("ts").isNotNull)
+    val s = normalized(many)
     val dup = s.select(keys.map(col): _*).distinct()
       .join(load().filter(!col("is_deleted")).select(keys.map(col): _*).distinct(), keys, "left_semi")
     if (!dup.isEmpty)
@@ -237,17 +234,12 @@ class ChunkStore(
   def upsertManyTs(
       rows: DataFrame,
       now: java.time.LocalDateTime = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)): Unit = locked {
-    val srcDtype = rows.schema("value").dataType.simpleString
-    val s = rows
-      .withColumn("dtype", lit(srcDtype))
-      .withColumn("ts", col("ts").cast(TimestampNTZType))
-      .withColumn("value", col("value").cast(DoubleType))
-      .filter(col("value").isNotNull && !isnan(col("value")) && col("ts").isNotNull)
+    val s = normalized(rows)
     val newRows  = finishRows(s, now)
     val affected = newRows.select("chunk_index").distinct().collect().map(_.getInt(0)).toSeq
     if (affected.nonEmpty) {
       val newKeys = s.select(keys.map(col): _*).distinct()
-      mergeChunks(newRows, affected, srcDtype, now)(cur =>
+      mergeChunks(newRows, affected, dtypeOf(rows), now)(cur =>
         (cur.join(newKeys, keys, "left_semi"), cur.join(newKeys, keys, "left_anti")))
     }
   }
@@ -274,7 +266,8 @@ class ChunkStore(
     * prove every stored row there double (or there are none): no job, no
     * cast. Otherwise one probe job runs at call time: a per-partition set
     * fold over only the `dtype` column of the filtered rows (capped at two
-    * values — the cast decision needs no more), no shuffle.
+    * values — the cast decision needs no more), no shuffle. The sparse and
+    * the dense form take this same decision.
     *
     * `dropBoundsNa=false` (reference get_ts's flag,
     * chunk_timeserie_store.py:376,884-885): the reference PERSISTS each
@@ -285,12 +278,12 @@ class ChunkStore(
     * a hole (update=True writes for Jan then Mar — no Feb row exists)
     * comes back with the hole OMITTED, not null-filled. This engine
     * stores sparsely (equivalent under the default) and reconstructs that
-    * form on demand: the distinct surviving chunk indexes (driver-side —
-    * metadata-sized, same pruned read as the dtype probe) each explode
-    * their own chunk calendar (restarting at the chunk's DST-correct
-    * local start, exactly the reference's per-chunk blob grid), then a
-    * left join of the values and the same inclusive time slice. One
-    * documented divergence: a wholly-null INTERIOR month of a single
+    * form in the plan, on the grid [[yieldManyTs]] uses (see [[series]]):
+    * each surviving chunk explodes its own chunk calendar (restarting at
+    * the chunk's DST-correct local start, exactly the reference's
+    * per-chunk blob grid), sliced, then a left join of the values. No chunk
+    * list reaches the driver, so a dense read is as lazy as a sparse one.
+    * One documented divergence: a wholly-null INTERIOR month of a single
     * write is stored by the reference as an all-NaN blob (its write-span
     * padding) but dropped here (null rows are never stored), so that
     * month's slots are absent from our dense read; the reference's own
@@ -304,46 +297,19 @@ class ChunkStore(
       end: Option[java.time.ZonedDateTime] = None,
       dropBoundsNa: Boolean = true): DataFrame = {
     requireAllKeys(attrs)
+    val df = live(attrFilter(attrs), start, end)
     val (lo, hi) = (start.map(chunkOf), end.map(chunkOf))
-    var df = load().filter(attrFilter(attrs) && !col("is_deleted") && col("ts").isNotNull)
-    start.foreach(z => df = df.filter(col("chunk_index") >= lo.get && col("ts") >= lit(toNtz(z))))
-    end.foreach(z => df = df.filter(col("chunk_index") <= hi.get && col("ts") <= lit(toNtz(z))))
-    val sparse = df.select(col("ts"), col("value"))
-    // a probe is ONE metadata-sized job (per-partition fold, no shuffle —
-    // a distinct+limit plan costs extra AQE jobs): the sparse path folds
-    // only the dtype column (set capped at 2 — the cast decision needs no
-    // more), and only when the footers leave the dtype open; the dense
-    // path always runs it, as it also folds the distinct chunk indexes,
-    // bounded by the series' chunk count
-    val dt = coalesce(col("dtype"), lit("double")).as("dt")
-    val (dts, chunks) =
-      if (dropBoundsNa)
-        if (footersProveDouble(c => lo.forall(c >= _) && hi.forall(c <= _)))
-          (Set.empty[String], Set.empty[Int])
-        else
-          (df.select(dt).rdd.aggregate(Set.empty[String])(
-            (s, r) => if (s.size >= 2) s else s + r.getString(0), _ ++ _),
-            Set.empty[Int])
-      else
-        df.select(dt, col("chunk_index"))
-          .rdd.aggregate((Set.empty[String], Set.empty[Int]))(
-            { case ((s, c), r) =>
-              (if (s.size >= 2) s else s + r.getString(0), c + r.getInt(1)) },
-            { case ((s1, c1), (s2, c2)) => (s1 ++ s2, c1 ++ c2) })
-    val out =
-      if (dropBoundsNa || chunks.isEmpty) sparse
-      else {
-        import spark.implicits._
-        var dense = chunks.toSeq.sorted.toDF("__ci")
-          .select(explode(chunkCalendar(col("__ci"))).as("ts"))
-          .join(sparse, Seq("ts"), "left")
-        start.foreach(z => dense = dense.filter(col("ts") >= lit(toNtz(z))))
-        end.foreach(z => dense = dense.filter(col("ts") <= lit(toNtz(z))))
-        dense
-      }
+    // the probe is ONE metadata-sized job (per-partition fold, no shuffle —
+    // a distinct+limit plan costs extra AQE jobs), run only when the
+    // footers leave the dtype open
+    val dts =
+      if (footersProveDouble(c => lo.forall(c >= _) && hi.forall(c <= _))) Set.empty[String]
+      else df.select(coalesce(col("dtype"), lit("double"))).rdd.aggregate(Set.empty[String])(
+        (s, r) => if (s.size >= 2) s else s + r.getString(0), _ ++ _)
     // one series slice: `ts` is unique, so a one-partition sort gives the
     // same total order as a range-partitioned one, without its exchange
-    val ordered = out.coalesce(1).sortWithinPartitions("ts")
+    val ordered = series(df, start, end, dropBoundsNa).select("ts", "value")
+      .coalesce(1).sortWithinPartitions("ts")
     if (dts.size == 1 && dts.head != "double")
       ordered.withColumn("value", col("value").cast(dts.head))
     else ordered
@@ -375,8 +341,6 @@ class ChunkStore(
     * the reference's per-chunk blob grid (`_normalize_index` date_range
     * sliced by `_chunk`, chunk_timeserie_store.py:735-754): inclusive of
     * the chunk's DST-correct local start, exclusive of the next chunk's.
-    * Shared by both dense (`dropBoundsNa=false`) read forms so the
-    * single- and multi-series grids can never diverge.
     */
   private def chunkCalendar(ci: Column): Column = {
     val step = expr("make_dt_interval(0, 0, 0, 1)") * config.freqSecs
@@ -393,64 +357,82 @@ class ChunkStore(
 
   /** Streaming grouped read (reference `yield_many_ts`,
     * chunk_timeserie_store.py:457-517): partial key filters allowed,
-    * tombstones out, optional [start, end] slice with chunk pruning,
-    * ordered by (keys..., ts). Long form needs no reassembly; Spark's
+    * Django `__`-lookups accepted (the reference strips lookup suffixes
+    * before validating names, `_check_attrs` :889-899, and forwards the
+    * raw dict to objects.filter(**filters)), tombstones out, optional
+    * [start, end] slice with chunk pruning, ordered by (keys..., ts). The
+    * dense form (`dropBoundsNa=false`, reference :459,488-491) is the
+    * [[getTs]] grid per key. Long form needs no reassembly; Spark's
     * sort-based shuffle plays the reference's buffered iterator.
     */
   def yieldManyTs(
       filters: Map[String, Any] = Map.empty,
       start: Option[java.time.ZonedDateTime] = None,
       end: Option[java.time.ZonedDateTime] = None,
-      dropBoundsNa: Boolean = true): DataFrame = {
-    // Django `__`-lookups accepted (gte/lte/gt/lt/in/isnull): the reference
-    // strips lookup suffixes before validating names (`_check_attrs`,
-    // chunk_timeserie_store.py:889-899) and forwards the raw dict to
-    // objects.filter(**filters).
-    val unknown = Lookups.baseFields(filters).filterNot(keys.contains)
-    require(unknown.isEmpty, s"Unknown attribute(s) ${unknown.mkString(",")}")
-    val cond = Lookups.compile(filters).getOrElse(lit(true))
-    var df = load().filter(cond && !col("is_deleted") && col("ts").isNotNull)
-    start.foreach(z => df = df.filter(col("chunk_index") >= chunkOf(z) && col("ts") >= lit(ChunkStore.toNtz(z))))
-    end.foreach(z => df = df.filter(col("chunk_index") <= chunkOf(z) && col("ts") <= lit(ChunkStore.toNtz(z))))
-    val sparse = df.select((keys.map(col) :+ col("ts") :+ col("value")): _*)
-    if (dropBoundsNa)
-      return sparse.orderBy((keys.map(col) :+ col("ts")): _*)
-    // dense form (reference yield_many_ts(drop_bounds_na=False),
-    // chunk_timeserie_store.py:459,488-491): per key, each STORED chunk's
-    // own store-freq grid (matching the get_ts concat of per-chunk blob
-    // grids — an absent middle chunk contributes nothing; see the getTs
-    // scaladoc for the hole semantics). Scale shape: one row per distinct
-    // (key, chunk), each exploding only its own chunk's calendar (the
-    // same per-chunk bound as the reference's blobs), then a left join of
-    // the values. No driver-side collection and no whole-span arrays.
-    val grid = df.select((keys.map(col) :+ col("chunk_index").as("__ci")): _*).distinct()
-      .withColumn("ts", explode(chunkCalendar(col("__ci"))))
-      .select((keys.map(col) :+ col("ts")): _*)
-    var dense = grid.join(sparse, keys :+ "ts", "left")
-    start.foreach(z => dense = dense.filter(col("ts") >= lit(ChunkStore.toNtz(z))))
-    end.foreach(z => dense = dense.filter(col("ts") <= lit(ChunkStore.toNtz(z))))
-    dense.orderBy((keys.map(col) :+ col("ts")): _*)
-  }
+      dropBoundsNa: Boolean = true): DataFrame =
+    series(live(Lookups.validated(filters, keys), start, end), start, end, dropBoundsNa)
+      .orderBy((keys.map(col) :+ col("ts")): _*)
 
-  /** Keyed multi-series read in ONE scan: `getTs` semantics for a list of
-    * full-key specs, which enter the plan as one literal
+  /** Keyed multi-series read in ONE scan: the sparse [[getTs]] read for a
+    * list of full-key specs, which enter the plan as one literal
     * `struct(keys...) IN (...)` predicate (no spec-side job) — never a
     * per-series loop of jobs (the reference loops `get_ts` client-side; at
     * scale one scan must serve all series). Output: (keys..., ts, value)
     * ordered by (keys..., ts), range-partitioned, as a spec list can be
-    * large. An empty spec list reads nothing and starts no job.
+    * large; values are not cast back to the stored dtype. An empty spec
+    * list reads nothing and starts no job.
     */
   def getManyTs(
       attrsList: Seq[Map[String, Any]],
       start: Option[java.time.ZonedDateTime] = None,
       end: Option[java.time.ZonedDateTime] = None): DataFrame = {
     attrsList.foreach(requireAllKeys)
-    var df = load().filter(!col("is_deleted") && col("ts").isNotNull &&
-      tupleIn(keySchema.fields.toSeq, attrsList.map(a => keys.map(a))))
-    start.foreach(z => df = df.filter(col("chunk_index") >= chunkOf(z) && col("ts") >= lit(ChunkStore.toNtz(z))))
-    end.foreach(z => df = df.filter(col("chunk_index") <= chunkOf(z) && col("ts") <= lit(ChunkStore.toNtz(z))))
-    df.select((keys.map(col) :+ col("ts") :+ col("value")): _*)
+    val specs = tupleIn(keySchema.fields.toSeq, attrsList.map(a => keys.map(a)))
+    series(live(specs, start, end), start, end, dropBoundsNa = true)
       .orderBy((keys.map(col) :+ col("ts")): _*)
+  }
+
+  /** The live rows `pred` selects inside `[start, end]` — the one interval
+    * filter of every read (reference `_filter_interval`,
+    * chunk_timeserie_store.py:855-861): tombstones and null points out,
+    * literal chunk_index bounds prune partitions.
+    */
+  private def live(pred: Column, start: Option[java.time.ZonedDateTime],
+      end: Option[java.time.ZonedDateTime]): DataFrame =
+    slice(load().filter(pred && !col("is_deleted") && col("ts").isNotNull), start, end, pruned = true)
+
+  /** `df` cut to the inclusive `[start, end]` on `ts`. With `pruned`, each
+    * bound also carries its instant's literal chunk_index bound, a
+    * partition filter.
+    */
+  private def slice(df: DataFrame, start: Option[java.time.ZonedDateTime],
+      end: Option[java.time.ZonedDateTime], pruned: Boolean): DataFrame = {
+    def bound(z: java.time.ZonedDateTime, cmp: (Column, Column) => Column): Column = {
+      val onTs = cmp(col("ts"), lit(toNtz(z)))
+      if (pruned) cmp(col("chunk_index"), lit(chunkOf(z))) && onTs else onTs
+    }
+    (start.map(z => bound(z, _ >= _)) ++ end.map(z => bound(z, _ <= _))).foldLeft(df)(_ filter _)
+  }
+
+  /** The `(keys..., ts, value)` rows of the live slice `df`: its points,
+    * or with `dropBoundsNa = false` the dense form — per series, each
+    * STORED chunk's own store-freq grid (the reference's per-chunk blob
+    * grids; an absent middle chunk contributes nothing, see [[getTs]] for
+    * the hole semantics), sliced to `[start, end]`, with the points
+    * left-joined on. One row per distinct (key, chunk) explodes only its
+    * own chunk's calendar: no driver-side collection and no whole-span
+    * arrays.
+    */
+  private def series(df: DataFrame, start: Option[java.time.ZonedDateTime],
+      end: Option[java.time.ZonedDateTime], dropBoundsNa: Boolean): DataFrame = {
+    val points = df.select((keys.map(col) :+ col("ts") :+ col("value")): _*)
+    if (dropBoundsNa) points
+    else {
+      val grid = df.select((keys.map(col) :+ col("chunk_index").as("__ci")): _*).distinct()
+        .withColumn("ts", explode(chunkCalendar(col("__ci"))))
+        .select((keys.map(col) :+ col("ts")): _*)
+      slice(grid, start, end, pruned = false).join(points, keys :+ "ts", "left")
+    }
   }
 
   /** Small-file compaction: rewrite the given (default: all, from the

@@ -61,6 +61,17 @@ object Lookups {
     }
   }
 
+  /** `filters` as one predicate over a store whose filterable fields are
+    * `fields` (true when empty), after the reference's `_check_attrs`
+    * validation (chunk_timeserie_store.py:889-899): a filter on an unknown
+    * base field raises before any read.
+    */
+  def validated(filters: Map[String, Any], fields: Seq[String]): Column = {
+    val unknown = baseFields(filters).filterNot(fields.contains)
+    require(unknown.isEmpty, s"Unknown attribute(s) ${unknown.mkString(",")}")
+    compile(filters).getOrElse(lit(true))
+  }
+
   /** Field names with lookup suffixes stripped — the reference's
     * `_check_attrs` validation view of a filter dict
     * (chunk_timeserie_store.py:889-899).

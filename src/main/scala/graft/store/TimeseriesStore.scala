@@ -285,22 +285,16 @@ class TimeseriesStore(
     * (timeserie_store.py:59-95): long form `(keys..., ts, value)` ordered
     * by (keys..., ts); the key columns play the entry-attribute dict.
     */
-  def getTs(filters: Map[String, Any] = Map.empty): DataFrame = {
-    val unknown = Lookups.baseFields(filters).filterNot(keys.contains)
-    require(unknown.isEmpty, s"Unknown attribute(s) ${unknown.mkString(",")}")
-    val cond = Lookups.compile(filters).getOrElse(lit(true))
-    load().filter(cond)
+  def getTs(filters: Map[String, Any] = Map.empty): DataFrame =
+    load().filter(Lookups.validated(filters, keys))
       .select((keys.map(col) :+ col("ts") :+ col("value")): _*)
       .orderBy((keys.map(col) :+ col("ts")): _*)
-  }
 
   /** `get_ts(flat=True)`: exactly one series must match — zero or
     * multiple raise (ValueError parity). Returns (ts, value) ordered.
     */
   def getTsFlat(filters: Map[String, Any]): DataFrame = {
-    val unknown = Lookups.baseFields(filters).filterNot(keys.contains)
-    require(unknown.isEmpty, s"Unknown attribute(s) ${unknown.mkString(",")}")
-    val cond = Lookups.compile(filters).getOrElse(lit(true))
+    val cond = Lookups.validated(filters, keys)
     val matched = load().filter(cond)
       .select(keys.map(col): _*).distinct().limit(2).collect()
     if (matched.isEmpty)
@@ -315,10 +309,8 @@ class TimeseriesStore(
     * no rewrite of anything else.
     */
   def clear(filters: Map[String, Any]): Unit = locked {
-    val unknown = Lookups.baseFields(filters).filterNot(keys.contains)
-    require(unknown.isEmpty, s"Unknown attribute(s) ${unknown.mkString(",")}")
-    val cond = Lookups.compile(filters).getOrElse(lit(true))
-    val victims = load().filter(cond).select(keys.map(col): _*).distinct().collect()
+    val victims = load().filter(Lookups.validated(filters, keys))
+      .select(keys.map(col): _*).distinct().collect()
     victims.foreach { r =>
       PartitionCommit.deleteRecursively(new java.io.File(path, partitionDir(r)))
     }

@@ -36,57 +36,50 @@ object Sync {
     * (businessKeys..., chunk_index) with `updated_at >= since` (GTE — the
     * boundary row re-fetches, which is what makes pull idempotent and
     * crash-resumable), ordered `(updated_at, keys, chunk_index)` for
-    * deterministic pagination, metadata only (no payload — Catalyst's
-    * column pruning keeps `ts`/`value` out of the scan).
+    * deterministic pagination, metadata only: [[listing]] without its wire
+    * columns, so Catalyst prunes their aggregates and keeps `ts`, `value`
+    * and `dtype` out of the scan.
     */
   def updates(
       store: ChunkStore,
       since: java.time.LocalDateTime,
       filters: Map[String, Any] = Map.empty): DataFrame =
-    listing(store, since, filters)
+    listing(store, since, filters).drop("dtype", "start_ts")
       .orderBy((col("updated_at") +: store.keys.map(col) :+ col("chunk_index")): _*)
-
-  /** Unordered form of [[updates]] — `pull` stages this and lets each
-    * page's top-K do the ordering, so no global sort is ever materialized.
-    */
-  private def listing(
-      store: ChunkStore,
-      since: java.time.LocalDateTime,
-      filters: Map[String, Any]): DataFrame = {
-    val keys = store.keys
-    val base = filters.foldLeft(store.load()) { case (d, (k, v)) => d.filter(col(k) === lit(v)) }
-    base
-      .groupBy((keys.map(col) :+ col("chunk_index")): _*)
-      .agg(
-        max(col("updated_at")).as("updated_at"),
-        max(when(col("is_deleted"), 1).otherwise(0)).cast("boolean").as("is_deleted"))
-      .filter(col("updated_at") >= lit(since)) // LocalDateTime → NTZ literal, JVM-tz-proof
-  }
 
   /** Wire-shaped updates listing for the HTTP endpoint: the reference's
     * `/updates/` rows carry `dtype` and `start_ts` alongside the tracking
     * fields (ts_sync.py:102-113 serializes `dtype`/`start_ts`/
-    * `updated_at`/`is_deleted` per chunk row). Same one-pass aggregation
-    * as [[updates]] with two extra columns — `dtype` as the wire (numpy)
-    * name, `start_ts` as the chunk's min live timestamp (null for
-    * tombstone chunks, whose rows have no ts).
+    * `updated_at`/`is_deleted` per chunk row). The whole [[listing]] in
+    * [[updates]] order.
     */
   private[sync] def wireUpdates(
       store: ChunkStore,
       since: java.time.LocalDateTime,
-      filters: Map[String, Any]): DataFrame = {
-    val keys = store.keys
-    val base = filters.foldLeft(store.load()) { case (d, (k, v)) => d.filter(col(k) === lit(v)) }
-    base
-      .groupBy((keys.map(col) :+ col("chunk_index")): _*)
+      filters: Map[String, Any]): DataFrame =
+    listing(store, since, filters)
+      .orderBy((col("updated_at") +: store.keys.map(col) :+ col("chunk_index")): _*)
+
+  /** The one unordered updates aggregation, in one pass: per
+    * (businessKeys..., chunk_index) with `updated_at >= since`, the
+    * tracking fields `updated_at` and `is_deleted`, plus the wire fields
+    * `dtype` (the wire, numpy, name) and `start_ts` (the chunk's min live
+    * timestamp, null for tombstone chunks, whose rows have no ts). `pull`
+    * stages it without the wire fields and lets each page's top-K do the
+    * ordering, so no global sort is ever materialized.
+    */
+  private def listing(
+      store: ChunkStore,
+      since: java.time.LocalDateTime,
+      filters: Map[String, Any]): DataFrame =
+    filters.foldLeft(store.load()) { case (d, (k, v)) => d.filter(col(k) === lit(v)) }
+      .groupBy((store.keys.map(col) :+ col("chunk_index")): _*)
       .agg(
         max(col("updated_at")).as("updated_at"),
         max(when(col("is_deleted"), 1).otherwise(0)).cast("boolean").as("is_deleted"),
         sparkToNumpy(first(col("dtype"), ignoreNulls = true)).as("dtype"),
         min(col("ts")).as("start_ts"))
-      .filter(col("updated_at") >= lit(since))
-      .orderBy((col("updated_at") +: keys.map(col) :+ col("chunk_index")): _*)
-  }
+      .filter(col("updated_at") >= lit(since)) // LocalDateTime → NTZ literal, JVM-tz-proof
 
   /** The spec set as one literal predicate: `chunk_index IN (…)` (a
     * partition filter, so a scan lists only the named chunk partitions)
@@ -340,7 +333,7 @@ object Sync {
     // page import needed anyway (pageSize metadata rows, never payload).
     // Released after the last page (Dataset.unpersist does not free a
     // localCheckpoint's blocks; the commit helper's release does).
-    PartitionCommit.checkpointed(listing(server, since, filters)) { staged =>
+    PartitionCommit.checkpointed(listing(server, since, filters).drop("dtype", "start_ts")) { staged =>
       var applied  = 0L
       var lastSeen: Option[Row] = None
       var more     = true

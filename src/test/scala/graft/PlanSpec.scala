@@ -168,6 +168,26 @@ class PlanSpec extends SparkSpec {
     assert(!dense.contains("rangepartitioning"), dense.take(3000))
   }
 
+  // Sync.updates shares its aggregation with the wire listing, which also
+  // folds dtype and min(ts): dropping those columns must prune their
+  // aggregates and their scan columns, so the listing stays metadata only.
+  test("Sync.updates scans no payload or dtype column") {
+    import spark.implicits._
+    val st = new ChunkStore(spark, tmpDir("updplan"),
+      StructType(Seq(StructField("kind", StringType))),
+      StoreConfig(freq = "1h", tz = "UTC", chunkAxis = YearMonthAxis, syncEnabled = true))
+    val t0 = java.time.LocalDateTime.parse("2024-01-01T00:00")
+    st.setTs(Map("kind" -> "a"),
+      (0 until 24 * 40).map(i => (t0.plusHours(i.toLong), 1.0)).toDF("ts", "value"),
+      update = true, now = t0)
+    val p = graft.sync.Sync.updates(st, t0.minusDays(1))
+      .queryExecution.explainString(ExplainMode.fromString("formatted"))
+    val readSchemas = "ReadSchema: (struct<[^\\n]*>)".r.findAllMatchIn(p).map(_.group(1)).toSeq
+    assert(readSchemas.nonEmpty, p.take(1500))
+    for (rs <- readSchemas; c <- Seq("ts", "value", "dtype"))
+      assert(s"[<,]$c:".r.findFirstIn(rs).isEmpty, s"updates scan reads $c: $rs")
+  }
+
   // trim/normalize/delay must not put a whole series in one window task:
   // per-key bounds come from a partial-aggregating groupBy joined back
   // (AQE broadcasts the tiny bounds side at runtime).

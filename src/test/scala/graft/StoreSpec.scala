@@ -222,6 +222,31 @@ class ChunkStoreSpec extends SparkSpec {
     assert(rows.map(_.getDouble(1)).toSeq === (0 until 24 * 5).map(_ + 0.5))
   }
 
+  test("double dense getTs: no job at call time, at most three at collect") {
+    val st = newStore(tz = "UTC")
+    assert(st.setTs(attrs, hourly("2024-01-30T00:00", 24 * 5, i => Some(i + 0.5)), now = now0))
+    var read: DataFrame = null
+    assert(jobsDuring { read = st.getTs(attrs, dropBoundsNa = false) } === 0,
+      "the footers prove double and the grid is built in the plan: no job")
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val atCollect = jobsDuring { rows = read.collect() }
+    assert(atCollect <= 3, s"dense collect ran $atCollect jobs")
+    assert(rows.length === (31 + 29) * 24) // January and leap February grids
+    assert(rows.count(!_.isNullAt(1)) === 24 * 5)
+  }
+
+  test("dense bigint getTs reads back bigint") {
+    val st = newStore(tz = "UTC")
+    val t0 = java.time.LocalDateTime.parse("2024-01-10T00:00")
+    val ints = (0 until 24).map(i => (t0.plusHours(i.toLong), i.toLong * 3)).toDF("ts", "value")
+    assert(st.setTs(attrs, ints, now = now0))
+    val dense = st.getTs(attrs, dropBoundsNa = false)
+    assert(dense.schema("value").dataType === LongType)
+    val rows = dense.collect()
+    assert(rows.length === 31 * 24)
+    assert(rows.filterNot(_.isNullAt(1)).map(_.getLong(1)).toSeq === (0 until 24).map(_.toLong * 3))
+  }
+
   // The footer fast path skips the probe only when every row group of the
   // pruned partitions holds "double" or null dtypes; anything else must
   // read exactly what the probe decides.

@@ -13,8 +13,8 @@ and emits ONE JSON line with totals, ratios, and the floor sanity
 numbers. A leg whose Bench self-reported `noisy` flag is set (trivial-
 job floor inflated beyond the quiet band) is re-run up to --retries
 times; if it never quiets down the sample is emitted with
-"quiet": false — read no regression into such a sample (NEXT.md: one
-r16 cold outlier was host contention inflating EVERY query 2-4x).
+"quiet": false — read no regression into such a sample (one r16 cold
+outlier was host contention inflating EVERY query 2-4x).
 
 Usage: python3 tools/gate.py <sfDir> <verifyOutDir> [outFile]
   <verifyOutDir> must hold oracle_sql.json (any Verify dump).
@@ -28,7 +28,7 @@ import sys
 import time
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
-QUIET_FLOOR_MS = 200.0  # NEXT.md noise discipline: >=200 ms = contention
+QUIET_FLOOR_MS = 200.0  # noise discipline: a floor >=200 ms = contention
 
 
 def run_bench(sf_dir, cold, retries):
