@@ -7,6 +7,8 @@ import org.apache.spark.sql.types._
 
 import scala.jdk.CollectionConverters._
 
+import WriteRules.{keyFilter, requireFullKey}
+
 /** Parquet-backed chunked time-series store — the Spark re-expression of
   * the reference's `TimeseriesChunkStore`
   * (hostore/models/chunk_timeserie_store.py:180-899).
@@ -41,11 +43,10 @@ import scala.jdk.CollectionConverters._
   * Concurrency: one writer at a time per store, enforced by an advisory
   * [[WriterLock]] around every mutator (the reference's row-lock upsert,
   * `select_for_update` at chunk_timeserie_store.py:789, re-expressed at
-  * store granularity over the partition commit). Disable via
-  * `StoreConfig(lockWrites = false)` for single-writer deployments.
-  * Readers take no lock and never block, but a commit is atomic per
-  * partition directory only: it deletes and renames the affected chunk
-  * directories one after another. A read that overlaps a commit can fail
+  * store granularity over the partition commit; reentrant, so composed
+  * mutators lock once). Readers take no lock and never block, but a
+  * commit is atomic per partition directory only: it deletes and renames
+  * the affected chunk directories one after another. A read that overlaps a commit can fail
   * (`FILE_NOT_EXIST` for a file its scan listed before the swap) or miss
   * a chunk listed between its delete and rename; retry such a read once
   * the commit is done.
@@ -64,16 +65,6 @@ class ChunkStore(
     * lookups skip row groups on the min/max statistics.
     */
   private[graft] val layout = PartitionCommit.Layout(path, Seq("chunk_index"), keys :+ "ts")
-
-  /** Serialize store mutations — the reference's transactional row lock
-    * (`select_for_update`, chunk_timeserie_store.py:786-813) re-expressed
-    * at store granularity over the partition commit (see [[WriterLock]]).
-    * Reentrant, so composed mutators (`setTs(replace)` → tombstone path,
-    * `compactIfNeeded` → `compact`) lock once. No-op when
-    * `config.lockWrites` is off (single-writer deployments).
-    */
-  private[graft] def locked[T](f: => T): T =
-    if (config.lockWrites) WriterLock.withLock(path)(f) else f
 
   private def chunkIndexCol(ts: Column): Column = config.chunkAxis match {
     case YearAxis      => Grid.chunkIndexYearly(ts, config.tz)
@@ -111,9 +102,6 @@ class ChunkStore(
     */
   def load(): DataFrame = PartitionCommit.load(spark, path, schema)
 
-  private def attrFilter(attrs: Map[String, Any]): Column =
-    attrs.map { case (k, v) => col(k) === lit(v) }.reduceOption(_ && _).getOrElse(lit(true))
-
   /** Partition pruning: literal chunk_index bound for an instant, like the
     * reference's `_filter_interval` (chunk_timeserie_store.py:855-861).
     */
@@ -122,32 +110,17 @@ class ChunkStore(
     case YearMonthAxis => Grid.chunkRangeMonthly(z, z, config.tz)._1
   }
 
-  private def requireAllKeys(attrs: Map[String, Any]): Unit = {
-    val missing = keys.filterNot(attrs.contains)
-    require(missing.isEmpty, s"all business keys must be specified; missing: ${missing.mkString(",")}")
-    val unknown = attrs.keys.filterNot(keys.contains)
-    require(unknown.isEmpty, s"unknown attrs: ${unknown.mkString(",")}")
-  }
-
-  /** Normalize written rows (reference `_normalize_serie`/
-    * `_normalize_index`, chunk_timeserie_store.py:699-743): cast `ts` and
-    * `value`, drop null and NaN points, and record as `dtype` the value
-    * type BEFORE the double coercion, so reads can cast back (reference
-    * dtype round-trip). LAZY — the empty/all-null skip (":720-722") is
-    * decided by each writer's own pre-write probe job, not a dedicated
-    * isEmpty action.
+  /** [[WriteRules.points]] of `rows`, recording as `dtype` the value type
+    * BEFORE the double coercion, so reads can cast back (reference dtype
+    * round-trip).
     */
   private def normalized(rows: DataFrame): DataFrame =
-    rows
-      .withColumn("dtype", lit(dtypeOf(rows)))
-      .withColumn("ts", col("ts").cast(TimestampNTZType))
-      .withColumn("value", col("value").cast(DoubleType))
-      .filter(col("value").isNotNull && !isnan(col("value")) && col("ts").isNotNull)
+    WriteRules.points(rows.withColumn("dtype", lit(dtypeOf(rows))))
 
   private def dtypeOf(rows: DataFrame): String = rows.schema("value").dataType.simpleString
 
   def exists(attrs: Map[String, Any]): Boolean =
-    !load().filter(attrFilter(attrs) && !col("is_deleted")).isEmpty
+    !load().filter(keyFilter(attrs) && !col("is_deleted")).isEmpty
 
   /** Write one series under `attrs`. Mirrors `set_ts`
     * (chunk_timeserie_store.py:309-373): plain insert refuses duplicates
@@ -161,12 +134,12 @@ class ChunkStore(
       series: DataFrame,
       update: Boolean = false,
       replace: Boolean = false,
-      now: java.time.LocalDateTime = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)): Boolean = locked {
+      now: java.time.LocalDateTime = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)): Boolean = WriterLock.withLock(path) {
     require(!(update && replace), "update and replace are mutually exclusive")
-    requireAllKeys(attrs)
+    requireFullKey(attrs, keys)
     if (config.syncEnabled && !update && !replace)
       throw new IllegalStateException("plain insert is forbidden on a sync-enabled store; use update or replace")
-    val newRows = finishRows(attachAttrs(normalized(series.select("ts", "value")), attrs), now)
+    val newRows = finishRows(WriteRules.withKey(normalized(series.select("ts", "value")), attrs, keySchema), now)
     // ONE probe job answers every pre-write question (r12 follow-up #2 —
     // previously an isEmpty + exists/affected/overlapped chain of 2-3
     // scheduler round-trips): the new write's distinct chunk indexes
@@ -182,7 +155,7 @@ class ChunkStore(
       if (update) newChunksDf
       else {
         val minePred =
-          if (replace) attrFilter(attrs) else attrFilter(attrs) && !col("is_deleted")
+          if (replace) keyFilter(attrs) else keyFilter(attrs) && !col("is_deleted")
         newChunksDf.unionAll(
           load().filter(minePred).select(col("chunk_index")).distinct()
             .select(col("chunk_index"), lit(false).as("__new")))
@@ -196,7 +169,7 @@ class ChunkStore(
         throw new IllegalStateException(s"series already exists for $attrs (IntegrityError parity)")
       if (update)
         mergeChunks(newRows, newChunks, dtypeOf(series), now)(cur =>
-          (cur.filter(attrFilter(attrs)), cur.filter(!attrFilter(attrs))))
+          (cur.filter(keyFilter(attrs)), cur.filter(!keyFilter(attrs))))
       else if (replace) replaceChunks(attrs, newRows, newChunks, mineChunks, now)
       else appendRows(newRows)
       true
@@ -210,14 +183,11 @@ class ChunkStore(
     */
   def setManyTs(
       many: DataFrame,
-      now: java.time.LocalDateTime = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)): Unit = locked {
+      now: java.time.LocalDateTime = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)): Unit = WriterLock.withLock(path) {
     if (config.syncEnabled)
       throw new IllegalStateException("set_many_ts is forbidden on a sync-enabled store")
     val s = normalized(many)
-    val dup = s.select(keys.map(col): _*).distinct()
-      .join(load().filter(!col("is_deleted")).select(keys.map(col): _*).distinct(), keys, "left_semi")
-    if (!dup.isEmpty)
-      throw new IllegalStateException("set_many_ts: some series already exist (IntegrityError parity)")
+    WriteRules.refuseExisting(s, load().filter(!col("is_deleted")), keys)
     appendRows(finishRows(s, now))
   }
 
@@ -233,7 +203,7 @@ class ChunkStore(
     */
   def upsertManyTs(
       rows: DataFrame,
-      now: java.time.LocalDateTime = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)): Unit = locked {
+      now: java.time.LocalDateTime = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)): Unit = WriterLock.withLock(path) {
     val s = normalized(rows)
     val newRows  = finishRows(s, now)
     val affected = newRows.select("chunk_index").distinct().collect().map(_.getInt(0)).toSeq
@@ -296,8 +266,8 @@ class ChunkStore(
       start: Option[java.time.ZonedDateTime] = None,
       end: Option[java.time.ZonedDateTime] = None,
       dropBoundsNa: Boolean = true): DataFrame = {
-    requireAllKeys(attrs)
-    val df = live(attrFilter(attrs), start, end)
+    requireFullKey(attrs, keys)
+    val df = live(keyFilter(attrs), start, end)
     val (lo, hi) = (start.map(chunkOf), end.map(chunkOf))
     // the probe is ONE metadata-sized job (per-partition fold, no shuffle —
     // a distinct+limit plan costs extra AQE jobs), run only when the
@@ -386,7 +356,7 @@ class ChunkStore(
       attrsList: Seq[Map[String, Any]],
       start: Option[java.time.ZonedDateTime] = None,
       end: Option[java.time.ZonedDateTime] = None): DataFrame = {
-    attrsList.foreach(requireAllKeys)
+    attrsList.foreach(requireFullKey(_, keys))
     val specs = tupleIn(keySchema.fields.toSeq, attrsList.map(a => keys.map(a)))
     series(live(specs, start, end), start, end, dropBoundsNa = true)
       .orderBy((keys.map(col) :+ col("ts")): _*)
@@ -442,11 +412,8 @@ class ChunkStore(
     * compacted. Run it as maintenance after many incremental writes;
     * readers see the same rows.
     */
-  def compact(partitions: Option[Seq[Int]] = None): Int = locked {
-    val parts = partitions.getOrElse(PartitionCommit.partitions(path, "chunk_index"))
-    PartitionCommit.commit(layout, load().filter(col("chunk_index").isin(parts: _*)), parts)
-    parts.length
-  }
+  def compact(partitions: Option[Seq[Int]] = None): Int =
+    PartitionCommit.compact(layout, load(), partitions).length
 
   /** Policy form of [[compact]]: rewrite only the chunk partitions whose
     * parquet-file count exceeds `maxFilesPerPartition` (append-mode
@@ -456,12 +423,8 @@ class ChunkStore(
     * call, not a write hook: schedule it after bulk loads / on a timer
     * next to a streaming ingest. Returns the partitions compacted.
     */
-  def compactIfNeeded(maxFilesPerPartition: Int = 8): Seq[Int] = locked {
-    require(maxFilesPerPartition >= 1, "maxFilesPerPartition must be >= 1")
-    val parts = PartitionCommit.crowdedPartitions(path, "chunk_index", maxFilesPerPartition)
-    compact(Some(parts))
-    parts
-  }
+  def compactIfNeeded(maxFilesPerPartition: Int = 8): Seq[Int] =
+    PartitionCommit.compactCrowded(layout, load(), maxFilesPerPartition)
 
   /** Latest non-null timestamp across matching series, None when empty
     * (reference `get_max_horodate`, chunk_timeserie_store.py:519-539).
@@ -475,7 +438,7 @@ class ChunkStore(
     * job per remaining partition.
     */
   def maxHorodate(filters: Map[String, Any] = Map.empty): Option[java.time.LocalDateTime] = {
-    val live = load().filter(attrFilter(filters) && !col("is_deleted") && col("value").isNotNull)
+    val live = load().filter(keyFilter(filters) && !col("is_deleted") && col("value").isNotNull)
     val probeLimit = 3
     val candidates = PartitionCommit.partitions(path, "chunk_index").sorted(Ordering[Int].reverse)
     for (p <- candidates.take(probeLimit)) {
@@ -501,7 +464,7 @@ class ChunkStore(
     * (reference `last_updated_at`, chunk_timeserie_store.py:288-307).
     */
   def lastUpdatedAt(filters: Map[String, Any] = Map.empty): java.time.LocalDateTime = {
-    val r = load().filter(attrFilter(filters)).agg(max("updated_at")).head()
+    val r = load().filter(keyFilter(filters)).agg(max("updated_at")).head()
     if (r.isNullAt(0))
       java.time.ZonedDateTime.of(2000, 1, 1, 0, 0, 0, 0, java.time.ZoneId.of(config.tz))
         .withZoneSameInstant(java.time.ZoneOffset.UTC).toLocalDateTime
@@ -522,11 +485,11 @@ class ChunkStore(
   def delete(
       filters: Map[String, Any],
       keepTracking: Boolean = true,
-      now: java.time.LocalDateTime = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)): Unit = locked {
+      now: java.time.LocalDateTime = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)): Unit = WriterLock.withLock(path) {
     if (!keepTracking && config.syncEnabled)
       throw new IllegalStateException("hard delete is forbidden on a sync-enabled store")
     val cur = load()
-    val hit = attrFilter(filters)
+    val hit = keyFilter(filters)
     val affected = cur.filter(hit).select("chunk_index").distinct().collect().map(_.getInt(0))
     if (affected.nonEmpty) {
       val kept = cur.filter(col("chunk_index").isin(affected.toSeq: _*)).filter(!hit)
@@ -536,9 +499,6 @@ class ChunkStore(
   }
 
   // ---- write-path internals -------------------------------------------
-
-  private def attachAttrs(s: DataFrame, attrs: Map[String, Any]): DataFrame =
-    keys.foldLeft(s)((d, k) => d.withColumn(k, lit(attrs(k)).cast(keySchema(k).dataType)))
 
   /** Add chunk_index / is_deleted / updated_at and order columns. Frames
     * without a dtype column (internal rebuilds of already-double rows)
@@ -600,8 +560,8 @@ class ChunkStore(
     val myOther    = mineAll.filterNot(overlapped.toSet)
     val affected   = (overlapped ++ myOther).distinct
     val scope      = cur.filter(col("chunk_index").isin(affected: _*))
-    val others     = scope.filter(!attrFilter(attrs))
-    val tombs = tombstones(scope.filter(attrFilter(attrs) && col("chunk_index").isin(myOther: _*)), now)
+    val others     = scope.filter(!keyFilter(attrs))
+    val tombs = tombstones(scope.filter(keyFilter(attrs) && col("chunk_index").isin(myOther: _*)), now)
     PartitionCommit.commit(layout, others.unionByName(newRows).unionByName(tombs), affected)
   }
 }

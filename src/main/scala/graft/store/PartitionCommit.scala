@@ -139,4 +139,28 @@ private[graft] object PartitionCommit {
       }
     }
   }
+
+  /** Small-file compaction of a single-partition-column store, under its
+    * writer lock: rewrite `parts` (default: every partition on disk) with
+    * their own rows from `stored`, so each comes out as one sorted file
+    * instead of one file per historical write. Readers see the same rows.
+    * Returns the partitions rewritten.
+    */
+  def compact(layout: Layout, stored: => DataFrame, parts: Option[Seq[Int]]): Seq[Int] =
+    WriterLock.withLock(layout.path) {
+      val Seq(column) = layout.partitionBy
+      val ps = parts.getOrElse(partitions(layout.path, column))
+      commit(layout, stored.filter(col(column).isin(ps: _*)), ps)
+      ps
+    }
+
+  /** [[compact]] of only the partitions holding more than `maxFiles`
+    * parquet files, from a directory listing: no data scan for partitions
+    * already compact.
+    */
+  def compactCrowded(layout: Layout, stored: => DataFrame, maxFiles: Int): Seq[Int] =
+    WriterLock.withLock(layout.path) {
+      require(maxFiles >= 1, "max files per partition must be >= 1")
+      compact(layout, stored, Some(crowdedPartitions(layout.path, layout.partitionBy.head, maxFiles)))
+    }
 }

@@ -16,8 +16,7 @@ final case class StoreConfig(
     freq: String = "1h",
     tz: String = "Europe/Paris",
     chunkAxis: ChunkAxis = YearMonthAxis,
-    syncEnabled: Boolean = false,
-    lockWrites: Boolean = true) {
+    syncEnabled: Boolean = false) {
 
   /** Fixed grid step in seconds; rejects unsupported offsets eagerly
     * (reference `_validate_settings`, chunk_timeserie_store.py:222-243).

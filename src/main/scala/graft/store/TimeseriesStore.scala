@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import WriteRules.{keyFilter, requireFullKey}
+
 /** Non-chunked keyed time-series store — the Spark re-expression of the
   * reference's `TimeseriesStore` (hostore/models/timeserie_store.py:16-156):
   * one series per unique business-key tuple, whole-series writes, no
@@ -23,7 +25,10 @@ import org.apache.spark.sql.types._
   * with the fewest jobs each mode allows: replace and insert write their
   * prepared content directly (their content never reads the store);
   * update and an existing-store `setManyTs` checkpoint once, and their
-  * observations ride that job.
+  * observations ride that job. Every mutator runs under the store's
+  * [[WriterLock]], as ChunkStore's do: the exists-probe + combine-first +
+  * partition overwrite in `setTs` is a read-modify-write exactly like the
+  * reference's locked upsert.
   *
   * Error contract mirrors the reference's ValueError surface
   * (timeserie_store.py:118-141, tests_timeseries_store.py:86-133):
@@ -38,19 +43,10 @@ import org.apache.spark.sql.types._
 class TimeseriesStore(
     val spark: SparkSession,
     val path: String,
-    val keySchema: StructType,
-    val lockWrites: Boolean = true) {
+    val keySchema: StructType) {
 
   val keys: Seq[String] = keySchema.fields.map(_.name).toSeq
   require(keys.nonEmpty, "TimeseriesStore needs at least one business key")
-
-  /** Serialize store mutations (reference row-lock parity; the same
-    * [[WriterLock]] protocol as ChunkStore). The exists-probe +
-    * combine-first + partition overwrite in `setTs` is a
-    * read-modify-write exactly like the reference's locked upsert.
-    */
-  private def locked[T](f: => T): T =
-    if (lockWrites) WriterLock.withLock(path)(f) else f
 
   def schema: StructType = StructType(
     keySchema.fields.toSeq ++ Seq(
@@ -66,20 +62,8 @@ class TimeseriesStore(
   private def write(content: DataFrame): Unit =
     PartitionCommit.overwrite(layout, PartitionCommit.prepare(layout, content))
 
-  private def attrFilter(attrs: Map[String, Any]): Column =
-    attrs.map { case (k, v) => col(k) === lit(v) }.reduceOption(_ && _).getOrElse(lit(true))
-
-  private def requireAllKeys(attrs: Map[String, Any]): Unit = {
-    require(attrs != null, "ts_attributes is null")
-    val missing = keys.filterNot(attrs.contains)
-    require(missing.isEmpty, s"all business keys must be specified; missing: ${missing.mkString(",")}")
-    val unknown = attrs.keys.filterNot(keys.contains)
-    require(unknown.isEmpty, s"unknown attrs: ${unknown.mkString(",")}")
-    require(attrs.values.forall(_ != null), "null key values are not allowed")
-  }
-
   def exists(attrs: Map[String, Any]): Boolean =
-    !load().filter(attrFilter(attrs)).isEmpty
+    !load().filter(keyFilter(attrs)).isEmpty
 
   /** Write one series under `attrs` (reference `set_ts`,
     * timeserie_store.py:97-141): `update` merges new.combine_first(existing),
@@ -92,13 +76,11 @@ class TimeseriesStore(
       attrs: Map[String, Any],
       series: DataFrame,
       update: Boolean = false,
-      replace: Boolean = false): Boolean = locked {
+      replace: Boolean = false): Boolean = WriterLock.withLock(path) {
     if (update && replace)
       throw new IllegalArgumentException("update and replace are mutually exclusive")
-    requireAllKeys(attrs)
-    val s = series
-      .select(col("ts").cast(TimestampNTZType).as("ts"), col("value").cast(DoubleType).as("value"))
-      .filter(col("value").isNotNull && !isnan(col("value")) && col("ts").isNotNull)
+    requireFullKey(attrs, keys)
+    val s = WriteRules.points(series.select("ts", "value"))
     if (update) setTsUpdate(attrs, s)
     else if (replace) {
       // `replace` needs NO pre-write probe job at all (r16): it never
@@ -124,7 +106,7 @@ class TimeseriesStore(
       // A store with no series partitions skips the exists side.
       val sProbe = s.limit(1).select(lit("s").as("side"))
       val probe = (if (PartitionCommit.hasPartitions(path))
-          sProbe.unionAll(load().filter(attrFilter(attrs)).limit(1).select(lit("e").as("side")))
+          sProbe.unionAll(load().filter(keyFilter(attrs)).limit(1).select(lit("e").as("side")))
         else sProbe)
         .collect().map(_.getString(0)).toSet
       if (!probe("s")) false
@@ -149,7 +131,7 @@ class TimeseriesStore(
     */
   private def setTsUpdate(attrs: Map[String, Any], s: DataFrame): Boolean = {
     val obs = org.apache.spark.sql.Observation()
-    val existing = load().filter(attrFilter(attrs)).select(col("ts"), col("value"))
+    val existing = load().filter(keyFilter(attrs)).select(col("ts"), col("value"))
     // single-key combine: both frames are one series, keyed by a
     // constant — reuse the ordered-coalesce machinery with no keys
     val content = Combine.combineFirst(
@@ -164,9 +146,7 @@ class TimeseriesStore(
   }
 
   private def attach(attrs: Map[String, Any], content: DataFrame): DataFrame =
-    keys.foldLeft(content)((d, k) =>
-      d.withColumn(k, lit(attrs(k)).cast(keySchema(k).dataType)))
-      .select(schema.fieldNames.map(col): _*)
+    WriteRules.withKey(content, attrs, keySchema).select(schema.fieldNames.map(col): _*)
 
   /** Bulk insert of many series in ONE write — the batch analogue
     * of [[setTs]], mirroring the chunked store's `set_many_ts` contract
@@ -183,79 +163,52 @@ class TimeseriesStore(
     * new series directory in a single job — the shape that matters when
     * backfilling millions of series.
     */
-  def setManyTs(many: DataFrame): Unit = locked {
-    // key validation on the RAW batch, BEFORE row normalization — a
-    // null-keyed row must refuse the batch even when its value is also
-    // null/NaN (setTs parity: requireAllKeys runs before the series
-    // filter)
-    val nullKeyed = keys.map(col(_).isNull).reduce(_ || _)
-    if (PartitionCommit.hasPartitions(path)) {
-      // EXISTING-STORE path: the duplicate probe must run BEFORE the
-      // write (an overwrite would clobber the clashing series), and it
-      // needs the normalized batch twice (probe + write) — so the batch
-      // is checkpointed once and both read the blocks. The null-key
-      // count rides the materialization job as an observation (the
-      // connectedComponents trick); it sits ahead of the value filter so
-      // a null-keyed row with a null/NaN value still refuses the batch
-      // (setTs parity). Key columns are coerced to the store schema
-      // (setTs parity, which casts via lit(attrs(k)).cast): mismatched
-      // key dtypes would write parquet with wrong physical types that the
-      // schema'd reads cannot decode. The surviving-row count
-      // rides the same job, so the emptiness probe costs no extra action.
-      val nullKeyObs = org.apache.spark.sql.Observation()
-      val rowObs = org.apache.spark.sql.Observation()
-      // prepare() BEFORE the checkpoint: the partition-shaping shuffle
-      // rides the (mandatory) validation materialization, so the final
-      // write job reads checkpoint blocks with no exchange of its own
-      val prepared = PartitionCommit.prepare(layout, many
-        .observe(nullKeyObs, sum(when(nullKeyed, 1L).otherwise(0L)).as("nk"))
-        .select((keys.map(k => col(k).cast(keySchema(k).dataType).as(k)) :+
-          col("ts").cast(TimestampNTZType).as("ts") :+
-          col("value").cast(DoubleType).as("value")): _*)
-        .filter(col("value").isNotNull && !isnan(col("value")) && col("ts").isNotNull)
-        .observe(rowObs, count(lit(1)).as("n")))
-      PartitionCommit.checkpointed(prepared) { s =>
-        require(Option(nullKeyObs.get("nk")).forall(_.asInstanceOf[Long] == 0L),
-          "null key values are not allowed")
-        val dup = s.select(keys.map(col): _*).distinct()
-          .join(load().select(keys.map(col): _*).distinct(), keys, "left_semi")
-        if (!dup.isEmpty)
-          throw new IllegalStateException(
-            "set_many_ts: some series already exist (IntegrityError parity)")
-        if (Option(rowObs.get("n")).exists(_.asInstanceOf[Long] > 0L))
-          PartitionCommit.overwrite(layout, s.select(schema.fieldNames.map(col): _*))
+  def setManyTs(many: DataFrame): Unit = WriterLock.withLock(path) {
+    // The null-key refusal is an in-plan guard on the job that first
+    // reads the batch: `assert_true` evaluates to null when the row is
+    // clean and fails the task otherwise, and nothing commits before that
+    // job ends, so a poisoned batch aborts with nothing written. The guard
+    // is fused into BOTH the ts and value projections so that whichever
+    // normalization-filter conjunct a dropped row evaluates first, it
+    // evaluates a guarded column — a null-keyed row whose value is also
+    // null/NaN still refuses the batch (setTs parity: the key check runs
+    // before the series filter), under any conjunct reordering. Key
+    // columns are coerced to the store schema (setTs parity): mismatched
+    // key dtypes would write parquet with wrong physical types that the
+    // schema'd reads cannot decode.
+    val guard = assert_true(!keys.map(col(_).isNull).reduce(_ || _), lit(WriteRules.NullKey))
+    val s = WriteRules.points(many.select(
+      (keys.map(k => col(k).cast(keySchema(k).dataType).as(k)) :+
+        when(guard.isNull, col("ts")).as("ts") :+
+        when(guard.isNull, col("value")).as("value")): _*))
+    rethrowNullKey {
+      if (PartitionCommit.hasPartitions(path)) {
+        // EXISTING-STORE path: the duplicate probe must run BEFORE the
+        // write (an overwrite would clobber the clashing series), and it
+        // needs the normalized batch twice (probe + write) — so the batch
+        // is checkpointed once, prepare() first so the partition-shaping
+        // shuffle rides that job, and both read the blocks. The guard and
+        // the surviving-row count ride the same job.
+        val rowObs = org.apache.spark.sql.Observation()
+        PartitionCommit.checkpointed(PartitionCommit.prepare(layout,
+            s.observe(rowObs, count(lit(1)).as("n")))) { staged =>
+          WriteRules.refuseExisting(staged, load(), keys)
+          if (Option(rowObs.get("n")).exists(_.asInstanceOf[Long] > 0L))
+            PartitionCommit.overwrite(layout, staged.select(schema.fieldNames.map(col): _*))
+        }
+      } else {
+        // FRESH-STORE path (first backfill): no duplicate probe is
+        // possible, so the guard rides the write job itself. An
+        // empty/all-null batch writes zero rows: the overwrite commits no
+        // partition directories — the reference's empty-series skip.
+        write(s.select(schema.fieldNames.map(col): _*))
       }
-    } else {
-      // FRESH-STORE path (first backfill — and the only path a batch
-      // pipeline's initial load takes): no duplicate probe is possible,
-      // so nothing needs the batch before the write — the null-key
-      // refusal rides the write job itself as an in-plan guard
-      // (r21, VERDICT r20 #2: one write job instead of
-      // checkpoint-materialize + write). `assert_true` evaluates to null
-      // when the row is clean and fails the task otherwise; the dynamic
-      // overwrite only commits at job end, so a poisoned batch aborts
-      // with nothing written — exactly the old pre-write refusal, one
-      // scheduler round-trip cheaper. The guard is fused into BOTH the
-      // ts and value projections so that whichever normalization-filter
-      // conjunct a dropped row evaluates first, it evaluates a guarded
-      // column — a null-keyed row whose value is also null/NaN still
-      // refuses the batch (setTs parity), under any conjunct reordering.
-      // An empty/all-null batch writes zero rows: the overwrite commits
-      // no partition directories — the reference's empty-series skip.
-      val guard = assert_true(!nullKeyed, lit(NullKeyMsg))
-      val s = many.select(
-        (keys.map(k => col(k).cast(keySchema(k).dataType).as(k)) :+
-          when(guard.isNull, col("ts").cast(TimestampNTZType)).as("ts") :+
-          when(guard.isNull, col("value").cast(DoubleType)).as("value")): _*)
-        .filter(col("value").isNotNull && !isnan(col("value")) && col("ts").isNotNull)
-      rethrowNullKey(write(s.select(schema.fieldNames.map(col): _*)))
     }
   }
 
-  private val NullKeyMsg = "null key values are not allowed"
-
-  /** Surface the in-plan null-key guard with the same exception type the
-    * pre-write `require` used: a failed `assert_true` arrives wrapped in
+  /** Surface the in-plan null-key guard as the contract's
+    * IllegalArgumentException (what [[WriteRules.requireFullKey]] throws
+    * for a one-series write): a failed `assert_true` arrives wrapped in
     * SparkException layers at the action — unwrap, rethrow the contract's
     * IllegalArgumentException. Matched precisely (ADVICE r21): the cause
     * must be Spark's own raise_error surface (a SparkThrowable whose
@@ -271,8 +224,8 @@ class TimeseriesStore(
           c match {
             case st: org.apache.spark.SparkThrowable
                 if st.getCondition == "USER_RAISED_EXCEPTION" &&
-                  c.getMessage != null && c.getMessage.contains(NullKeyMsg) =>
-              throw new IllegalArgumentException(NullKeyMsg)
+                  c.getMessage != null && c.getMessage.contains(WriteRules.NullKey) =>
+              throw new IllegalArgumentException(WriteRules.NullKey)
             case _ =>
           }
           c = c.getCause
@@ -308,7 +261,7 @@ class TimeseriesStore(
     * each matched series is one partition directory — a directory drop,
     * no rewrite of anything else.
     */
-  def clear(filters: Map[String, Any]): Unit = locked {
+  def clear(filters: Map[String, Any]): Unit = WriterLock.withLock(path) {
     val victims = load().filter(Lookups.validated(filters, keys))
       .select(keys.map(col): _*).distinct().collect()
     victims.foreach { r =>

@@ -21,23 +21,19 @@ import org.apache.spark.sql.types._
   * listing. Versioned and first writes append. The
   * bucket is computed driver-side (every write path receives the prm as a
   * Scala value), so no hash-expression parity with Catalyst is needed.
+  *
+  * Every mutator runs under the store's [[WriterLock]], as ChunkStore's
+  * do: the max-version probe + append in `setLc` is a read-modify-write
+  * exactly like the reference's locked upsert (hostore.py:354-366), and
+  * without exclusion two concurrent versioned writes could claim the same
+  * version number. The lock is reentrant, so `setManyLc` → `setLc` locks
+  * once.
   */
 class VersionedStore(
     val spark: SparkSession,
     val path: String,
     val numBuckets: Int = 32,
-    val extraSchema: StructType = StructType(Nil),
-    val lockWrites: Boolean = true) {
-
-  /** Serialize store mutations (reference row-lock parity; the same
-    * [[WriterLock]] protocol as ChunkStore — reentrant, so `setManyLc` →
-    * `setLc` locks once). The max-version probe + append in `setLc` is a
-    * read-modify-write exactly like the reference's locked upsert
-    * (hostore.py:354-366): without exclusion two concurrent versioned
-    * writes could claim the same version number.
-    */
-  private def locked[T](f: => T): T =
-    if (lockWrites) WriterLock.withLock(path)(f) else f
+    val extraSchema: StructType = StructType(Nil)) {
 
   /** User-declared extra business attributes (the reference's subclass
     * fields, set via `attributes_to_set` — hostore.py:326,354-366).
@@ -77,10 +73,20 @@ class VersionedStore(
     df.select("prm", "version").distinct().count()
   }
 
+  /** The `update_or_create` match (hostore.py:354): `prm`, `clientId`
+    * and every attribute of `attrs`, a null attribute matching NULL as
+    * Django's `filter(kind=None)` does.
+    */
+  private def matching(prm: String, clientId: Int, attrs: Map[String, Any]): Column =
+    attrs.foldLeft(col("prm") === prm && col("client_id") === clientId) {
+      case (c, (k, v)) => c && (col(k) <=> lit(v))
+    }
+
   /** Write a series (reference `set_lc`, hostore.py:321-370):
     *  - versioning=false upserts — `update_or_create` matched on
-    *    (client_id, prm, **attributes_to_set) (:354), re-expressed as a
-    *    rewrite of the prm's bucket partition only;
+    *    (client_id, prm, **attributes_to_set) (:354), a NULL attribute
+    *    matching NULL, re-expressed as a rewrite of the prm's bucket
+    *    partition only;
     *  - versioning=true appends with `max(version)+1` scoped to
     *    (client_id, prm) plus the `versioningBy` subset of
     *    `attributesToSet` (:356-363; 'prm' is mandatory in versionning_by);
@@ -95,68 +101,49 @@ class VersionedStore(
       versioning: Boolean = false,
       now: java.time.LocalDateTime = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC),
       versioningBy: Seq[String] = Seq("prm"),
-      attributesToSet: Map[String, Any] = Map.empty): Boolean = locked {
+      attributesToSet: Map[String, Any] = Map.empty): Boolean = WriterLock.withLock(path) {
     require(versioningBy.contains("prm"), "'prm' is mandatory in versioningBy (hostore.py:356)")
     val unknown = attributesToSet.keySet.filterNot(extraKeys.contains)
     require(unknown.isEmpty, s"attributesToSet not in extraSchema: ${unknown.mkString(",")}")
-    val s = series
-      .select(col("ts").cast(TimestampNTZType).as("ts"), col("value").cast(DoubleType).as("value"))
-      .filter(col("ts").isNotNull && col("value").isNotNull && !isnan(col("value")))
-    if (s.isEmpty) false else setLcNonEmpty(prm, clientId, s, versioning, now, versioningBy, attributesToSet)
-  }
-
-  private def setLcNonEmpty(
-      prm: String,
-      clientId: Int,
-      s: DataFrame,
-      versioning: Boolean,
-      now: java.time.LocalDateTime,
-      versioningBy: Seq[String],
-      attributesToSet: Map[String, Any]): Boolean = {
-    val version: Int =
-      if (!versioning) 0
-      else {
-        // _filters = prm + (attributes_to_set ∩ versionning_by)
-        val scoped = attributesToSet.filter { case (k, _) => versioningBy.contains(k) }
-        var vf = loadPrm(prm).filter(col("client_id") === clientId)
-        scoped.foreach { case (k, v) => vf = vf.filter(col(k) === lit(v)) }
-        val r = vf.agg(max("version")).head()
-        if (r.isNullAt(0)) 0 else r.getInt(0) + 1
+    val s = WriteRules.points(series.select("ts", "value"))
+    if (s.isEmpty) false
+    else {
+      val version: Int =
+        if (!versioning) 0
+        else {
+          // _filters = prm + (attributes_to_set ∩ versionning_by)
+          val scoped = attributesToSet.filter { case (k, _) => versioningBy.contains(k) }
+          val r = loadPrm(prm).filter(matching(prm, clientId, scoped)).agg(max("version")).head()
+          if (r.isNullAt(0)) 0 else r.getInt(0) + 1
+        }
+      val b = bucketOf(prm)
+      val withExtras = extraKeys.foldLeft(s) { (d, k) =>
+        d.withColumn(k,
+          attributesToSet.get(k).map(v => lit(v)).getOrElse(lit(null))
+            .cast(extraSchema(k).dataType))
       }
-    val b = bucketOf(prm)
-    val withExtras = extraKeys.foldLeft(s) { (d, k) =>
-      d.withColumn(k,
-        attributesToSet.get(k).map(v => lit(v)).getOrElse(lit(null))
-          .cast(extraSchema(k).dataType))
+      val rows = withExtras
+        .withColumn("prm", lit(prm))
+        .withColumn("client_id", lit(clientId))
+        .withColumn("version", lit(version))
+        .withColumn("created_at", lit(now)) // LocalDateTime → NTZ literal, JVM-tz-proof
+        .withColumn("bucket", lit(b))
+        .select(schema.fieldNames.map(col): _*)
+      if (!versioning && exists(prm, clientId, attributesToSet)) {
+        // upsert: rewrite ONLY this prm's bucket partition — everything in
+        // the bucket minus the update_or_create match, plus the new rows.
+        val content = load()
+          .filter(col("bucket") === b)
+          .filter(!matching(prm, clientId, attributesToSet))
+          .unionByName(rows)
+        PartitionCommit.commit(layout, content, Seq(b))
+      } else rows.write.mode(SaveMode.Append).partitionBy("bucket").parquet(path)
+      true
     }
-    val rows = withExtras
-      .withColumn("prm", lit(prm))
-      .withColumn("client_id", lit(clientId))
-      .withColumn("version", lit(version))
-      .withColumn("created_at", lit(now)) // LocalDateTime → NTZ literal, JVM-tz-proof
-      .withColumn("bucket", lit(b))
-      .select(schema.fieldNames.map(col): _*)
-    if (!versioning && exists(prm, clientId, attributesToSet)) {
-      // upsert: rewrite ONLY this prm's bucket partition — everything in
-      // the bucket minus the update_or_create match, plus the new rows.
-      val matchCond = attributesToSet.foldLeft(
-        col("prm") === prm && col("client_id") === clientId) {
-        case (c, (k, v)) => c && col(k) === lit(v)
-      }
-      val content = load()
-        .filter(col("bucket") === b)
-        .filter(!matchCond)
-        .unionByName(rows)
-      PartitionCommit.commit(layout, content, Seq(b))
-    } else rows.write.mode(SaveMode.Append).partitionBy("bucket").parquet(path)
-    true
   }
 
-  def exists(prm: String, clientId: Int, attributesToSet: Map[String, Any] = Map.empty): Boolean = {
-    var df = loadPrm(prm).filter(col("client_id") === clientId)
-    attributesToSet.foreach { case (k, v) => df = df.filter(col(k) === lit(v)) }
-    !df.isEmpty
-  }
+  def exists(prm: String, clientId: Int, attributesToSet: Map[String, Any] = Map.empty): Boolean =
+    !loadPrm(prm).filter(matching(prm, clientId, attributesToSet)).isEmpty
 
   /** Small-file compaction (ChunkStore.compact's sibling): every
     * append-mode `setLc` adds a file to the prm's bucket directory, so a
@@ -164,22 +151,15 @@ class VersionedStore(
     * given (default: all) bucket partitions through the partition commit
     * — each comes out as one file. Readers see the same rows.
     */
-  def compact(buckets: Option[Seq[Int]] = None): Int = locked {
-    val bs = buckets.getOrElse(PartitionCommit.partitions(path, "bucket"))
-    PartitionCommit.commit(layout, load().filter(col("bucket").isin(bs: _*)), bs)
-    bs.length
-  }
+  def compact(buckets: Option[Seq[Int]] = None): Int =
+    PartitionCommit.compact(layout, load(), buckets).length
 
   /** Policy form: rewrite only buckets whose parquet-file count exceeds
     * `maxFilesPerBucket`, from a cheap directory listing — no data scan
     * for buckets already compact. Returns the buckets compacted.
     */
-  def compactIfNeeded(maxFilesPerBucket: Int = 8): Seq[Int] = locked {
-    require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
-    val bs = PartitionCommit.crowdedPartitions(path, "bucket", maxFilesPerBucket)
-    compact(Some(bs))
-    bs
-  }
+  def compactIfNeeded(maxFilesPerBucket: Int = 8): Seq[Int] =
+    PartitionCommit.compactCrowded(layout, load(), maxFilesPerBucket)
 
   /** Version-combined read (reference `get_lc`, hostore.py:218-268) with
     * the full option surface:
@@ -254,7 +234,7 @@ class VersionedStore(
       clientId: Int,
       versioning: Boolean = false,
       now: java.time.LocalDateTime = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)): Map[String, Boolean] =
-    locked { // one lock for the whole batch; inner setLc re-enters
+    WriterLock.withLock(path) { // one lock for the whole batch; inner setLc re-enters
       series.map { case (prm, df) => prm -> setLc(prm, clientId, df, versioning, now) }
     }
 
@@ -406,7 +386,7 @@ class VersionedStore(
     * are rewritten; a store-wide clear (no prms) rewrites every bucket. A
     * bucket left empty has its directory dropped.
     */
-  def clear(clientId: Int, prms: Option[Seq[String]] = None, version: Option[Int] = None): Unit = locked {
+  def clear(clientId: Int, prms: Option[Seq[String]] = None, version: Option[Int] = None): Unit = WriterLock.withLock(path) {
     var hit: Column = col("client_id") === clientId
     prms.foreach(ps => hit = hit && col("prm").isin(ps: _*))
     version.foreach(v => hit = hit && col("version") === v)

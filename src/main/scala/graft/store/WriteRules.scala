@@ -1,0 +1,65 @@
+package graft.store
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructType, TimestampNTZType}
+
+/** The write rules ChunkStore, VersionedStore and TimeseriesStore share —
+  * the reference applies one set to its three store flavors: points are
+  * normalized before they are stored (`_normalize_serie`,
+  * chunk_timeserie_store.py:699-743), business keys are unique and NOT
+  * NULL, and a bulk insert refuses series that already exist.
+  */
+private[graft] object WriteRules {
+
+  val NullKey = "null key values are not allowed"
+
+  /** Whether a point is kept: a non-null `ts` and a non-null, non-NaN
+    * `value`.
+    */
+  def kept(ts: Column, value: Column): Column = value.isNotNull && !isnan(value) && ts.isNotNull
+
+  /** `rows` with `ts` cast to TIMESTAMP_NTZ and `value` to double, and
+    * only the [[kept]] points; other columns ride along. Lazy: an empty
+    * result (the reference's `_normalize_serie → None` skip) is left to
+    * each writer's own probe or write job.
+    */
+  def points(rows: DataFrame): DataFrame =
+    rows.withColumn("ts", col("ts").cast(TimestampNTZType))
+      .withColumn("value", col("value").cast(DoubleType))
+      .filter(kept(col("ts"), col("value")))
+
+  /** A one-series write names every business key, nothing else, and no
+    * null value (a NULL key matches no stored row, so a rewrite keyed on
+    * it would keep none). Checked before any job.
+    */
+  def requireFullKey(attrs: Map[String, Any], keys: Seq[String]): Unit = {
+    require(attrs != null, "ts_attributes is null")
+    val missing = keys.filterNot(attrs.contains)
+    require(missing.isEmpty, s"all business keys must be specified; missing: ${missing.mkString(",")}")
+    val unknown = attrs.keys.filterNot(keys.contains)
+    require(unknown.isEmpty, s"unknown attrs: ${unknown.mkString(",")}")
+    require(attrs.values.forall(_ != null), NullKey)
+  }
+
+  /** `rows` with each business key column set to its `attrs` value, cast
+    * to the key's type.
+    */
+  def withKey(rows: DataFrame, attrs: Map[String, Any], keySchema: StructType): DataFrame =
+    keySchema.fields.foldLeft(rows)((d, f) => d.withColumn(f.name, lit(attrs(f.name)).cast(f.dataType)))
+
+  /** The rows whose columns equal `attrs` (true when empty). */
+  def keyFilter(attrs: Map[String, Any]): Column =
+    attrs.map { case (k, v) => col(k) === lit(v) }.reduceOption(_ && _).getOrElse(lit(true))
+
+  /** `set_many_ts` insert-only contract (chunk_timeserie_store.py:418-455):
+    * refuse the whole batch when any of its `keys` tuples is already among
+    * `stored`'s (IntegrityError parity).
+    */
+  def refuseExisting(batch: DataFrame, stored: DataFrame, keys: Seq[String]): Unit = {
+    val dup = batch.select(keys.map(col): _*).distinct()
+      .join(stored.select(keys.map(col): _*).distinct(), keys, "left_semi")
+    if (!dup.isEmpty)
+      throw new IllegalStateException("set_many_ts: some series already exist (IntegrityError parity)")
+  }
+}

@@ -15,10 +15,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object StreamIngest {
 
   /** Normalize an incoming stream like the batch write path does
-    * (chunk_timeserie_store.py:699-724 semantics): drop null/NaN points.
+    * (chunk_timeserie_store.py:699-724 semantics): drop null/NaN points,
+    * by the stores' own rule ([[graft.store.WriteRules.kept]]).
     */
   def normalize(stream: DataFrame, tsCol: String = "ts", valueCol: String = "value"): DataFrame =
-    stream.filter(col(valueCol).isNotNull && !isnan(col(valueCol)) && col(tsCol).isNotNull)
+    stream.filter(graft.store.WriteRules.kept(col(tsCol), col(valueCol)))
 
   /** Watermarked tumbling-window stats per key — the streaming analogue of
     * the per-chunk aggregates. Late data beyond `watermarkDelay` is

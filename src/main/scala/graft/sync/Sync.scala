@@ -1,6 +1,6 @@
 package graft.sync
 
-import graft.store.{ChunkStore, PartitionCommit}
+import graft.store.{ChunkStore, PartitionCommit, WriteRules, WriterLock}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, TimestampNTZType}
@@ -72,7 +72,7 @@ object Sync {
       store: ChunkStore,
       since: java.time.LocalDateTime,
       filters: Map[String, Any]): DataFrame =
-    filters.foldLeft(store.load()) { case (d, (k, v)) => d.filter(col(k) === lit(v)) }
+    store.load().filter(WriteRules.keyFilter(filters))
       .groupBy((store.keys.map(col) :+ col("chunk_index")): _*)
       .agg(
         max(col("updated_at")).as("updated_at"),
@@ -267,10 +267,8 @@ object Sync {
     * spec-driven import below commits.
     */
   def importChunks(store: ChunkStore, batch: DataFrame): Unit =
-    store.locked {
-      importChunks(store, batch,
-        batch.select((store.keys :+ "chunk_index").map(col): _*).distinct().collect().toSeq)
-    }
+    importChunks(store, batch,
+      batch.select((store.keys :+ "chunk_index").map(col): _*).distinct().collect().toSeq)
 
   /** [[importChunks]] for a batch whose (businessKeys..., chunk_index)
     * specs the caller already holds on the driver (a sync page, the
@@ -286,7 +284,7 @@ object Sync {
     // atomic-batch guarantee (reference transaction.atomic,
     // chunk_timeserie_store.py:633-695) must hold against concurrent
     // local writers too.
-    store.locked {
+    WriterLock.withLock(store.path) {
       val ci = store.keys.length
       if (specs.exists(_.isNullAt(ci)))
         throw new IllegalArgumentException("import_chunks: chunk_index missing — whole batch rejected")

@@ -346,6 +346,20 @@ class ChunkStoreSpec extends SparkSpec {
     assertThrows[IllegalArgumentException](st.setTs(attrs, s, update = true, replace = true))
   }
 
+  test("a null key value is refused before any job in update and replace mode; stored rows untouched") {
+    val st = newStore(tz = "UTC")
+    st.setTs(attrs, hourly("2024-01-01T00:00", 24, _ => Some(1.0)), now = now0)
+    st.setTs(attrs + ("kind" -> "k2"), hourly("2024-01-01T00:00", 24, _ => Some(2.0)), now = now0)
+    val before = st.load().collect().toSet
+    val nullKey = Map[String, Any]("version" -> 0, "kind" -> null)
+    for ((update, replace) <- Seq((true, false), (false, true))) {
+      val jobs = jobsDuring(assertThrows[IllegalArgumentException](st.setTs(nullKey,
+        hourly("2024-01-01T00:00", 3, _ => Some(9.0)), update, replace, now0.plusHours(1))))
+      assert(jobs === 0, s"update=$update replace=$replace")
+      assert(st.load().collect().toSet === before, s"update=$update replace=$replace")
+    }
+  }
+
   test("plain insert over existing raises (IntegrityError parity)") {
     val st = newStore()
     val s = hourly("2024-01-01T00:00", 3, i => Some(i.toDouble))
@@ -860,6 +874,29 @@ class VersionedStoreSpec extends SparkSpec {
     assertThrows[IllegalArgumentException](
       st.setLc("p", 1, series("2024-01-01T00:00", 1, 1.0), versioning = true,
         versioningBy = Seq("kind")))
+  }
+
+  // update_or_create(kind=None) matches IS NULL (hostore.py:354): a null
+  // attribute upserts its own entry and is a distinct sibling of kind="x".
+  test("setLc with a null attribute upserts one entry") {
+    val st = new VersionedStore(spark, tmpDir("vstore"),
+      extraSchema = StructType(Seq(StructField("kind", StringType))))
+    val nullKind = Map[String, Any]("kind" -> null)
+    st.setLc("p", 1, series("2024-01-01T00:00", 4, 1.0), attributesToSet = nullKind)
+    st.setLc("p", 1, series("2024-01-01T00:00", 4, 2.0), attributesToSet = nullKind)
+    assert(st.load().count() === 4)
+    assert(st.getLc("p", 1).collect().map(_.getAs[Double]("value")).toSeq === Seq.fill(4)(2.0))
+  }
+
+  test("setLc upsert of one attribute value keeps the null-attribute sibling") {
+    val st = new VersionedStore(spark, tmpDir("vstore"),
+      extraSchema = StructType(Seq(StructField("kind", StringType))))
+    st.setLc("p", 1, series("2024-01-01T00:00", 4, 1.0), attributesToSet = Map("kind" -> null))
+    st.setLc("p", 1, series("2024-01-01T00:00", 4, 5.0), attributesToSet = Map("kind" -> "x"))
+    st.setLc("p", 1, series("2024-01-01T00:00", 4, 6.0), attributesToSet = Map("kind" -> "x"))
+    val byKind = st.load().groupBy("kind").agg(sum("value")).collect()
+      .map(r => Option(r.getString(0)) -> r.getDouble(1)).toMap
+    assert(byKind === Map(None -> 4.0, Some("x") -> 24.0))
   }
 
   // Reference find_groups (hostore.py:45-160): groups by merged missing

@@ -180,6 +180,34 @@ class TimeseriesStoreSpec extends SparkSpec {
     assert(st.getTs().count() === 0)
   }
 
+  test("write job counts: fresh and existing setManyTs, setTs update and replace, clear") {
+    val st = newStore()
+    // parquet-backed batches, as a pipeline's are: a local Seq would let
+    // the optimizer fold the normalization filter away before any job
+    def batch(kind: String, v: Option[Double]) = {
+      val dir = tmpDir("tstore-batch")
+      Seq((2020, kind, ldt("2021-01-01T00:00"), v), (2020, kind, ldt("2021-01-01T01:00"), v))
+        .toDF("year", "kind", "ts", "value").write.parquet(dir)
+      spark.read.parquet(dir)
+    }
+    val (a, b, c) = (batch("a", Some(1.0)), batch("b", Some(2.0)), batch("c", None))
+    val jobs = Seq(
+      "setManyTs fresh" -> jobsDuring(st.setManyTs(a)),
+      "setManyTs existing" -> jobsDuring(st.setManyTs(b)),
+      "setManyTs existing, all null" -> jobsDuring(st.setManyTs(c)),
+      "setTs update" -> jobsDuring(st.setTs(a2020, hourly("2021-01-01T01:00", 2, _ => Some(3.0)),
+        update = true)),
+      "setTs replace" -> jobsDuring(st.setTs(b2020, hourly("2021-01-01T00:00", 2, _ => Some(4.0)),
+        replace = true)),
+      "clear" -> jobsDuring(st.clear(Map("kind" -> "a")))).toMap
+    assert(jobs === Map("setManyTs fresh" -> 2, "setManyTs existing" -> 6,
+      "setManyTs existing, all null" -> 5, "setTs update" -> 4, "setTs replace" -> 2,
+      "clear" -> 2))
+    assert(!st.exists(Map("kind" -> "c")))
+    assert(st.getTs().collect().map(r => (r.getString(1), r.getDouble(3))).toSeq ===
+      Seq(("b", 4.0), ("b", 4.0)))
+  }
+
   test("clear removes matching series only; partial + lookup filters work") {
     val st = newStore()
     st.setTs(a2020, hourly("2020-01-01T00:00", 3, i => Some(1.0)))

@@ -128,11 +128,11 @@ class WriterLockSpec extends SparkSpec {
     assert(!Files.exists(lf))
   }
 
-  test("concurrent ChunkStore writers serialize and lose no data (lockWrites on)") {
+  test("concurrent ChunkStore writers serialize and lose no data") {
     val path = freshPath("wl-store")
     val st = new ChunkStore(spark, path,
       StructType(Seq(StructField("kind", StringType))),
-      StoreConfig(freq = "1h", tz = "UTC")) // lockWrites = true default
+      StoreConfig(freq = "1h", tz = "UTC"))
     val t0 = ldt("2024-01-01T00:00")
     import spark.implicits._
     def series(off: Int) = (0 until 24).map(h => (t0.plusHours(h), (off * 100 + h).toDouble))
@@ -154,24 +154,5 @@ class WriterLockSpec extends SparkSpec {
     val back = st.load().filter(!org.apache.spark.sql.functions.col("is_deleted"))
     assert(back.count() === 4L * 24, "every writer's rows present")
     assert(!Files.exists(WriterLock.lockFile(path)), "lock released after the storm")
-  }
-
-  test("lockWrites=false skips the lock entirely") {
-    val path = freshPath("wl-off")
-    val st = new ChunkStore(spark, path,
-      StructType(Seq(StructField("kind", StringType))),
-      StoreConfig(freq = "1h", tz = "UTC", lockWrites = false))
-    import spark.implicits._
-    val t0 = ldt("2024-01-01T00:00")
-    // hold the path's lock from this thread via a foreign-looking file:
-    // an unlocked store must write straight through it
-    val lf = WriterLock.lockFile(path)
-    Files.createDirectories(lf.getParent)
-    Files.write(lf, """{"owner":"someone-else"}""".getBytes("UTF-8"))
-    try {
-      st.setTs(Map("kind" -> "a"),
-        Seq((t0, 1.0)).toDF("ts", "value"), now = t0)
-      assert(st.load().count() > 0)
-    } finally Files.deleteIfExists(lf)
   }
 }
