@@ -1831,7 +1831,7 @@ object SparkEntry {
       // (normalize/duplicate-probe/stage) re-read the materialized
       // shared-stage aggregate, not the events table. LAZY mat (not
       // matHot): the consumers are SEQUENTIAL actions (setManyTs's
-      // checkpoint job builds the stage inline, setTs and the read-back
+      // commit job builds the stage inline, setTs and the read-back
       // then reuse it), and each plan references the stage once — no
       // concurrent-rebuild race, so the eager count would be a pure
       // extra scheduler round-trip per run.

@@ -1,7 +1,7 @@
 package graft.store
 
 import graft.ts.{Combine, Grid, Resample}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -35,21 +35,20 @@ import WriteRules.{keyFilter, requireFullKey}
   * (reference ChunkQuerySet.delete :30-52, EMPTY_DATA :27) so incremental
   * sync can propagate deletions.
   *
-  * Writes: every rewrite of existing chunks (update, replace, delete,
-  * compaction, sync import) commits through [[PartitionCommit]] —
-  * checkpoint the new content of the affected chunk partitions, dynamic
-  * overwrite them, drop the ones left empty. Plain inserts append.
+  * Writes: every write (insert, update, replace, delete, compaction,
+  * sync import) is one [[PartitionCommit]]: the new content of the
+  * affected chunk partitions is written as fresh files, then one atomic
+  * manifest swap makes them live and retires the partitions' old files
+  * (none for an insert).
   *
   * Concurrency: one writer at a time per store, enforced by an advisory
   * [[WriterLock]] around every mutator (the reference's row-lock upsert,
   * `select_for_update` at chunk_timeserie_store.py:789, re-expressed at
   * store granularity over the partition commit; reentrant, so composed
-  * mutators lock once). Readers take no lock and never block, but a
-  * commit is atomic per partition directory only: it deletes and renames
-  * the affected chunk directories one after another. A read that overlaps a commit can fail
-  * (`FILE_NOT_EXIST` for a file its scan listed before the swap) or miss
-  * a chunk listed between its delete and rename; retry such a read once
-  * the commit is done.
+  * mutators lock once). Readers take no lock and never block. A read sees
+  * one commit, and a frame stays valid through one later commit: each
+  * read resolves the manifest once and scans that generation's files,
+  * which stay on disk until the commit after the next one.
   */
 class ChunkStore(
     val spark: SparkSession,
@@ -64,7 +63,7 @@ class ChunkStore(
   /** Chunk partitions, rows sorted by (keys..., ts) within each — key
     * lookups skip row groups on the min/max statistics.
     */
-  private[graft] val layout = PartitionCommit.Layout(path, Seq("chunk_index"), keys :+ "ts")
+  private[graft] val layout = PartitionCommit.Layout(path, schema, Seq("chunk_index"), keys :+ "ts")
 
   private def chunkIndexCol(ts: Column): Column = config.chunkAxis match {
     case YearAxis      => Grid.chunkIndexYearly(ts, config.tz)
@@ -91,6 +90,9 @@ class ChunkStore(
     * filtered), long-form schema — after this, `spark.sql("SELECT ... FROM
     * <name>")` works against the store with partition pruning intact,
     * which is the migration path for SQL-first users of the reference.
+    * The view is a frame like any read: it sees the commit current at
+    * registration and stays valid through one later commit, so register
+    * it again after writing.
     */
   def createOrReplaceView(name: String): Unit =
     load().filter(!col("is_deleted") && col("ts").isNotNull)
@@ -100,7 +102,7 @@ class ChunkStore(
   /** Current store content; empty frame with the right schema when the
     * store has never been written.
     */
-  def load(): DataFrame = PartitionCommit.load(spark, path, schema)
+  def load(): DataFrame = PartitionCommit.load(spark, path, schema, PartitionCommit.liveFiles(path))
 
   /** Partition pruning: literal chunk_index bound for an instant, like the
     * reference's `_filter_interval` (chunk_timeserie_store.py:855-861).
@@ -171,24 +173,27 @@ class ChunkStore(
         mergeChunks(newRows, newChunks, dtypeOf(series), now)(cur =>
           (cur.filter(keyFilter(attrs)), cur.filter(!keyFilter(attrs))))
       else if (replace) replaceChunks(attrs, newRows, newChunks, mineChunks, now)
-      else appendRows(newRows)
+      else PartitionCommit.commit(layout, Some(newRows), Nil)
       true
     }
   }
 
   /** Bulk insert of many series (reference `set_many_ts`,
     * chunk_timeserie_store.py:418-455): insert-only, forbidden when sync
-    * is enabled, duplicates refused. `many` carries the full long form
-    * (businessKeys..., ts, value) already unioned — one write job.
+    * is enabled, duplicates and null key values refused. `many` carries
+    * the full long form (businessKeys..., ts, value) already unioned —
+    * one write job; the null-key refusal rides the duplicate probe.
     */
   def setManyTs(
       many: DataFrame,
       now: java.time.LocalDateTime = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)): Unit = WriterLock.withLock(path) {
     if (config.syncEnabled)
       throw new IllegalStateException("set_many_ts is forbidden on a sync-enabled store")
-    val s = normalized(many)
-    WriteRules.refuseExisting(s, load().filter(!col("is_deleted")), keys)
-    appendRows(finishRows(s, now))
+    val s = normalized(WriteRules.guardKeys(many, keys))
+    WriteRules.rethrowNullKey {
+      WriteRules.refuseExisting(s, load().filter(!col("is_deleted")), keys)
+      PartitionCommit.commit(layout, Some(finishRows(s, now)), Nil)
+    }
   }
 
   /** Bulk upsert of MANY series in one job — the multi-series form of
@@ -199,14 +204,14 @@ class ChunkStore(
     * `rows` are rewritten verbatim, and only the affected chunk
     * partitions are touched. The affected-chunk collect is the only
     * pre-write job: an empty (or all-null) batch yields no chunk and
-    * writes nothing.
+    * writes nothing, and a null key value fails it (IllegalArgumentException).
     */
   def upsertManyTs(
       rows: DataFrame,
       now: java.time.LocalDateTime = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)): Unit = WriterLock.withLock(path) {
-    val s = normalized(rows)
+    val s = normalized(WriteRules.guardKeys(rows, keys))
     val newRows  = finishRows(s, now)
-    val affected = newRows.select("chunk_index").distinct().collect().map(_.getInt(0)).toSeq
+    val affected = WriteRules.rethrowNullKey(newRows.select("chunk_index").distinct().collect().map(_.getInt(0)).toSeq)
     if (affected.nonEmpty) {
       val newKeys = s.select(keys.map(col): _*).distinct()
       mergeChunks(newRows, affected, dtypeOf(rows), now)(cur =>
@@ -232,7 +237,8 @@ class ChunkStore(
     * value type), and a pre-dtype chunk (null dtype — historically double
     * data) counts AS double, so a series mixing legacy and typed chunks
     * can never be silently truncated by a non-double cast. The dtype comes
-    * from the Parquet footers of the pruned chunk partitions when they
+    * from the Parquet footers of the pruned chunk partitions, of the same
+    * generation the scan reads (one manifest read serves both), when they
     * prove every stored row there double (or there are none): no job, no
     * cast. Otherwise one probe job runs at call time: a per-partition set
     * fold over only the `dtype` column of the filtered rows (capped at two
@@ -267,13 +273,14 @@ class ChunkStore(
       end: Option[java.time.ZonedDateTime] = None,
       dropBoundsNa: Boolean = true): DataFrame = {
     requireFullKey(attrs, keys)
-    val df = live(keyFilter(attrs), start, end)
+    val files = PartitionCommit.liveFiles(path)
+    val df = live(PartitionCommit.load(spark, path, schema, files), keyFilter(attrs), start, end)
     val (lo, hi) = (start.map(chunkOf), end.map(chunkOf))
     // the probe is ONE metadata-sized job (per-partition fold, no shuffle —
     // a distinct+limit plan costs extra AQE jobs), run only when the
     // footers leave the dtype open
     val dts =
-      if (footersProveDouble(c => lo.forall(c >= _) && hi.forall(c <= _))) Set.empty[String]
+      if (footersProveDouble(files, c => lo.forall(c >= _) && hi.forall(c <= _))) Set.empty[String]
       else df.select(coalesce(col("dtype"), lit("double"))).rdd.aggregate(Set.empty[String])(
         (s, r) => if (s.size >= 2) s else s + r.getString(0), _ ++ _)
     // one series slice: `ts` is unique, so a one-partition sort gives the
@@ -285,20 +292,21 @@ class ChunkStore(
     else ordered
   }
 
-  /** Whether the Parquet footers prove every stored row of the chunk
-    * partitions `inRange` selects double-valued: in each row group of each
-    * data file there, the `dtype` column statistics hold only "double"
-    * (min = max) or nulls (tombstones and pre-dtype rows, which read as
-    * double). True when there is no file. The footers cover every row the
-    * read's filters can keep, so the read needs no probe and no cast. A
-    * file without a `dtype` column or its statistics, or one gone since
-    * the listing, proves nothing.
+  /** Whether the Parquet footers prove every stored row of the live
+    * `files` (store-relative) of the chunk partitions `inRange` selects
+    * double-valued: in each row group of each file there, the `dtype`
+    * column statistics hold only "double" (min = max) or nulls
+    * (tombstones and pre-dtype rows, which read as double). True when
+    * there is no file. The footers cover every row the read's filters can
+    * keep, so the read needs no probe and no cast. A file without a
+    * `dtype` column or its statistics, or one that cannot be read, proves
+    * nothing.
     */
-  private def footersProveDouble(inRange: Int => Boolean): Boolean = {
+  private def footersProveDouble(files: Seq[String], inRange: Int => Boolean): Boolean = {
     val double = org.apache.parquet.io.api.Binary.fromString("double")
-    try PartitionCommit.dataFiles(path, "chunk_index", inRange).forall { f =>
+    try files.filter(f => inRange(PartitionCommit.partitionValue(f, "chunk_index"))).forall { f =>
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        new org.apache.parquet.io.LocalInputFile(f.toPath))
+        new org.apache.parquet.io.LocalInputFile(new java.io.File(path, f).toPath))
       try reader.getFooter.getBlocks.asScala.forall(_.getColumns.asScala
         .find(_.getPath.toDotString == "dtype").map(_.getStatistics)
         .exists(st => st != null && st.isNumNullsSet &&
@@ -340,7 +348,7 @@ class ChunkStore(
       start: Option[java.time.ZonedDateTime] = None,
       end: Option[java.time.ZonedDateTime] = None,
       dropBoundsNa: Boolean = true): DataFrame =
-    series(live(Lookups.validated(filters, keys), start, end), start, end, dropBoundsNa)
+    series(live(load(), Lookups.validated(filters, keys), start, end), start, end, dropBoundsNa)
       .orderBy((keys.map(col) :+ col("ts")): _*)
 
   /** Keyed multi-series read in ONE scan: the sparse [[getTs]] read for a
@@ -358,18 +366,18 @@ class ChunkStore(
       end: Option[java.time.ZonedDateTime] = None): DataFrame = {
     attrsList.foreach(requireFullKey(_, keys))
     val specs = tupleIn(keySchema.fields.toSeq, attrsList.map(a => keys.map(a)))
-    series(live(specs, start, end), start, end, dropBoundsNa = true)
+    series(live(load(), specs, start, end), start, end, dropBoundsNa = true)
       .orderBy((keys.map(col) :+ col("ts")): _*)
   }
 
-  /** The live rows `pred` selects inside `[start, end]` — the one interval
-    * filter of every read (reference `_filter_interval`,
+  /** The live rows of `stored` that `pred` selects inside `[start, end]` —
+    * the one interval filter of every read (reference `_filter_interval`,
     * chunk_timeserie_store.py:855-861): tombstones and null points out,
     * literal chunk_index bounds prune partitions.
     */
-  private def live(pred: Column, start: Option[java.time.ZonedDateTime],
+  private def live(stored: DataFrame, pred: Column, start: Option[java.time.ZonedDateTime],
       end: Option[java.time.ZonedDateTime]): DataFrame =
-    slice(load().filter(pred && !col("is_deleted") && col("ts").isNotNull), start, end, pruned = true)
+    slice(stored.filter(pred && !col("is_deleted") && col("ts").isNotNull), start, end, pruned = true)
 
   /** `df` cut to the inclusive `[start, end]` on `ts`. With `pruned`, each
     * bound also carries its instant's literal chunk_index bound, a
@@ -405,10 +413,10 @@ class ChunkStore(
     }
   }
 
-  /** Small-file compaction: rewrite the given (default: all, from the
-    * directory listing) chunk partitions through the partition commit —
+  /** Small-file compaction: rewrite the given (default: all live) chunk
+    * partitions through the partition commit —
     * each partition comes out as a single sorted file instead of one file
-    * per historical append/update. Returns the number of partitions
+    * per historical insert/update. Returns the number of partitions
     * compacted. Run it as maintenance after many incremental writes;
     * readers see the same rows.
     */
@@ -416,10 +424,10 @@ class ChunkStore(
     PartitionCommit.compact(layout, load(), partitions).length
 
   /** Policy form of [[compact]]: rewrite only the chunk partitions whose
-    * parquet-file count exceeds `maxFilesPerPartition` (append-mode
-    * writes add a file per touched partition; streaming ingest compounds
-    * it batch after batch). File counts come from a cheap directory
-    * listing — no data scan for partitions already compact. Explicit
+    * live-file count exceeds `maxFilesPerPartition` (inserts add a file
+    * per touched partition; streaming ingest compounds it batch after
+    * batch). File counts come from the manifest — no data scan for
+    * partitions already compact. Explicit
     * call, not a write hook: schedule it after bulk loads / on a timer
     * next to a streaming ingest. Returns the partitions compacted.
     */
@@ -428,9 +436,9 @@ class ChunkStore(
 
   /** Latest non-null timestamp across matching series, None when empty
     * (reference `get_max_horodate`, chunk_timeserie_store.py:519-539).
-    * The max-chunk candidate comes from the partition DIRECTORY LISTING
-    * (the reference's max-chunk index shortcut, :531 — and the same
-    * listing `compactIfNeeded` uses), so the common case scans exactly ONE
+    * The max-chunk candidate comes from the manifest's live partitions
+    * (the reference's max-chunk index shortcut, :531 — the same list
+    * `compactIfNeeded` uses), so the common case scans exactly ONE
     * pruned partition instead of aggregating max(chunk_index) over every
     * partition first. A partition can be empty FOR THE FILTERS (other
     * series' chunks, tombstones), so walk downward; after `probeLimit`
@@ -494,7 +502,7 @@ class ChunkStore(
     if (affected.nonEmpty) {
       val kept = cur.filter(col("chunk_index").isin(affected.toSeq: _*)).filter(!hit)
       val content = if (keepTracking) kept.unionByName(tombstones(cur.filter(hit), now)) else kept
-      PartitionCommit.commit(layout, content, affected.toSeq)
+      PartitionCommit.commit(layout, Some(content), affected.toSeq.map(Seq(_)))
     }
   }
 
@@ -511,10 +519,6 @@ class ChunkStore(
       .withColumn("updated_at", lit(now))
       .select(schema.fieldNames.map(col): _*)
   }
-
-  private def appendRows(rows: DataFrame): Unit =
-    PartitionCommit.prepare(layout, rows)
-      .write.mode(SaveMode.Append).partitionBy("chunk_index").parquet(path)
 
   /** One tombstone row per (series, chunk) of `rows`: null payload,
     * `is_deleted`, fresh `updated_at` (reference EMPTY_DATA,
@@ -547,7 +551,7 @@ class ChunkStore(
     // the new write's dtype wins for the merged chunks (reference updates
     // the chunk row's dtype on upsert)
     val mergedRows = finishRows(merged.withColumn("dtype", lit(dtype)), now)
-    PartitionCommit.commit(layout, others.unionByName(mergedRows), affected)
+    PartitionCommit.commit(layout, Some(others.unionByName(mergedRows)), affected.map(Seq(_)))
   }
 
   /** `replace`: overlapped chunks get exactly the new data; the series'
@@ -562,7 +566,7 @@ class ChunkStore(
     val scope      = cur.filter(col("chunk_index").isin(affected: _*))
     val others     = scope.filter(!keyFilter(attrs))
     val tombs = tombstones(scope.filter(keyFilter(attrs) && col("chunk_index").isin(myOther: _*)), now)
-    PartitionCommit.commit(layout, others.unionByName(newRows).unionByName(tombs), affected)
+    PartitionCommit.commit(layout, Some(others.unionByName(newRows).unionByName(tombs)), affected.map(Seq(_)))
   }
 }
 

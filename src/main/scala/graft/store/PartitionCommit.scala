@@ -1,147 +1,202 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import java.io.File
+import java.nio.file.{Files, StandardCopyOption}
 
-/** The one place that knows how a store reads, lists and rewrites its
-  * partition directories — the Parquet stand-in for the reference's DB
-  * transaction (SURVEY.md §7.4(4)). ChunkStore, VersionedStore,
-  * TimeseriesStore and `Sync.importChunks` all commit through it.
+import org.apache.commons.io.FileUtils.deleteQuietly
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{StringType, StructType}
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+/** The one place that knows how a store's files become its content — the
+  * Parquet stand-in for the reference's DB transaction (SURVEY.md
+  * §7.4(4): staged write + atomic rename per store commit). ChunkStore,
+  * VersionedStore, TimeseriesStore and `Sync.importChunks` all write
+  * through [[commit]] and read through [[load]].
   *
-  * A commit is `localCheckpoint` → dynamic partition overwrite →
-  * release of the checkpoint blocks. The checkpoint cuts the content's
-  * lineage from the store files it was computed from (Spark refuses to
-  * overwrite a path the write plan reads) with one in-memory
-  * materialization and no on-disk copy, so each affected partition is
-  * written once. Crash safety: the
-  * dynamic overwrite swaps partition contents only at JOB COMMIT (tasks
-  * write under a hidden `.spark-staging` dir), so a failure anywhere
-  * before it — bad input, lost checkpoint blocks — leaves the store as it
-  * was, for a retry from source data. The swap is per partition
-  * directory, not atomic across partitions; the [[WriterLock]] keeps
-  * writers apart.
+  * Snapshot rule: a read sees one commit, and a frame stays valid through
+  * one later commit. A store's content is the set of data files its
+  * `_manifest` lists as live; the manifest is replaced whole by an atomic
+  * rename, so a reader resolves it once and scans exactly one
+  * generation's files. A commit writes its content into a fresh hidden
+  * `_txn-<id>` directory, moves the new files into their partition
+  * directories (Spark's file names are unique per job), then publishes
+  * the new manifest: the old live files outside the replaced partitions,
+  * plus the new files. A file a commit retires stays on disk until the
+  * next commit has published its own manifest, so a read planned against
+  * generation g finds its files while generation g+1 is written and
+  * published; retention is counted in commits, never in wall time. A write
+  * never overwrites a path its own plan reads, so the content needs no
+  * materialization first, and a commit that fails before its manifest is
+  * in place leaves the store as it was. The log-based snapshot commit of
+  * Delta Lake (Armbrust et al., VLDB 2020) is the precedent. The
+  * [[WriterLock]] keeps writers apart.
+  *
+  * A store without a manifest (written before manifests, or never) is
+  * read from a listing of its partition directories; its first commit
+  * adopts that listing as the old live set.
   */
 private[graft] object PartitionCommit {
 
-  /** Where a store lives and how its rows are laid out on disk. */
-  final case class Layout(path: String, partitionBy: Seq[String], sortBy: Seq[String])
-
-  /** Current store content; an empty frame with `schema` when the store
-    * has never been written.
+  /** Where a store lives and how its rows, of `schema`, are laid out on
+    * disk.
     */
-  def load(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    if (new java.io.File(path).exists()) spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  final case class Layout(path: String, schema: StructType, partitionBy: Seq[String], sortBy: Seq[String])
 
-  /** Partition directories under the store root; `_`/`.` entries are
-    * Spark metadata and in-flight commits, not data.
+  /** One generation: the data files a read scans, and the files the commit
+    * that published it took out of the live set — both relative to the
+    * store root.
     */
-  private def partitionDirs(path: String): Seq[java.io.File] =
-    Option(new java.io.File(path).listFiles()).toSeq.flatten
-      .filter(d => d.isDirectory && !d.getName.startsWith("_") && !d.getName.startsWith("."))
+  private final case class Manifest(live: Seq[String], retired: Seq[String])
 
-  /** Whether the store holds any partition at all — one directory
-    * listing, so a fresh store can skip its existence probe jobs.
+  private val ManifestName = "_manifest"
+
+  /** The store's current generation, from one read of its manifest, or
+    * from a listing when it has none.
     */
-  def hasPartitions(path: String): Boolean = partitionDirs(path).nonEmpty
-
-  /** Values of the integer partition column `column` present on disk,
-    * from a directory listing — free relative to any scan (the same
-    * listing the parquet reader does for partition discovery; on a real
-    * lakehouse it is one namenode/object-store LIST).
-    */
-  def partitions(path: String, column: String): Seq[Int] =
-    partitionDirs(path).collect {
-      case d if d.getName.startsWith(s"$column=") => d.getName.stripPrefix(s"$column=").toInt
-    }
-
-  private def filesOf(path: String, column: String, p: Int): Seq[java.io.File] =
-    Option(new java.io.File(path, s"$column=$p").listFiles()).toSeq.flatten
-
-  /** The partitions holding more than `maxFiles` parquet files — the
-    * compaction policy's input, from the same listing (no data scan).
-    */
-  def crowdedPartitions(path: String, column: String, maxFiles: Int): Seq[Int] =
-    partitions(path, column).filter(p =>
-      filesOf(path, column, p).count(_.getName.endsWith(".parquet")) > maxFiles)
-
-  /** The files a scan of the partitions `keep` selects reads, from the
-    * same listing: every entry but Spark's hidden `_`/`.` names (metadata,
-    * checksums, in-flight writes).
-    */
-  def dataFiles(path: String, column: String, keep: Int => Boolean): Seq[java.io.File] =
-    partitions(path, column).filter(keep).flatMap(filesOf(path, column, _))
-      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
-
-  def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
-  }
-
-  /** Partition-shaped and row-ordered for the store layout: hash on the
-    * partition columns, sorted within partitions by the partition columns
-    * then the store's sort columns — the ordering the V1 writer requires,
-    * so it adds no sort of its own. Applied BEFORE any checkpoint so the
-    * shuffle rides the materialization job.
-    */
-  def prepare(layout: Layout, content: DataFrame): DataFrame =
-    content
-      .repartition(layout.partitionBy.map(col): _*)
-      .sortWithinPartitions((layout.partitionBy ++ layout.sortBy).map(col): _*)
-
-  /** Dynamic partition overwrite of a prepared frame: only the partitions
-    * present in it are replaced. The _SUCCESS marker is suppressed — one
-    * fewer file create per commit, and nothing reads it (the stores' own
-    * reads are schema'd parquet scans). Append mode was measured slower
-    * (it re-resolves the existing path as a datasource: listing + footer
-    * reads).
-    */
-  def overwrite(layout: Layout, prepared: DataFrame): Unit =
-    prepared.write.mode(SaveMode.Overwrite)
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(layout.partitionBy: _*)
-      .parquet(layout.path)
-
-  /** Materialize `prepared` once (observations on it ride this job), run
-    * `use` against the checkpoint, then release its blocks — whether
-    * `use` wrote, skipped or threw.
-    */
-  def checkpointed[T](prepared: DataFrame)(use: DataFrame => T): T = {
-    val staged = prepared.localCheckpoint()
-    try use(staged)
-    finally staged.queryExecution.logical.foreach {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ =>
+  private def current(path: String): Manifest = {
+    val m = new File(path, ManifestName).toPath
+    if (!Files.isRegularFile(m)) Manifest(listed(new File(path), ""), Nil)
+    else Files.readAllLines(m).asScala.toSeq.partition(_.startsWith("+ ")) match {
+      case (live, retired) => Manifest(live.map(_.drop(2)), retired.map(_.drop(2)))
     }
   }
 
-  /** Rewrite the named partitions of a single-partition-column store with
-    * `content`. A named partition the content no longer holds (hard
-    * delete, clear) has its directory dropped — dynamic overwrite never
-    * touches a partition with zero rows. Which partitions the content
-    * holds comes from an observation on the checkpoint job, and the drain
-    * runs only after the overwrite committed, so a failed write changes
-    * nothing.
+  /** Every file under `dir` but Spark's hidden `_`/`.` names (metadata,
+    * checksums, in-flight commits), relative to `dir`, prefixed.
     */
-  def commit(layout: Layout, content: DataFrame, partitions: Seq[Int]): Unit = {
-    val Seq(column) = layout.partitionBy
-    if (partitions.nonEmpty) {
-      val held = Observation()
-      checkpointed(prepare(layout, content).observe(held, collect_set(col(column)).as("p"))) { staged =>
-        val present = Option(held.get("p"))
-          .fold(Set.empty[Int])(_.asInstanceOf[scala.collection.Seq[Int]].toSet)
-        if (present.nonEmpty) overwrite(layout, staged)
-        partitions.filterNot(present).foreach(p =>
-          deleteRecursively(new java.io.File(layout.path, s"$column=$p")))
+  private def listed(dir: File, prefix: String): Seq[String] =
+    Option(dir.listFiles()).toSeq.flatten.filterNot(f => "_.".contains(f.getName.head)).sortBy(_.getName).flatMap { f =>
+      if (f.isDirectory) listed(f, s"$prefix${f.getName}/") else Seq(prefix + f.getName)
+    }
+
+  /** The partition directory of a store-relative file path. */
+  private def partitionOf(file: String): String = file.substring(0, math.max(file.lastIndexOf('/'), 0))
+
+  /** The partition directory of a tuple of partition values: each cast to
+    * its column's type, then named and escaped as Spark's writer names it,
+    * so a value of any type finds the directory its rows were written to.
+    */
+  private def partitionDir(layout: Layout, values: Seq[Any]): String = {
+    val tz = Some(SQLConf.get.sessionLocalTimeZone)
+    layout.partitionBy.zip(values).map { case (c, v) =>
+      val text = Cast(Cast(Literal(v), layout.schema(c).dataType, tz), StringType, tz).eval()
+      getPartitionPathString(c, Option(text).map(_.toString).orNull)
+    }.mkString("/")
+  }
+
+  /** The data files of the store's current generation, relative to its
+    * root: what [[load]] scans.
+    */
+  def liveFiles(path: String): Seq[String] = current(path).live
+
+  /** The store content made of `files`, a generation's [[liveFiles]]
+    * (none: an empty frame with `schema`). The scan's file index takes the
+    * list as the listing of the store root — no directory listing, and no
+    * Spark listing job however many files there are — so the partition
+    * columns are inferred, and prune, as in a directory read.
+    */
+  def load(spark: SparkSession, path: String, schema: StructType, files: Seq[String]): DataFrame =
+    if (files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else {
+      val root = new Path("file:" + new File(path).getAbsolutePath)
+      val statuses = files.map { rel =>
+        val f = new File(path, rel)
+        new FileStatus(f.length(), false, 1, 0L, f.lastModified(), new Path(root, rel))
+      }.toArray
+      val index = new InMemoryFileIndex(spark, Seq(root), Map.empty, Some(schema)) {
+        override def listLeafFiles(paths: Seq[Path]): mutable.LinkedHashSet[FileStatus] =
+          mutable.LinkedHashSet(statuses: _*) // the listing of the root is the file list
       }
+      val data = StructType(schema.filterNot(f => index.partitionSchema.fieldNames.contains(f.name))).toNullable
+      spark.baseRelationToDataFrame(
+        HadoopFsRelation(index, index.partitionSchema, data, None, new ParquetFileFormat, Map.empty)(spark))
     }
+
+  /** The partition value of a store-relative file of a store partitioned
+    * by the one integer column `column`.
+    */
+  def partitionValue(file: String, column: String): Int = partitionOf(file).stripPrefix(s"$column=").toInt
+
+  /** The values of the one integer partition column `column` whose live
+    * files number more than `moreFilesThan` (default: every live
+    * partition) — from the manifest, no data scan.
+    */
+  def partitions(path: String, column: String, moreFilesThan: Int = 0): Seq[Int] =
+    liveFiles(path).groupBy(partitionValue(_, column)).filter(_._2.length > moreFilesThan).keys.toSeq
+
+  /** Replace the store's content: the live files of the `replaced`
+    * partitions (tuples of partition values) leave, the rows of `content`
+    * arrive. An append replaces nothing; a drop has no content. `replaced`
+    * is evaluated once the content is written, so it may read an
+    * observation riding the write job. A commit that neither writes nor
+    * replaces a file publishes nothing.
+    *
+    * Steps: write the content into `<store>/_txn-<id>/` (one Spark write
+    * job, no `_SUCCESS`); adopt the listing as a manifest if the store has
+    * none; move the new files into their partition directories; publish
+    * the new `_manifest` (`_manifest.tmp`, then an atomic rename over the
+    * old one). Only then delete the files the previous manifest retired,
+    * partition directories left empty and any `_txn-*` left over. A
+    * failure before the publish deletes only this commit's `_txn`
+    * directory; moved files no manifest lists are never read.
+    */
+  def commit(layout: Layout, content: Option[DataFrame], replaced: => Seq[Seq[Any]]): Unit = {
+    val root = new File(layout.path)
+    val txn = new File(root, s"_txn-${java.util.UUID.randomUUID()}")
+    try {
+      // hash on the partition columns, sorted within partitions by them then
+      // the store's sort columns: the order the V1 writer needs, so it adds
+      // no sort of its own
+      content.foreach(_.repartition(layout.partitionBy.map(col): _*)
+        .sortWithinPartitions((layout.partitionBy ++ layout.sortBy).map(col): _*)
+        .write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .partitionBy(layout.partitionBy: _*)
+        .parquet(txn.getPath))
+      val was = current(layout.path)
+      val fresh = listed(txn, "")
+      val out = replaced.map(partitionDir(layout, _)).toSet
+      val (retired, kept) = was.live.partition(f => out(partitionOf(f)))
+      if (fresh.nonEmpty || retired.nonEmpty) {
+        if (!new File(root, ManifestName).exists()) publish(root, was)
+        for (d <- fresh.map(partitionOf).distinct; f <- new File(txn, d).listFiles()) // with their checksums
+          Files.move(f.toPath, Files.createDirectories(new File(root, d).toPath).resolve(f.getName))
+        publish(root, Manifest(kept ++ fresh, retired))
+        was.retired.foreach { f =>
+          val file = new File(root, f)
+          file.delete(); checksum(file).delete()
+          // a directory delete fails while it holds anything: this drops the
+          // partition directories the retired files leave empty, innermost first
+          Iterator.iterate(file.getParentFile)(_.getParentFile).takeWhile(_ != root).forall(_.delete())
+        }
+        Option(root.listFiles()).toSeq.flatten.filter(_.getName.startsWith("_txn-")).foreach(deleteQuietly)
+      }
+    } finally deleteQuietly(txn)
+  }
+
+  /** The checksum the local filesystem keeps beside a file it wrote. */
+  private def checksum(f: File): File = new File(f.getParentFile, s".${f.getName}.crc")
+
+  /** Replace the manifest in one atomic rename: a reader sees the old
+    * generation or the new one, never a partial list.
+    */
+  private def publish(root: File, m: Manifest): Unit = {
+    val tmp = new File(root, s"$ManifestName.tmp").toPath
+    Files.write(tmp, (m.live.map("+ " + _) ++ m.retired.map("- " + _)).asJava)
+    Files.move(tmp, new File(root, ManifestName).toPath, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Small-file compaction of a single-partition-column store, under its
-    * writer lock: rewrite `parts` (default: every partition on disk) with
+    * writer lock: rewrite `parts` (default: every live partition) with
     * their own rows from `stored`, so each comes out as one sorted file
     * instead of one file per historical write. Readers see the same rows.
     * Returns the partitions rewritten.
@@ -150,17 +205,16 @@ private[graft] object PartitionCommit {
     WriterLock.withLock(layout.path) {
       val Seq(column) = layout.partitionBy
       val ps = parts.getOrElse(partitions(layout.path, column))
-      commit(layout, stored.filter(col(column).isin(ps: _*)), ps)
+      if (ps.nonEmpty) commit(layout, Some(stored.filter(col(column).isin(ps: _*))), ps.map(Seq(_)))
       ps
     }
 
-  /** [[compact]] of only the partitions holding more than `maxFiles`
-    * parquet files, from a directory listing: no data scan for partitions
-    * already compact.
+  /** [[compact]] of only the partitions holding more than `maxFiles` live
+    * files, from the manifest: no data scan for partitions already compact.
     */
   def compactCrowded(layout: Layout, stored: => DataFrame, maxFiles: Int): Seq[Int] =
     WriterLock.withLock(layout.path) {
       require(maxFiles >= 1, "max files per partition must be >= 1")
-      compact(layout, stored, Some(crowdedPartitions(layout.path, layout.partitionBy.head, maxFiles)))
+      compact(layout, stored, Some(partitions(layout.path, layout.partitionBy.head, maxFiles)))
     }
 }

@@ -1,7 +1,7 @@
 package graft.store
 
 import graft.ts.{Combine, Resample}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,10 +15,11 @@ import org.apache.spark.sql.types._
   * Layout: long-form parquet `(prm, client_id, version, ts, value,
   * created_at)` hash-partitioned on `bucket = murmur3(prm) mod numBuckets`.
   * The bucket column is what keeps single-series writes O(bucket), not
-  * O(store): upsert/clear/compact rewrite only the affected bucket
-  * directories through [[PartitionCommit]] (the commit path ChunkStore
-  * uses too), and single-prm reads prune to one bucket at the file
-  * listing. Versioned and first writes append. The
+  * O(store): every write is one [[PartitionCommit]] (the commit of every
+  * store) — upsert/clear/compact replace only the affected buckets' files,
+  * versioned and first writes add files and replace nothing — and
+  * single-prm reads prune to one bucket. A read sees one commit, and a
+  * frame stays valid through one later commit. The
   * bucket is computed driver-side (every write path receives the prm as a
   * Scala value), so no hash-expression parity with Catalyst is needed.
   *
@@ -54,9 +55,9 @@ class VersionedStore(
     Math.floorMod(scala.util.hashing.MurmurHash3.stringHash(prm), numBuckets)
 
   /** Bucket partitions; no row order within a bucket. */
-  private[graft] val layout = PartitionCommit.Layout(path, Seq("bucket"), Nil)
+  private[graft] val layout = PartitionCommit.Layout(path, schema, Seq("bucket"), Nil)
 
-  def load(): DataFrame = PartitionCommit.load(spark, path, schema)
+  def load(): DataFrame = PartitionCommit.load(spark, path, schema, PartitionCommit.liveFiles(path))
 
   /** Single-prm scan pruned to the prm's bucket partition. */
   private def loadPrm(prm: String): DataFrame =
@@ -129,15 +130,13 @@ class VersionedStore(
         .withColumn("created_at", lit(now)) // LocalDateTime → NTZ literal, JVM-tz-proof
         .withColumn("bucket", lit(b))
         .select(schema.fieldNames.map(col): _*)
-      if (!versioning && exists(prm, clientId, attributesToSet)) {
-        // upsert: rewrite ONLY this prm's bucket partition — everything in
-        // the bucket minus the update_or_create match, plus the new rows.
-        val content = load()
-          .filter(col("bucket") === b)
-          .filter(!matching(prm, clientId, attributesToSet))
-          .unionByName(rows)
-        PartitionCommit.commit(layout, content, Seq(b))
-      } else rows.write.mode(SaveMode.Append).partitionBy("bucket").parquet(path)
+      // upsert: rewrite ONLY this prm's bucket partition — everything in
+      // the bucket minus the update_or_create match, plus the new rows;
+      // otherwise the rows are added and nothing is replaced
+      val upsert = !versioning && exists(prm, clientId, attributesToSet)
+      val content = if (!upsert) rows
+        else load().filter(col("bucket") === b && !matching(prm, clientId, attributesToSet)).unionByName(rows)
+      PartitionCommit.commit(layout, Some(content), if (upsert) Seq(Seq(b)) else Nil)
       true
     }
   }
@@ -146,7 +145,7 @@ class VersionedStore(
     !loadPrm(prm).filter(matching(prm, clientId, attributesToSet)).isEmpty
 
   /** Small-file compaction (ChunkStore.compact's sibling): every
-    * append-mode `setLc` adds a file to the prm's bucket directory, so a
+    * versioned or first `setLc` adds a file to the prm's bucket, so a
     * hot bucket accumulates one file per historical write. Rewrite the
     * given (default: all) bucket partitions through the partition commit
     * — each comes out as one file. Readers see the same rows.
@@ -154,9 +153,9 @@ class VersionedStore(
   def compact(buckets: Option[Seq[Int]] = None): Int =
     PartitionCommit.compact(layout, load(), buckets).length
 
-  /** Policy form: rewrite only buckets whose parquet-file count exceeds
-    * `maxFilesPerBucket`, from a cheap directory listing — no data scan
-    * for buckets already compact. Returns the buckets compacted.
+  /** Policy form: rewrite only buckets whose live-file count exceeds
+    * `maxFilesPerBucket`, from the manifest — no data scan for buckets
+    * already compact. Returns the buckets compacted.
     */
   def compactIfNeeded(maxFilesPerBucket: Int = 8): Seq[Int] =
     PartitionCommit.compactCrowded(layout, load(), maxFilesPerBucket)
@@ -384,13 +383,16 @@ class VersionedStore(
   /** Delete by prms / version / client (reference `clear`/`clear_all`,
     * hostore.py:396-432). With a prm list only the prms' bucket partitions
     * are rewritten; a store-wide clear (no prms) rewrites every bucket. A
-    * bucket left empty has its directory dropped.
+    * bucket left empty leaves the live set at once, and its directory goes
+    * with the next commit.
     */
   def clear(clientId: Int, prms: Option[Seq[String]] = None, version: Option[Int] = None): Unit = WriterLock.withLock(path) {
     var hit: Column = col("client_id") === clientId
     prms.foreach(ps => hit = hit && col("prm").isin(ps: _*))
     version.foreach(v => hit = hit && col("version") === v)
     val affected = prms.fold(PartitionCommit.partitions(path, "bucket"))(_.map(bucketOf).distinct)
-    PartitionCommit.commit(layout, load().filter(col("bucket").isin(affected: _*)).filter(!hit), affected)
+    if (affected.nonEmpty)
+      PartitionCommit.commit(layout, Some(load().filter(col("bucket").isin(affected: _*)).filter(!hit)),
+        affected.map(Seq(_)))
   }
 }

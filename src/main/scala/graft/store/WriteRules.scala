@@ -42,6 +42,39 @@ private[graft] object WriteRules {
     require(attrs.values.forall(_ != null), NullKey)
   }
 
+  /** `rows` with the in-plan null-key refusal of a batch write: `ts` and
+    * `value` are computed through an `assert_true` over the `keys`, which
+    * is null when the row's keys are all set and fails the task
+    * otherwise. The first job that reads the batch therefore refuses it,
+    * and nothing commits before that job ends. The guard sits in BOTH
+    * columns so that whichever normalization-filter conjunct a dropped row
+    * evaluates first, it evaluates a guarded column: a null-keyed row whose
+    * value is also null or NaN still refuses the batch, under any
+    * conjunct order. Pair with [[rethrowNullKey]].
+    */
+  def guardKeys(rows: DataFrame, keys: Seq[String]): DataFrame = {
+    val guard = assert_true(!keys.map(col(_).isNull).reduce(_ || _), lit(NullKey))
+    rows.withColumns(Map("ts" -> when(guard.isNull, col("ts")), "value" -> when(guard.isNull, col("value"))))
+  }
+
+  /** Surface a failed [[guardKeys]] guard as the contract's
+    * IllegalArgumentException (what [[requireFullKey]] throws for a
+    * one-series write): it arrives wrapped in SparkException layers at the
+    * action. Matched precisely: the cause must be Spark's own raise_error
+    * surface (a SparkThrowable whose condition is USER_RAISED_EXCEPTION,
+    * what a failed `assert_true` throws) carrying the guard's message, so an
+    * unrelated failure whose message merely contains the text is never
+    * recast and masked.
+    */
+  def rethrowNullKey[T](f: => T): T =
+    try f catch {
+      case e: Throwable if Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+          case st: org.apache.spark.SparkThrowable =>
+            st.getCondition == "USER_RAISED_EXCEPTION" && String.valueOf(st.getMessage).contains(NullKey)
+          case _ => false
+        } => throw new IllegalArgumentException(NullKey)
+    }
+
   /** `rows` with each business key column set to its `attrs` value, cast
     * to the key's type.
     */

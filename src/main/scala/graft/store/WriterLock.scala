@@ -9,14 +9,12 @@ import java.util.concurrent.{ConcurrentHashMap, Executors, ScheduledExecutorServ
   * the reference's transactional row lock around read-modify-write upserts
   * (`select_for_update` inside `transaction.atomic`,
   * chunk_timeserie_store.py:786-813). The reference locks per chunk row
-  * because Postgres serializes the combine-first merge for it; here the
-  * mutators rewrite whole partition directories ([[PartitionCommit]]:
-  * checkpoint + dynamic partition overwrite), so the unit of exclusion is
-  * the store: one writer at a time per store path, readers never blocked.
-  * A dynamic overwrite commits per partition directory — each partition's
-  * files are swapped in whole at job commit — but it is NOT atomic across
-  * partitions: a reader racing a multi-partition commit can see some
-  * partitions new and others old.
+  * because Postgres serializes the combine-first merge for it; here every
+  * mutator publishes a new manifest for the whole store
+  * ([[PartitionCommit]]: fresh files, then one atomic manifest swap), so
+  * the unit of exclusion is the store: one writer at a time per store
+  * path, readers never blocked. A reader sees one commit, and a frame
+  * stays valid through one later commit.
   *
   * Two layers, both reentrant per thread:
   *  - in-process: a per-path monitor serializes writer threads sharing the
@@ -25,7 +23,7 @@ import java.util.concurrent.{ConcurrentHashMap, Executors, ScheduledExecutorServ
   *    transitions, never across file I/O, so every waiter's own `waitMs`
   *    deadline is honored.
   *  - inter-process: an exclusive lock FILE at `<store>__lock` (sibling of
-  *    the store root, so partition overwrites never touch it).
+  *    the store root, so a commit never touches it).
   *    `Files.createFile` is atomic create-no-overwrite on POSIX and HDFS.
   *    The file carries a per-acquisition random TOKEN; heartbeat and
   *    release verify the token before touching/deleting, so a holder
@@ -77,7 +75,7 @@ object WriterLock {
   private val observations = new ConcurrentHashMap[String, (Long, Long)]()
 
   /** The lock file is a SIBLING of the store root (`<path>__lock`): the
-    * mutators' dynamic partition overwrites rewrite directories inside the
+    * mutators' commits move files and drop emptied directories inside the
     * root, and a wiped store (clear-all) must not take the lock with it.
     */
   def lockFile(storePath: String): Path = canonical(storePath).resolveSibling(

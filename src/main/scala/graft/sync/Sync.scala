@@ -292,8 +292,8 @@ object Sync {
         val (inPartitions, isSpec) = specPredicates(store, specs)
         val untouched = store.load().filter(inPartitions && !isSpec)
         PartitionCommit.commit(store.layout,
-          untouched.unionByName(batch.select(store.schema.fieldNames.map(col): _*)),
-          specs.map(_.getInt(ci)).distinct)
+          Some(untouched.unionByName(batch.select(store.schema.fieldNames.map(col): _*))),
+          specs.map(_.getInt(ci)).distinct.map(Seq(_)))
       }
     }
 
@@ -329,9 +329,10 @@ object Sync {
     // listing size. The page rows collected for the keyset ARE the spec
     // list export and import take as literals, so the collect is work the
     // page import needed anyway (pageSize metadata rows, never payload).
-    // Released after the last page (Dataset.unpersist does not free a
-    // localCheckpoint's blocks; the commit helper's release does).
-    PartitionCommit.checkpointed(listing(server, since, filters).drop("dtype", "start_ts")) { staged =>
+    // Released after the last page (`Dataset.unpersist` does not free a
+    // local checkpoint's blocks; unpersisting its `LogicalRDD`'s RDD does).
+    val staged = listing(server, since, filters).drop("dtype", "start_ts").localCheckpoint()
+    try {
       var applied  = 0L
       var lastSeen: Option[Row] = None
       var more     = true
@@ -351,6 +352,8 @@ object Sync {
         }
       }
       applied
+    } finally staged.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
     }
   }
 

@@ -35,6 +35,13 @@ trait SparkSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  /** Live data files (store-relative paths) per partition directory of a store (`chunk_index=5`,
+    * `bucket=3`), from the store's own live listing: its manifest, or its
+    * directory listing before its first commit.
+    */
+  def liveFiles(store: String): Map[String, Seq[String]] =
+    graft.store.PartitionCommit.liveFiles(store).groupBy(f => f.take(f.lastIndexOf('/')))
+
   /** Temp dir for store tests. */
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/store"

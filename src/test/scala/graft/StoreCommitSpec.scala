@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The partition commit every store writes through ([[PartitionCommit]]):
-  * a write releases the checkpoint it took, a commit that fails mid-job
-  * leaves the store exactly as it was, and a partition a rewrite empties
-  * loses its directory.
+  * a write leaves no persisted RDD behind, a commit that fails mid-job
+  * leaves the store exactly as it was, a partition a rewrite empties
+  * leaves the live set and then loses its directory, and a read racing
+  * commits sees one whole generation.
   */
 class StoreCommitSpec extends SparkSpec {
   import spark.implicits._
@@ -54,6 +55,38 @@ class StoreCommitSpec extends SparkSpec {
     val store = new java.io.File(root)
     store.getParentFile.listFiles().map(_.getName).toSeq
       .filterNot(Set(store.getName, store.getName + "__lock"))
+  }
+
+  test("readers racing two-partition commits never fail and see one generation each") {
+    val st = chunkStore()
+    // one series over the Jan and Feb chunks; commit g stamps every point g
+    def stamped(g: Int) = hourly("2024-01-31T00:00", 48, g.toDouble)
+      .withColumn("version", lit(0)).withColumn("kind", lit("a"))
+    st.upsertManyTs(stamped(0), now = now0)
+    val specs = st.load().select("version", "kind", "chunk_index").distinct().collect().toSeq
+    assert(specs.length === 2)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Set[Double])]()
+    @volatile var writing = true
+    val reader = new Thread(() =>
+      while (writing) {
+        try {
+          val got = st.getTs(a).collect().map(_.getDouble(1))
+          reads.add(("getTs", got.length.toLong, got.toSet))
+          reads.add(("load", st.load().count(), Set.empty[Double]))
+          val exported = Sync.exportChunks(st, specs).collect().map(_.getAs[Double]("value"))
+          reads.add(("exportChunks", exported.length.toLong, exported.toSet))
+        } catch { case e: Throwable => errors.add(e) }
+      })
+    reader.start()
+    try for (g <- 1 to 12) st.upsertManyTs(stamped(g), now = now0.plusHours(g))
+    finally { writing = false; reader.join() }
+    import scala.jdk.CollectionConverters._
+    assert(errors.isEmpty, s"${errors.size} reads failed, first: ${errors.asScala.headOption}")
+    assert(reads.asScala.exists(_._1 == "getTs"))
+    val torn = reads.asScala.filter { case (_, n, stamps) => n != 48 || stamps.size > 1 }
+    assert(torn.isEmpty, s"reads across generations: ${torn.take(5)}")
+    assert(st.getTs(a).collect().map(_.getDouble(1)).toSet === Set(12.0))
   }
 
   test("TimeseriesStore.setTs(update) releases its checkpoint") {
@@ -144,7 +177,7 @@ class StoreCommitSpec extends SparkSpec {
     val content = st.load().filter(col("bucket") === b)
       .withColumn("value", when(col("ts") === lit(ldt("2024-01-01T03:00")),
         raise_error(lit("injected failure"))).otherwise(col("value")))
-    intercept[Exception](PartitionCommit.commit(st.layout, content, Seq(b)))
+    intercept[Exception](PartitionCommit.commit(st.layout, Some(content), Seq(Seq(b))))
     assert(snapshot(dir) === files)
     assert(st.load().collect().toSet === rows)
     assert(strangers(dir).isEmpty)
@@ -159,8 +192,11 @@ class StoreCommitSpec extends SparkSpec {
     st.setLc(pa, 1, hourly("2024-01-01T00:00", 3, 2.0), versioning = true)
     st.setLc(pb, 1, hourly("2024-01-01T00:00", 3, 3.0))
     st.clear(1, prms = Some(Seq(pa)))
+    assert(liveFiles(dir).keySet === Set(s"bucket=${st.bucketOf(pb)}"))
+    assert(st.count(1) === 1)
+    // the retired files stay for one commit; the next one removes the directory
+    st.setLc(pb, 1, hourly("2024-01-01T00:00", 3, 4.0), versioning = true)
     assert(!new java.io.File(dir, s"bucket=${st.bucketOf(pa)}").exists())
     assert(new java.io.File(dir, s"bucket=${st.bucketOf(pb)}").isDirectory)
-    assert(st.count(1) === 1)
   }
 }

@@ -70,12 +70,7 @@ class StoreLoadSpec extends SparkSpec {
       assert(st.setLc("prm_other", 1, series(v * 10.0), versioning = true,
         now = t0.plusMinutes(v.toLong)))
     }
-    def bucketFiles(): Map[String, Int] =
-      Option(new java.io.File(st.path).listFiles()).toSeq.flatten
-        .filter(d => d.isDirectory && d.getName.startsWith("bucket="))
-        .map(d => d.getName ->
-          Option(d.listFiles()).toSeq.flatten.count(_.getName.endsWith(".parquet")))
-        .toMap
+    def bucketFiles(): Map[String, Int] = liveFiles(st.path).map { case (b, fs) => b -> fs.length }
     assert(bucketFiles().values.max > 8, s"churn should pile up files: ${bucketFiles()}")
     val before = st.getLc("prm_hot", 1).collect().toSeq
     assert(before.nonEmpty)

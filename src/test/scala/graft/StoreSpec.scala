@@ -80,10 +80,10 @@ class ChunkStoreSpec extends SparkSpec {
     val st = newStore(tz = "UTC")
     val t0 = java.time.LocalDateTime.parse("2024-01-10T00:00")
     val ints = (0 until 24).map(i => (t0.plusHours(i.toLong), i.toLong)).toDF("ts", "value")
-    assert(st.setTs(attrs, ints, now = now0)) // chunk 2024-01, dtype=bigint
     // simulate a pre-dtype store file: same series, February chunk,
     // fractional values, dtype null — appended the way a legacy writer
-    // laid files out (partitioned by chunk_index, no dtype recorded)
+    // laid files out (partitioned by chunk_index, no dtype recorded, no
+    // manifest), before the store's first commit, which adopts it
     val t1 = java.time.LocalDateTime.parse("2024-02-10T00:00")
     val legacy = (0 until 24).map(i => (t1.plusHours(i.toLong), i + 0.5)).toDF("ts", "value")
       .withColumn("version", lit(0)).withColumn("kind", lit("k1"))
@@ -94,6 +94,7 @@ class ChunkStoreSpec extends SparkSpec {
       .withColumn("updated_at", lit(now0).cast(TimestampNTZType))
       .select(st.schema.fieldNames.map(col): _*)
     legacy.write.mode("append").partitionBy("chunk_index").parquet(st.path)
+    assert(st.setTs(attrs, ints, update = true, now = now0)) // chunk 2024-01, dtype=bigint
     val back = st.getTs(attrs)
     assert(back.schema("value").dataType === DoubleType)
     val vals = back.collect().map(_.getDouble(1))
@@ -222,6 +223,37 @@ class ChunkStoreSpec extends SparkSpec {
     assert(rows.map(_.getDouble(1)).toSeq === (0 until 24 * 5).map(_ + 0.5))
   }
 
+  test("double getTs over more than 32 live files: no job at call time, one at collect") {
+    val st = newStore(tz = "UTC")
+    // one point a month for 40 months: 40 chunk partitions, one file each —
+    // past the 32 root paths Spark would list with a job of its own
+    val t0 = ldt("2020-01-15T00:00")
+    assert(st.setTs(attrs, (0 until 40).map(m => (t0.plusMonths(m.toLong), m + 0.5)).toDF("ts", "value"),
+      now = now0))
+    assert(liveFiles(st.path).values.map(_.length).sum === 40)
+    var read: DataFrame = null
+    assert(jobsDuring { read = st.getTs(attrs) } === 0)
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    assert(jobsDuring { rows = read.collect() } === 1)
+    assert(rows.map(_.getDouble(1)).toSeq === (0 until 40).map(_ + 0.5))
+  }
+
+  test("upsertManyTs and setManyTs refuse a null key value; stored rows untouched") {
+    val st = newStore(tz = "UTC")
+    assert(st.setTs(attrs, hourly("2024-01-10T00:00", 24, i => Some(i.toDouble)), now = now0))
+    val stored = st.load().collect().toSet
+    // a parquet-backed batch, as a pipeline's is: the guard fails a job
+    val dir = tmpDir("nullkey")
+    Seq[(Int, String, java.time.LocalDateTime, Double)](
+      (0, "b", ldt("2024-01-10T00:00"), 2.0), (0, null, ldt("2024-01-10T01:00"), 3.0))
+      .toDF("version", "kind", "ts", "value").write.parquet(dir)
+    val batch = spark.read.parquet(dir)
+    intercept[IllegalArgumentException](st.upsertManyTs(batch, now = now0.plusHours(1)))
+    assert(st.load().collect().toSet === stored)
+    intercept[IllegalArgumentException](st.setManyTs(batch, now = now0.plusHours(2)))
+    assert(st.load().collect().toSet === stored)
+  }
+
   test("double dense getTs: no job at call time, at most three at collect") {
     val st = newStore(tz = "UTC")
     assert(st.setTs(attrs, hourly("2024-01-30T00:00", 24 * 5, i => Some(i + 0.5)), now = now0))
@@ -257,7 +289,7 @@ class ChunkStoreSpec extends SparkSpec {
     assert(st.setTs(attrs, hourly("2024-01-10T00:00", 24, i => Some(i + 0.5)), now = now0))
     val ints = (0 until 24).map(i => (t0.plusHours(i.toLong), i.toLong * 3)).toDF("ts", "value")
     assert(st.setTs(attrs2, ints, update = true, now = now0)) // rewrites the chunk: one file
-    assert(PartitionCommit.dataFiles(st.path, "chunk_index", _ => true).length === 1)
+    assert(liveFiles(st.path).values.map(_.length).sum === 1)
     var big: DataFrame = null
     assert(jobsDuring { big = st.getTs(attrs2) } === 1, "a bigint footer must take the probe")
     assert(big.schema("value").dataType === LongType)
@@ -304,8 +336,8 @@ class ChunkStoreSpec extends SparkSpec {
     val st = newStore(tz = "UTC")
     val t0 = java.time.LocalDateTime.parse("2024-01-10T00:00")
     val ints = (0 until 24).map(i => (t0.plusHours(i.toLong), i.toLong)).toDF("ts", "value")
-    assert(st.setTs(attrs, ints, now = now0)) // chunk 2024-01, dtype=bigint
-    // February: a file from a writer that knew no dtype column at all
+    // February: a file from a writer that knew no dtype column at all,
+    // planted before the store's first commit, which adopts it
     val t1 = java.time.LocalDateTime.parse("2024-02-10T00:00")
     (0 until 24).map(i => (t1.plusHours(i.toLong), i + 0.5)).toDF("ts", "value")
       .withColumn("version", lit(0)).withColumn("kind", lit("k1"))
@@ -314,6 +346,7 @@ class ChunkStoreSpec extends SparkSpec {
       .withColumn("is_deleted", lit(false))
       .withColumn("updated_at", lit(now0).cast(TimestampNTZType))
       .write.mode("append").partitionBy("chunk_index").parquet(st.path)
+    assert(st.setTs(attrs, ints, update = true, now = now0)) // chunk 2024-01, dtype=bigint
     val z = java.time.ZoneOffset.UTC
     val feb = st.getTs(attrs, start = Some(java.time.ZonedDateTime.of(2024, 2, 1, 0, 0, 0, 0, z)))
     assert(feb.schema("value").dataType === DoubleType)
@@ -589,14 +622,16 @@ class ChunkStoreSpec extends SparkSpec {
     for (i <- 0 until 4)
       st.setTs(Map("version" -> 0, "kind" -> s"k$i"),
         hourly("2024-01-01T00:00", 6, j => Some(j.toDouble)), now = now0.plusHours(i))
-    val chunkDir = new java.io.File(dir).listFiles()
-      .find(_.getName.startsWith("chunk_index=")).get
-    def nFiles = chunkDir.listFiles().count(_.getName.endsWith(".parquet"))
+    def nFiles = liveFiles(dir).values.map(_.length).sum // one chunk partition
     val before = nFiles
     assert(before > 1)
     val rowsBefore = st.yieldManyTs().count()
     assert(st.compact() === 1)
     assert(nFiles === 1)
+    // the retired files stay for one commit, no more: live plus one retired generation
+    val onDisk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try assert(onDisk.filter(_.toString.endsWith(".parquet")).count() <= nFiles + before)
+    finally onDisk.close()
     assert(st.yieldManyTs().count() === rowsBefore) // readers see the same rows
   }
 
@@ -610,10 +645,8 @@ class ChunkStoreSpec extends SparkSpec {
         hourly("2024-01-01T00:00", 6, j => Some(j.toDouble)), now = now0.plusHours(i))
     st.setTs(Map("version" -> 0, "kind" -> "feb"),
       hourly("2024-02-01T00:00", 6, j => Some(j.toDouble)), now = now0)
-    def files(prefix: String) = new java.io.File(dir).listFiles()
-      .find(_.getName == prefix).get.listFiles().count(_.getName.endsWith(".parquet"))
-    val febDir = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("chunk_index=")).map(_.getName).sorted
+    def files(prefix: String) = liveFiles(dir)(prefix).length
+    val febDir = liveFiles(dir).keys.toSeq.sorted
     assert(febDir.length === 2)
     val Seq(jan, feb) = febDir.toSeq
     val febBefore = files(feb)
@@ -682,8 +715,7 @@ class VersionedStoreSpec extends SparkSpec {
     val hotBucket = st.bucketOf("hot_prm")
     val coldBucket = st.bucketOf("cold_prm")
     assert(hotBucket !== coldBucket, "test prms landed in one bucket; pick different names")
-    def files(b: Int) = new java.io.File(dir, s"bucket=$b").listFiles()
-      .count(_.getName.endsWith(".parquet"))
+    def files(b: Int) = liveFiles(dir)(s"bucket=$b").length
     // one append can emit several files (one per write task), so size the
     // threshold off the single-append bucket: cold sits AT it, hot (4
     // appends) is far over
@@ -806,9 +838,7 @@ class VersionedStoreSpec extends SparkSpec {
     val pb = (2 to 100).map("p" + _).find(p => st.bucketOf(p) != st.bucketOf(pa)).get
     st.setLc(pa, 1, series("2024-01-01T00:00", 3, 1.0))
     st.setLc(pb, 1, series("2024-01-01T00:00", 3, 2.0))
-    def pbFiles = new java.io.File(dir, s"bucket=${st.bucketOf(pb)}")
-      .listFiles().filter(_.getName.endsWith(".parquet"))
-      .map(f => (f.getName, f.lastModified())).toSet
+    def pbFiles = liveFiles(dir)(s"bucket=${st.bucketOf(pb)}").toSet
     val before = pbFiles
     st.setLc(pa, 1, series("2024-01-01T00:00", 3, 9.0)) // upsert → rewrite pa's bucket only
     assert(pbFiles === before)

@@ -95,6 +95,29 @@ class TimeseriesStoreSpec extends SparkSpec {
     assert(!st.setTs(a2020, Seq.empty[(java.time.LocalDateTime, Double)].toDF("ts", "value")))
   }
 
+  test("all-null update and replace over a stored series return false and keep its rows") {
+    val st = newStore()
+    assert(st.setTs(a2020, hourly("2020-01-01T00:00", 3, i => Some(i.toDouble))))
+    val stored = st.getTsFlat(a2020).collect().toSeq
+    assert(!st.setTs(a2020, hourly("2020-01-01T01:00", 3, _ => None), update = true))
+    assert(st.getTsFlat(a2020).collect().toSeq === stored)
+    assert(!st.setTs(a2020, hourly("2020-01-01T01:00", 3, _ => None), replace = true))
+    assert(st.getTsFlat(a2020).collect().toSeq === stored)
+  }
+
+  test("replace and update find the series' directory whatever the key values' Scala types") {
+    // an Int for a double key and a string for a timestamp key: the
+    // directory is named from the key columns' own values
+    val st = new TimeseriesStore(spark, tmpDir("tstore"), StructType(Seq(
+      StructField("rate", DoubleType), StructField("since", TimestampNTZType), StructField("kind", StringType))))
+    val k = Map[String, Any]("rate" -> 1, "since" -> "2020-01-01 00:00:00", "kind" -> "a/b c")
+    assert(st.setTs(k, hourly("2020-01-01T00:00", 3, i => Some(i.toDouble))))
+    assert(st.setTs(k, hourly("2020-01-01T00:00", 2, _ => Some(9.0)), replace = true))
+    assert(st.getTs().collect().map(_.getDouble(4)).toSeq === Seq(9.0, 9.0))
+    assert(st.setTs(k, hourly("2020-01-01T02:00", 1, _ => Some(7.0)), update = true))
+    assert(st.getTs().collect().map(_.getDouble(4)).toSeq === Seq(9.0, 9.0, 7.0))
+  }
+
   test("setManyTs lands many series in one write; read-back per series ordered") {
     val st = newStore()
     val many = (for {
@@ -200,8 +223,8 @@ class TimeseriesStoreSpec extends SparkSpec {
       "setTs replace" -> jobsDuring(st.setTs(b2020, hourly("2021-01-01T00:00", 2, _ => Some(4.0)),
         replace = true)),
       "clear" -> jobsDuring(st.clear(Map("kind" -> "a")))).toMap
-    assert(jobs === Map("setManyTs fresh" -> 2, "setManyTs existing" -> 6,
-      "setManyTs existing, all null" -> 5, "setTs update" -> 4, "setTs replace" -> 2,
+    assert(jobs === Map("setManyTs fresh" -> 2, "setManyTs existing" -> 5,
+      "setManyTs existing, all null" -> 3, "setTs update" -> 3, "setTs replace" -> 2,
       "clear" -> 2))
     assert(!st.exists(Map("kind" -> "c")))
     assert(st.getTs().collect().map(r => (r.getString(1), r.getDouble(3))).toSeq ===
