@@ -1,7 +1,12 @@
 package graft.store
 
-import graft.ts.{Combine, Grid, Resample}
+import graft.ts.Grid
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.io.LocalInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -39,7 +44,7 @@ import WriteRules.{keyFilter, requireFullKey}
   * sync import) is one [[PartitionCommit]]: the new content of the
   * affected chunk partitions is written as fresh files, then one atomic
   * manifest swap makes them live and retires the partitions' old files
-  * (none for an insert).
+  * (none for an insert); see [[rewrite]] for the one shape of a rewrite.
   *
   * Concurrency: one writer at a time per store, enforced by an advisory
   * [[WriterLock]] around every mutator (the reference's row-lock upsert,
@@ -117,9 +122,7 @@ class ChunkStore(
     * round-trip).
     */
   private def normalized(rows: DataFrame): DataFrame =
-    WriteRules.points(rows.withColumn("dtype", lit(dtypeOf(rows))))
-
-  private def dtypeOf(rows: DataFrame): String = rows.schema("value").dataType.simpleString
+    WriteRules.points(rows.withColumn("dtype", lit(rows.schema("value").dataType.simpleString)))
 
   def exists(attrs: Map[String, Any]): Boolean =
     !load().filter(keyFilter(attrs) && !col("is_deleted")).isEmpty
@@ -127,9 +130,11 @@ class ChunkStore(
   /** Write one series under `attrs`. Mirrors `set_ts`
     * (chunk_timeserie_store.py:309-373): plain insert refuses duplicates
     * and is forbidden when sync is enabled; `update` merges
-    * new.combine_first(existing) per chunk; `replace` hard-replaces
-    * overlapped chunks and tombstones the series' other chunks.
-    * Returns false when the series was skipped (empty/all-null).
+    * new.combine_first(existing) in each chunk the series gets a new point
+    * in, and leaves its other chunks as they are; `replace` hard-replaces
+    * those chunks and tombstones the series' other chunks. Returns false
+    * when the series was skipped (empty/all-null). Jobs: the [[chunks]]
+    * probe, then the write (update and replace: [[rewrite]]'s two jobs).
     */
   def setTs(
       attrs: Map[String, Any],
@@ -142,37 +147,15 @@ class ChunkStore(
     if (config.syncEnabled && !update && !replace)
       throw new IllegalStateException("plain insert is forbidden on a sync-enabled store; use update or replace")
     val newRows = finishRows(WriteRules.withKey(normalized(series.select("ts", "value")), attrs, keySchema), now)
-    // ONE probe job answers every pre-write question (r12 follow-up #2 —
-    // previously an isEmpty + exists/affected/overlapped chain of 2-3
-    // scheduler round-trips): the new write's distinct chunk indexes
-    // (empty ⇔ the normalized series lost every row → skip, the
-    // reference's _normalize_serie → None), unioned with this series'
-    // STORED chunk indexes where a mode needs them (replace: tombstone
-    // scope over all my rows incl. existing tombstones; insert: the
-    // existence refusal probes live rows only). All sides are
-    // metadata-sized (distinct chunk lists).
-    val newChunksDf = newRows.select(col("chunk_index")).distinct()
-      .select(col("chunk_index"), lit(true).as("__new"))
-    val probeDf =
-      if (update) newChunksDf
-      else {
-        val minePred =
-          if (replace) keyFilter(attrs) else keyFilter(attrs) && !col("is_deleted")
-        newChunksDf.unionAll(
-          load().filter(minePred).select(col("chunk_index")).distinct()
-            .select(col("chunk_index"), lit(false).as("__new")))
-      }
-    val probe = probeDf.collect().map(r => (r.getInt(0), r.getBoolean(1)))
-    val newChunks  = probe.collect { case (c, true) => c }.toSeq
-    val mineChunks = probe.collect { case (c, false) => c }.toSeq
-    if (newChunks.isEmpty) false // empty / all-null series: skipped
+    // the new points' chunks, and this series' stored ones (replace: its
+    // tombstone scope, all rows; insert: the existence refusal, live rows)
+    val mine = keyFilter(attrs) && (if (replace) lit(true) else !col("is_deleted"))
+    val probe = chunks(Some(newRows), Option.when(!update)(load().filter(mine)))
+    if (!probe.exists(_._2)) false // empty / all-null series: skipped
     else {
-      if (!update && !replace && mineChunks.nonEmpty)
+      if (!update && !replace && probe.exists(!_._2))
         throw new IllegalStateException(s"series already exists for $attrs (IntegrityError parity)")
-      if (update)
-        mergeChunks(newRows, newChunks, dtypeOf(series), now)(cur =>
-          (cur.filter(keyFilter(attrs)), cur.filter(!keyFilter(attrs))))
-      else if (replace) replaceChunks(attrs, newRows, newChunks, mineChunks, now)
+      if (update || replace) rewrite(probe.map(_._1), Some(newRows), if (replace) keyFilter(attrs) else lit(false), now)
       else PartitionCommit.commit(layout, Some(newRows), Nil)
       true
     }
@@ -196,27 +179,24 @@ class ChunkStore(
     }
   }
 
-  /** Bulk upsert of MANY series in one job — the multi-series form of
-    * `set_ts(update=True)` and the micro-batch sink primitive for
-    * streaming ingest (graft.streaming.StreamIngest.ingestToStore).
-    * `rows` carries (businessKeys..., ts, value); per (keys, ts) new
-    * points win over existing (`combine_first`), series not present in
-    * `rows` are rewritten verbatim, and only the affected chunk
-    * partitions are touched. The affected-chunk collect is the only
-    * pre-write job: an empty (or all-null) batch yields no chunk and
-    * writes nothing, and a null key value fails it (IllegalArgumentException).
+  /** Bulk upsert of MANY series — `set_ts(update=True)` per series, and
+    * the micro-batch sink of streaming ingest
+    * (graft.streaming.StreamIngest.ingestToStore). `rows` carries
+    * (businessKeys..., ts, value). In each (series, chunk) the batch has a
+    * point for, new points win per ts (`combine_first`), the tombstone
+    * goes, and the rows take `now` and the batch dtype; every other
+    * (series, chunk) of the touched chunk partitions, a batch series' own
+    * included, is rewritten verbatim, so a pull fetches only what changed.
+    * Jobs: the
+    * [[chunks]] probe (an empty or all-null batch writes nothing; a null
+    * key value fails it, IllegalArgumentException), then [[rewrite]]'s.
     */
   def upsertManyTs(
       rows: DataFrame,
       now: java.time.LocalDateTime = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)): Unit = WriterLock.withLock(path) {
-    val s = normalized(WriteRules.guardKeys(rows, keys))
-    val newRows  = finishRows(s, now)
-    val affected = WriteRules.rethrowNullKey(newRows.select("chunk_index").distinct().collect().map(_.getInt(0)).toSeq)
-    if (affected.nonEmpty) {
-      val newKeys = s.select(keys.map(col): _*).distinct()
-      mergeChunks(newRows, affected, dtypeOf(rows), now)(cur =>
-        (cur.join(newKeys, keys, "left_semi"), cur.join(newKeys, keys, "left_anti")))
-    }
+    val newRows  = finishRows(normalized(WriteRules.guardKeys(rows, keys)), now)
+    val affected = chunks(Some(newRows), None).map(_._1)
+    if (affected.nonEmpty) rewrite(affected, Some(newRows), lit(false), now)
   }
 
   /** Read one series (reference `get_ts`,
@@ -304,16 +284,25 @@ class ChunkStore(
     */
   private def footersProveDouble(files: Seq[String], inRange: Int => Boolean): Boolean = {
     val double = org.apache.parquet.io.api.Binary.fromString("double")
-    try files.filter(f => inRange(PartitionCommit.partitionValue(f, "chunk_index"))).forall { f =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        new org.apache.parquet.io.LocalInputFile(new java.io.File(path, f).toPath))
-      try reader.getFooter.getBlocks.asScala.forall(_.getColumns.asScala
-        .find(_.getPath.toDotString == "dtype").map(_.getStatistics)
-        .exists(st => st != null && st.isNumNullsSet &&
-          (!st.hasNonNullValue || st.genericGetMin == double && st.genericGetMax == double)))
-      finally reader.close()
-    } catch { case scala.util.control.NonFatal(_) => false }
+    footerStats(files.filter(f => inRange(PartitionCommit.partitionValue(f, "chunk_index"))), "dtype")
+      .exists(_.forall(st => !st.hasNonNullValue || st.genericGetMin == double && st.genericGetMax == double))
   }
+
+  /** The `column` statistics of every row group of the live `files`
+    * (store-relative), read from their Parquet footers on the driver: no
+    * job. None when a file cannot be read, or one of its row groups lacks
+    * the column, its statistics or their null count.
+    */
+  private def footerStats(files: Seq[String], column: String): Option[Seq[Statistics[_]]] =
+    try {
+      val found = files.flatMap { f =>
+        val reader = ParquetFileReader.open(new LocalInputFile(new java.io.File(path, f).toPath))
+        try reader.getFooter.getBlocks.asScala.toSeq.map(_.getColumns.asScala.find(_.getPath.toDotString == column)
+          .map(_.getStatistics).filter(st => st != null && st.isNumNullsSet))
+        finally reader.close()
+      }
+      Option.when(found.forall(_.isDefined))(found.flatten)
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** One chunk's store-freq calendar as an in-plan timestamp sequence —
     * the reference's per-chunk blob grid (`_normalize_index` date_range
@@ -470,13 +459,23 @@ class ChunkStore(
 
   /** Max `updated_at` under filters; empty → 2000-01-01 in store tz
     * (reference `last_updated_at`, chunk_timeserie_store.py:288-307).
+    * With no filters (every pull starts here) it is the max of the live
+    * files' `updated_at` footer statistics, with no job, unless a footer
+    * does not prove it ([[footerStats]], micros NTZ): then the aggregation.
     */
   def lastUpdatedAt(filters: Map[String, Any] = Map.empty): java.time.LocalDateTime = {
-    val r = load().filter(keyFilter(filters)).agg(max("updated_at")).head()
-    if (r.isNullAt(0))
-      java.time.ZonedDateTime.of(2000, 1, 1, 0, 0, 0, 0, java.time.ZoneId.of(config.tz))
-        .withZoneSameInstant(java.time.ZoneOffset.UTC).toLocalDateTime
-    else r.getAs[java.time.LocalDateTime](0)
+    val files = PartitionCommit.liveFiles(path)
+    val micros = LogicalTypeAnnotation.timestampType(false, LogicalTypeAnnotation.TimeUnit.MICROS)
+    val footers = Option.when(filters.isEmpty)(footerStats(files, "updated_at")).flatten
+      .filter(_.forall(_.`type`.getLogicalTypeAnnotation == micros))
+    val latest = footers match {
+      case Some(stats) => stats.filter(_.hasNonNullValue).map(_.genericGetMax.asInstanceOf[Long]).maxOption
+        .map(org.apache.spark.sql.catalyst.util.DateTimeUtils.microsToLocalDateTime)
+      case None => Option(PartitionCommit.load(spark, path, schema, files).filter(keyFilter(filters))
+        .agg(max("updated_at")).head().getAs[java.time.LocalDateTime](0))
+    }
+    latest.getOrElse(java.time.ZonedDateTime.of(2000, 1, 1, 0, 0, 0, 0, java.time.ZoneId.of(config.tz))
+      .withZoneSameInstant(java.time.ZoneOffset.UTC).toLocalDateTime)
   }
 
   def maxChunkIndex(): Option[Int] = {
@@ -485,10 +484,12 @@ class ChunkStore(
   }
 
   /** Soft delete matching series (reference ChunkQuerySet.delete with
-    * keep_tracking — chunk_timeserie_store.py:30-52): every live chunk of
-    * a matched series collapses to one tombstone row with fresh
-    * `updated_at`. Hard delete (keepTracking=false) physically removes
-    * rows and is refused when sync is enabled.
+    * keep_tracking — chunk_timeserie_store.py:30-52): every chunk of a
+    * matched series collapses to one tombstone row with fresh
+    * `updated_at`; the other series in those chunk partitions are
+    * rewritten verbatim. Hard delete (keepTracking=false) physically
+    * removes the rows and is refused when sync is enabled. Jobs: the
+    * [[chunks]] probe of the matched rows, then [[rewrite]]'s if any.
     */
   def delete(
       filters: Map[String, Any],
@@ -496,14 +497,9 @@ class ChunkStore(
       now: java.time.LocalDateTime = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)): Unit = WriterLock.withLock(path) {
     if (!keepTracking && config.syncEnabled)
       throw new IllegalStateException("hard delete is forbidden on a sync-enabled store")
-    val cur = load()
     val hit = keyFilter(filters)
-    val affected = cur.filter(hit).select("chunk_index").distinct().collect().map(_.getInt(0))
-    if (affected.nonEmpty) {
-      val kept = cur.filter(col("chunk_index").isin(affected.toSeq: _*)).filter(!hit)
-      val content = if (keepTracking) kept.unionByName(tombstones(cur.filter(hit), now)) else kept
-      PartitionCommit.commit(layout, Some(content), affected.toSeq.map(Seq(_)))
-    }
+    val affected = chunks(None, Some(load().filter(hit))).map(_._1)
+    if (affected.nonEmpty) rewrite(affected, None, hit, now, keepTracking)
   }
 
   // ---- write-path internals -------------------------------------------
@@ -520,53 +516,63 @@ class ChunkStore(
       .select(schema.fieldNames.map(col): _*)
   }
 
-  /** One tombstone row per (series, chunk) of `rows`: null payload,
-    * `is_deleted`, fresh `updated_at` (reference EMPTY_DATA,
-    * chunk_timeserie_store.py:27).
+  /** The pre-write probe: the distinct `chunk_index` of the rows of
+    * `fresh` (tagged true) and of `stored` (tagged false), in ONE job — a
+    * per-partition set fold with no exchange, the shape of [[getTs]]'s
+    * dtype probe (a `distinct().collect()` plans two or three AQE jobs).
+    * A batch's in-plan null-key guard fails this job first, as the
+    * contract's IllegalArgumentException.
     */
-  private def tombstones(rows: DataFrame, now: java.time.LocalDateTime): DataFrame =
-    rows.select((keys.map(col) :+ col("chunk_index")): _*).distinct()
-      .withColumn("ts", lit(null).cast(TimestampNTZType))
-      .withColumn("value", lit(null).cast(DoubleType))
-      .withColumn("dtype", lit(null).cast(StringType))
-      .withColumn("is_deleted", lit(true))
-      .withColumn("updated_at", lit(now))
-      .select(schema.fieldNames.map(col): _*)
+  private def chunks(fresh: Option[DataFrame], stored: Option[DataFrame]): Set[(Int, Boolean)] =
+    WriteRules.rethrowNullKey((fresh.map(_.select(col("chunk_index"), lit(true))) ++
+      stored.map(_.select(col("chunk_index"), lit(false)))).reduce(_ unionAll _)
+      .rdd.aggregate(Set.empty[(Int, Boolean)])((s, r) => s + (r.getInt(0) -> r.getBoolean(1)), _ ++ _))
 
-  /** `update` (one series or many): per affected chunk,
-    * new.combine_first(existing) for the batch's series; other series in
-    * the partition are rewritten verbatim (reference
-    * `_update_chunk_with_existing`, chunk_timeserie_store.py:782-813 —
-    * txn → partition commit). `split` divides the affected chunks' rows
-    * into (the batch's series, the rest).
+  /** The one write body of update, upsert, replace and delete: one commit
+    * of the `affected` chunk partitions, whose stored rows, unioned with
+    * the `fresh` rows, cross ONE exchange on `chunk_index` — the commit's
+    * own repartition on it is then already satisfied and planned away, so
+    * the rewrite is a shuffle-map job and the write job.
+    * One window per (chunk_index, keys...) group, in the write's sort
+    * order, decides each row (filtered branches would each push their
+    * filter below the exchange and plan an exchange of their own):
+    *  - a group holding a fresh row keeps one row per `ts`, the fresh one
+    *    where both exist (`combine_first`, reference
+    *    `_update_chunk_with_existing`, chunk_timeserie_store.py:782-813,
+    *    per series), drops its tombstones and its stored rows `retire`
+    *    selects (replace), and takes `now` and the fresh rows' dtype;
+    *  - a group of stored rows `retire` selects collapses to one tombstone
+    *    (reference EMPTY_DATA, chunk_timeserie_store.py:27) stamped `now`,
+    *    or without `keepTracking` is dropped;
+    *  - every other group is written verbatim.
     */
-  private def mergeChunks(newRows: DataFrame, affected: Seq[Int], dtype: String,
-      now: java.time.LocalDateTime)(split: DataFrame => (DataFrame, DataFrame)): Unit = {
-    val (mine, others) = split(load().filter(col("chunk_index").isin(affected: _*)))
-    val kv = keys.map(col) :+ col("ts") :+ col("value")
-    val merged = Combine.combineFirst(
-      Seq(newRows.select(kv: _*),
-          mine.filter(!col("is_deleted") && col("ts").isNotNull).select(kv: _*)),
-      keys)
-    // the new write's dtype wins for the merged chunks (reference updates
-    // the chunk row's dtype on upsert)
-    val mergedRows = finishRows(merged.withColumn("dtype", lit(dtype)), now)
-    PartitionCommit.commit(layout, Some(others.unionByName(mergedRows)), affected.map(Seq(_)))
-  }
-
-  /** `replace`: overlapped chunks get exactly the new data; the series'
-    * other live chunks become tombstones (reference set_ts replace path,
-    * chunk_timeserie_store.py:357-370).
-    */
-  private def replaceChunks(attrs: Map[String, Any], newRows: DataFrame,
-      overlapped: Seq[Int], mineAll: Seq[Int], now: java.time.LocalDateTime): Unit = {
-    val cur        = load()
-    val myOther    = mineAll.filterNot(overlapped.toSet)
-    val affected   = (overlapped ++ myOther).distinct
-    val scope      = cur.filter(col("chunk_index").isin(affected: _*))
-    val others     = scope.filter(!keyFilter(attrs))
-    val tombs = tombstones(scope.filter(keyFilter(attrs) && col("chunk_index").isin(myOther: _*)), now)
-    PartitionCommit.commit(layout, Some(others.unionByName(newRows).unionByName(tombs)), affected.map(Seq(_)))
+  private def rewrite(affected: Set[Int], fresh: Option[DataFrame], retire: Column,
+      now: java.time.LocalDateTime, keepTracking: Boolean = true): Unit = {
+    val stored = load().filter(col("chunk_index").isin(affected.toSeq: _*)).withColumn("__new", lit(false))
+    val rows = fresh.fold(stored)(_.withColumn("__new", lit(true)).unionByName(stored))
+    val group = Window.partitionBy((col("chunk_index") +: keys.map(col)): _*).orderBy(col("ts"), col("__new").desc)
+    val whole = group.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val (isNew, isFresh) = (col("__new"), col("__fresh"))
+    val retired = coalesce(retire, lit(false))
+    val tomb = !isFresh && retired
+    val keep = when(isFresh, !coalesce(col("__prevTs") === col("ts"), lit(false)) &&
+        (isNew || !retired && !col("is_deleted") && col("ts").isNotNull))
+      .otherwise(!tomb || lit(keepTracking) && col("__first"))
+    val content = rows.repartition(col("chunk_index"))
+      .withColumns(Map(
+        "__fresh"  -> max(isNew).over(whole),
+        "__dtype"  -> max(when(isNew, col("dtype"))).over(whole),
+        "__first"  -> (row_number().over(group) === 1),
+        "__prevTs" -> lag(col("ts"), 1).over(group)))
+      .filter(keep)
+      .select(schema.fieldNames.map {
+        case c @ ("ts" | "value") => when(!tomb, col(c)).as(c)
+        case "dtype"      => when(isFresh, col("__dtype")).when(!tomb, col("dtype")).as("dtype")
+        case "is_deleted" => (col("is_deleted") || tomb).as("is_deleted")
+        case "updated_at" => when(isFresh || tomb, lit(now)).otherwise(col("updated_at")).as("updated_at")
+        case c            => col(c)
+      }: _*)
+    PartitionCommit.commit(layout, Some(content), affected.toSeq.map(Seq(_)))
   }
 }
 

@@ -1,8 +1,13 @@
 package graft
 
 import graft.store._
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.types._
+
+import scala.jdk.CollectionConverters._
 
 /** Plan-shape regression guards: the efficiency properties PLANS.md
   * documents must stay true — filters pushed to parquet, dimensions
@@ -489,4 +494,58 @@ class PlanSpec extends SparkSpec {
     assert(partitionings.exists(a => a.contains("user_id#") && bucket.findFirstIn(a).nonEmpty),
       s"no (key, bucket) exchange found:\n${partitionings.mkString("\n")}")
   }
+
+  private object Adaptive extends AdaptiveSparkPlanHelper
+
+  /** The shuffle exchanges in the executed plan of each Parquet write `f`
+    * runs: the adaptive plans' final forms, query stages opened.
+    */
+  private def writeExchanges(f: => Any): Seq[Int] = {
+    val counts = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        Adaptive.collect(qe.executedPlan) { case w: DataWritingCommandExec => w }
+          .foreach(w => counts.add(Adaptive.collect(w.child) { case e: ShuffleExchangeLike => e }.size))
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // the listener bus is asynchronous: settled = 6 x 50 ms with no new write
+    def settle(): Unit = {
+      var (last, stable) = (-1, 0)
+      while (stable < 6) {
+        Thread.sleep(50)
+        if (counts.size == last) stable += 1 else { last = counts.size; stable = 0 }
+      }
+    }
+    try {
+      settle(); counts.clear() // writes made before `f`
+      f
+      settle()
+      counts.asScala.toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  // A ChunkStore write is a probe, then ONE exchange on chunk_index that
+  // carries the merge and the tombstones into the write: the commit's own
+  // repartition on chunk_index must be planned away, and no branch of the
+  // content may plan an exchange of its own.
+  for (write <- Seq("upsertManyTs", "setTs update", "setTs replace", "delete"))
+    test(s"ChunkStore $write: one Exchange in the executed write plan") {
+      import spark.implicits._
+      val st = new ChunkStore(spark, tmpDir("writeplan"),
+        StructType(Seq(StructField("kind", StringType))),
+        StoreConfig(freq = "1h", tz = "UTC", chunkAxis = YearMonthAxis))
+      val t0 = java.time.LocalDateTime.parse("2024-01-01T00:00")
+      def hourly(hours: Int, v: Double) = (0 until hours).map(i => (t0.plusHours(i.toLong), v)).toDF("ts", "value")
+      st.setTs(Map("kind" -> "a"), hourly(24 * 40, 1.0), now = t0)
+      st.setTs(Map("kind" -> "b"), hourly(24, 2.0), now = t0)
+      val now = t0.plusDays(60)
+      val exchanges = writeExchanges(write match {
+        case "upsertManyTs"  => st.upsertManyTs(hourly(48, 3.0).withColumn("kind", org.apache.spark.sql.functions.lit("b")), now)
+        case "setTs update"  => st.setTs(Map("kind" -> "a"), hourly(48, 3.0), update = true, now = now)
+        case "setTs replace" => st.setTs(Map("kind" -> "a"), hourly(48, 3.0), replace = true, now = now)
+        case "delete"        => st.delete(Map("kind" -> "a"), now = now)
+      })
+      assert(exchanges === Seq(1))
+    }
 }

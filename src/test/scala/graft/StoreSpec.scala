@@ -410,6 +410,61 @@ class ChunkStoreSpec extends SparkSpec {
     assert(back === Seq(1.0, 1.0, 9.0, 9.0, 1.0))
   }
 
+  // The reference's set_ts(update=True) is per series: a series whose
+  // batch points miss one of its chunks leaves that chunk alone, even when
+  // another series of the batch rewrites the same chunk partition.
+  test("upsertManyTs re-stamps only the (series, chunk) pairs that get a new point") {
+    val st = newStore(tz = "UTC")
+    val (oct, nov) = (2024 * 12 + 9, 2024 * 12 + 10)
+    st.upsertManyTs(Seq((0, "A", ldt("2024-10-05T00:00"), 1L), (0, "B", ldt("2024-10-05T00:00"), 2L))
+      .toDF("version", "kind", "ts", "value"), now0)
+    val now1 = now0.plusHours(1)
+    st.upsertManyTs(Seq((0, "A", ldt("2024-11-05T00:00"), 3.0), (0, "B", ldt("2024-10-05T01:00"), 4.0),
+      (0, "B", ldt("2024-11-05T00:00"), 5.0)).toDF("version", "kind", "ts", "value"), now1)
+    val listed = Sync.updates(st, now1).collect().map(r => (r.getAs[String]("kind"), r.getAs[Int]("chunk_index")))
+    assert(listed.toSet === Set(("B", oct), ("A", nov), ("B", nov)))
+    val aOct = st.load().filter(col("kind") === "A" && col("chunk_index") === oct)
+      .select("updated_at", "dtype").as[(java.time.LocalDateTime, String)].collect().toSeq
+    assert(aOct === Seq((now0, "bigint")))
+    assert(st.getTs(Map("version" -> 0, "kind" -> "B")).collect().map(_.getDouble(1)).toSeq === Seq(2.0, 4.0, 5.0))
+  }
+
+  test("each write on a store holding data runs at most three jobs") {
+    val st = newStore(tz = "UTC")
+    val k2 = attrs + ("kind" -> "k2")
+    st.setTs(attrs, hourly("2024-01-01T00:00", 24 * 40, _ => Some(1.0)), now = now0) // Jan+Feb
+    st.setTs(k2, hourly("2024-01-01T00:00", 24, _ => Some(2.0)), now = now0)
+    val batch = hourly("2024-01-20T00:00", 24 * 20, _ => Some(3.0))
+      .withColumn("version", lit(0)).withColumn("kind", lit("k1"))
+    val writes = Seq[(String, () => Any)](
+      "upsertManyTs" -> (() => st.upsertManyTs(batch, now0.plusHours(1))),
+      "setTs update" -> (() => st.setTs(k2, hourly("2024-01-01T12:00", 24, _ => Some(4.0)), update = true,
+        now = now0.plusHours(2))),
+      "setTs replace" -> (() => st.setTs(attrs, hourly("2024-02-01T00:00", 24, _ => Some(5.0)), replace = true,
+        now = now0.plusHours(3))),
+      "delete" -> (() => st.delete(Map("kind" -> "k2"), now = now0.plusHours(4))))
+    val jobs = writes.map { case (name, write) => name -> jobsDuring(write()) }
+    assert(jobs.forall(_._2 <= 3), jobs.mkString(", "))
+    assert(st.getTs(attrs).collect().map(_.getDouble(1)).toSeq === Seq.fill(24)(5.0))
+    assert(st.getTs(k2).collect().isEmpty)
+  }
+
+  test("lastUpdatedAt with no filters reads the footers: the aggregate's value and no job") {
+    val st = newStore(tz = "UTC", sync = true)
+    st.setTs(attrs, hourly("2024-01-20T00:00", 24 * 20, _ => Some(1.0)), update = true, now = now0)
+    st.setTs(attrs + ("kind" -> "k2"), hourly("2024-01-01T00:00", 24, _ => Some(2.0)), update = true,
+      now = now0.plusHours(1))
+    st.delete(Map("kind" -> "k1"), now = now0.plusHours(2))
+    assert(st.load().filter(col("is_deleted")).count() === 2)
+    val manifest = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(st.path, "_manifest"))
+    assert(manifest.toArray.exists(_.toString.startsWith("- ")), "the delete retired files still on disk")
+    val aggregate = st.load().agg(max("updated_at")).head().getAs[java.time.LocalDateTime](0)
+    var fromFooters: java.time.LocalDateTime = null
+    assert(jobsDuring { fromFooters = st.lastUpdatedAt() } === 0)
+    assert(fromFooters === aggregate && aggregate === now0.plusHours(2))
+    assert(st.lastUpdatedAt(Map("kind" -> "k2")) === now0.plusHours(1))
+  }
+
   test("replace hard-replaces overlapped chunks, tombstones the rest") {
     val st = newStore(tz = "UTC", axis = YearMonthAxis)
     st.setTs(attrs, hourly("2024-01-01T00:00", 24, i => Some(1.0)), now = now0)  // Jan
@@ -1040,6 +1095,25 @@ class SyncSpec extends SparkSpec {
     Sync.pull(client, server)
     assert(client.getTs(a1).collect().isEmpty)
     assert(client.load().filter(col("is_deleted")).count() === 2)
+  }
+
+  // An upsert merges only the (series, chunk) pairs it has a point for: a
+  // deleted series' tombstone in a chunk partition the batch rewrites, but
+  // gives that series no point in, must survive, or no client hears of the
+  // delete.
+  test("an upsert keeps the tombstone of a deleted series' untouched chunk, and the pull carries it") {
+    val server = syncStore(); val client = syncStore()
+    val (oct, nov) = (ldt("2024-10-05T00:00"), ldt("2024-11-05T00:00"))
+    server.upsertManyTs(Seq((0, "X", oct, 1.0), (0, "Y", oct, 2.0)).toDF("version", "kind", "ts", "value"), t0)
+    Sync.pull(client, server)
+    server.delete(Map("kind" -> "X"), now = t0.plusHours(1))
+    server.upsertManyTs(Seq((0, "X", nov, 3.0), (0, "Y", oct, 2.5)).toDF("version", "kind", "ts", "value"),
+      t0.plusHours(2))
+    Sync.pull(client, server)
+    def live(st: ChunkStore): Set[(String, java.time.LocalDateTime, Double)] =
+      st.yieldManyTs().select("kind", "ts", "value").as[(String, java.time.LocalDateTime, Double)].collect().toSet
+    assert(live(server) === Set(("X", nov, 3.0), ("Y", oct, 2.5)))
+    assert(live(client) === live(server))
   }
 
   test("updates listing is gte-since, ordered, metadata-shaped") {
