@@ -6,7 +6,6 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.io.LocalInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -128,8 +127,11 @@ class ChunkStore(
     !load().filter(keyFilter(attrs) && !col("is_deleted")).isEmpty
 
   /** Write one series under `attrs`. Mirrors `set_ts`
-    * (chunk_timeserie_store.py:309-373): plain insert refuses duplicates
-    * and is forbidden when sync is enabled; `update` merges
+    * (chunk_timeserie_store.py:309-373): plain insert refuses a series
+    * with a live row, and a chunk holding the series' tombstone (the
+    * reference's unique `(keys..., chunk_index)` chunk row; `update`
+    * writes a deleted series again), and is forbidden when sync is
+    * enabled; `update` merges
     * new.combine_first(existing) in each chunk the series gets a new point
     * in, and leaves its other chunks as they are; `replace` hard-replaces
     * those chunks and tombstones the series' other chunks. Returns false
@@ -148,12 +150,12 @@ class ChunkStore(
       throw new IllegalStateException("plain insert is forbidden on a sync-enabled store; use update or replace")
     val newRows = finishRows(WriteRules.withKey(normalized(series.select("ts", "value")), attrs, keySchema), now)
     // the new points' chunks, and this series' stored ones (replace: its
-    // tombstone scope, all rows; insert: the existence refusal, live rows)
-    val mine = keyFilter(attrs) && (if (replace) lit(true) else !col("is_deleted"))
-    val probe = chunks(Some(newRows), Option.when(!update)(load().filter(mine)))
-    if (!probe.exists(_._2)) false // empty / all-null series: skipped
+    // tombstone scope; insert: the existence refusal)
+    val probe = chunks(Some(newRows), Option.when(!update)(load().filter(keyFilter(attrs))))
+    val fresh = probe.collect { case (c, None) => c }
+    if (fresh.isEmpty) false // empty / all-null series: skipped
     else {
-      if (!update && !replace && probe.exists(!_._2))
+      if (!update && !replace && probe.exists { case (c, deleted) => deleted.exists(!_ || fresh(c)) })
         throw new IllegalStateException(s"series already exists for $attrs (IntegrityError parity)")
       if (update || replace) rewrite(probe.map(_._1), Some(newRows), if (replace) keyFilter(attrs) else lit(false), now)
       else PartitionCommit.commit(layout, Some(newRows), Nil)
@@ -163,19 +165,25 @@ class ChunkStore(
 
   /** Bulk insert of many series (reference `set_many_ts`,
     * chunk_timeserie_store.py:418-455): insert-only, forbidden when sync
-    * is enabled, duplicates and null key values refused. `many` carries
-    * the full long form (businessKeys..., ts, value) already unioned —
-    * one write job; the null-key refusal rides the duplicate probe.
+    * is enabled, null key values refused, and the whole batch refused when
+    * a series of it has a live row or its tombstone in a chunk the batch
+    * writes ([[setTs]]'s insert rule). `many` carries the full long form
+    * (businessKeys..., ts, value) already unioned — one write job; the
+    * null-key refusal rides the duplicate probe, a distributed join, so
+    * the batch's series are never collected.
     */
   def setManyTs(
       many: DataFrame,
       now: java.time.LocalDateTime = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)): Unit = WriterLock.withLock(path) {
     if (config.syncEnabled)
       throw new IllegalStateException("set_many_ts is forbidden on a sync-enabled store")
-    val s = normalized(WriteRules.guardKeys(many, keys))
+    val rows = finishRows(normalized(WriteRules.guardKeys(many, keys)), now)
+    val stored = load().select((keys.map(col) :+ col("chunk_index").as("__ci") :+ col("is_deleted")): _*).distinct()
     WriteRules.rethrowNullKey {
-      WriteRules.refuseExisting(s, load().filter(!col("is_deleted")), keys)
-      PartitionCommit.commit(layout, Some(finishRows(s, now)), Nil)
+      if (!rows.select((keys :+ "chunk_index").map(col): _*).distinct().join(stored, keys)
+          .filter(!col("is_deleted") || col("chunk_index") === col("__ci")).isEmpty)
+        throw new IllegalStateException("set_many_ts: some series already exist (IntegrityError parity)")
+      PartitionCommit.commit(layout, Some(rows), Nil)
     }
   }
 
@@ -516,31 +524,24 @@ class ChunkStore(
       .select(schema.fieldNames.map(col): _*)
   }
 
-  /** The pre-write probe: the distinct `chunk_index` of the rows of
-    * `fresh` (tagged true) and of `stored` (tagged false), in ONE job — a
-    * per-partition set fold with no exchange, the shape of [[getTs]]'s
-    * dtype probe (a `distinct().collect()` plans two or three AQE jobs).
-    * A batch's in-plan null-key guard fails this job first, as the
-    * contract's IllegalArgumentException.
+  /** The pre-write [[WriteRules.probe]]: the distinct `chunk_index` of
+    * the rows of `fresh` (with None) and of `stored` (with whether the row
+    * is a tombstone), in ONE job.
     */
-  private def chunks(fresh: Option[DataFrame], stored: Option[DataFrame]): Set[(Int, Boolean)] =
-    WriteRules.rethrowNullKey((fresh.map(_.select(col("chunk_index"), lit(true))) ++
-      stored.map(_.select(col("chunk_index"), lit(false)))).reduce(_ unionAll _)
-      .rdd.aggregate(Set.empty[(Int, Boolean)])((s, r) => s + (r.getInt(0) -> r.getBoolean(1)), _ ++ _))
+  private def chunks(fresh: Option[DataFrame], stored: Option[DataFrame]): Set[(Int, Option[Boolean])] =
+    WriteRules.probe((fresh.map(_.select(col("chunk_index"), lit(null).cast(BooleanType))) ++
+      stored.map(_.select(col("chunk_index"), col("is_deleted")))).toSeq: _*)
+      .map(r => r.getInt(0) -> Option.unless(r.isNullAt(1))(r.getBoolean(1)))
 
   /** The one write body of update, upsert, replace and delete: one commit
-    * of the `affected` chunk partitions, whose stored rows, unioned with
-    * the `fresh` rows, cross ONE exchange on `chunk_index` — the commit's
-    * own repartition on it is then already satisfied and planned away, so
-    * the rewrite is a shuffle-map job and the write job.
-    * One window per (chunk_index, keys...) group, in the write's sort
-    * order, decides each row (filtered branches would each push their
-    * filter below the exchange and plan an exchange of their own):
+    * of the `affected` chunk partitions, whose stored rows and the `fresh`
+    * rows go through [[WriteRules.merge]], exchanged on `chunk_index` and
+    * grouped per (chunk_index, keys...) in the write's sort order, so the
+    * rewrite is a shuffle-map job and the write job. Per group:
     *  - a group holding a fresh row keeps one row per `ts`, the fresh one
-    *    where both exist (`combine_first`, reference
-    *    `_update_chunk_with_existing`, chunk_timeserie_store.py:782-813,
-    *    per series), drops its tombstones and its stored rows `retire`
-    *    selects (replace), and takes `now` and the fresh rows' dtype;
+    *    where both exist (per series, as the reference's `set_ts`), drops
+    *    its tombstones and its stored rows `retire` selects (replace), and
+    *    takes `now` and the fresh rows' dtype;
     *  - a group of stored rows `retire` selects collapses to one tombstone
     *    (reference EMPTY_DATA, chunk_timeserie_store.py:27) stamped `now`,
     *    or without `keepTracking` is dropped;
@@ -548,22 +549,14 @@ class ChunkStore(
     */
   private def rewrite(affected: Set[Int], fresh: Option[DataFrame], retire: Column,
       now: java.time.LocalDateTime, keepTracking: Boolean = true): Unit = {
-    val stored = load().filter(col("chunk_index").isin(affected.toSeq: _*)).withColumn("__new", lit(false))
-    val rows = fresh.fold(stored)(_.withColumn("__new", lit(true)).unionByName(stored))
-    val group = Window.partitionBy((col("chunk_index") +: keys.map(col)): _*).orderBy(col("ts"), col("__new").desc)
-    val whole = group.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val stored = load().filter(col("chunk_index").isin(affected.toSeq: _*))
     val (isNew, isFresh) = (col("__new"), col("__fresh"))
     val retired = coalesce(retire, lit(false))
     val tomb = !isFresh && retired
-    val keep = when(isFresh, !coalesce(col("__prevTs") === col("ts"), lit(false)) &&
-        (isNew || !retired && !col("is_deleted") && col("ts").isNotNull))
+    val keep = when(isFresh, !col("__dup") && (isNew || !retired && !col("is_deleted") && col("ts").isNotNull))
       .otherwise(!tomb || lit(keepTracking) && col("__first"))
-    val content = rows.repartition(col("chunk_index"))
-      .withColumns(Map(
-        "__fresh"  -> max(isNew).over(whole),
-        "__dtype"  -> max(when(isNew, col("dtype"))).over(whole),
-        "__first"  -> (row_number().over(group) === 1),
-        "__prevTs" -> lag(col("ts"), 1).over(group)))
+    val content = WriteRules.merge(fresh, stored, Seq(col("chunk_index")), col("chunk_index") +: keys.map(col),
+        Map("__dtype" -> max(when(isNew, col("dtype")))))
       .filter(keep)
       .select(schema.fieldNames.map {
         case c @ ("ts" | "value") => when(!tomb, col(c)).as(c)

@@ -86,7 +86,7 @@ private[graft] object PartitionCommit {
     * its column's type, then named and escaped as Spark's writer names it,
     * so a value of any type finds the directory its rows were written to.
     */
-  private def partitionDir(layout: Layout, values: Seq[Any]): String = {
+  def partitionDir(layout: Layout, values: Seq[Any]): String = {
     val tz = Some(SQLConf.get.sessionLocalTimeZone)
     layout.partitionBy.zip(values).map { case (c, v) =>
       val text = Cast(Cast(Literal(v), layout.schema(c).dataType, tz), StringType, tz).eval()
@@ -98,6 +98,11 @@ private[graft] object PartitionCommit {
     * root: what [[load]] scans.
     */
   def liveFiles(path: String): Seq[String] = current(path).live
+
+  /** The partition directories holding a live file, from the manifest:
+    * a [[partitionDir]] among them has content.
+    */
+  def liveDirs(path: String): Set[String] = liveFiles(path).map(partitionOf).toSet
 
   /** The store content made of `files`, a generation's [[liveFiles]]
     * (none: an empty frame with `schema`). The scan's file index takes the
@@ -147,8 +152,8 @@ private[graft] object PartitionCommit {
     * the new `_manifest` (`_manifest.tmp`, then an atomic rename over the
     * old one). Only then delete the files the previous manifest retired,
     * partition directories left empty and any `_txn-*` left over. A
-    * failure before the publish deletes only this commit's `_txn`
-    * directory; moved files no manifest lists are never read.
+    * failure before the publish deletes this commit's `_txn` directory and
+    * the files it moved, so the store is left as it was.
     */
   def commit(layout: Layout, content: Option[DataFrame], replaced: => Seq[Seq[Any]]): Unit = {
     val root = new File(layout.path)
@@ -168,23 +173,27 @@ private[graft] object PartitionCommit {
       val (retired, kept) = was.live.partition(f => out(partitionOf(f)))
       if (fresh.nonEmpty || retired.nonEmpty) {
         if (!new File(root, ManifestName).exists()) publish(root, was)
-        for (d <- fresh.map(partitionOf).distinct; f <- new File(txn, d).listFiles()) // with their checksums
-          Files.move(f.toPath, Files.createDirectories(new File(root, d).toPath).resolve(f.getName))
-        publish(root, Manifest(kept ++ fresh, retired))
-        was.retired.foreach { f =>
-          val file = new File(root, f)
-          file.delete(); checksum(file).delete()
-          // a directory delete fails while it holds anything: this drops the
-          // partition directories the retired files leave empty, innermost first
-          Iterator.iterate(file.getParentFile)(_.getParentFile).takeWhile(_ != root).forall(_.delete())
-        }
+        try {
+          for (d <- fresh.map(partitionOf).distinct; f <- new File(txn, d).listFiles()) // with their checksums
+            Files.move(f.toPath, Files.createDirectories(new File(root, d).toPath).resolve(f.getName))
+          publish(root, Manifest(kept ++ fresh, retired))
+        } catch { case e: Throwable => fresh.foreach(remove(root, _)); throw e }
+        was.retired.foreach(remove(root, _))
         Option(root.listFiles()).toSeq.flatten.filter(_.getName.startsWith("_txn-")).foreach(deleteQuietly)
       }
     } finally deleteQuietly(txn)
   }
 
-  /** The checksum the local filesystem keeps beside a file it wrote. */
-  private def checksum(f: File): File = new File(f.getParentFile, s".${f.getName}.crc")
+  /** Delete the store-relative data file `f`, the checksum the local
+    * filesystem keeps beside it, and the partition directories it leaves
+    * empty: a directory delete fails while it holds anything, so this
+    * stops at the first directory still in use, innermost first.
+    */
+  private def remove(root: File, f: String): Unit = {
+    val file = new File(root, f)
+    file.delete(); new File(file.getParentFile, s".${file.getName}.crc").delete()
+    Iterator.iterate(file.getParentFile)(_.getParentFile).takeWhile(_ != root).forall(_.delete()): Unit
+  }
 
   /** Replace the manifest in one atomic rename: a reader sees the old
     * generation or the new one, never a partial list.

@@ -1,7 +1,6 @@
 package graft.store
 
-import graft.ts.Combine
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -23,13 +22,14 @@ import WriteRules.{keyFilter, requireFullKey}
   * Every write is one [[PartitionCommit]], the commit of every store: the
   * content is written as fresh files, then one atomic manifest swap makes
   * them live and retires the replaced series' old files. A read sees one
-  * commit, and a frame stays valid through one later commit. Each mode
-  * costs the fewest jobs it allows: the write job carries each
-  * observation, and only a plain insert and an existing-store `setManyTs`
-  * probe before writing. Every mutator runs under the store's
-  * [[WriterLock]], as ChunkStore's do: the exists-probe + combine-first +
-  * commit in `setTs` is a read-modify-write exactly like the reference's
-  * locked upsert.
+  * commit, and a frame stays valid through one later commit. `setTs` is
+  * `setManyTs` of one series through one write body ([[write]]): which
+  * series exist comes from the manifest's live directories, so only an
+  * insert that could clash probes before writing, and an update is one
+  * merge, a shuffle-map job and the write job. Every mutator runs under
+  * the store's [[WriterLock]], as ChunkStore's do: an update's merge +
+  * commit is a read-modify-write exactly like the reference's locked
+  * upsert.
   *
   * Error contract mirrors the reference's ValueError surface
   * (timeserie_store.py:118-141, tests_timeseries_store.py:86-133):
@@ -67,7 +67,8 @@ class TimeseriesStore(
     * `replace` swaps the series wholesale, neither flag over an existing
     * series is refused (ValueError parity → IllegalArgumentException).
     * An empty / all-null series is skipped; returns false (the reference
-    * logs and returns without writing): stored rows stay as they were.
+    * logs and returns without writing): stored rows stay as they were, and
+    * nothing is committed.
     */
   def setTs(
       attrs: Map[String, Any],
@@ -77,50 +78,9 @@ class TimeseriesStore(
     if (update && replace)
       throw new IllegalArgumentException("update and replace are mutually exclusive")
     requireFullKey(attrs, keys)
-    val s = WriteRules.points(series.select("ts", "value"))
-    // the input-side emptiness check rides the write job as an observation
-    val rows = org.apache.spark.sql.Observation()
-    val counted = s.observe(rows, count(lit(1)).as("n"))
-    def wrote = Option(rows.get("n")).exists(_.asInstanceOf[Long] > 0L)
-    if (update || replace) {
-      // no pre-write probe: `update` is new.combine_first(existing), the
-      // identity when the series is absent; all-null input rewrites the
-      // series as it was. `replace` replaces the series only when the
-      // write job saw a row — empty input writes and replaces nothing, the
-      // reference's empty-series skip.
-      val content = if (replace) counted
-        else Combine.combineFirst(Seq(counted, load().filter(keyFilter(attrs)).select("ts", "value")), Nil)
-      PartitionCommit.commit(layout, Some(attach(attrs, content)), if (update || wrote) Seq(keys.map(attrs)) else Nil)
-      wrote
-    } else {
-      // Plain insert: ONE probe job answers both pre-write questions —
-      // "did any input row survive normalization?" and "does this key
-      // already exist?" — where an s.isEmpty + exists() pair costs two
-      // scheduler round-trips (the r12/r13 store-write job-floor
-      // finding). Each union branch contributes at most one marker row;
-      // the input side is checked FIRST so an empty series still skips
-      // quietly even when the key exists (reference ordering: the
-      // empty-skip precedes the exists refusal). The refusal must run
-      // BEFORE the write (an insert beside the existing series would
-      // duplicate it). A store with no series skips the exists side.
-      val sProbe = s.limit(1).select(lit("s").as("side"))
-      val probe = (if (PartitionCommit.liveFiles(path).nonEmpty)
-          sProbe.unionAll(load().filter(keyFilter(attrs)).limit(1).select(lit("e").as("side")))
-        else sProbe)
-        .collect().map(_.getString(0)).toSet
-      if (!probe("s")) false
-      else if (probe("e"))
-        throw new IllegalArgumentException(
-          s"Trying save over existing ts without update or replace option: $attrs")
-      else {
-        PartitionCommit.commit(layout, Some(attach(attrs, s)), Nil)
-        true
-      }
-    }
+    write(WriteRules.withKey(WriteRules.points(series.select("ts", "value")), attrs, keySchema), Some(attrs),
+      update, replace)
   }
-
-  private def attach(attrs: Map[String, Any], content: DataFrame): DataFrame =
-    WriteRules.withKey(content, attrs, keySchema).select(schema.fieldNames.map(col): _*)
 
   /** Bulk insert of many series in ONE write — the batch analogue
     * of [[setTs]], mirroring the chunked store's `set_many_ts` contract
@@ -132,32 +92,62 @@ class TimeseriesStore(
     * skips it).
     *
     * `many` is long form `(keys..., ts, value)`. Where N sequential
-    * [[setTs]] calls run N parquet writes (and N existence probes),
-    * this plans ONE commit that lands every new series directory in a
-    * single write job — the shape that matters when backfilling millions
-    * of series.
+    * [[setTs]] calls run N parquet writes, this plans ONE commit that
+    * lands every new series directory in a single write job — the shape
+    * that matters when backfilling millions of series.
     */
   def setManyTs(many: DataFrame): Unit = WriterLock.withLock(path) {
     // Key columns are coerced to the store schema (setTs parity):
     // mismatched key dtypes would write parquet with wrong physical types
     // that the schema'd reads cannot decode.
-    val s = WriteRules.points(WriteRules.guardKeys(many, keys).select(
-      (keys.map(k => col(k).cast(keySchema(k).dataType).as(k)) :+ col("ts") :+ col("value")): _*))
-    // EXISTING STORE: the duplicate probe must run before the write (an
-    // insert beside a clashing series would duplicate it); the null-key
-    // guard and the surviving-row count ride it, and an empty batch stops
-    // there. FRESH STORE (first backfill): no duplicate is possible, so the
-    // guard rides the write job; an empty batch writes no file and
-    // publishes nothing — the reference's empty-series skip.
-    val rows = org.apache.spark.sql.Observation()
-    val counted = s.observe(rows, count(lit(1)).as("n"))
-    val existing = PartitionCommit.liveFiles(path).nonEmpty
-    WriteRules.rethrowNullKey {
-      if (existing) WriteRules.refuseExisting(counted, load(), keys)
-      if (!existing || Option(rows.get("n")).exists(_.asInstanceOf[Long] > 0L))
-        PartitionCommit.commit(layout, Some(counted), Nil)
-    }
+    write(WriteRules.points(WriteRules.guardKeys(many, keys).select(
+      (keys.map(k => col(k).cast(keySchema(k).dataType).as(k)) :+ col("ts") :+ col("value")): _*)), None,
+      update = false, replace = false): Unit
   }
+
+  /** The one write body: the normalized `fresh` rows `(keys..., ts,
+    * value)` of the one series `attrs` names, or of a batch (`attrs`
+    * None), in one commit. Whether a series exists is whether its
+    * partition directory is live in the manifest: no job.
+    *  - Insert: when a series of the input may clash (the one series' own
+    *    directory is live, or any is for a batch), ONE [[WriteRules.probe]]
+    *    of the input's key tuples runs first. No tuple: the input is empty
+    *    and skipped, before any refusal (the reference's order). A live
+    *    tuple refuses the input. Otherwise the rows are written as they
+    *    are, and a batch's null-key guard rides the probe or the write.
+    *  - Replace: the rows are written, and the series' old files leave
+    *    only when the write job saw a row.
+    *  - Update: the fresh rows and the series' stored rows go through
+    *    [[WriteRules.merge]], exchanged and grouped on the keys, so the
+    *    commit's own repartition and sort are planned away. A group
+    *    without a fresh row writes nothing, so an empty input commits
+    *    nothing.
+    * Returns whether the input held a point.
+    */
+  private def write(fresh: DataFrame, attrs: Option[Map[String, Any]], update: Boolean, replace: Boolean): Boolean =
+    WriteRules.rethrowNullKey {
+      val live = PartitionCommit.liveDirs(path)
+      def isLive(tuple: Seq[Any]) = live(PartitionCommit.partitionDir(layout, tuple))
+      val one = attrs.map(a => keys.map(a))
+      val found = Option.when(!update && !replace && one.fold(live.nonEmpty)(isLive))(
+        WriteRules.probe(fresh.select(keys.map(col): _*)).map(_.toSeq))
+      if (found.exists(_.isEmpty)) false
+      else {
+        if (found.exists(_.exists(isLive)))
+          throw attrs.fold[RuntimeException](new IllegalStateException(
+            "set_many_ts: some series already exist (IntegrityError parity)"))(a => new IllegalArgumentException(
+            s"Trying save over existing ts without update or replace option: $a"))
+        // the input-side emptiness check rides the write job as an observation
+        val rows = org.apache.spark.sql.Observation()
+        val counted = fresh.select(schema.fieldNames.map(col): _*).observe(rows, count(lit(1)).as("n"))
+        def wrote = Option(rows.get("n")).exists(_.asInstanceOf[Long] > 0L)
+        val content = if (!update) counted
+          else WriteRules.merge(Some(counted), load().filter(keyFilter(attrs.get)), keys.map(col), keys.map(col))
+            .filter(col("__fresh") && !col("__dup")).select(schema.fieldNames.map(col): _*)
+        PartitionCommit.commit(layout, Some(content), if ((update || replace) && wrote) one.toSeq else Nil)
+        wrote
+      }
+    }
 
   /** Read series matching (possibly partial) `filters`, Django
     * `__`-lookups accepted — the list form of the reference `get_ts`
@@ -187,8 +177,7 @@ class TimeseriesStore(
     * commit with no content — no rewrite of anything else.
     */
   def clear(filters: Map[String, Any]): Unit = WriterLock.withLock(path) {
-    val victims = load().filter(Lookups.validated(filters, keys))
-      .select(keys.map(col): _*).distinct().collect()
-    PartitionCommit.commit(layout, None, victims.map(_.toSeq).toSeq)
+    val victims = WriteRules.probe(load().filter(Lookups.validated(filters, keys)).select(keys.map(col): _*))
+    PartitionCommit.commit(layout, None, victims.toSeq.map(_.toSeq))
   }
 }

@@ -1,7 +1,7 @@
 package graft.store
 
 import graft.ts.{Combine, Resample}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -23,12 +23,12 @@ import org.apache.spark.sql.types._
   * bucket is computed driver-side (every write path receives the prm as a
   * Scala value), so no hash-expression parity with Catalyst is needed.
   *
-  * Every mutator runs under the store's [[WriterLock]], as ChunkStore's
-  * do: the max-version probe + append in `setLc` is a read-modify-write
-  * exactly like the reference's locked upsert (hostore.py:354-366), and
-  * without exclusion two concurrent versioned writes could claim the same
-  * version number. The lock is reentrant, so `setManyLc` → `setLc` locks
-  * once.
+  * `setLc` is `setManyLc` of one series: one write body, one probe job
+  * and one commit for any number of series. Every mutator runs under the
+  * store's [[WriterLock]], as ChunkStore's do: the probe + commit is a
+  * read-modify-write exactly like the reference's locked upsert
+  * (hostore.py:354-366), and without exclusion two concurrent versioned
+  * writes could claim the same version number.
   */
 class VersionedStore(
     val spark: SparkSession,
@@ -59,27 +59,25 @@ class VersionedStore(
 
   def load(): DataFrame = PartitionCommit.load(spark, path, schema, PartitionCommit.liveFiles(path))
 
-  /** Single-prm scan pruned to the prm's bucket partition. */
-  private def loadPrm(prm: String): DataFrame =
-    load().filter(col("bucket") === bucketOf(prm) && col("prm") === prm)
+  /** The rows of the `prms`, pruned to their bucket partitions. */
+  private def prmsIn(prms: Seq[String]): Column =
+    col("bucket").isin(prms.map(bucketOf).distinct: _*) && col("prm").isin(prms: _*)
 
   /** Row count under filters (reference `Store.count`, hostore.py:39-43) —
     * counts distinct (prm, version) pairs, the analogue of blob rows.
     */
   def count(clientId: Int, prms: Option[Seq[String]] = None): Long = {
     var df = load().filter(col("client_id") === clientId)
-    prms.foreach { ps =>
-      df = df.filter(col("bucket").isin(ps.map(bucketOf).distinct: _*) && col("prm").isin(ps: _*))
-    }
+    prms.foreach(ps => df = df.filter(prmsIn(ps)))
     df.select("prm", "version").distinct().count()
   }
 
-  /** The `update_or_create` match (hostore.py:354): `prm`, `clientId`
-    * and every attribute of `attrs`, a null attribute matching NULL as
-    * Django's `filter(kind=None)` does.
+  /** The `update_or_create` match (hostore.py:354) of the `prms`:
+    * `clientId` and every attribute of `attrs`, a null attribute matching
+    * NULL as Django's `filter(kind=None)` does.
     */
-  private def matching(prm: String, clientId: Int, attrs: Map[String, Any]): Column =
-    attrs.foldLeft(col("prm") === prm && col("client_id") === clientId) {
+  private def matching(prms: Seq[String], clientId: Int, attrs: Map[String, Any]): Column =
+    attrs.foldLeft(prmsIn(prms) && col("client_id") === clientId) {
       case (c, (k, v)) => c && (col(k) <=> lit(v))
     }
 
@@ -93,7 +91,8 @@ class VersionedStore(
     *    `attributesToSet` (:356-363; 'prm' is mandatory in versionning_by);
     *  - `attributesToSet` fills the store's declared `extraSchema` columns
     *    (the reference's subclass business fields).
-    * All-null series are skipped. Returns false when skipped.
+    * All-null series are skipped. Returns false when skipped. It is
+    * [[setManyLc]] of this one series: a probe job, then one commit.
     */
   def setLc(
       prm: String,
@@ -102,47 +101,65 @@ class VersionedStore(
       versioning: Boolean = false,
       now: java.time.LocalDateTime = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC),
       versioningBy: Seq[String] = Seq("prm"),
-      attributesToSet: Map[String, Any] = Map.empty): Boolean = WriterLock.withLock(path) {
+      attributesToSet: Map[String, Any] = Map.empty): Boolean =
+    write(Map(prm -> series), clientId, versioning, now, versioningBy, attributesToSet)(prm)
+
+  /** The one write body of [[setLc]] and [[setManyLc]]: ONE
+    * [[WriteRules.probe]] over the batch's kept points and its prms'
+    * stored rows in scope gives each prm three facts — whether it has a
+    * kept point, whether an `update_or_create` match exists (upsert), and
+    * its max version in the `versioningBy` scope (versioning) — then ONE
+    * commit lands the whole batch: the new entries are added, and the
+    * buckets holding a match of a written prm are rewritten without it.
+    * A prm without a kept point is skipped and keeps its entries. The
+    * batch is atomic, which is stronger than the reference's loop: a
+    * failure anywhere in it writes nothing.
+    */
+  private def write(
+      series: Map[String, DataFrame],
+      clientId: Int,
+      versioning: Boolean,
+      now: java.time.LocalDateTime,
+      versioningBy: Seq[String],
+      attributesToSet: Map[String, Any]): Map[String, Boolean] = WriterLock.withLock(path) {
     require(versioningBy.contains("prm"), "'prm' is mandatory in versioningBy (hostore.py:356)")
     val unknown = attributesToSet.keySet.filterNot(extraKeys.contains)
     require(unknown.isEmpty, s"attributesToSet not in extraSchema: ${unknown.mkString(",")}")
-    val s = WriteRules.points(series.select("ts", "value"))
-    if (s.isEmpty) false
-    else {
-      val version: Int =
-        if (!versioning) 0
-        else {
-          // _filters = prm + (attributes_to_set ∩ versionning_by)
-          val scoped = attributesToSet.filter { case (k, _) => versioningBy.contains(k) }
-          val r = loadPrm(prm).filter(matching(prm, clientId, scoped)).agg(max("version")).head()
-          if (r.isNullAt(0)) 0 else r.getInt(0) + 1
-        }
-      val b = bucketOf(prm)
-      val withExtras = extraKeys.foldLeft(s) { (d, k) =>
-        d.withColumn(k,
-          attributesToSet.get(k).map(v => lit(v)).getOrElse(lit(null))
-            .cast(extraSchema(k).dataType))
-      }
-      val rows = withExtras
-        .withColumn("prm", lit(prm))
-        .withColumn("client_id", lit(clientId))
-        .withColumn("version", lit(version))
-        .withColumn("created_at", lit(now)) // LocalDateTime → NTZ literal, JVM-tz-proof
-        .withColumn("bucket", lit(b))
-        .select(schema.fieldNames.map(col): _*)
-      // upsert: rewrite ONLY this prm's bucket partition — everything in
-      // the bucket minus the update_or_create match, plus the new rows;
-      // otherwise the rows are added and nothing is replaced
-      val upsert = !versioning && exists(prm, clientId, attributesToSet)
-      val content = if (!upsert) rows
-        else load().filter(col("bucket") === b && !matching(prm, clientId, attributesToSet)).unionByName(rows)
-      PartitionCommit.commit(layout, Some(content), if (upsert) Seq(Seq(b)) else Nil)
-      true
+    val points = series.map { case (prm, df) => prm -> WriteRules.points(df.select("ts", "value")) }
+    val prms = series.keys.toSeq
+    // _filters = prm + (attributes_to_set ∩ versionning_by) when versioning
+    val scope = if (versioning) attributesToSet.filter { case (k, _) => versioningBy.contains(k) } else attributesToSet
+    val facts = WriteRules.probe((points.toSeq.map { case (prm, s) =>
+      s.select(lit(prm).as("prm"), lit(true), lit(null).cast(IntegerType))
+    } :+ load().filter(matching(prms, clientId, scope)).select(col("prm"), lit(false), col("version"))): _*)
+    val kept = facts.collect { case Row(prm: String, true, _) => prm }
+    val stored = facts.collect { case Row(prm: String, false, v: Int) => prm -> v }
+    if (kept.nonEmpty) {
+      val matched = if (versioning) Nil else stored.map(_._1).filter(kept).toSeq
+      val next = stored.groupMapReduce(_._1)(_._2 + 1)(math.max)
+      val rows = kept.toSeq.map { prm =>
+        extraKeys.foldLeft(points(prm)) { (d, k) =>
+          d.withColumn(k, lit(attributesToSet.getOrElse(k, null)).cast(extraSchema(k).dataType))
+        }.withColumns(Map(
+          "prm"        -> lit(prm),
+          "client_id"  -> lit(clientId),
+          "version"    -> lit(if (versioning) next.getOrElse(prm, 0) else 0),
+          "created_at" -> lit(now), // LocalDateTime → NTZ literal, JVM-tz-proof
+          "bucket"     -> lit(bucketOf(prm))))
+          .select(schema.fieldNames.map(col): _*)
+      }.reduce(_ unionByName _)
+      // upsert: rewrite ONLY the matched prms' bucket partitions — each
+      // minus the update_or_create matches, plus the new rows
+      val hit = matched.map(bucketOf).distinct
+      val content = if (hit.isEmpty) rows
+        else load().filter(col("bucket").isin(hit: _*) && !matching(matched, clientId, attributesToSet)).unionByName(rows)
+      PartitionCommit.commit(layout, Some(content), hit.map(Seq(_)))
     }
+    prms.map(prm => prm -> kept(prm)).toMap
   }
 
   def exists(prm: String, clientId: Int, attributesToSet: Map[String, Any] = Map.empty): Boolean =
-    !loadPrm(prm).filter(matching(prm, clientId, attributesToSet)).isEmpty
+    !load().filter(matching(Seq(prm), clientId, attributesToSet)).isEmpty
 
   /** Small-file compaction (ChunkStore.compact's sibling): every
     * versioned or first `setLc` adds a file to the prm's bucket, so a
@@ -182,7 +199,7 @@ class VersionedStore(
       customFilters: Map[String, Any] = Map.empty,
       combinedBy: Seq[String] = Seq("prm", "client_id"),
       orderBy: Seq[String] = Seq("-version")): DataFrame =
-    read(col("bucket") === bucketOf(prm) && col("prm") === prm && col("client_id") === clientId,
+    read(prmsIn(Seq(prm)) && col("client_id") === clientId,
       delaySecs, combinedVersions, version, customFilters, combinedBy, orderBy)
       .orderBy("ts")
 
@@ -198,8 +215,7 @@ class VersionedStore(
       customFilters: Map[String, Any] = Map.empty,
       combinedBy: Seq[String] = Seq("prm", "client_id"),
       orderBy: Seq[String] = Seq("-version")): DataFrame =
-    read(col("bucket").isin(prms.map(bucketOf).distinct: _*) &&
-        col("client_id") === clientId && col("prm").isin(prms: _*),
+    read(prmsIn(prms) && col("client_id") === clientId,
       delaySecs, combinedVersions, None, customFilters, combinedBy, orderBy)
 
   private def read(
@@ -225,17 +241,19 @@ class VersionedStore(
     orderBy.map(o => if (o.startsWith("-")) (o.drop(1), false) else (o, true))
 
   /** Bulk `set_lc` over a map of series (reference `set_many_lc`,
-    * hostore.py:372-394 — a loop over set_lc; same per-series semantics).
-    * Returns per-prm write outcomes (false = skipped all-null).
+    * hostore.py:372-394, a loop over set_lc): the same per-series
+    * semantics in one probe job and ONE commit, whatever the number of
+    * series. The batch is atomic, which is stronger than the reference's
+    * loop: a series that fails at run time leaves the store as it was,
+    * where the loop keeps the series before it. Returns per-prm write
+    * outcomes (false = skipped all-null).
     */
   def setManyLc(
       series: Map[String, DataFrame],
       clientId: Int,
       versioning: Boolean = false,
       now: java.time.LocalDateTime = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)): Map[String, Boolean] =
-    WriterLock.withLock(path) { // one lock for the whole batch; inner setLc re-enters
-      series.map { case (prm, df) => prm -> setLc(prm, clientId, df, versioning, now) }
-    }
+    write(series, clientId, versioning, now, Seq("prm"), Map.empty)
 
   /** Per-prm missing periods over the version-combined data in [sd, ed]
     * at `freqSecs` (reference `find_holes`, hostore.py:162-216): absent
@@ -338,11 +356,9 @@ class VersionedStore(
     */
   def exportBlobs(clientId: Int, prms: Option[Seq[String]] = None): DataFrame = {
     var df = load().filter(col("client_id") === clientId)
-    // bucket pruning first, like count(): a prm-list export reads only
-    // the prms' bucket partitions, not every directory of the store
-    prms.foreach(ps => df = df
-      .filter(col("bucket").isin(ps.map(bucketOf).distinct: _*))
-      .filter(col("prm").isin(ps: _*)))
+    // bucket pruning, like count(): a prm-list export reads only the prms'
+    // bucket partitions, not every directory of the store
+    prms.foreach(ps => df = df.filter(prmsIn(ps)))
     val groupCols = Seq("prm", "client_id", "version") ++ extraKeys
     df.groupBy(groupCols.map(col): _*)
       .agg(sort_array(collect_list(struct(col("ts"), col("value")))).as("__pts"))

@@ -1,6 +1,7 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructType, TimestampNTZType}
 
@@ -8,7 +9,9 @@ import org.apache.spark.sql.types.{DoubleType, StructType, TimestampNTZType}
   * the reference applies one set to its three store flavors: points are
   * normalized before they are stored (`_normalize_serie`,
   * chunk_timeserie_store.py:699-743), business keys are unique and NOT
-  * NULL, and a bulk insert refuses series that already exist.
+  * NULL, and a bulk insert refuses series that already exist. Every
+  * write is one pre-write [[probe]] at most, then one commit; a rewrite
+  * is one [[merge]].
   */
 private[graft] object WriteRules {
 
@@ -85,14 +88,42 @@ private[graft] object WriteRules {
   def keyFilter(attrs: Map[String, Any]): Column =
     attrs.map { case (k, v) => col(k) === lit(v) }.reduceOption(_ && _).getOrElse(lit(true))
 
-  /** `set_many_ts` insert-only contract (chunk_timeserie_store.py:418-455):
-    * refuse the whole batch when any of its `keys` tuples is already among
-    * `stored`'s (IntegrityError parity).
+  /** The pre-write probe: the distinct rows of the union of `frames`, in
+    * ONE job — a per-partition set fold with no exchange, the shape of
+    * ChunkStore's dtype probe (a `distinct().collect()` plans two or three
+    * AQE jobs). Each frame selects only the few facts its write needs, so
+    * the set stays metadata-sized. A batch's in-plan [[guardKeys]] guard
+    * fails this job first, as the contract's IllegalArgumentException.
     */
-  def refuseExisting(batch: DataFrame, stored: DataFrame, keys: Seq[String]): Unit = {
-    val dup = batch.select(keys.map(col): _*).distinct()
-      .join(stored.select(keys.map(col): _*).distinct(), keys, "left_semi")
-    if (!dup.isEmpty)
-      throw new IllegalStateException("set_many_ts: some series already exist (IntegrityError parity)")
+  def probe(frames: DataFrame*): Set[Row] =
+    rethrowNullKey(frames.reduce(_ unionAll _).rdd.aggregate(Set.empty[Row])(_ + _, _ ++ _))
+
+  /** The fresh-group merge of every rewrite: the `fresh` rows (tagged
+    * `__new`) and the `stored` ones cross ONE exchange on `exchange`, then
+    * one window per `group`, ordered by (ts, new first), adds
+    *  - `__fresh`: the group holds a fresh row;
+    *  - `__first`: the row is its group's first;
+    *  - `__dup`: the row repeats its predecessor's `ts`, so a group holding
+    *    a fresh row keeps one row per `ts`, the fresh one where both exist,
+    *    by dropping `__dup` rows (`combine_first`, reference
+    *    `_update_chunk_with_existing`, chunk_timeserie_store.py:782-813);
+    *  - each of `whole`'s aggregates, over the whole group.
+    * When the window's partitioning and order are the write's own, the
+    * commit's repartition and sort are planned away, so the rewrite is a
+    * shuffle-map job and the write job. Filtered branches would each push
+    * their filter below the exchange and plan an exchange of their own, so
+    * a caller decides each row with one filter over these columns.
+    */
+  def merge(fresh: Option[DataFrame], stored: DataFrame, exchange: Seq[Column], group: Seq[Column],
+      whole: Map[String, Column] = Map.empty): DataFrame = {
+    val tagged = stored.withColumn("__new", lit(false))
+    val rows = fresh.fold(tagged)(_.withColumn("__new", lit(true)).unionByName(tagged))
+    val ordered = Window.partitionBy(group: _*).orderBy(col("ts"), col("__new").desc)
+    val all = ordered.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    rows.repartition(exchange: _*).withColumns(
+      whole.map { case (c, agg) => c -> agg.over(all) } ++ Map(
+        "__fresh" -> max(col("__new")).over(all),
+        "__first" -> (row_number().over(ordered) === 1),
+        "__dup"   -> coalesce(lag(col("ts"), 1).over(ordered) === col("ts"), lit(false))))
   }
 }

@@ -95,7 +95,7 @@ object WriterLock {
 
   /** Run `f` holding the store's writer lock. Reentrant: a thread already
     * holding the lock enters immediately (public mutators compose —
-    * `setManyLc` calls `setLc`, `setTs(replace)` tombstones via `delete`).
+    * `compactIfNeeded` runs `compact`).
     */
   def withLock[T](
       storePath: String,

@@ -548,4 +548,18 @@ class PlanSpec extends SparkSpec {
       })
       assert(exchanges === Seq(1))
     }
+
+  // A TimeseriesStore update is the same merge grouped by the series keys:
+  // the exchange on the keys is the commit's own partitioning.
+  test("TimeseriesStore setTs update: one Exchange in the executed write plan") {
+    import spark.implicits._
+    val st = new TimeseriesStore(spark, tmpDir("writeplan"), StructType(Seq(StructField("kind", StringType))))
+    val t0 = java.time.LocalDateTime.parse("2024-01-01T00:00")
+    def hourly(hours: Int, v: Double) = (0 until hours).map(i => (t0.plusHours(i.toLong), v)).toDF("ts", "value")
+    st.setTs(Map("kind" -> "a"), hourly(48, 1.0))
+    st.setTs(Map("kind" -> "b"), hourly(24, 2.0))
+    assert(writeExchanges(st.setTs(Map("kind" -> "a"), hourly(72, 3.0).filter($"ts" > t0.plusHours(24)),
+      update = true)) === Seq(1))
+    assert(st.getTs(Map("kind" -> "a")).collect().map(_.getDouble(2)).toSeq === Seq.fill(25)(1.0) ++ Seq.fill(47)(3.0))
+  }
 }

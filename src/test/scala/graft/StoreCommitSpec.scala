@@ -164,6 +164,25 @@ class StoreCommitSpec extends SparkSpec {
     assert(strangers(client.path).isEmpty)
   }
 
+  test("a commit whose manifest publish fails deletes the files it moved") {
+    val st = chunkStore()
+    st.setTs(a, hourly("2024-01-15T00:00", 24 * 20, 1.0), update = true, now = now0) // Jan+Feb
+    val files = snapshot(st.path)
+    val rows = st.load().collect().toSet
+    // a directory where the publish writes its temporary manifest
+    val planted = new java.io.File(st.path, "_manifest.tmp")
+    assert(planted.mkdir())
+    intercept[java.io.IOException](st.setTs(Map("version" -> 0, "kind" -> "b"), hourly("2024-03-01T00:00", 3, 2.0),
+      now = now0.plusHours(1)))
+    assert(snapshot(st.path) === files)
+    assert(st.load().collect().toSet === rows)
+    assert(!new java.io.File(st.path, s"chunk_index=${2024 * 12 + 2}").exists())
+    planted.delete()
+    assert(st.setTs(Map("version" -> 0, "kind" -> "b"), hourly("2024-03-01T00:00", 3, 2.0), now = now0.plusHours(1)))
+    val onDisk = snapshot(st.path).map(_._1).filter(_.endsWith(".parquet"))
+    assert(onDisk === PartitionCommit.liveFiles(st.path).toSet)
+  }
+
   test("a failed commit on a bucket-partitioned VersionedStore changes nothing") {
     val dir = tmpDir("commit")
     val st = new VersionedStore(spark, dir, numBuckets = 8)

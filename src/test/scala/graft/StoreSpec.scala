@@ -400,6 +400,27 @@ class ChunkStoreSpec extends SparkSpec {
     assertThrows[IllegalStateException](st.setTs(attrs, s, now = now0))
   }
 
+  // The reference's chunk row is unique on (keys..., chunk_index), so a
+  // plain insert into a chunk holding the series' tombstone is an
+  // IntegrityError; update is the way to write a deleted series again.
+  test("plain insert into a chunk holding the series' tombstone raises; update writes it again") {
+    val st = newStore(tz = "UTC")
+    st.setTs(attrs, hourly("2024-01-01T00:00", 3, _ => Some(1.0)), now = now0)
+    st.delete(Map("kind" -> "k1"), now = now0.plusHours(1))
+    val before = st.load().collect().toSet
+    assertThrows[IllegalStateException](st.setTs(attrs, hourly("2024-01-10T00:00", 3, _ => Some(2.0)),
+      now = now0.plusHours(2)))
+    val batch = hourly("2024-01-10T00:00", 3, _ => Some(2.0)).withColumn("version", lit(0)).withColumn("kind", lit("k1"))
+    assertThrows[IllegalStateException](st.setManyTs(batch, now = now0.plusHours(2)))
+    assert(st.load().collect().toSet === before)
+    // another month holds no tombstone of the series: a plain insert lands
+    assert(st.setTs(attrs, hourly("2024-02-10T00:00", 3, _ => Some(3.0)), now = now0.plusHours(3)))
+    assert(st.setTs(attrs, hourly("2024-01-10T00:00", 3, _ => Some(2.0)), update = true, now = now0.plusHours(4)))
+    assert(st.getTs(attrs).collect().map(_.getDouble(1)).toSeq === Seq(2.0, 2.0, 2.0, 3.0, 3.0, 3.0))
+    val jan = Sync.updates(st, now0.plusHours(4)).collect().map(r => (r.getAs[Int]("chunk_index"), r.getAs[Boolean]("is_deleted")))
+    assert(jan.toSeq === Seq((2024 * 12, false)))
+  }
+
   test("update merges new.combine_first(existing) per chunk") {
     val st = newStore(tz = "UTC")
     st.setTs(attrs, hourly("2024-01-01T00:00", 5, i => Some(1.0)), now = now0)
@@ -924,6 +945,68 @@ class VersionedStoreSpec extends SparkSpec {
     assert(hs === Set(
       ("p1", t("2024-01-01T00:00"), t("2024-01-01T01:00")), // leading missing slots
       ("p2", t("2024-01-01T00:00"), t("2024-01-01T09:00")))) // absent → whole range
+  }
+
+  // One write body: a batch is one probe and one commit whatever its size,
+  // so its files all come from one write job.
+  test("setManyLc of 1 and of 20 series: the same jobs, at most three, and one commit each") {
+    val dir = tmpDir("vstore")
+    val st = new VersionedStore(spark, dir, numBuckets = 8)
+    val many = (1 to 20).map("p" + _)
+    def batch(prms: Seq[String], v: Double) = prms.map(_ -> series("2024-01-01T00:00", 3, v)).toMap
+    st.setManyLc(batch(many, 1.0), 1)
+    val jobId = """part-\d+-([0-9a-f-]{36})""".r
+    // jobs of `write`, and the write jobs of the live files it added
+    def commits(write: => Any): (Int, Set[String]) = {
+      val before = PartitionCommit.liveFiles(dir).toSet
+      val jobs = jobsDuring(write)
+      (jobs, (PartitionCommit.liveFiles(dir).toSet -- before).map(jobId.findFirstMatchIn(_).get.group(1)))
+    }
+    for (versioning <- Seq(false, true)) {
+      val one = commits(st.setManyLc(batch(Seq("p1"), 2.0), 1, versioning))
+      val twenty = commits(st.setManyLc(batch(many, 3.0), 1, versioning))
+      assert(one._1 === twenty._1 && twenty._1 <= 3, s"versioning=$versioning: $one, $twenty")
+      assert(one._2.size === 1 && twenty._2.size === 1, s"versioning=$versioning: $one, $twenty")
+    }
+    assert(st.getManyLc(many, 1).collect().map(_.getAs[Double]("value")).toSet === Set(3.0))
+    assert(st.count(1) === 41) // p1: versions 0-2; every other prm: 0-1
+    val setLc = Seq(
+      jobsDuring(st.setLc("p1", 1, series("2024-01-01T00:00", 3, 4.0))),
+      jobsDuring(st.setLc("p1", 1, series("2024-01-01T00:00", 3, 5.0), versioning = true)),
+      jobsDuring(st.setLc("new", 1, series("2024-01-01T00:00", 3, 6.0))))
+    assert(setLc.forall(_ <= 3), setLc)
+  }
+
+  test("a setManyLc batch whose last series fails at run time leaves the store unchanged") {
+    val dir = tmpDir("vstore")
+    val st = new VersionedStore(spark, dir, numBuckets = 8)
+    val prms = (1 to 5).map("p" + _)
+    st.setManyLc(prms.map(_ -> series("2024-01-01T00:00", 3, 1.0)).toMap, 1)
+    val (rows, files) = (st.load().collect().toSet, liveFiles(dir))
+    // the series a loop over the map reaches last: it writes every other one first
+    val last = prms.map(_ -> 0).toMap.keys.last
+    // a range source keeps the failure at run time (the optimizer would fold a local relation)
+    val failing = spark.range(3).select(
+      (lit(ldt("2024-01-01T00:00")) + make_dt_interval(lit(0), col("id").cast("int"))).cast(TimestampNTZType).as("ts"),
+      when(col("id") === 2, raise_error(lit("injected failure"))).otherwise(lit(9.0)).as("value"))
+    val batch = prms.map(p => p -> (if (p == last) failing else series("2024-01-01T00:00", 3, 9.0))).toMap
+    val e = intercept[Exception](st.setManyLc(batch, 1, versioning = true))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("injected failure")))
+    assert(st.load().collect().toSet === rows)
+    assert(liveFiles(dir) === files)
+  }
+
+  test("a versioned setManyLc gives each prm its own max version + 1 in its client's scope") {
+    val st = new VersionedStore(spark, tmpDir("vstore"), numBuckets = 8)
+    def put(prm: String, client: Int) = st.setLc(prm, client, series("2024-01-01T00:00", 2, 1.0), versioning = true)
+    put("a", 1); put("a", 1); put("b", 1)
+    put("b", 2); put("b", 2); put("b", 2) // another client's versions are out of scope
+    st.setManyLc(Seq("a", "b", "c").map(_ -> series("2024-01-01T00:00", 2, 2.0)).toMap, 1, versioning = true)
+    val versions = st.load().filter(col("client_id") === 1).select("prm", "version").distinct().collect()
+      .map(r => (r.getString(0), r.getInt(1))).toSet
+    assert(versions === Set(("a", 0), ("a", 1), ("a", 2), ("b", 0), ("b", 1), ("c", 0)))
+    assert(st.getManyLc(Seq("a", "b", "c"), 1).collect().map(_.getAs[Double]("value")).toSet === Set(2.0))
   }
 
   // Reference set_lc versionning_by + attributes_to_set (hostore.py:321-366):
