@@ -96,7 +96,9 @@ object Explain {
       sb.append("```\n")
     }
 
-    // Chunk-store read with time bounds → PartitionFilters on chunk_index.
+    // Chunk-store read with time bounds: the files the driver-side read
+    // opened (chunk partitions outside the slice are never opened), the
+    // filter pushed into their Parquet readers, and the local frame.
     val dir = java.nio.file.Files.createTempDirectory("explain-store").toString + "/store"
     val st = new ChunkStore(spark, dir,
       StructType(Seq(StructField("kind", StringType))),
@@ -107,11 +109,15 @@ object Explain {
       (0 until 24 * 120).map(i => (t0.plusHours(i.toLong), i.toDouble)).toDF("ts", "value"),
       now = t0)
     val z = java.time.ZoneOffset.UTC
-    val read = st.getTs(Map("kind" -> "k"),
-      start = Some(java.time.ZonedDateTime.of(2024, 3, 1, 0, 0, 0, 0, z)),
-      end = Some(java.time.ZonedDateTime.of(2024, 3, 10, 0, 0, 0, 0, z)))
+    val (from, until) = (Some(java.time.ZonedDateTime.of(2024, 3, 1, 0, 0, 0, 0, z)),
+      Some(java.time.ZonedDateTime.of(2024, 3, 10, 0, 0, 0, 0, z)))
+    val live = st.liveRead(Map("kind" -> "k"), from, until)
     sb.append(s"\n## chunkstore_get_ts (partition pruning)\n\n```\n")
-    sb.append(read.queryExecution.explainString(ExplainMode.fromString("formatted")))
+    sb.append(s"== Driver read ==\nLive files: ${graft.store.PartitionCommit.liveFiles(dir).length}\n")
+    sb.append(s"Opened: ${live.files.map(_.replaceAll("/part-.*", "/part-*")).mkString(", ")}\n")
+    sb.append(s"Pushed: ${live.pushed.getOrElse("none")}\n")
+    sb.append(s"Rows returned by the reader: ${live.returned}, kept: ${live.rows.length}\n\n")
+    sb.append(st.getTs(Map("kind" -> "k"), from, until).queryExecution.explainString(ExplainMode.fromString("formatted")))
     sb.append("```\n")
 
     // Sync.pull page: keyset predicate + distributed top-K — the 100 TB

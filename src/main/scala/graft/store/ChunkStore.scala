@@ -5,7 +5,10 @@ import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.io.LocalInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -52,7 +55,8 @@ import WriteRules.{keyFilter, requireFullKey}
   * mutators lock once). Readers take no lock and never block. A read sees
   * one commit, and a frame stays valid through one later commit: each
   * read resolves the manifest once and scans that generation's files,
-  * which stay on disk until the commit after the next one.
+  * which stay on disk until the commit after the next one. A [[getTs]]
+  * frame is materialized at call time and depends on no file.
   */
 class ChunkStore(
     val spark: SparkSession,
@@ -213,25 +217,23 @@ class ChunkStore(
     * time slice, leading/trailing-null trim. Returns the long-form
     * (ts, value) frame ordered by ts.
     *
-    * The returned frame stays lazy, and a sparse one collects in one Spark
-    * job: the slice is one series, so it is sorted in a single partition
-    * (`coalesce(1)` + `sortWithinPartitions`, no range exchange and no
-    * sampling pass over the slice).
+    * The read is materialized at call time, as the reference's `get_ts`
+    * returns an in-memory series: the series' live rows are read on the
+    * driver ([[liveRead]]) and the frame is built over them, so it no
+    * longer depends on the store's files, and no later commit can change
+    * it. A sparse frame is a local relation: its `collect` or `show` runs
+    * no Spark job. [[getManyTs]] and [[yieldManyTs]] remain the
+    * distributed reads.
     *
     * The stored `dtype` is restored on egress (reference
     * chunk_timeserie_store.py:776: blob values are cast back to the chunk
-    * row's recorded dtype) — an int series round-trips as ints. Chunks
-    * written with different dtypes fall back to double (one frame, one
-    * value type), and a pre-dtype chunk (null dtype — historically double
-    * data) counts AS double, so a series mixing legacy and typed chunks
-    * can never be silently truncated by a non-double cast. The dtype comes
-    * from the Parquet footers of the pruned chunk partitions, of the same
-    * generation the scan reads (one manifest read serves both), when they
-    * prove every stored row there double (or there are none): no job, no
-    * cast. Otherwise one probe job runs at call time: a per-partition set
-    * fold over only the `dtype` column of the filtered rows (capped at two
-    * values — the cast decision needs no more), no shuffle. The sparse and
-    * the dense form take this same decision.
+    * row's recorded dtype) — an int series round-trips as ints. The value
+    * type comes from the series' own live rows in the slice: chunks written
+    * with different dtypes fall back to double (one frame, one value type),
+    * and a pre-dtype chunk (null dtype — historically double data) counts
+    * AS double, so a series mixing legacy and typed chunks can never be
+    * silently truncated by a non-double cast. Other series sharing its
+    * files play no part.
     *
     * `dropBoundsNa=false` (reference get_ts's flag,
     * chunk_timeserie_store.py:376,884-885): the reference PERSISTS each
@@ -242,11 +244,12 @@ class ChunkStore(
     * a hole (update=True writes for Jan then Mar — no Feb row exists)
     * comes back with the hole OMITTED, not null-filled. This engine
     * stores sparsely (equivalent under the default) and reconstructs that
-    * form in the plan, on the grid [[yieldManyTs]] uses (see [[series]]):
-    * each surviving chunk explodes its own chunk calendar (restarting at
-    * the chunk's DST-correct local start, exactly the reference's
-    * per-chunk blob grid), sliced, then a left join of the values. No chunk
-    * list reaches the driver, so a dense read is as lazy as a sparse one.
+    * form in the plan, on the grid [[yieldManyTs]] uses (see [[series]]),
+    * over the same driver-read rows: each surviving chunk explodes its own
+    * chunk calendar (restarting at the chunk's DST-correct local start,
+    * exactly the reference's per-chunk blob grid), sliced, then a left
+    * join of the values, sorted in one partition (the slice is one series,
+    * so `ts` is unique: no range exchange). Its jobs run at collect.
     * One documented divergence: a wholly-null INTERIOR month of a single
     * write is stored by the reference as an all-NaN blob (its write-span
     * padding) but dropped here (null rows are never stored), so that
@@ -260,40 +263,40 @@ class ChunkStore(
       start: Option[java.time.ZonedDateTime] = None,
       end: Option[java.time.ZonedDateTime] = None,
       dropBoundsNa: Boolean = true): DataFrame = {
-    requireFullKey(attrs, keys)
-    val files = PartitionCommit.liveFiles(path)
-    val df = live(PartitionCommit.load(spark, path, schema, files), keyFilter(attrs), start, end)
-    val (lo, hi) = (start.map(chunkOf), end.map(chunkOf))
-    // the probe is ONE metadata-sized job (per-partition fold, no shuffle —
-    // a distinct+limit plan costs extra AQE jobs), run only when the
-    // footers leave the dtype open
-    val dts =
-      if (footersProveDouble(files, c => lo.forall(c >= _) && hi.forall(c <= _))) Set.empty[String]
-      else df.select(coalesce(col("dtype"), lit("double"))).rdd.aggregate(Set.empty[String])(
-        (s, r) => if (s.size >= 2) s else s + r.getString(0), _ ++ _)
-    // one series slice: `ts` is unique, so a one-partition sort gives the
-    // same total order as a range-partitioned one, without its exchange
-    val ordered = series(df, start, end, dropBoundsNa).select("ts", "value")
-      .coalesce(1).sortWithinPartitions("ts")
-    if (dts.size == 1 && dts.head != "double")
-      ordered.withColumn("value", col("value").cast(dts.head))
-    else ordered
+    val read = liveRead(attrs, start, end)
+    val at = read.schema.fieldIndex _
+    val dtypes = read.rows.map(r => if (r.isNullAt(at("dtype"))) "double" else r.getUTF8String(at("dtype")).toString)
+    val valueType = dtypes.distinct match {
+      case Seq(t) => DataType.fromDDL(t)
+      case _      => DoubleType
+    }
+    // the sparse frame is the series' points; the dense grid is built over
+    // them and their chunks
+    val columns = (if (dropBoundsNa) Nil else keys :+ "chunk_index") :+ "ts" :+ "value"
+    val fields = columns.map(c => if (c == "value") StructField(c, valueType) else read.schema(c))
+    val project = UnsafeProjection.create(columns.map { c =>
+      val ref = BoundReference(at(c), read.schema(c).dataType, nullable = true)
+      if (c == "value") Cast(ref, valueType) else ref
+    })
+    // ordered by `ts`, which the live filter keeps non-null
+    val local = GraftColumnBridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(StructType(fields)),
+      read.rows.sortBy(_.getLong(at("ts"))).map(project(_).copy())))
+    if (dropBoundsNa) local
+    else series(local, start, end, dropBoundsNa = false).select("ts", "value").coalesce(1).sortWithinPartitions("ts")
   }
 
-  /** Whether the Parquet footers prove every stored row of the live
-    * `files` (store-relative) of the chunk partitions `inRange` selects
-    * double-valued: in each row group of each file there, the `dtype`
-    * column statistics hold only "double" (min = max) or nulls
-    * (tombstones and pre-dtype rows, which read as double). True when
-    * there is no file. The footers cover every row the read's filters can
-    * keep, so the read needs no probe and no cast. A file without a
-    * `dtype` column or its statistics, or one that cannot be read, proves
-    * nothing.
+  /** The live rows of one series in `[start, end]`, read on the driver
+    * from the current generation's files ([[PartitionCommit.read]]) with
+    * the one live filter of every read ([[live]]): files outside the slice's
+    * chunk range are never opened, and the key and `ts` bounds are pushed
+    * into the Parquet readers.
     */
-  private def footersProveDouble(files: Seq[String], inRange: Int => Boolean): Boolean = {
-    val double = org.apache.parquet.io.api.Binary.fromString("double")
-    footerStats(files.filter(f => inRange(PartitionCommit.partitionValue(f, "chunk_index"))), "dtype")
-      .exists(_.forall(st => !st.hasNonNullValue || st.genericGetMin == double && st.genericGetMax == double))
+  private[graft] def liveRead(
+      attrs: Map[String, Any],
+      start: Option[java.time.ZonedDateTime],
+      end: Option[java.time.ZonedDateTime]): PartitionCommit.Read = {
+    requireFullKey(attrs, keys)
+    PartitionCommit.read(spark, layout, PartitionCommit.liveFiles(path), live(keyFilter(attrs), start, end))
   }
 
   /** The `column` statistics of every row group of the live `files`
@@ -345,7 +348,7 @@ class ChunkStore(
       start: Option[java.time.ZonedDateTime] = None,
       end: Option[java.time.ZonedDateTime] = None,
       dropBoundsNa: Boolean = true): DataFrame =
-    series(live(load(), Lookups.validated(filters, keys), start, end), start, end, dropBoundsNa)
+    series(load().filter(live(Lookups.validated(filters, keys), start, end)), start, end, dropBoundsNa)
       .orderBy((keys.map(col) :+ col("ts")): _*)
 
   /** Keyed multi-series read in ONE scan: the sparse [[getTs]] read for a
@@ -363,30 +366,30 @@ class ChunkStore(
       end: Option[java.time.ZonedDateTime] = None): DataFrame = {
     attrsList.foreach(requireFullKey(_, keys))
     val specs = tupleIn(keySchema.fields.toSeq, attrsList.map(a => keys.map(a)))
-    series(live(load(), specs, start, end), start, end, dropBoundsNa = true)
+    series(load().filter(live(specs, start, end)), start, end, dropBoundsNa = true)
       .orderBy((keys.map(col) :+ col("ts")): _*)
   }
 
-  /** The live rows of `stored` that `pred` selects inside `[start, end]` —
-    * the one interval filter of every read (reference `_filter_interval`,
+  /** The live rows that `pred` selects inside `[start, end]` — the one
+    * interval filter of every read (reference `_filter_interval`,
     * chunk_timeserie_store.py:855-861): tombstones and null points out,
     * literal chunk_index bounds prune partitions.
     */
-  private def live(stored: DataFrame, pred: Column, start: Option[java.time.ZonedDateTime],
-      end: Option[java.time.ZonedDateTime]): DataFrame =
-    slice(stored.filter(pred && !col("is_deleted") && col("ts").isNotNull), start, end, pruned = true)
+  private def live(pred: Column, start: Option[java.time.ZonedDateTime],
+      end: Option[java.time.ZonedDateTime]): Column =
+    (Seq(pred, !col("is_deleted"), col("ts").isNotNull) ++ bounds(start, end, pruned = true)).reduce(_ && _)
 
-  /** `df` cut to the inclusive `[start, end]` on `ts`. With `pruned`, each
-    * bound also carries its instant's literal chunk_index bound, a
-    * partition filter.
+  /** The inclusive `[start, end]` bounds on `ts`. With `pruned`, each bound
+    * also carries its instant's literal chunk_index bound, a partition
+    * filter.
     */
-  private def slice(df: DataFrame, start: Option[java.time.ZonedDateTime],
-      end: Option[java.time.ZonedDateTime], pruned: Boolean): DataFrame = {
+  private def bounds(start: Option[java.time.ZonedDateTime], end: Option[java.time.ZonedDateTime],
+      pruned: Boolean): Seq[Column] = {
     def bound(z: java.time.ZonedDateTime, cmp: (Column, Column) => Column): Column = {
       val onTs = cmp(col("ts"), lit(toNtz(z)))
       if (pruned) cmp(col("chunk_index"), lit(chunkOf(z))) && onTs else onTs
     }
-    (start.map(z => bound(z, _ >= _)) ++ end.map(z => bound(z, _ <= _))).foldLeft(df)(_ filter _)
+    start.map(z => bound(z, _ >= _)).toSeq ++ end.map(z => bound(z, _ <= _))
   }
 
   /** The `(keys..., ts, value)` rows of the live slice `df`: its points,
@@ -406,7 +409,7 @@ class ChunkStore(
       val grid = df.select((keys.map(col) :+ col("chunk_index").as("__ci")): _*).distinct()
         .withColumn("ts", explode(chunkCalendar(col("__ci"))))
         .select((keys.map(col) :+ col("ts")): _*)
-      slice(grid, start, end, pruned = false).join(points, keys :+ "ts", "left")
+      bounds(start, end, pruned = false).foldLeft(grid)(_ filter _).join(points, keys :+ "ts", "left")
     }
   }
 

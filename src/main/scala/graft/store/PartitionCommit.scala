@@ -5,14 +5,24 @@ import java.nio.file.{Files, StandardCopyOption}
 
 import org.apache.commons.io.FileUtils.deleteQuietly
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString
-import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.hadoop.mapred.{FileSplit, JobConf}
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+import org.apache.parquet.hadoop.ParquetInputFormat
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{DEFAULT_PARTITION_NAME, getPartitionPathString, unescapePathName}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeSet, BinaryComparison, BindReferences, Cast,
+  EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.internal.{LegacyBehaviorPolicy, SQLConf}
+import org.apache.spark.sql.types.{StringType, StructType, TimestampNTZType}
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -126,6 +136,136 @@ private[graft] object PartitionCommit {
       spark.baseRelationToDataFrame(
         HadoopFsRelation(index, index.partitionSchema, data, None, new ParquetFileFormat, Map.empty)(spark))
     }
+
+  /** What [[read]] found: the store-relative files it opened, the Parquet
+    * filter it pushed into their readers, the rows those readers returned
+    * after row-group and page skipping, and the rows the predicate kept,
+    * over `schema` (the data columns, then the partition columns: the
+    * order [[load]] gives them).
+    */
+  final case class Read(schema: StructType, files: Seq[String], pushed: Option[FilterPredicate],
+      returned: Long, rows: Seq[InternalRow])
+
+  /** The rows of the store content made of `files` (a generation's
+    * [[liveFiles]]) that `pred` keeps, read on the driver by Spark's
+    * vectorized Parquet reader: no Spark job, for a read small enough to
+    * hold in driver memory. `pred` is analyzed once over the layout's
+    * schema and evaluated by Catalyst on every row read. Its conjuncts on
+    * the partition columns alone select the files, so a file they reject is
+    * never opened; its other conjuncts that translate to Parquet filters
+    * are pushed into each reader, so row-group and page statistics skip
+    * rows that cannot match (files are sorted by the layout's sort
+    * columns).
+    */
+  def read(spark: SparkSession, layout: Layout, files: Seq[String], pred: Column): Read = {
+    val (parts, data) = layout.schema.partition(f => layout.partitionBy.contains(f.name)) match {
+      case (p, d) => (StructType(p), StructType(d).toNullable)
+    }
+    val schema = StructType(data ++ parts)
+    val attrs = DataTypeUtils.toAttributes(schema)
+    val partAttrs = attrs.drop(data.length)
+    val cond = GraftColumnBridge.analyzedFilter(spark, pred, LocalRelation(attrs))
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(a, b) => conjuncts(a) ++ conjuncts(b)
+      case c         => Seq(c)
+    }
+    val (onParts, onData) = conjuncts(cond).partition(_.references.subsetOf(AttributeSet(partAttrs)))
+    // a deterministic predicate over bound columns: evaluated row by row
+    def keeps(e: Expression, input: Seq[Attribute]): InternalRow => Boolean = {
+      val bound = BindReferences.bindReference(e, input)
+      r => bound.eval(r) == true
+    }
+    val inRange = keeps(onParts.foldLeft(Literal.TrueLiteral: Expression)(And), partAttrs)
+    val kept = keeps(cond, attrs)
+    val sql = SQLConf.get
+    val filters = new ParquetFilters(new SparkToParquetSchemaConverter(sql).convert(data),
+      sql.parquetFilterPushDownDate, sql.parquetFilterPushDownTimestamp, sql.parquetFilterPushDownDecimal,
+      sql.parquetFilterPushDownStringPredicate, sql.parquetFilterPushDownInFilterThreshold,
+      sql.caseSensitiveAnalysis, RebaseSpec(LegacyBehaviorPolicy.CORRECTED))
+    val pushed = onData.flatMap(e => GraftColumnBridge.toSourceFilter(e).flatMap(filters.createFilter)
+      .orElse(ntzFilter(e))).reduceOption(FilterApi.and)
+    val conf = readConf(spark, sql, data)
+    pushed.foreach(ParquetInputFormat.setFilterPredicate(conf, _))
+    val opened = files.map(f => f -> partitionRow(parts, f)).filter { case (_, p) => inRange(p) }
+    // the store's files are written by this engine: proleptic Gregorian
+    val rebase = LegacyBehaviorPolicy.CORRECTED.toString
+    var returned = 0L
+    val rows = Vector.newBuilder[InternalRow]
+    for ((f, p) <- opened) {
+      val file = new File(layout.path, f)
+      val reader = new VectorizedParquetRecordReader(null, rebase, "UTC", rebase, "UTC", false,
+        sql.parquetVectorizedReaderBatchSize)
+      try {
+        reader.initialize(new FileSplit(new Path(file.toURI), 0, file.length, Array.empty[String]),
+          new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+        reader.initBatch(parts, p)
+        while (reader.nextBatch()) {
+          val batch = reader.resultBatch().rowIterator()
+          while (batch.hasNext) {
+            val r = batch.next()
+            returned += 1
+            if (kept(r)) rows += r.copy() // the batch's rows are reused
+          }
+        }
+      } finally reader.close()
+    }
+    Read(schema, opened.map(_._1), pushed, returned, rows.result())
+  }
+
+  /** A comparison of a TIMESTAMP_NTZ column with a literal as a Parquet
+    * filter on its int64 micros, which Spark's own Parquet filters do not
+    * push.
+    */
+  private def ntzFilter(e: Expression): Option[FilterPredicate] = {
+    def on(a: Attribute, v: Long, cmp: BinaryComparison): Option[FilterPredicate] = {
+      val c = FilterApi.longColumn(a.name)
+      val micros = Long.box(v)
+      Some(cmp match {
+        case _: EqualTo            => FilterApi.eq(c, micros)
+        case _: GreaterThan        => FilterApi.gt(c, micros)
+        case _: GreaterThanOrEqual => FilterApi.gtEq(c, micros)
+        case _: LessThan           => FilterApi.lt(c, micros)
+        case _: LessThanOrEqual    => FilterApi.ltEq(c, micros)
+        case _                     => return None
+      })
+    }
+    e match {
+      case cmp @ BinaryComparison(a: Attribute, Literal(v: Long, TimestampNTZType)) => on(a, v, cmp)
+      case _                                                                     => None
+    }
+  }
+
+  /** The Hadoop configuration of a [[read]] of `data`: the session's,
+    * with the settings Spark's Parquet scan gives its readers, and no
+    * dictionary filtering. A JobConf,
+    * so that each reader's task context uses it without a copy.
+    */
+  private def readConf(spark: SparkSession, sql: SQLConf, data: StructType): JobConf = {
+    val conf = new JobConf(spark.sparkContext.hadoopConfiguration)
+    conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, data.json)
+    // statistics skip row groups and pages; a dictionary filter would first
+    // expand the dictionary of every filtered column, `ts` included, into a
+    // set (milliseconds per file for a month of points)
+    conf.setBoolean(ParquetInputFormat.DICTIONARY_FILTERING_ENABLED, false)
+    Seq(SQLConf.SESSION_LOCAL_TIMEZONE, SQLConf.CASE_SENSITIVE, SQLConf.NESTED_SCHEMA_PRUNING_ENABLED,
+      SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED, SQLConf.LEGACY_PARQUET_NANOS_AS_LONG,
+      SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION).foreach(e => conf.set(e.key, sql.getConfString(e.key)))
+    conf
+  }
+
+  /** The `parts` values of a store-relative file, from its partition
+    * directory names.
+    */
+  private def partitionRow(parts: StructType, file: String): InternalRow = {
+    val named = partitionOf(file).split('/').map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
+    InternalRow.fromSeq(parts.map { f =>
+      val text = unescapePathName(named(f.name))
+      if (text == DEFAULT_PARTITION_NAME) null
+      else Cast(Literal(text), f.dataType, Some(SQLConf.get.sessionLocalTimeZone)).eval()
+    })
+  }
 
   /** The partition value of a store-relative file of a store partitioned
     * by the one integer column `column`.

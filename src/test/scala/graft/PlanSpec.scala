@@ -146,15 +146,25 @@ class PlanSpec extends SparkSpec {
       StructType(Seq(StructField("kind", StringType))),
       StoreConfig(freq = "1h", tz = "UTC", chunkAxis = YearMonthAxis))
     val t0 = java.time.LocalDateTime.parse("2024-01-01T00:00")
-    st.setTs(Map("kind" -> "k"),
-      (0 until 24 * 90).map(i => (t0.plusHours(i.toLong), 1.0)).toDF("ts", "value"), now = t0)
+    // 30 series of 90 days: each month file holds more rows than one
+    // Parquet page (20,000), sorted by (kind, ts)
+    st.setManyTs((0 until 30).flatMap(k => (0 until 24 * 90).map(i => (f"k$k%02d", t0.plusHours(i.toLong), 1.0)))
+      .toDF("kind", "ts", "value"), now = t0)
     val z = java.time.ZoneOffset.UTC
-    val read = st.getTs(Map("kind" -> "k"),
-      start = Some(java.time.ZonedDateTime.of(2024, 2, 1, 0, 0, 0, 0, z)),
-      end = Some(java.time.ZonedDateTime.of(2024, 2, 10, 0, 0, 0, 0, z)))
-    val p = read.queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(p.contains("PartitionFilters") && p.contains("chunk_index"), p.take(800))
-    assert(p.contains("GreaterThanOrEqual(ts") || p.contains("ts#"), p.take(800))
+    val (a, b) = (java.time.ZonedDateTime.of(2024, 2, 1, 0, 0, 0, 0, z), java.time.ZonedDateTime.of(2024, 2, 10, 0, 0, 0, 0, z))
+    val read = st.liveRead(Map("kind" -> "k00"), Some(a), Some(b))
+    // only the February partition is opened
+    assert(read.files.nonEmpty && read.files.forall(_.startsWith(s"chunk_index=${2024 * 12 + 1}/")), read.files)
+    // the key and both ts bounds reach the Parquet reader, whose page
+    // statistics skip the other series' pages
+    val pushed = read.pushed.map(_.toString).getOrElse("")
+    assert(pushed.contains("eq(kind") && pushed.contains("gteq(ts") && pushed.contains("lteq(ts"), pushed)
+    assert(read.rows.length === 9 * 24 + 1)
+    assert(read.returned < 30L * 29 * 24, s"returned ${read.returned} rows")
+    // and the frame is a local relation: no scan left to plan
+    val p = st.getTs(Map("kind" -> "k00"), Some(a), Some(b))
+      .queryExecution.explainString(ExplainMode.fromString("formatted"))
+    assert(p.contains("LocalTableScan") && !p.contains("Scan parquet"), p.take(800))
   }
 
   test("ChunkStore.getTs orders one series without a range exchange, sparse and dense") {
@@ -167,10 +177,12 @@ class PlanSpec extends SparkSpec {
       (0 until 24 * 40).map(i => (t0.plusHours(i.toLong), 1.0)).toDF("ts", "value"), now = t0)
     def planOf(dropBoundsNa: Boolean): String = st.getTs(Map("kind" -> "k"), dropBoundsNa = dropBoundsNa)
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
+    // the sparse rows are sorted on the driver: the plan is the local scan
     val sparse = planOf(dropBoundsNa = true)
-    assert(!sparse.contains("Exchange") && sparse.contains("Coalesce"), sparse.take(1500))
+    assert(sparse.contains("LocalTableScan") && !sparse.contains("Exchange") && !sparse.contains("Sort"),
+      sparse.take(1500))
     val dense = planOf(dropBoundsNa = false)
-    assert(!dense.contains("rangepartitioning"), dense.take(3000))
+    assert(!dense.contains("rangepartitioning") && dense.contains("Coalesce"), dense.take(3000))
   }
 
   // Sync.updates shares its aggregation with the wire listing, which also

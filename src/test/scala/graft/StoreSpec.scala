@@ -129,6 +129,96 @@ class ChunkStoreSpec extends SparkSpec {
     assert(sliced.head.isNullAt(1) && sliced.last.getDouble(1) === 24.0)
   }
 
+  // Differential check of the driver-side read: on a Europe/Paris store
+  // holding every kind of chunk a write leaves (a DST-crossing series, a
+  // soft-deleted one, a replaced one, an updated one, a bigint one, and a
+  // chunk partition of several files), the sparse getTs equals the
+  // distributed getManyTs of the same series, row for row, on every slice.
+  // The dense digests (rows, non-null values, hash of the rows' text) were
+  // recorded from the distributed getTs this read replaced, on the same
+  // fixture.
+  test("driver-read getTs equals getManyTs on every slice; dense rows unchanged") {
+    val st = newStore(tz = "Europe/Paris")
+    def key(k: String) = Map[String, Any]("version" -> 0, "kind" -> k)
+    def hours(from: String, n: Int, v: Int => Double) = hourly(from, n, i => Some(v(i)))
+    val w0 = ldt("2024-06-01T00:00")
+    assert(st.setTs(key("upd"), hours("2024-10-01T00:00", 24 * 5, _ => 1.0), now = w0))
+    assert(st.setTs(key("upd"), hours("2024-10-03T00:00", 24 * 31, _ => 2.0), update = true, now = w0.plusHours(1)))
+    assert(st.setTs(key("rep"), hours("2024-10-10T00:00", 24 * 26, i => i.toDouble), now = w0.plusHours(2)))
+    assert(st.setTs(key("rep"), hours("2024-10-25T00:00", 24 * 3, i => -i.toDouble), replace = true, now = w0.plusHours(3)))
+    assert(st.setTs(key("gone"), hours("2024-10-01T00:00", 24 * 3, _ => 7.0), now = w0.plusHours(4)))
+    st.delete(key("gone"), now = w0.plusHours(5))
+    // two plain inserts after the rewrites: the October partition holds
+    // several files
+    assert(st.setTs(key("dst"), hours("2024-10-20T00:00", 24 * 20, i => i + 0.5), now = w0.plusHours(6)))
+    val t0 = ldt("2024-10-15T00:00")
+    assert(st.setTs(key("big"), (0 until 24 * 31).map(i => (t0.plusHours(i.toLong), i.toLong * 3)).toDF("ts", "value"),
+      now = w0.plusHours(7)))
+    assert(liveFiles(st.path).filter(_._1.endsWith(s"=${2024 * 12 + 9}")).values.head.length >= 2)
+    val z = java.time.ZoneId.of("Europe/Paris")
+    def at(s: String) = Some(java.time.LocalDateTime.parse(s).atZone(z))
+    val slices = Seq(
+      "open-ended"        -> (None, None),
+      "within one chunk"  -> (at("2024-10-21T00:00"), at("2024-10-24T12:00")),
+      "crossing chunks"   -> (at("2024-10-28T00:00"), at("2024-11-03T00:00")),
+      "the DST day"       -> (at("2024-10-27T00:00"), at("2024-10-27T23:00")),
+      "empty"             -> (at("2024-10-22T10:15"), at("2024-10-22T10:45")),
+      "past the last"     -> (at("2025-01-01T00:00"), None),
+      "start only"        -> (at("2024-11-02T00:00"), None),
+      "end only"          -> (None, at("2024-10-05T00:00")))
+    def points(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => (r.getAs[java.time.LocalDateTime]("ts"), r.getAs[Number]("value").doubleValue)).toSeq
+    def digest(rows: Array[org.apache.spark.sql.Row]) =
+      (rows.length, rows.count(!_.isNullAt(1)), rows.map(r => s"${r.get(0)}=${r.get(1)}").mkString(",").hashCode)
+    val dense = for (k <- Seq("upd", "rep", "gone", "dst", "big"); (name, (a, b)) <- slices) yield {
+      val sparse = st.getTs(key(k), a, b).collect()
+      assert(points(sparse) === points(st.getManyTs(Seq(key(k)), a, b).collect()), s"$k $name")
+      (k, name) -> digest(st.getTs(key(k), a, b, dropBoundsNa = false).collect())
+    }
+    val parentDense = Map(
+      ("upd", "open-ended") -> (1465,792,635483143),
+      ("upd", "within one chunk") -> (85,85,1108625323),
+      ("upd", "crossing chunks") -> (145,145,-1367815878),
+      ("upd", "the DST day") -> (25,25,-1885646545),
+      ("upd", "empty") -> (0,0,0),
+      ("upd", "past the last") -> (0,0,0),
+      ("upd", "start only") -> (696,25,-1305267141),
+      ("upd", "end only") -> (97,95,1405973172),
+      ("rep", "open-ended") -> (745,72,-676529265),
+      ("rep", "within one chunk") -> (0,0,0),
+      ("rep", "crossing chunks") -> (96,1,-923587301),
+      ("rep", "the DST day") -> (25,25,1558098903),
+      ("rep", "empty") -> (0,0,0),
+      ("rep", "past the last") -> (0,0,0),
+      ("rep", "start only") -> (0,0,0),
+      ("rep", "end only") -> (0,0,0),
+      ("gone", "open-ended") -> (0,0,0),
+      ("gone", "within one chunk") -> (0,0,0),
+      ("gone", "crossing chunks") -> (0,0,0),
+      ("gone", "the DST day") -> (0,0,0),
+      ("gone", "empty") -> (0,0,0),
+      ("gone", "past the last") -> (0,0,0),
+      ("gone", "start only") -> (0,0,0),
+      ("gone", "end only") -> (0,0,0),
+      ("dst", "open-ended") -> (1465,480,-479456645),
+      ("dst", "within one chunk") -> (85,85,-629313731),
+      ("dst", "crossing chunks") -> (145,145,-1582441538),
+      ("dst", "the DST day") -> (25,25,-2097088226),
+      ("dst", "empty") -> (0,0,0),
+      ("dst", "past the last") -> (0,0,0),
+      ("dst", "start only") -> (696,169,-1608047535),
+      ("dst", "end only") -> (0,0,0),
+      ("big", "open-ended") -> (1465,744,-364311345),
+      ("big", "within one chunk") -> (85,85,1465285661),
+      ("big", "crossing chunks") -> (145,145,-736028468),
+      ("big", "the DST day") -> (25,25,571110830),
+      ("big", "empty") -> (0,0,0),
+      ("big", "past the last") -> (0,0,0),
+      ("big", "start only") -> (696,313,2671117),
+      ("big", "end only") -> (0,0,0))
+    assert(dense.toMap === parentDense)
+  }
+
   test("getTs dense grid is DST-correct in a non-UTC store (chunk starts at local midnight)") {
     val st = newStore(tz = "Europe/Paris")
     val t0 = java.time.LocalDateTime.parse("2024-03-10T00:00") // UTC wall
@@ -187,43 +277,37 @@ class ChunkStoreSpec extends SparkSpec {
     assert(many.map(_.getAs[java.time.LocalDateTime]("ts").getMonthValue).toSet === Set(1, 3))
   }
 
-  test("getTs launches exactly one job (dtype probe); returned frame stays lazy") {
+  test("bigint getTs: no job at call time or at collect; the frame outlives its files") {
     val st = newStore(tz = "UTC")
     val ints = (0 until 48).map(i =>
       (java.time.LocalDateTime.parse("2024-01-10T00:00").plusHours(i.toLong), i.toLong))
       .toDF("ts", "value")
     assert(st.setTs(attrs, ints, now = now0))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      st.getTs(attrs) // NO action on the returned frame
-      // listener events are async — wait until the count is stable
-      var last = -1; var stable = 0
-      while (stable < 6) { // 6 × 50 ms with no new events
-        Thread.sleep(50)
-        if (jobs.get == last) stable += 1 else { last = jobs.get; stable = 0 }
-      }
-      assert(jobs.get === 1,
-        s"getTs must cost exactly the single dtype-probe job, saw ${jobs.get}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    var read: DataFrame = null
+    assert(jobsDuring { read = st.getTs(attrs) } === 0)
+    // materialized at call time: no later commit, nor the loss of every
+    // file, changes the frame
+    st.delete(attrs, keepTracking = false, now = now0.plusHours(1))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(st.path))
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    assert(jobsDuring { rows = read.collect() } === 0)
+    assert(read.schema("value").dataType === LongType)
+    assert(rows.map(_.getLong(1)).toSeq === (0 until 48).map(_.toLong))
+    assert(jobsDuring(read.show(3)) === 0)
   }
 
-  test("double getTs: no job at call time, exactly one at collect") {
+  test("double getTs: no job at call time or at collect") {
     val st = newStore(tz = "UTC")
     assert(st.setTs(attrs, hourly("2024-01-30T00:00", 24 * 5, i => Some(i + 0.5)), now = now0))
     var read: DataFrame = null
-    assert(jobsDuring { read = st.getTs(attrs) } === 0, "the footers prove double: no probe job")
+    assert(jobsDuring { read = st.getTs(attrs) } === 0, "the rows are read on the driver")
     var rows = Array.empty[org.apache.spark.sql.Row]
-    assert(jobsDuring { rows = read.collect() } === 1, "one-partition sort: the collect is the only job")
+    assert(jobsDuring { rows = read.collect() } === 0, "a local frame collects without a job")
     assert(read.schema("value").dataType === DoubleType)
     assert(rows.map(_.getDouble(1)).toSeq === (0 until 24 * 5).map(_ + 0.5))
   }
 
-  test("double getTs over more than 32 live files: no job at call time, one at collect") {
+  test("double getTs over more than 32 live files: no job at call time or at collect") {
     val st = newStore(tz = "UTC")
     // one point a month for 40 months: 40 chunk partitions, one file each —
     // past the 32 root paths Spark would list with a job of its own
@@ -234,8 +318,22 @@ class ChunkStoreSpec extends SparkSpec {
     var read: DataFrame = null
     assert(jobsDuring { read = st.getTs(attrs) } === 0)
     var rows = Array.empty[org.apache.spark.sql.Row]
-    assert(jobsDuring { rows = read.collect() } === 1)
+    assert(jobsDuring { rows = read.collect() } === 0)
     assert(rows.map(_.getDouble(1)).toSeq === (0 until 40).map(_ + 0.5))
+  }
+
+  test("getTs never opens a file outside the slice's chunk range") {
+    val st = newStore(tz = "UTC")
+    assert(st.setTs(attrs, hourly("2024-01-30T00:00", 24 * 5, i => Some(i + 0.5)), now = now0))
+    // the January file, still listed as live, becomes garbage
+    val jan = liveFiles(st.path).collectFirst { case (d, Seq(f)) if d.endsWith(s"=${2024 * 12}") => f }.get
+    java.nio.file.Files.write(java.nio.file.Paths.get(st.path, jan), "not parquet".getBytes)
+    val z = java.time.ZoneOffset.UTC
+    val feb = st.getTs(attrs, start = Some(java.time.ZonedDateTime.of(2024, 2, 1, 0, 0, 0, 0, z)))
+    assert(feb.collect().map(_.getDouble(1)).toSeq === (48 until 24 * 5).map(_ + 0.5))
+    assert(st.liveRead(attrs, Some(java.time.ZonedDateTime.of(2024, 2, 1, 0, 0, 0, 0, z)), None).files
+      .forall(_.startsWith(s"chunk_index=${2024 * 12 + 1}/")))
+    intercept[Exception](st.getTs(attrs))
   }
 
   test("upsertManyTs and setManyTs refuse a null key value; stored rows untouched") {
@@ -259,7 +357,7 @@ class ChunkStoreSpec extends SparkSpec {
     assert(st.setTs(attrs, hourly("2024-01-30T00:00", 24 * 5, i => Some(i + 0.5)), now = now0))
     var read: DataFrame = null
     assert(jobsDuring { read = st.getTs(attrs, dropBoundsNa = false) } === 0,
-      "the footers prove double and the grid is built in the plan: no job")
+      "the rows are read on the driver and the grid is built in the plan: no job")
     var rows = Array.empty[org.apache.spark.sql.Row]
     val atCollect = jobsDuring { rows = read.collect() }
     assert(atCollect <= 3, s"dense collect ran $atCollect jobs")
@@ -274,14 +372,15 @@ class ChunkStoreSpec extends SparkSpec {
     assert(st.setTs(attrs, ints, now = now0))
     val dense = st.getTs(attrs, dropBoundsNa = false)
     assert(dense.schema("value").dataType === LongType)
-    val rows = dense.collect()
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val atCollect = jobsDuring { rows = dense.collect() }
+    assert(atCollect <= 3, s"dense collect ran $atCollect jobs")
     assert(rows.length === 31 * 24)
     assert(rows.filterNot(_.isNullAt(1)).map(_.getLong(1)).toSeq === (0 until 24).map(_.toLong * 3))
   }
 
-  // The footer fast path skips the probe only when every row group of the
-  // pruned partitions holds "double" or null dtypes; anything else must
-  // read exactly what the probe decides.
+  // The value type comes from the series' own live rows: other series
+  // sharing its files, their dtypes and tombstones play no part.
   test("footer dtype: a double and a bigint series in one chunk file each read their own dtype") {
     val st = newStore(tz = "UTC")
     val attrs2 = Map[String, Any]("version" -> 0, "kind" -> "k2")
@@ -290,13 +389,16 @@ class ChunkStoreSpec extends SparkSpec {
     val ints = (0 until 24).map(i => (t0.plusHours(i.toLong), i.toLong * 3)).toDF("ts", "value")
     assert(st.setTs(attrs2, ints, update = true, now = now0)) // rewrites the chunk: one file
     assert(liveFiles(st.path).values.map(_.length).sum === 1)
-    var big: DataFrame = null
-    assert(jobsDuring { big = st.getTs(attrs2) } === 1, "a bigint footer must take the probe")
+    var big, dbl: DataFrame = null
+    var bigRows, dblRows = Array.empty[org.apache.spark.sql.Row]
+    assert(jobsDuring { big = st.getTs(attrs2) } === 0)
+    assert(jobsDuring { bigRows = big.collect() } === 0)
     assert(big.schema("value").dataType === LongType)
-    assert(big.collect().map(_.getLong(1)).toSeq === (0 until 24).map(_.toLong * 3))
-    val dbl = st.getTs(attrs)
+    assert(bigRows.map(_.getLong(1)).toSeq === (0 until 24).map(_.toLong * 3))
+    assert(jobsDuring { dbl = st.getTs(attrs) } === 0, "a double series sharing a file with a bigint one")
+    assert(jobsDuring { dblRows = dbl.collect() } === 0)
     assert(dbl.schema("value").dataType === DoubleType)
-    assert(dbl.collect().map(_.getDouble(1)).toSeq === (0 until 24).map(_ + 0.5))
+    assert(dblRows.map(_.getDouble(1)).toSeq === (0 until 24).map(_ + 0.5))
   }
 
   test("footer dtype: a bigint store holding tombstones reads back bigint") {
@@ -318,7 +420,8 @@ class ChunkStoreSpec extends SparkSpec {
     val fresh = newStore(tz = "UTC")
     var empty: DataFrame = null
     assert(jobsDuring { empty = fresh.getTs(attrs) } === 0)
-    assert(empty.schema("value").dataType === DoubleType && empty.collect().isEmpty)
+    assert(jobsDuring(assert(empty.collect().isEmpty)) === 0)
+    assert(empty.schema("value").dataType === DoubleType)
     val st = newStore(tz = "UTC")
     val t0 = java.time.LocalDateTime.parse("2024-01-10T00:00")
     assert(st.setTs(attrs, (0 until 24).map(i => (t0.plusHours(i.toLong), i.toLong)).toDF("ts", "value"),
@@ -328,8 +431,9 @@ class ChunkStoreSpec extends SparkSpec {
     assert(jobsDuring {
       past = st.getTs(attrs, start = Some(java.time.ZonedDateTime.of(2024, 3, 1, 0, 0, 0, 0, z)),
         end = Some(java.time.ZonedDateTime.of(2024, 3, 31, 0, 0, 0, 0, z)))
-    } === 0, "no file in the slice's chunk range: no probe")
-    assert(past.schema("value").dataType === DoubleType && past.collect().isEmpty)
+    } === 0, "no file in the slice's chunk range is read")
+    assert(jobsDuring(assert(past.collect().isEmpty)) === 0)
+    assert(past.schema("value").dataType === DoubleType)
   }
 
   test("footer dtype: a parquet file written without a dtype column reads back as double") {
