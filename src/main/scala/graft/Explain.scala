@@ -1,6 +1,7 @@
 package graft
 
 import graft.store.{ChunkStore, StoreConfig, YearMonthAxis}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.types._
 
@@ -96,9 +97,10 @@ object Explain {
       sb.append("```\n")
     }
 
-    // Chunk-store read with time bounds: the files the driver-side read
-    // opened (chunk partitions outside the slice are never opened), the
-    // filter pushed into their Parquet readers, and the local frame.
+    // Chunk-store reads with time bounds, getTs then getManyTs of two
+    // series: the files each driver-side read opened (chunk partitions
+    // outside the slice are never opened), the filter pushed into their
+    // Parquet readers, the rows returned and kept, and the local frame.
     val dir = java.nio.file.Files.createTempDirectory("explain-store").toString + "/store"
     val st = new ChunkStore(spark, dir,
       StructType(Seq(StructField("kind", StringType))),
@@ -111,13 +113,21 @@ object Explain {
     val z = java.time.ZoneOffset.UTC
     val (from, until) = (Some(java.time.ZonedDateTime.of(2024, 3, 1, 0, 0, 0, 0, z)),
       Some(java.time.ZonedDateTime.of(2024, 3, 10, 0, 0, 0, 0, z)))
-    val live = st.liveRead(Map("kind" -> "k"), from, until)
+    def driverRead(title: String, specs: Seq[Map[String, Any]], frame: DataFrame): Unit = {
+      val live = st.liveRead(specs, from, until)
+      sb.append(s"== $title ==\nLive files: ${graft.store.PartitionCommit.liveFiles(dir).length}\n")
+      sb.append(s"Opened: ${live.files.map(_.replaceAll("/part-.*", "/part-*")).mkString(", ")}\n")
+      sb.append(s"Pushed: ${live.pushed.getOrElse("none")}\n")
+      sb.append(s"Rows returned by the reader: ${live.returned}, kept: ${live.rows.length}\n\n")
+      sb.append(frame.queryExecution.explainString(ExplainMode.fromString("formatted")))
+    }
     sb.append(s"\n## chunkstore_get_ts (partition pruning)\n\n```\n")
-    sb.append(s"== Driver read ==\nLive files: ${graft.store.PartitionCommit.liveFiles(dir).length}\n")
-    sb.append(s"Opened: ${live.files.map(_.replaceAll("/part-.*", "/part-*")).mkString(", ")}\n")
-    sb.append(s"Pushed: ${live.pushed.getOrElse("none")}\n")
-    sb.append(s"Rows returned by the reader: ${live.returned}, kept: ${live.rows.length}\n\n")
-    sb.append(st.getTs(Map("kind" -> "k"), from, until).queryExecution.explainString(ExplainMode.fromString("formatted")))
+    driverRead("Driver read", Seq(Map("kind" -> "k")), st.getTs(Map("kind" -> "k"), from, until))
+    st.setTs(Map("kind" -> "k2"),
+      (0 until 24 * 120).map(i => (t0.plusHours(i.toLong), -i.toDouble)).toDF("ts", "value"),
+      now = t0)
+    val specs = Seq(Map[String, Any]("kind" -> "k"), Map[String, Any]("kind" -> "k2"))
+    driverRead("getManyTs driver read (2 specs)", specs, st.getManyTs(specs, from, until))
     sb.append("```\n")
 
     // Sync.pull page: keyset predicate + distributed top-K — the 100 TB

@@ -6,7 +6,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.io.LocalInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Cast, InterpretedOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
@@ -56,7 +56,8 @@ import WriteRules.{keyFilter, requireFullKey}
   * one commit, and a frame stays valid through one later commit: each
   * read resolves the manifest once and scans that generation's files,
   * which stay on disk until the commit after the next one. A [[getTs]]
-  * frame is materialized at call time and depends on no file.
+  * or [[getManyTs]] frame is materialized at call time and depends on no
+  * file.
   */
 class ChunkStore(
     val spark: SparkSession,
@@ -217,13 +218,13 @@ class ChunkStore(
     * time slice, leading/trailing-null trim. Returns the long-form
     * (ts, value) frame ordered by ts.
     *
-    * The read is materialized at call time, as the reference's `get_ts`
-    * returns an in-memory series: the series' live rows are read on the
-    * driver ([[liveRead]]) and the frame is built over them, so it no
-    * longer depends on the store's files, and no later commit can change
-    * it. A sparse frame is a local relation: its `collect` or `show` runs
-    * no Spark job. [[getManyTs]] and [[yieldManyTs]] remain the
-    * distributed reads.
+    * The one-spec case of [[getManyTs]]'s driver read ([[liveRead]],
+    * [[local]]), plus the dtype cast and the dense grid: the frame is
+    * materialized at call time, as the reference's `get_ts` returns an
+    * in-memory series, so it depends on no file and no later commit can
+    * change it. A sparse frame is a local relation: its `collect` or
+    * `show` runs no Spark job. [[yieldManyTs]] remains the distributed
+    * read.
     *
     * The stored `dtype` is restored on egress (reference
     * chunk_timeserie_store.py:776: blob values are cast back to the chunk
@@ -263,40 +264,77 @@ class ChunkStore(
       start: Option[java.time.ZonedDateTime] = None,
       end: Option[java.time.ZonedDateTime] = None,
       dropBoundsNa: Boolean = true): DataFrame = {
-    val read = liveRead(attrs, start, end)
-    val at = read.schema.fieldIndex _
-    val dtypes = read.rows.map(r => if (r.isNullAt(at("dtype"))) "double" else r.getUTF8String(at("dtype")).toString)
-    val valueType = dtypes.distinct match {
+    val read = liveRead(Seq(attrs), start, end)
+    val dtype = read.schema.fieldIndex("dtype")
+    val valueType = read.rows.map(r => if (r.isNullAt(dtype)) "double" else r.getUTF8String(dtype).toString)
+      .distinct match {
       case Seq(t) => DataType.fromDDL(t)
       case _      => DoubleType
     }
     // the sparse frame is the series' points; the dense grid is built over
     // them and their chunks
-    val columns = (if (dropBoundsNa) Nil else keys :+ "chunk_index") :+ "ts" :+ "value"
-    val fields = columns.map(c => if (c == "value") StructField(c, valueType) else read.schema(c))
-    val project = UnsafeProjection.create(columns.map { c =>
-      val ref = BoundReference(at(c), read.schema(c).dataType, nullable = true)
-      if (c == "value") Cast(ref, valueType) else ref
-    })
-    // ordered by `ts`, which the live filter keeps non-null
-    val local = GraftColumnBridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(StructType(fields)),
-      read.rows.sortBy(_.getLong(at("ts"))).map(project(_).copy())))
-    if (dropBoundsNa) local
-    else series(local, start, end, dropBoundsNa = false).select("ts", "value").coalesce(1).sortWithinPartitions("ts")
+    if (dropBoundsNa) local(read, Seq("ts"), valueType)
+    else series(local(read, keys :+ "chunk_index" :+ "ts", valueType), start, end, dropBoundsNa = false)
+      .select("ts", "value").coalesce(1).sortWithinPartitions("ts")
   }
 
-  /** The live rows of one series in `[start, end]`, read on the driver
-    * from the current generation's files ([[PartitionCommit.read]]) with
-    * the one live filter of every read ([[live]]): files outside the slice's
-    * chunk range are never opened, and the key and `ts` bounds are pushed
-    * into the Parquet readers.
+  /** Keyed multi-series read: the sparse [[getTs]] of every full-key spec
+    * of `attrsList` (duplicates read once, absent or deleted keys read
+    * nothing) as one `(keys..., ts, value)` frame ordered by
+    * `(keys..., ts)`; values are not cast back to the stored dtype. The
+    * reference has no such call (its callers loop `get_ts`); this is that
+    * loop as ONE driver read ([[liveRead]]): the frame is materialized at
+    * call time, and neither the call nor its `collect` or `show` runs a
+    * Spark job, nor does an empty spec list.
+    *
+    * Scale contract: the result must fit in driver memory, as the
+    * reference's in-memory series must. A read that does not is
+    * [[yieldManyTs]], the distributed streaming read, with `__in` lookups
+    * on the keys; on a store of several keys those lookups select every
+    * combination of the listed values, a superset of a tuple list.
+    */
+  def getManyTs(
+      attrsList: Seq[Map[String, Any]],
+      start: Option[java.time.ZonedDateTime] = None,
+      end: Option[java.time.ZonedDateTime] = None): DataFrame =
+    local(liveRead(attrsList, start, end), keys :+ "ts", DoubleType)
+
+  /** The live rows of the full-key `specs` in `[start, end]`, read on the
+    * driver from the current generation's files ([[PartitionCommit.read]])
+    * with the one live filter of every read ([[live]]): files outside the
+    * slice's chunk range are never opened, and the key and `ts` bounds are
+    * pushed into the Parquet readers. The specs enter as `key IN (values)`
+    * per key, which the readers take as filters and which is exact for
+    * one spec or one key; several specs of a store of several keys add
+    * the exact tuple membership ([[tupleIn]]). No spec opens no file.
     */
   private[graft] def liveRead(
-      attrs: Map[String, Any],
+      specs: Seq[Map[String, Any]],
       start: Option[java.time.ZonedDateTime],
       end: Option[java.time.ZonedDateTime]): PartitionCommit.Read = {
-    requireFullKey(attrs, keys)
-    PartitionCommit.read(spark, layout, PartitionCommit.liveFiles(path), live(keyFilter(attrs), start, end))
+    specs.foreach(requireFullKey(_, keys))
+    val tuples = specs.map(a => keys.map(a)).distinct
+    val perKey = keySchema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      col(f.name).isin(tuples.map(_(i)).distinct.map(lit(_).cast(f.dataType)): _*)
+    }
+    val exact = Option.when(keys.length > 1 && tuples.length > 1)(tupleIn(keySchema.fields.toSeq, tuples))
+    PartitionCommit.read(spark, layout, if (specs.isEmpty) Nil else PartitionCommit.liveFiles(path),
+      live((perKey ++ exact).reduce(_ && _), start, end))
+  }
+
+  /** The rows of `read` as one local frame, marked analyzed so that the
+    * analyzer does not walk its rows: sorted by `(keys..., ts)` in Spark's
+    * ascending order (nulls first, the order `orderBy` gives), projected
+    * to `columns` then `value`, cast to `valueType`.
+    */
+  private def local(read: PartitionCommit.Read, columns: Seq[String], valueType: DataType): DataFrame = {
+    val attrs = DataTypeUtils.toAttributes(read.schema)
+    val byName = attrs.map(a => a.name -> a).toMap
+    val order = new InterpretedOrdering((keys :+ "ts").map(c => SortOrder(byName(c), Ascending)), attrs)
+    val project = UnsafeProjection.create(columns.map(byName) :+ Cast(byName("value"), valueType), attrs)
+    val fields = columns.map(read.schema(_)) :+ StructField("value", valueType)
+    GraftColumnBridge.ofAnalyzed(spark, LocalRelation(DataTypeUtils.toAttributes(StructType(fields)),
+      read.rows.sorted(order).map(project(_).copy())))
   }
 
   /** The `column` statistics of every row group of the live `files`
@@ -350,25 +388,6 @@ class ChunkStore(
       dropBoundsNa: Boolean = true): DataFrame =
     series(load().filter(live(Lookups.validated(filters, keys), start, end)), start, end, dropBoundsNa)
       .orderBy((keys.map(col) :+ col("ts")): _*)
-
-  /** Keyed multi-series read in ONE scan: the sparse [[getTs]] read for a
-    * list of full-key specs, which enter the plan as one literal
-    * `struct(keys...) IN (...)` predicate (no spec-side job) — never a
-    * per-series loop of jobs (the reference loops `get_ts` client-side; at
-    * scale one scan must serve all series). Output: (keys..., ts, value)
-    * ordered by (keys..., ts), range-partitioned, as a spec list can be
-    * large; values are not cast back to the stored dtype. An empty spec
-    * list reads nothing and starts no job.
-    */
-  def getManyTs(
-      attrsList: Seq[Map[String, Any]],
-      start: Option[java.time.ZonedDateTime] = None,
-      end: Option[java.time.ZonedDateTime] = None): DataFrame = {
-    attrsList.foreach(requireFullKey(_, keys))
-    val specs = tupleIn(keySchema.fields.toSeq, attrsList.map(a => keys.map(a)))
-    series(load().filter(live(specs, start, end)), start, end, dropBoundsNa = true)
-      .orderBy((keys.map(col) :+ col("ts")): _*)
-  }
 
   /** The live rows that `pred` selects inside `[start, end]` — the one
     * interval filter of every read (reference `_filter_interval`,

@@ -15,6 +15,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{DEFAULT_PARTITION_NAME, getPartitionPathString, unescapePathName}
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeSet, BinaryComparison, BindReferences, Cast,
   EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.optimizer.{ConstantFolding, OptimizeIn}
+import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
@@ -148,9 +150,12 @@ private[graft] object PartitionCommit {
 
   /** The rows of the store content made of `files` (a generation's
     * [[liveFiles]]) that `pred` keeps, read on the driver by Spark's
-    * vectorized Parquet reader: no Spark job, for a read small enough to
-    * hold in driver memory. `pred` is analyzed once over the layout's
-    * schema and evaluated by Catalyst on every row read. Its conjuncts on
+    * vectorized Parquet reader: no Spark job, and every row kept is held
+    * in driver memory, so the caller bounds the read. `pred` is analyzed
+    * once over the layout's schema, its constants folded and its literal
+    * `IN` lists turned into hash-set lookups by Spark's own optimizer rules
+    * (above `spark.sql.optimizer.inSetConversionThreshold` values), and it
+    * is evaluated by Catalyst on every row read. Its conjuncts on
     * the partition columns alone select the files, so a file they reject is
     * never opened; its other conjuncts that translate to Parquet filters
     * are pushed into each reader, so row-group and page statistics skip
@@ -164,7 +169,9 @@ private[graft] object PartitionCommit {
     val schema = StructType(data ++ parts)
     val attrs = DataTypeUtils.toAttributes(schema)
     val partAttrs = attrs.drop(data.length)
-    val cond = GraftColumnBridge.analyzedFilter(spark, pred, LocalRelation(attrs))
+    val relation = LocalRelation(attrs)
+    val cond = OptimizeIn(ConstantFolding(logical.Filter(GraftColumnBridge.analyzedFilter(spark, pred, relation),
+      relation))) match { case logical.Filter(c, _) => c }
     def conjuncts(e: Expression): Seq[Expression] = e match {
       case And(a, b) => conjuncts(a) ++ conjuncts(b)
       case c         => Seq(c)
@@ -176,7 +183,8 @@ private[graft] object PartitionCommit {
       r => bound.eval(r) == true
     }
     val inRange = keeps(onParts.foldLeft(Literal.TrueLiteral: Expression)(And), partAttrs)
-    val kept = keeps(cond, attrs)
+    // the files opened are in range: each row needs only the other conjuncts
+    val kept = keeps(onData.foldLeft(Literal.TrueLiteral: Expression)(And), attrs)
     val sql = SQLConf.get
     val filters = new ParquetFilters(new SparkToParquetSchemaConverter(sql).convert(data),
       sql.parquetFilterPushDownDate, sql.parquetFilterPushDownTimestamp, sql.parquetFilterPushDownDecimal,
@@ -291,9 +299,12 @@ private[graft] object PartitionCommit {
     * none; move the new files into their partition directories; publish
     * the new `_manifest` (`_manifest.tmp`, then an atomic rename over the
     * old one). Only then delete the files the previous manifest retired,
-    * partition directories left empty and any `_txn-*` left over. A
-    * failure before the publish deletes this commit's `_txn` directory and
-    * the files it moved, so the store is left as it was.
+    * partition directories left empty and any `_txn-*` left over; when
+    * there is one, also every data file (with its checksum) in a partition
+    * directory that the new manifest lists neither as live nor as retired:
+    * the files a writer killed between its moves and its publish left
+    * behind. A failure before the publish deletes this commit's `_txn`
+    * directory and the files it moved, so the store is left as it was.
     */
   def commit(layout: Layout, content: Option[DataFrame], replaced: => Seq[Seq[Any]]): Unit = {
     val root = new File(layout.path)
@@ -319,7 +330,15 @@ private[graft] object PartitionCommit {
           publish(root, Manifest(kept ++ fresh, retired))
         } catch { case e: Throwable => fresh.foreach(remove(root, _)); throw e }
         was.retired.foreach(remove(root, _))
-        Option(root.listFiles()).toSeq.flatten.filter(_.getName.startsWith("_txn-")).foreach(deleteQuietly)
+        // a `_txn-*` left over is a commit that died, perhaps with its files
+        // moved but never published: under the writer lock, a data file in
+        // a partition directory that this manifest does not name is one
+        val leftovers = Option(root.listFiles()).toSeq.flatten.filter(f => f.getName.startsWith("_txn-") && f != txn)
+        if (leftovers.nonEmpty) {
+          val named = (kept ++ fresh ++ retired).toSet
+          listed(root, "").filter(f => f.contains('/') && !named(f)).foreach(remove(root, _))
+          leftovers.foreach(deleteQuietly)
+        }
       }
     } finally deleteQuietly(txn)
   }

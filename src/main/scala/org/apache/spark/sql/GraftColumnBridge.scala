@@ -12,15 +12,21 @@ import org.apache.spark.sql.sources.Filter
   * libraries expose them through a same-package shim (the standard
   * pattern for custom-Expression libraries on Spark 4). The same shim
   * opens the `private[sql]` entry points the store's driver-side read
-  * needs: a DataFrame over a logical plan, the analyzer, and a Catalyst
-  * predicate as a data source filter.
+  * needs: a DataFrame over an analyzed logical plan, the analyzer, and a
+  * Catalyst predicate as a data source filter.
   */
 object GraftColumnBridge {
   def toExpr(c: Column): Expression   = classic.ExpressionUtils.expression(c)
   def toColumn(e: Expression): Column = classic.ExpressionUtils.column(e)
 
-  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+  /** A DataFrame over `plan`, a plan that is already resolved (a local
+    * relation): it is marked analyzed, so the analyzer does not walk it,
+    * and a local relation's rows with it, again.
+    */
+  def ofAnalyzed(spark: SparkSession, plan: LogicalPlan): DataFrame = {
+    plan.setAnalyzed()
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+  }
 
   /** `pred` as a filter condition over `child`, analyzed and checked
     * without a Dataset around it.

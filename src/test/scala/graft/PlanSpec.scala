@@ -152,7 +152,7 @@ class PlanSpec extends SparkSpec {
       .toDF("kind", "ts", "value"), now = t0)
     val z = java.time.ZoneOffset.UTC
     val (a, b) = (java.time.ZonedDateTime.of(2024, 2, 1, 0, 0, 0, 0, z), java.time.ZonedDateTime.of(2024, 2, 10, 0, 0, 0, 0, z))
-    val read = st.liveRead(Map("kind" -> "k00"), Some(a), Some(b))
+    val read = st.liveRead(Seq(Map("kind" -> "k00")), Some(a), Some(b))
     // only the February partition is opened
     assert(read.files.nonEmpty && read.files.forall(_.startsWith(s"chunk_index=${2024 * 12 + 1}/")), read.files)
     // the key and both ts bounds reach the Parquet reader, whose page

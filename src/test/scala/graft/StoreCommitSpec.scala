@@ -183,6 +183,38 @@ class StoreCommitSpec extends SparkSpec {
     assert(onDisk === PartitionCommit.liveFiles(st.path).toSet)
   }
 
+  test("a commit after a killed one deletes the data files that commit moved but never published") {
+    val st = chunkStore()
+    st.setTs(a, hourly("2024-01-15T00:00", 24 * 20, 1.0), update = true, now = now0) // Jan+Feb
+    val rows = st.load().collect().toSet
+    val jan = PartitionCommit.liveFiles(st.path).find(_.startsWith(s"chunk_index=${2024 * 12}/")).get
+    // what a writer killed between its file moves and its manifest publish
+    // leaves: its `_txn-*` directory, and unlisted data files with their
+    // checksums in a live partition and in a partition of their own
+    val orphans = Seq(s"chunk_index=${2024 * 12}/part-00000-orphan.c000.snappy.parquet",
+      s"chunk_index=${2024 * 12 + 5}/part-00000-orphan.c000.snappy.parquet")
+    for (o <- orphans) {
+      val f = new java.io.File(st.path, o)
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.copy(new java.io.File(st.path, jan).toPath, f.toPath)
+      java.nio.file.Files.write(new java.io.File(f.getParentFile, s".${f.getName}.crc").toPath, Array[Byte](1))
+    }
+    assert(new java.io.File(st.path, "_txn-x/chunk_index=1").mkdirs())
+    assert(st.load().collect().toSet === rows) // no read sees them
+    val b = Map[String, Any]("version" -> 0, "kind" -> "b")
+    st.setTs(b, hourly("2024-03-01T00:00", 3, 2.0), now = now0.plusHours(1))
+    for (o <- orphans) {
+      val f = new java.io.File(st.path, o)
+      assert(!f.exists() && !new java.io.File(f.getParentFile, s".${f.getName}.crc").exists(), o)
+    }
+    assert(!new java.io.File(st.path, s"chunk_index=${2024 * 12 + 5}").exists())
+    assert(!new java.io.File(st.path, "_txn-x").exists())
+    assert(st.load().filter(col("kind") === "a").collect().toSet === rows)
+    assert(st.getTs(b).count() === 3)
+    val onDisk = snapshot(st.path).map(_._1).filter(_.endsWith(".parquet"))
+    assert(onDisk === PartitionCommit.liveFiles(st.path).toSet)
+  }
+
   test("a failed commit on a bucket-partitioned VersionedStore changes nothing") {
     val dir = tmpDir("commit")
     val st = new VersionedStore(spark, dir, numBuckets = 8)

@@ -129,15 +129,18 @@ class ChunkStoreSpec extends SparkSpec {
     assert(sliced.head.isNullAt(1) && sliced.last.getDouble(1) === 24.0)
   }
 
-  // Differential check of the driver-side read: on a Europe/Paris store
+  // Differential check of the driver-side reads: on a Europe/Paris store
   // holding every kind of chunk a write leaves (a DST-crossing series, a
   // soft-deleted one, a replaced one, an updated one, a bigint one, and a
-  // chunk partition of several files), the sparse getTs equals the
-  // distributed getManyTs of the same series, row for row, on every slice.
-  // The dense digests (rows, non-null values, hash of the rows' text) were
-  // recorded from the distributed getTs this read replaced, on the same
-  // fixture.
-  test("driver-read getTs equals getManyTs on every slice; dense rows unchanged") {
+  // chunk partition of several files), the sparse getTs and getManyTs
+  // equal the distributed yieldManyTs of the same series, row for row, on
+  // every slice, and so does getManyTs of several specs, of a duplicated
+  // spec, of an absent key, of the tombstoned series and of two tuples of
+  // the two-key store whose per-key values also name two unrequested
+  // series (one of them stored). The dense digests (rows, non-null values,
+  // hash of the rows' text) were recorded from the distributed getTs the
+  // driver read replaced, on the same fixture.
+  test("driver-read getTs and getManyTs equal yieldManyTs on every slice; dense rows unchanged") {
     val st = newStore(tz = "Europe/Paris")
     def key(k: String) = Map[String, Any]("version" -> 0, "kind" -> k)
     def hours(from: String, n: Int, v: Int => Double) = hourly(from, n, i => Some(v(i)))
@@ -155,6 +158,8 @@ class ChunkStoreSpec extends SparkSpec {
     assert(st.setTs(key("big"), (0 until 24 * 31).map(i => (t0.plusHours(i.toLong), i.toLong * 3)).toDF("ts", "value"),
       now = w0.plusHours(7)))
     assert(liveFiles(st.path).filter(_._1.endsWith(s"=${2024 * 12 + 9}")).values.head.length >= 2)
+    val other = Map[String, Any]("version" -> 1, "kind" -> "upd")
+    assert(st.setTs(other, hours("2024-10-26T00:00", 24 * 3, i => -i.toDouble), now = w0.plusHours(8)))
     val z = java.time.ZoneId.of("Europe/Paris")
     def at(s: String) = Some(java.time.LocalDateTime.parse(s).atZone(z))
     val slices = Seq(
@@ -171,9 +176,24 @@ class ChunkStoreSpec extends SparkSpec {
     def digest(rows: Array[org.apache.spark.sql.Row]) =
       (rows.length, rows.count(!_.isNullAt(1)), rows.map(r => s"${r.get(0)}=${r.get(1)}").mkString(",").hashCode)
     val dense = for (k <- Seq("upd", "rep", "gone", "dst", "big"); (name, (a, b)) <- slices) yield {
-      val sparse = st.getTs(key(k), a, b).collect()
-      assert(points(sparse) === points(st.getManyTs(Seq(key(k)), a, b).collect()), s"$k $name")
+      val reference = points(st.yieldManyTs(key(k), a, b).collect())
+      assert(points(st.getTs(key(k), a, b).collect()) === reference, s"getTs $k $name")
+      assert(points(st.getManyTs(Seq(key(k)), a, b).collect()) === reference, s"getManyTs $k $name")
       (k, name) -> digest(st.getTs(key(k), a, b, dropBoundsNa = false).collect())
+    }
+    def keyed(rows: Array[org.apache.spark.sql.Row]) = rows.map(r => (r.getAs[Int]("version"), r.getAs[String]("kind"),
+      r.getAs[java.time.LocalDateTime]("ts"), r.getAs[Number]("value").doubleValue)).toSeq
+    val specLists = Seq(
+      "several"    -> Seq(key("upd"), key("dst"), key("big")),
+      "duplicated" -> Seq(key("dst"), key("upd"), key("dst")),
+      "absent"     -> Seq(key("absent"), key("upd")),
+      "tombstoned" -> Seq(key("gone"), key("rep")),
+      "two-key"    -> Seq(other, key("dst")))
+    for ((list, specs) <- specLists; (name, (a, b)) <- slices) {
+      // the distributed read of each distinct spec, in (keys..., ts) order
+      val reference = specs.distinct.sortBy(s => (s("version").asInstanceOf[Int], s("kind").toString))
+        .flatMap(s => keyed(st.yieldManyTs(s, a, b).collect()))
+      assert(keyed(st.getManyTs(specs, a, b).collect()) === reference, s"$list $name")
     }
     val parentDense = Map(
       ("upd", "open-ended") -> (1465,792,635483143),
@@ -331,7 +351,7 @@ class ChunkStoreSpec extends SparkSpec {
     val z = java.time.ZoneOffset.UTC
     val feb = st.getTs(attrs, start = Some(java.time.ZonedDateTime.of(2024, 2, 1, 0, 0, 0, 0, z)))
     assert(feb.collect().map(_.getDouble(1)).toSeq === (48 until 24 * 5).map(_ + 0.5))
-    assert(st.liveRead(attrs, Some(java.time.ZonedDateTime.of(2024, 2, 1, 0, 0, 0, 0, z)), None).files
+    assert(st.liveRead(Seq(attrs), Some(java.time.ZonedDateTime.of(2024, 2, 1, 0, 0, 0, 0, z)), None).files
       .forall(_.startsWith(s"chunk_index=${2024 * 12 + 1}/")))
     intercept[Exception](st.getTs(attrs))
   }
@@ -768,7 +788,7 @@ class ChunkStoreSpec extends SparkSpec {
     assert(all.map(_.getString(1)).toSeq === Seq("a", "a", "a", "b", "b", "b"))
   }
 
-  test("getManyTs: one literal-predicate scan serves a spec list, sliced") {
+  test("getManyTs: one driver read serves a spec list, sliced") {
     val st = newStore(tz = "UTC")
     for (k <- Seq("a", "b", "c"))
       st.setTs(Map("version" -> 0, "kind" -> k), hourly("2024-01-01T00:00", 24, i => Some(i.toDouble)), now = now0)
@@ -792,6 +812,97 @@ class ChunkStoreSpec extends SparkSpec {
     assert(st.getManyTs(Seq.empty).schema === st.getManyTs(Seq(attrs)).schema)
     assert(newStore(tz = "UTC").getManyTs(Seq.empty).collect().isEmpty)
   }
+
+  for (n <- Seq(1, 4, 50))
+    test(s"getManyTs of $n spec${if (n > 1) "s" else ""}: no job at call time, at collect or at show; the frame outlives its files") {
+      val st = newStore(tz = "UTC")
+      val t0 = ldt("2024-01-31T00:00")
+      st.setManyTs((0 until 50).flatMap(k => (0 until 48).map(i => (0, f"k$k%02d", t0.plusHours(i.toLong), k + i / 100.0)))
+        .toDF("version", "kind", "ts", "value"), now = now0)
+      val specs = (0 until n).map(k => Map[String, Any]("version" -> 0, "kind" -> f"k$k%02d"))
+      var read: DataFrame = null
+      assert(jobsDuring { read = st.getManyTs(specs) } === 0, "the rows are read on the driver")
+      var rows = Array.empty[org.apache.spark.sql.Row]
+      assert(jobsDuring { rows = read.collect() } === 0, "a local frame collects without a job")
+      assert(jobsDuring(read.show(3)) === 0)
+      val want = (0 until n).flatMap(k => (0 until 48).map(i => (0, f"k$k%02d", t0.plusHours(i.toLong), k + i / 100.0)))
+      def tuples(rs: Array[org.apache.spark.sql.Row]) =
+        rs.map(r => (r.getInt(0), r.getString(1), r.getAs[java.time.LocalDateTime](2), r.getDouble(3))).toSeq
+      assert(tuples(rows) === want)
+      // materialized at call time: the loss of every file changes nothing
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(st.path))
+      assert(jobsDuring { rows = read.collect() } === 0)
+      assert(tuples(rows) === want)
+    }
+
+  test("getManyTs never opens a file outside the slice's chunk range") {
+    val st = newStore(tz = "UTC")
+    val (k2, k3) = (Map[String, Any]("version" -> 0, "kind" -> "k2"), Map[String, Any]("version" -> 1, "kind" -> "k3"))
+    for (k <- Seq(attrs, k2, k3))
+      assert(st.setTs(k, hourly("2024-01-30T00:00", 24 * 5, i => Some(i + 0.5)), now = now0))
+    // a January file, still listed as live, becomes garbage
+    val jan = liveFiles(st.path).collectFirst { case (d, fs) if d.endsWith(s"=${2024 * 12}") => fs.head }.get
+    java.nio.file.Files.write(java.nio.file.Paths.get(st.path, jan), "not parquet".getBytes)
+    val feb = Some(java.time.ZonedDateTime.of(2024, 2, 1, 0, 0, 0, 0, java.time.ZoneOffset.UTC))
+    val rows = st.getManyTs(Seq(k3, attrs), start = feb).collect()
+    assert(rows.map(r => (r.getInt(0), r.getString(1))).distinct.toSeq === Seq((0, "k1"), (1, "k3")))
+    assert(rows.map(_.getDouble(3)).toSeq === Seq.fill(2)((48 until 24 * 5).map(_ + 0.5)).flatten)
+    assert(st.liveRead(Seq(k3, attrs), feb, None).files.forall(_.startsWith(s"chunk_index=${2024 * 12 + 1}/")))
+    intercept[Exception](st.getManyTs(Seq(k3, attrs)))
+  }
+
+  // Every write leaves one `updated_at` per (series, chunk), tombstones
+  // included: the reference's chunk row carries one. Each write path runs
+  // on a plain and on a sync-enabled store (where the path is allowed)
+  // holding two series over January and February, stamped `now0`, and
+  // touches part of a chunk, so a write that stamped only its own rows
+  // would leave two values.
+  private def oneStampPerChunk(st: ChunkStore): Unit = {
+    val mixed = st.load().groupBy("version", "kind", "chunk_index")
+      .agg(countDistinct("updated_at").as("stamps")).filter(col("stamps") =!= 1).collect()
+    assert(mixed.isEmpty, mixed.mkString(", "))
+  }
+
+  private val stampPaths: Seq[(String, Boolean, ChunkStore => Unit)] = {
+    val now1 = now0.plusHours(1)
+    val b = Map[String, Any]("version" -> 0, "kind" -> "b")
+    val c = Map[String, Any]("version" -> 1, "kind" -> "c")
+    Seq(
+      ("setTs insert", false, st => assert(st.setTs(c, hourly("2024-01-20T00:00", 24 * 20, i => Some(i.toDouble)), now = now1))),
+      ("setTs update", true, st => assert(st.setTs(attrs, hourly("2024-02-02T00:00", 12, _ => Some(9.0)), update = true, now = now1))),
+      ("setTs replace", true, st => assert(st.setTs(b, hourly("2024-02-02T00:00", 12, _ => Some(9.0)), replace = true, now = now1))),
+      ("setManyTs", false, st => st.setManyTs(Seq((1, "c", ldt("2024-01-31T00:00"), 1.0), (1, "d", ldt("2024-02-03T00:00"), 2.0))
+        .toDF("version", "kind", "ts", "value"), now = now1)),
+      ("upsertManyTs", true, st => st.upsertManyTs(Seq((0, "k1", ldt("2024-01-31T03:00"), 5.0), (0, "b", ldt("2024-02-04T00:00"), 6.0),
+        (1, "c", ldt("2024-02-04T00:00"), 7.0)).toDF("version", "kind", "ts", "value"), now = now1)),
+      ("delete", true, st => {
+        st.delete(attrs, now = now1)
+        if (!st.config.syncEnabled) st.delete(b, keepTracking = false, now = now1.plusHours(1))
+      }),
+      ("compact", true, st => {
+        assert(st.setTs(b, hourly("2024-01-31T00:00", 3, _ => Some(4.0)), update = true, now = now1))
+        assert(st.compact() === 2)
+      }),
+      ("Sync.importChunks", true, st => {
+        val source = newStore(sync = true)
+        assert(source.setTs(attrs, hourly("2024-01-31T00:00", 3, _ => Some(8.0)), update = true, now = now1))
+        assert(source.setTs(c, hourly("2024-01-31T00:00", 3, _ => Some(8.0)), update = true, now = now1.plusHours(1)))
+        Sync.importChunks(st, source.load())
+      }))
+  }
+
+  for ((name, onSync, write) <- stampPaths)
+    test(s"one updated_at per (series, chunk) after $name") {
+      for (sync <- Seq(false, true) if onSync || !sync) {
+        val st = newStore(sync = sync)
+        for (k <- Seq(attrs, Map[String, Any]("version" -> 0, "kind" -> "b")))
+          assert(st.setTs(k, hourly("2024-01-25T00:00", 24 * 20, i => Some(i.toDouble)), update = true, now = now0))
+        val before = st.load().collect().toSet
+        write(st)
+        assert(st.load().collect().toSet != before || name == "compact", s"$name wrote nothing")
+        oneStampPerChunk(st)
+      }
+    }
 
   test("compact: many incremental writes collapse to one file per chunk partition") {
     val dir = tmpDir("chunk")

@@ -2,7 +2,7 @@
 """Interleaved parent/change A/B of one perfbench workload.
 
     python3 tools/perfpair.py --rev <parent rev> --workload <name> --seeds 21-30
-        [--seconds 4] [--scratch DIR]
+        [--seconds 4] [--scratch DIR] [--traced]
 
 Run from the root of a checkout: that checkout (its working tree) is the
 change. The parent is `git clone`d once into a scratch directory outside the
@@ -12,7 +12,10 @@ runs in both trees, the first one alternating from seed to seed,
 so a drift of the host shows on both sides. Per end-to-end metric of
 BENCHMARK.json it prints the parent and change medians, the parent's
 quartile distance, and the number of pairs the change won; then the
-`host.floor_ms_*` stamps of every run. Every run's result is appended to
+`host.floor_ms_*` stamps of every run. With `--traced`, one `--trace 1` run
+per tree follows (first seed, parent first), and each per-layer metric that
+moved by more than 10% between them is printed with both values and their
+ratio: where a saving or a cost appears. Every run's result is appended to
 `<scratch>/perfpair-<workload>.jsonl`. Exits non-zero as soon as a run
 fails or reports a failed output check. Nothing is written in the checkout
 beyond what perfbench/run.py itself writes (its ignored build, work and
@@ -46,10 +49,10 @@ def clone(rev, scratch):
     return tree
 
 
-def run(tree, workload, seed, seconds):
-    """One untraced run in `tree`: (result, host stamps)."""
+def run(tree, workload, seed, seconds, trace=0):
+    """One run in `tree`: (result, host stamps)."""
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-                        "--seconds", str(seconds), "--trace", "0"],
+                        "--seconds", str(seconds), "--trace", str(trace)],
                        cwd=tree, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
     lines = p.stdout.strip().splitlines()
     host = next((json.loads(l[len("host: "):]) for l in lines if l.startswith("host: ")), {})
@@ -68,6 +71,8 @@ def main():
     ap.add_argument("--seeds", required=True, help="a seed or an inclusive range, e.g. 21-30")
     ap.add_argument("--seconds", type=int)
     ap.add_argument("--scratch", help="where to clone the parent (outside the checkout)")
+    ap.add_argument("--traced", action="store_true",
+                    help="then one traced run per tree, printing the per-layer metrics that moved > 10%%")
     a = ap.parse_args()
     spec = json.loads((ROOT / "BENCHMARK.json").read_text())
     seconds = a.seconds or spec["run_seconds"]
@@ -99,7 +104,28 @@ def main():
         print(f"{m['name']:14s} {pm:10.4g} {cm:10.4g} {cm / pm if pm else float('nan'):7.3f} {iqr:11.4g} {won:3d}/{n}")
     for side in ("parent", "change"):
         print(f"floor_ms {side} (before/after): " + " ".join(f"{b}/{e}" for b, e in floors[side]))
+    if a.traced:
+        traced(parent, a.workload, seeds(a.seeds)[0], seconds, log)
     return 0
+
+
+def traced(parent, workload, seed, seconds, log):
+    """One traced run per tree; prints the per-layer metrics that moved by
+    more than 10% (a metric at 0 on one side only counts as moved)."""
+    got = {}
+    for side, tree in (("parent", parent), ("change", ROOT)):
+        res, host = run(tree, workload, seed, seconds, trace=1)
+        with log.open("a") as f:
+            f.write(json.dumps({"side": side, "seed": seed, "trace": 1, "host": host, **res}) + "\n")
+        got[side] = {k: v["value"] for k, v in res["metrics"].items()}
+    print(f"\n{workload} seed {seed}, traced: per-layer metrics that moved by more than 10%")
+    print(f"{'metric':40s} {'parent':>12s} {'change':>12s} {'ratio':>7s}")
+    for name in sorted(set(got["parent"]) & set(got["change"])):
+        p, c = got["parent"][name], got["change"][name]
+        if p is None or c is None or (p == c == 0):
+            continue
+        if p == 0 or abs(c / p - 1) > 0.10:
+            print(f"{name:40s} {p:12.4g} {c:12.4g} {c / p if p else float('nan'):7.3f}")
 
 
 if __name__ == "__main__":
