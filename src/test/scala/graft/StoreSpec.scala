@@ -140,7 +140,7 @@ class ChunkStoreSpec extends SparkSpec {
   // series (one of them stored). The dense digests (rows, non-null values,
   // hash of the rows' text) were recorded from the distributed getTs the
   // driver read replaced, on the same fixture.
-  test("driver-read getTs and getManyTs equal yieldManyTs on every slice; dense rows unchanged") {
+  test("driver-read getTs equals getManyTs on every slice; dense rows unchanged") {
     val st = newStore(tz = "Europe/Paris")
     def key(k: String) = Map[String, Any]("version" -> 0, "kind" -> k)
     def hours(from: String, n: Int, v: Int => Double) = hourly(from, n, i => Some(v(i)))
